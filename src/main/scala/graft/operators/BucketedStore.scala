@@ -1,0 +1,513 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The one storage lifecycle behind every persisted index family: the
+  * band index, keyed side tables, the IVF index, PQ codes and the
+  * vector store. Each is a catalog table bucketed by its probe key, and
+  * this object is the only code that knows how such a table is laid
+  * out, written, made idempotent, tombstoned, compacted and healed:
+  *
+  *  - '''open''' — every entry point of every family: heal an
+  *    interrupted compaction swap, check the bucket spec, return the
+  *    catalog [[Layout]];
+  *  - '''rebuild''' — drop the table and its tombstones, write one
+  *    task-aligned file per bucket, stamp the vector width;
+  *  - '''append''' — at-least-once delivery, exactly-once table effect:
+  *    the batch's keys become planning-time literals, the idempotence
+  *    lookup is compiled inside the conf window, asserted to
+  *    bucket-prune and checkpointed, and only the rows it does not find
+  *    are appended in the catalog's layout;
+  *  - '''tombstones''' — logical deletes in a `__tombstones` side table,
+  *    excluded by every probe before ranking, refused on re-append;
+  *  - '''compact''' — fold every bucket back to one file, applying the
+  *    pending tombstones, swapped in so no crash point leaves zero
+  *    copies.
+  *
+  * The families keep only their own logic (banding, centroid
+  * assignment, PQ encoding, codebook identity). Single-writer, like
+  * every graft maintenance pass: compaction runs between deliveries.
+  */
+private[graft] object BucketedStore {
+
+  /** A bucketed table's catalog layout. */
+  final case class Layout(bucketCol: String, buckets: Int,
+      sortCols: Seq[String])
+
+  /** Serving stamp: the table's vector width, read by probes off the
+    * catalog (one driver call, no Spark job). */
+  val DimProp = "graft.dim"
+
+  // ---- engine lock and conf window
+
+  private val lock = new Object
+
+  /** Run `body` under the engine's ONE maintenance lock — every conf
+    * window, compaction swap, heal and tombstone write synchronizes on
+    * it (a tombstone append landing between a compaction's tombstone
+    * read and its truncate would otherwise be wiped unapplied).
+    * Reentrant (JVM monitor). */
+  def withBandLock[T](body: => T): T = lock.synchronized(body)
+
+  /** Run `body` with the session-global auto-bucketed-scan heuristic
+    * OFF, under [[withBandLock]]. The heuristic keeps a bucketed scan
+    * only for its output distribution, so it would discard the In(key)
+    * bucket pruning every point lookup here relies on; and the flip is
+    * session-global, so two windows on different locks could
+    * interleave save/flip/restore and leave it flipped. */
+  def withAutoBucketedScanOff[T](spark: SparkSession)(body: => T): T =
+    withBandLock {
+      val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, "false")
+      try body finally spark.conf.set(key, old)
+    }
+
+  /** Compile `df`'s physical plan inside the conf window, assert the
+    * compiled plan bucket-prunes its scan of `table` (a mis-built
+    * table refuses loudly instead of full-scanning at corpus size), then
+    * materialize via an eager checkpoint OUTSIDE the window:
+    * `executedPlan` is a cached lazy val, so the checkpoint only runs
+    * the compiled plan and the lock covers compilation alone, never
+    * the job. The assert is repeated on the executed plan: under AQE,
+    * re-optimization runs with the conf restored, and a Spark version
+    * whose stage-preparation rules drop the bucketed scan would
+    * otherwise pass the compile-time check on a plan it never ran.
+    * (`SelectedBucketsCount` marks a bucketed scan with its bucket set —
+    * "n out of n" when the literal keys hash to every bucket.) */
+  def compileAndPinBucketedScan(spark: SparkSession, df: DataFrame,
+      table: String, reliable: Boolean, context: String): DataFrame = {
+    def prunes =
+      df.queryExecution.executedPlan.toString.contains("SelectedBucketsCount")
+    withAutoBucketedScanOff(spark) {
+      require(prunes,
+        s"$context: the scan of $table did not bucket-prune — the table " +
+          "must be bucketed by its probe key (a buildBandIndex/" +
+          "buildKeyedTable product); refusing to run a full-index-scan probe")
+    }
+    val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    require(prunes,
+      s"$context: the EXECUTED plan against $table lost its bucket " +
+        "pruning (AQE re-optimization re-ran DisableUnnecessaryBucketedScan " +
+        "with the restored conf?) — the probe that just ran full-scanned " +
+        "the index; this Spark version's stage-preparation rules are " +
+        "incompatible with the compile-inside-the-conf-window device")
+    out
+  }
+
+  // ---- open
+
+  /** Entry-point check for every read and write of a bucketed table:
+    * heal a compaction swap interrupted between its two renames (the
+    * data survives in full under `__compact_backup` — it is renamed
+    * back, and the compaction is simply redone), then require the table
+    * to be bucketed (by exactly `key` when given — the metadata
+    * complement of the compiled-plan assert, covering paths where no
+    * plan exists to inspect) and return its catalog layout, so no
+    * layout-preserving write needs a bucket parameter. */
+  def open(spark: SparkSession, table: String, context: String,
+      key: Option[String] = None): Layout = {
+    heal(spark, table)
+    require(spark.catalog.tableExists(table),
+      s"$context: $table does not exist")
+    val spec = metadata(spark, table).bucketSpec
+    require(spec.exists(s => key.forall(k => s.bucketColumnNames == Seq(k))),
+      s"$context: table $table is not ${key.fold("")(_ + "-")}bucketed " +
+        s"(bucketSpec=$spec) — not a buildBandIndex/buildKeyedTable " +
+        "product; a probe against it could not bucket-prune at any scale")
+    val s = spec.get
+    Layout(s.bucketColumnNames.head, s.numBuckets, s.sortColumnNames)
+  }
+
+  /** Rename a surviving `__compact_backup` back to the missing live
+    * name. Under the lock: a reader racing a LIVE compaction's rename
+    * window would otherwise rename the backup back and orphan the
+    * compactor's staging table. */
+  private def heal(spark: SparkSession, table: String): Unit =
+    withBandLock {
+      val backup = sibling(spark, table, "__compact_backup")
+      if (!spark.catalog.tableExists(table) &&
+          spark.catalog.tableExists(backup)) {
+        spark.sql(s"ALTER TABLE $backup RENAME TO ${liveName(spark, table)}")
+        ()
+      }
+    }
+
+  // ---- rebuild
+
+  /** Persist `rows` as `table`, bucketed by `key` with one task-aligned
+    * file per bucket (one file per bucket instead of one per task ×
+    * bucket — see RawVault.writeTable; `aligned` says `rows` is already
+    * hash-partitioned that way). The table and its tombstones are
+    * dropped first: a stale tombstone side table would silently hide
+    * rebuilt rows from every probe. `stamps` and, when `widthOf` names
+    * a vector column, its width ([[DimProp]], one tiny job) are stamped
+    * so serving guards read them off the catalog. */
+  def rebuild(rows: DataFrame, table: String, key: String, buckets: Int,
+      sortCols: Seq[String] = Nil, stamps: Map[String, String] = Map.empty,
+      widthOf: Option[String] = None, aligned: Boolean = false): Unit = {
+    val spark = rows.sparkSession
+    dropTableAndLocation(spark, table)
+    dropTableAndLocation(spark, tombstoneTable(table))
+    writer(rows, Layout(key, buckets, sortCols), aligned)
+      .mode("overwrite").saveAsTable(table)
+    spark.catalog.refreshTable(table)
+    val props = stamps ++ widthOf.map(storedDim(spark, table, _))
+      .filter(_ > 0).map(w => DimProp -> w.toString)
+    if (props.nonEmpty) stampTableProps(spark, table, props)
+  }
+
+  private def writer(rows: DataFrame, layout: Layout,
+      aligned: Boolean = false) = {
+    val w = (if (aligned) rows
+      else rows.repartition(layout.buckets, col(layout.bucketCol)))
+      .write.bucketBy(layout.buckets, layout.bucketCol)
+    if (layout.sortCols.isEmpty) w
+    else w.sortBy(layout.sortCols.head, layout.sortCols.tail: _*)
+  }
+
+  // ---- append
+
+  /** The idempotent append: `rows` (projected to the table's columns)
+    * minus the rows whose `grain` key is already in `table`. The grain
+    * is each family's idempotence unit — the id for the band index
+    * (a doc's bands land together), (cid, id) for IVF and PQ, the key
+    * for keyed tables and the vector store; its last column is the id
+    * the tombstone guard checks. `rows` are persisted (the collected
+    * literals must be exactly the rows the anti-join later filters — a
+    * re-executed non-deterministic source could otherwise slip
+    * uncollected keys past the lookup) and their keys collected under
+    * `maxKeys` (`capName` names the caller's bound). */
+  def append(spark: SparkSession, table: String, layout: Layout,
+      grain: Seq[String], rows: DataFrame, maxKeys: Int, capName: String,
+      context: String): Unit = {
+    val p = rows.persist()
+    try {
+      val keyRows = DriverBounded.collectCapped(
+        p.select(lookupCols(layout, grain).map(col): _*), maxKeys,
+        s"$context: micro-batch exceeds $capName $maxKeys (the batch's " +
+          "keys become planning-time point-lookup literals); split the " +
+          "batch or raise the bound deliberately")
+      appendCollected(spark, table, layout, grain, p, keyRows.toSeq,
+        context)
+    } finally { p.unpersist(blocking = false); () }
+  }
+
+  /** [[append]] for rows the caller already persisted and whose
+    * [[lookupCols]] it already collected (resolve-at-ingest's winners,
+    * the keyed append's literal form). Refuses a null key — the
+    * anti-join never matches null, so a null-keyed row would re-append
+    * on every redelivery — and a tombstoned id. An empty key set writes
+    * nothing. */
+  def appendCollected(spark: SparkSession, table: String, layout: Layout,
+      grain: Seq[String], rows: DataFrame, keyRows: Seq[Row],
+      context: String): Unit = {
+    val cols = lookupCols(layout, grain)
+    for (i <- cols.indices) require(!keyRows.exists(_.isNullAt(i)),
+      s"$context: null ${cols(i)} key in the batch — the idempotence " +
+        "anti-join never matches null, so a null-keyed row would " +
+        "re-append on every redelivery; filter or key-derive upstream")
+    if (keyRows.nonEmpty) {
+      requireNotTombstoned(spark, table, grain.last,
+        keyRows.map(_.get(cols.indexOf(grain.last))).distinct, context)
+      appendRows(spark, table, layout,
+        freshRows(spark, table, layout, grain, rows, keyRows, context)._1)
+    }
+  }
+
+  /** The columns an append collects as literals: the grain plus the
+    * bucket column, so the lookup prunes to the batch's buckets. */
+  def lookupCols(layout: Layout, grain: Seq[String]): Seq[String] =
+    (grain :+ layout.bucketCol).distinct
+
+  /** The append's idempotence core: `rows` minus the grain keys already
+    * in `table`, found by point lookups — the collected `keyRows` (the
+    * rows' [[lookupCols]]) re-enter the plan as literals, so the scan
+    * opens only the batch's buckets with the filters pushed to parquet,
+    * and the lookup is pinned ([[compileAndPinBucketedScan]]), so the
+    * anti-join derives from batch-proportional rows, never from the
+    * table being appended to. A plain anti-join against the table is
+    * not this shape: the planner re-shuffles the whole table on the
+    * grain (hash(cid) buckets do not co-partition a (cid, id) join).
+    * Returns the fresh rows and the lookup frame whose plan was pinned. */
+  def freshRows(spark: SparkSession, table: String, layout: Layout,
+      grain: Seq[String], rows: DataFrame, keyRows: Seq[Row],
+      context: String): (DataFrame, DataFrame) = {
+    val cols = lookupCols(layout, grain)
+    val values = cols.indices.map(i => keyRows.map(_.get(i)).distinct)
+    val lookup = spark.table(table)
+      .filter(cols.zip(values)
+        .map { case (c, vs) => col(c).isin(vs: _*) }.reduce(_ && _))
+      .select(grain.map(col): _*)
+    (rows.join(compileAndPinBucketedScan(spark, lookup, table,
+      reliable = false, context), grain, "left_anti"), lookup)
+  }
+
+  /** Append `rows` in the table's catalog layout (bucket count, hash
+    * family and sort spec all read from the catalog, so an append can
+    * never diverge from the build), inside the conf window — appends
+    * serialize with compaction swaps — then refresh. */
+  def appendRows(spark: SparkSession, table: String, layout: Layout,
+      rows: DataFrame): Unit = {
+    withAutoBucketedScanOff(spark) {
+      writer(rows, layout).mode("append").saveAsTable(table)
+    }
+    spark.catalog.refreshTable(table)
+  }
+
+  // ---- tombstones
+
+  /** The tombstone side table of `table`: ids logically deleted (or
+    * superseded) but still physically present until the next
+    * [[compact]]. Its one column is the id, named by the first writer —
+    * the side table is self-describing. */
+  def tombstoneTable(table: String): String = table + "__tombstones"
+
+  /** Create `table`'s empty tombstone side table, its id column typed
+    * like the table's `idCol`, when absent. */
+  def ensureTombstones(spark: SparkSession, table: String,
+      idCol: String): Unit =
+    if (!spark.catalog.tableExists(tombstoneTable(table)))
+      spark.table(table).select(col(idCol)).limit(0)
+        .write.saveAsTable(tombstoneTable(table))
+
+  /** `df` minus `table`'s tombstoned rows — the probe-side exclusion: a
+    * broadcast anti-join (pending deletes are configuration-bounded by
+    * [[addTombstones]]) applied BEFORE any ranking, so deleted rows
+    * neither surface nor displace live candidates. No side table → `df`
+    * unchanged (one catalog call, no job). */
+  def liveRows(spark: SparkSession, table: String, df: DataFrame,
+      idCol: String): DataFrame = {
+    val tomb = tombstoneTable(table)
+    if (!spark.catalog.tableExists(tomb)) df
+    else {
+      val t = spark.table(tomb)
+      df.join(broadcast(t.select(col(t.columns.head).as(idCol))),
+        Seq(idCol), "left_anti")
+    }
+  }
+
+  /** Loud re-append guard: a tombstoned id cannot re-enter until its
+    * delete is physically applied — the idempotence anti-join would see
+    * the still-present old row, absorb the new version, and the DELETED
+    * value would serve again. The batch's collected `ids` probe the
+    * (configuration-sized) side table as literals: one tiny read, only
+    * when a side table exists. */
+  private def requireNotTombstoned(spark: SparkSession, table: String,
+      idCol: String, ids: Seq[Any], context: String): Unit = {
+    val tomb = tombstoneTable(table)
+    if (spark.catalog.tableExists(tomb)) {
+      val t = spark.table(tomb)
+      val hit = t.filter(col(t.columns.head).isin(ids: _*))
+        .limit(1).collect()
+      require(hit.isEmpty,
+        s"$context: batch $idCol '${hit.headOption.map(_.get(0)).orNull}' " +
+          s"is tombstoned in $table — a deleted id cannot re-enter until " +
+          "the delete is physically applied (the idempotence anti-join " +
+          "would silently resurrect the old row); run the family's " +
+          "compact first")
+    }
+  }
+
+  /** Ids logically deleted from `table` but not yet applied, as an
+    * `idCol` frame — typed like the table's id column when no side
+    * table exists yet. */
+  def pendingDeletes(spark: SparkSession, table: String,
+      idCol: String): DataFrame = {
+    val tomb = tombstoneTable(table)
+    if (spark.catalog.tableExists(tomb)) {
+      val t = spark.table(tomb)
+      t.select(col(t.columns.head).as(idCol))
+    } else if (spark.catalog.tableExists(table) &&
+        spark.table(table).columns.contains(idCol))
+      spark.table(table).select(col(idCol)).limit(0)
+    else spark.range(0).select(col("id").as(idCol)).limit(0)
+  }
+
+  /** Tombstone `ids` (an `idCol` frame) in `table`: distinct, anti-joined
+    * against the pending set (re-deleting is a no-op), one tiny file per
+    * call. Tombstones broadcast into every probe, so the pending set
+    * must stay configuration-sized: ONE bounded probe refuses a null id
+    * (it would delete nothing) and a pending set past `cap` BEFORE
+    * anything is written (`capName` names the caller's bound). Under
+    * the maintenance lock, so a compaction's read-apply-truncate never
+    * interleaves with it. A crash mid-write leaves partial tombstones
+    * the retry's anti-join completes. */
+  def addTombstones(spark: SparkSession, table: String, ids: DataFrame,
+      idCol: String, cap: Int, capName: String, context: String): Unit =
+    withBandLock {
+      val tomb = tombstoneTable(table)
+      val exists = spark.catalog.tableExists(tomb)
+      val storedId = if (exists) spark.table(tomb).columns.head else idCol
+      val del = ids.select(col(idCol)).distinct()
+      val pending =
+        if (exists) spark.table(tomb).select(col(storedId).as(idCol))
+        else del.limit(0)
+      val fresh = del.join(pending, Seq(idCol), "left_anti")
+      val probe = pending.select(lit(false).as("__null"))
+        .union(fresh.select(col(idCol).isNull.as("__null")))
+        .limit(cap + 1)
+        .agg(count(lit(1)), coalesce(max(col("__null")), lit(false)))
+        .head()
+      require(!probe.getBoolean(1),
+        s"$context: null $idCol in the delete set — the probe exclusion " +
+          "anti-join never matches null, so a null tombstone would " +
+          "silently delete nothing; filter upstream")
+      require(probe.getLong(0) <= cap,
+        s"$context: pending deletes for $table would exceed $cap — " +
+          "tombstones broadcast into every probe, so they must stay " +
+          "configuration-sized; run the family's compact to apply and " +
+          s"clear them, or raise $capName deliberately")
+      fresh.select(col(idCol).as(storedId))
+        .coalesce(1).write.mode("append").saveAsTable(tomb)
+      spark.catalog.refreshTable(tomb)
+    }
+
+  // ---- compact
+
+  /** Fold `table` back to one file per bucket. Every append writes its
+    * own task-aligned file set, so after N deliveries a bucket-pruned
+    * probe opens N files per bucket and probe cost grows with
+    * DELIVERIES, not data. The rewrite reads the layout from the
+    * catalog, applies pending tombstones (a broadcast anti-join on the
+    * side table's id column) and truncates them, and preserves the sort
+    * spec and every `graft.*` stamp. It is zero-shuffle: the forced
+    * bucketed scan claims the table's own partitioning, the repartition
+    * elides, and each task rewrites one bucket (left to the heuristic,
+    * the bucketed read would be dropped after the repartition was
+    * elided against it, and compaction would GROW the file count).
+    *
+    * The swap is two renames under the maintenance lock — live →
+    * `__compact_backup`, staging → live, then drop the backup — so a
+    * crash at any point leaves at least one full copy, which [[open]]
+    * heals. A probe plan compiled before the swap fails loudly on the
+    * moved files, never silently wrong. Idempotent. A crash between the
+    * swap and the truncate leaves tombstones naming removed ids, which
+    * probes no-op on and the next compact clears. */
+  def compact(spark: SparkSession, table: String, context: String,
+      key: Option[String] = None): Unit =
+      DriverBounded.labeled(spark, s"compactBucketedTable:$table") {
+    val layout = open(spark, table, context, key)
+    val staging = sibling(spark, table, "__compact_stage")
+    val backup = sibling(spark, table, "__compact_backup")
+    // leftovers of a crashed prior compact: the staging rewrite is
+    // redone, and a backup that outlived its swap is stale
+    dropTableAndLocation(spark, staging)
+    dropTableAndLocation(spark, backup)
+    withBandLock {
+      val tomb = tombstoneTable(table)
+      val applyTombs = spark.catalog.tableExists(tomb)
+      val live = spark.table(table)
+      val rows =
+        if (!applyTombs) live
+        else {
+          val id = spark.table(tomb).columns.head
+          live.join(broadcast(spark.table(tomb).select(col(id))), Seq(id),
+            "left_anti").select(live.columns.map(col).toIndexedSeq: _*)
+        }
+      val stamps = metadata(spark, table).properties
+        .filter(_._1.startsWith("graft."))
+      withAutoBucketedScanOff(spark) {
+        writer(rows, layout).mode("overwrite").saveAsTable(staging)
+      }
+      if (stamps.nonEmpty) stampTableProps(spark, staging, stamps)
+      spark.sql(s"ALTER TABLE ${liveName(spark, table)} RENAME TO $backup")
+      spark.sql(s"ALTER TABLE $staging RENAME TO ${liveName(spark, table)}")
+      dropTableAndLocation(spark, backup)
+      if (applyTombs) { spark.sql(s"TRUNCATE TABLE $tomb"); () }
+      // rows and stamps are preserved, but the serving-identity cache
+      // is conservatively dropped with the files it replaced
+      Similarity.invalidateServingIdentity(table)
+    }
+    spark.catalog.refreshTable(table)
+  }
+
+  // ---- storage helpers
+
+  private def ident(spark: SparkSession, table: String) =
+    spark.sessionState.sqlParser.parseTableIdentifier(table)
+
+  private def liveName(spark: SparkSession, table: String): String =
+    ident(spark, table).unquotedString
+
+  private def sibling(spark: SparkSession, table: String,
+      suffix: String): String = {
+    val id = ident(spark, table)
+    id.copy(table = id.table + suffix).unquotedString
+  }
+
+  private def metadata(spark: SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(ident(spark, table))
+
+  /** Drop `table` and clear a MANAGED location orphaned by a previous
+    * session (a fresh metastore over a persistent warehouse dir blocks
+    * CREATE otherwise), so builds are safely re-runnable. Only
+    * warehouse-managed directories are deleted: an existing table's
+    * catalog location unless EXTERNAL, else the default managed path —
+    * exactly the orphaned-directory case. The table's serving-identity
+    * cache entries die with it. */
+  def dropTableAndLocation(spark: SparkSession, table: String): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    val id = ident(spark, table)
+    val toClear: Option[org.apache.hadoop.fs.Path] =
+      if (spark.catalog.tableExists(table)) {
+        val meta = metadata(spark, table)
+        if (meta.tableType == CatalogTableType.MANAGED)
+          Some(new org.apache.hadoop.fs.Path(meta.location))
+        else None
+      } else Some(new org.apache.hadoop.fs.Path(
+        spark.sessionState.catalog.getDatabaseMetadata(
+          id.database.getOrElse(spark.catalog.currentDatabase))
+          .locationUri.toString,
+        id.table))
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    toClear.foreach { loc =>
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
+    Similarity.invalidateServingIdentity(table)
+  }
+
+  /** One `graft.*` serving property off the catalog — a driver-side
+    * metadata read, never a Spark job. */
+  def tableProp(spark: SparkSession, table: String,
+      key: String): Option[String] =
+    metadata(spark, table).properties.get(key)
+
+  /** Stamp `graft.*` serving properties onto `table`. Idempotent;
+    * appends never clear TBLPROPERTIES and [[compact]] copies them
+    * across its swap, so a stamp lives as long as the table. */
+  def stampTableProps(spark: SparkSession, table: String,
+      props: Map[String, String]): Unit = {
+    require(props.nonEmpty && props.forall { case (k, v) =>
+      k.startsWith("graft.") && !v.contains("'") })
+    val kvs = props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ")
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($kvs)")
+    ()
+  }
+
+  /** The width of `vecCol` stamped on `table` under `prop`, falling
+    * back to a null-safe one-row scan for a table stamped before the
+    * property existed (0 when it holds no usable vector — callers
+    * decide whether that is loud). */
+  def storedDim(spark: SparkSession, table: String, vecCol: String,
+      prop: String = DimProp): Int =
+    tableProp(spark, table, prop).map(_.toInt).getOrElse {
+      spark.table(table).select(size(col(vecCol)))
+        .filter(col(vecCol).isNotNull).limit(1).collect()
+        .headOption.map(_.getInt(0)).getOrElse(0)
+    }
+
+  /** Number of data files backing `table` — the quantity [[compact]]
+    * exists to bound. Hidden files (`_SUCCESS`, dotfiles) excluded. */
+  def fileCount(spark: SparkSession, table: String): Int = {
+    val loc = new org.apache.hadoop.fs.Path(metadata(spark, table).location)
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(loc)) 0
+    else fs.listStatus(loc).count { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+}

@@ -586,32 +586,20 @@ object Dedup {
   // dedup, the production ingest shape. No published pipeline re-mines
   // 100 TB per daily batch: the corpus's LSH bands persist ONCE as a
   // band-bucketed catalog table, and each new batch is banded, probed
-  // against the EXISTING index for near-dup/contamination verdicts,
-  // and appended idempotently (the buildIvfIndex/appendToIvfIndex
-  // device, with the band hash as the bucket key).
+  // against the EXISTING index for near-dup/contamination verdicts, and
+  // appended idempotently. The table's build / append / tombstone /
+  // compact lifecycle is [[BucketedStore]]'s.
 
   /** Persist `df`'s MinHash-LSH band frame (id, band) as a catalog
     * table bucketed by band — probes become scans of the batch's band
     * buckets with no shuffle on the index side, at any corpus size. */
   def buildBandIndex(df: DataFrame, textCol: String, idCol: String,
       table: String, k: Int = 6, bandWidth: Int = 2, shingleSize: Int = 3,
-      buckets: Int = 32): Unit = {
-    val spark = df.sparkSession
-    Similarity.dropTableAndLocation(spark, table)
-    // a rebuilt index starts with no pending deletes: a stale tombstone
-    // side table from a previous build would silently suppress live
-    // docs from every probe
-    Similarity.dropTableAndLocation(spark, tombstoneTable(table))
-    // task-aligned to buckets (same hash family): one file per bucket
-    // instead of one per (task x bucket) — see RawVault.writeTable
-    lshBands(minHashSignatures(df, textCol, idCol, k, shingleSize),
-        idCol, k, bandWidth)
-      .repartition(buckets, col("band")).write
-      .bucketBy(buckets, "band")
-      .mode("overwrite")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
-  }
+      buckets: Int = 32): Unit =
+    BucketedStore.rebuild(
+      lshBands(minHashSignatures(df, textCol, idCol, k, shingleSize),
+        idCol, k, bandWidth),
+      table, "band", buckets)
 
   /** Near-dup verdicts for a NEW batch against a persisted
     * [[buildBandIndex]] table: distinct (`idCol`, index_id) pairs
@@ -623,18 +611,13 @@ object Dedup {
     * are small by contract), so the index scan BUCKET-PRUNES to the
     * batch's band buckets with the band filter pushed to parquet; the
     * batch side broadcasts into the join. The index is never shuffled
-    * and never scanned beyond the probed buckets. The bucketed scan
-    * must survive planning (DisableUnnecessaryBucketedScan would
-    * discard the pruning — nothing above a broadcast join needs the
-    * distribution), so the plan is compiled inside the conf window,
-    * ASSERTED to bucket-prune (a mis-built index fails loudly here,
-    * not silently as a full scan at corpus size — the catalog
-    * bucketSpec is additionally validated up front, so even an empty
-    * batch refuses a mis-built table), and MATERIALIZED by an eager
+    * and never scanned beyond the probed buckets: the plan is pinned
+    * ([[BucketedStore.compileAndPinBucketedScan]] — asserted to prune,
+    * and the catalog bucketSpec is validated up front, so even an empty
+    * batch refuses a mis-built table) and MATERIALIZED by an eager
     * checkpoint: the returned frame and anything derived from it
-    * (.filter, joins) re-plan from the checkpointed verdict rows —
-    * batch-proportional by construction — never from the index, so
-    * the derived-frame full-scan fallback is structurally impossible.
+    * re-plan from the checkpointed verdict rows — batch-proportional
+    * by construction — never from the index.
     *
     * Checkpoint durability: the default is `localCheckpoint` —
     * verdict blocks live on executor storage only, so an executor
@@ -652,14 +635,12 @@ object Dedup {
       maxBatchBands: Int = 1 << 20,
       reliableCheckpoint: Boolean = false): DataFrame =
       DriverBounded.labeled(spark, s"probeBandIndex:$table") {
-    requireBandBucketedTable(spark, table, "probeBandIndex")
-    val (banded, release) = freshBatchBands(batch, textCol, idCol, k,
+    BucketedStore.open(spark, table, "probeBandIndex", Some("band"))
+    val (bandedDf, bandRows) = freshBatchBands(batch, textCol, idCol, k,
       bandWidth, shingleSize, maxBatchBands, "probeBandIndex")
-    try {
-      val bands = banded._2.map(_.get(1)).distinct.toSeq
-      probeBanded(spark, table, banded._1, bands, idCol,
-        reliableCheckpoint)
-    } finally release()
+    try probeBanded(spark, table, bandedDf,
+      bandRows.map(_.get(1)).distinct.toSeq, idCol, reliableCheckpoint)
+    finally { bandedDf.unpersist(blocking = false); () }
   }
 
   /** [[probeBandIndex]]'s core over an ALREADY-banded (persisted)
@@ -678,9 +659,8 @@ object Dedup {
     else {
       // tombstoned docs (superseded by resolve-at-ingest, or taken
       // down via deleteFromIndex) are dead to probes IMMEDIATELY —
-      // excluded above the pruned scan, the vector families'
-      // contract; compactBandIndex reclaims them physically
-      val pruned = Similarity.liveRows(spark, table,
+      // excluded above the pruned scan; compactBandIndex reclaims them
+      val pruned = BucketedStore.liveRows(spark, table,
         spark.table(table).filter(col("band").isin(bands: _*))
           .select(col(idCol).as("index_id"), col("band")),
         "index_id")
@@ -690,404 +670,70 @@ object Dedup {
         .filter(col("index_id") =!= col(idCol))
         .select(col(idCol), col("index_id"))
         .distinct()
-      compileAndPinBucketedScan(spark, out, table, reliableCheckpoint)
+      BucketedStore.compileAndPinBucketedScan(spark, out, table,
+        reliableCheckpoint, "probeBandIndex")
     }
 
   /** Idempotently append a new batch's bands to a [[buildBandIndex]]
-    * table: at-least-once delivery, exactly-once table effect (the
-    * vault loaders' contract). The idempotence check is bucket-pruned
-    * point lookups, not a corpus join — the batch's bands and ids
-    * re-enter the plan as literals, so a replayed batch finds its own
-    * (deterministically identical) bands in the probed buckets and
-    * appends nothing. */
+    * table at doc-id grain ([[BucketedStore.append]]): a replayed batch
+    * finds its own (deterministically identical) bands in the probed
+    * buckets and appends nothing. A tombstoned doc id cannot re-enter
+    * until compacted — its OLD bands are still physically present, so
+    * the anti-join would absorb the same-band rows and the next compact
+    * would strip BOTH generations. */
   def appendToBandIndex(batch: DataFrame, table: String, textCol: String,
       idCol: String, k: Int = 6, bandWidth: Int = 2, shingleSize: Int = 3,
-      buckets: Int = 32, maxBatchBands: Int = 1 << 20): Unit = {
+      maxBatchBands: Int = 1 << 20): Unit = {
     val spark = batch.sparkSession
     DriverBounded.labeled(spark, s"appendToBandIndex:$table") {
-    // a tombstoned doc id cannot re-enter until compacted: its OLD
-    // bands are still physically present, so the idempotence anti-join
-    // would absorb the same-band rows and the next compact would strip
-    // BOTH generations — the vector families' re-append contract.
-    // Resolve-at-ingest never trips this (winners are batch docs; a
-    // replayed ex-winner loses to the doc that superseded it).
-    Similarity.requireNotTombstoned(spark, table, batch, idCol,
-      "appendToBandIndex")
-    val (banded, release) = freshBatchBands(batch, textCol, idCol, k,
-      bandWidth, shingleSize, maxBatchBands, "appendToBandIndex")
-    try {
-      val bandedDf = banded._1
-      val ids = banded._2.map(_.get(0)).distinct.toSeq
-      val bands = banded._2.map(_.get(1)).distinct.toSeq
-      // same pinning as the probe: the idempotence lookup must
-      // bucket-prune (asserted) and is checkpointed so the anti-join
-      // derives from batch-proportional rows, not from the table
-      // being appended to
-      val existing =
-        if (bands.isEmpty) bandedDf.select(col(idCol)).limit(0)
-        else compileAndPinBucketedScan(spark,
-          spark.table(table)
-            .filter(col("band").isin(bands: _*) && col(idCol).isin(ids: _*))
-            .select(col(idCol)),
-          table, reliable = false, "appendToBandIndex")
-      val fresh = bandedDf.join(existing, Seq(idCol), "left_anti")
-        .select(col(idCol), col("band"))
-      withAutoBucketedScanOff(spark) {
-        fresh.repartition(buckets, col("band")).write
-          .bucketBy(buckets, "band")
-          .mode("append")
-          .saveAsTable(table)
-      }
-    } finally release()
-    spark.catalog.refreshTable(table)
+      val layout = BucketedStore.open(spark, table, "appendToBandIndex",
+        Some("band"))
+      BucketedStore.append(spark, table, layout, Seq(idCol),
+        batchBands(batch, textCol, idCol, k, bandWidth, shingleSize),
+        maxBatchBands, "maxBatchBands", "appendToBandIndex")
     }
   }
 
-  private val bandConfLock = new Object
+  /** A batch's (id, band) rows, banded once per distinct id. */
+  private def batchBands(batch: DataFrame, textCol: String, idCol: String,
+      k: Int, bandWidth: Int, shingleSize: Int): DataFrame =
+    lshBands(
+      minHashSignatures(batch.dropDuplicates(Seq(idCol)), textCol, idCol,
+        k, shingleSize),
+      idCol, k, bandWidth)
 
-  /** Run `body` with the session-global auto-bucketed-scan heuristic
-    * OFF, under the ONE process lock every conf window in the engine
-    * shares (band probes/appends, keyed probes/appends, compactions,
-    * and the IVF index's append — Similarity routes through here).
-    * The flip is session-global, so two concurrent windows on
-    * DIFFERENT locks could interleave save/flip/restore and leave the
-    * heuristic permanently flipped (or spuriously fail a probe's
-    * pruning assert); one shared lock serializes all of them.
-    * Reentrant (JVM monitor), so a window already holding
-    * [[bandConfLock]] — the compaction swap — can nest it. */
-  private[graft] def withAutoBucketedScanOff[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T =
-    bandConfLock.synchronized {
-      val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try body finally spark.conf.set(key, old)
-    }
-
-  /** Shared probe/append scaffolding: the batch banded once (persisted
-    * — the collected literals must be the exact rows the joins later
-    * see, cf. Similarity.freshIndexRows' non-determinism note), its
-    * (id, band) rows collected under the `maxBatchBands` bound.
-    * Returns ((banded, rows), release) — callers derive their id/band
-    * literal sets from the rows (resolve-at-ingest additionally
-    * filters them to the delivery's winners, driver-side). */
+  /** Shared probe scaffolding: the batch banded once, persisted (the
+    * collected literals must be the exact rows the joins later see;
+    * the caller unpersists), and its (id, band) rows collected under
+    * the `maxBatchBands` bound — callers derive their id/band literal
+    * sets from the rows (resolve-at-ingest additionally filters them
+    * to the delivery's winners, driver-side). */
   private def freshBatchBands(batch: DataFrame, textCol: String,
       idCol: String, k: Int, bandWidth: Int, shingleSize: Int,
       maxBatchBands: Int, context: String)
-      : ((DataFrame, Array[org.apache.spark.sql.Row]), () => Unit) = {
-    val banded = lshBands(
-      minHashSignatures(batch.dropDuplicates(Seq(idCol)), textCol, idCol,
-        k, shingleSize),
-      idCol, k, bandWidth).persist()
-    val rows = DriverBounded.collectCapped(banded, maxBatchBands,
+      : (DataFrame, Array[org.apache.spark.sql.Row]) = {
+    val banded = batchBands(batch, textCol, idCol, k, bandWidth,
+      shingleSize).persist()
+    (banded, DriverBounded.collectCapped(banded, maxBatchBands,
       s"$context: micro-batch exceeds maxBatchBands $maxBatchBands (the " +
         "batch's bands become planning-time point-lookup literals); " +
-        "split the batch or raise the bound deliberately")
-    ((banded, rows), () => { banded.unpersist(blocking = false); () })
+        "split the batch or raise the bound deliberately"))
   }
 
-  /** Compile `df`'s physical plan with the auto-bucketed-scan
-    * heuristic OFF so the In(band) bucket pruning survives, assert at
-    * call time that the compiled plan actually bucket-prunes (the
-    * ranked() precondition pattern — probing a table that is not a
-    * [[buildBandIndex]] product refuses loudly instead of shipping a
-    * full-index-scan probe), then materialize via an eager checkpoint
-    * OUTSIDE the window: `executedPlan` is a cached lazy val on the
-    * QueryExecution compiled here, and checkpoint execution only calls
-    * `executedPlan.execute()` — it never re-plans — so the lock and
-    * the session-global conf flip cover plan compilation alone, not
-    * the probe job. Concurrent same-session queries plan with their
-    * own conf, and appendToBandIndex never serializes behind probe
-    * execution. */
-  private[graft] def compileAndPinBucketedScan(
-      spark: org.apache.spark.sql.SparkSession, df: DataFrame,
-      table: String, reliable: Boolean,
-      context: String = "probeBandIndex"): DataFrame = {
-    withAutoBucketedScanOff(spark) {
-      val executed = df.queryExecution.executedPlan.toString
-      require(executed.contains("SelectedBucketsCount"),
-        s"$context: the scan of $table did not bucket-prune — " +
-          "the table must be bucketed by its probe key (a " +
-          "buildBandIndex/buildKeyedTable product); refusing to run " +
-          "a full-index-scan probe")
-    }
-    val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    // Re-assert on the FINAL plan, post-execution: the compile-time
-    // assert above holds for non-adaptive plans, but under AQE (the
-    // session default) reOptimize re-runs stage-preparation rules with
-    // the conf RESTORED — a Spark version that includes
-    // DisableUnnecessaryBucketedScan in queryStagePreparationRules
-    // would drop the just-asserted bucketed scan at execution time,
-    // and the compile-time assert would have passed on a plan the
-    // engine didn't run. This version doesn't (the check passes); if
-    // an upgrade changes that, the probe fails loudly here instead of
-    // silently full-scanning the index.
-    require(df.queryExecution.executedPlan.toString
-        .contains("SelectedBucketsCount"),
-      s"$context: the EXECUTED plan against $table lost its " +
-        "bucket pruning (AQE re-optimization re-ran " +
-        "DisableUnnecessaryBucketedScan with the restored conf?) — " +
-        "the probe that just ran full-scanned the index; this Spark " +
-        "version's stage-preparation rules are incompatible with the " +
-        "compile-inside-the-conf-window device")
-    out
-  }
-
-  /** Catalog-metadata validation shared by every band-index read/
-    * rewrite entry point: `table` must be bucketed by exactly `band`
-    * (a [[buildBandIndex]]/[[appendToBandIndex]] product). Returns the
-    * bucket count, so layout-preserving rewrites need no bucket
-    * parameter. This is the metadata complement of the compiled-plan
-    * `SelectedBucketsCount` assert — it also covers paths where no
-    * plan exists to inspect (an empty probe batch, a pre-rewrite
-    * check). */
-  private[graft] def requireBandBucketedTable(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      context: String): Int =
-    requireKeyBucketedTable(spark, table, "band", context)
-
-  /** [[requireBandBucketedTable]] generalized to any bucket column —
-    * shared with the keyed side tables ([[buildKeyedTable]]). */
-  private[graft] def requireKeyBucketedTable(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      keyCol: String, context: String): Int = {
-    restoreInterruptedSwap(spark, table)
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val spec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
-    require(spec.exists(_.bucketColumnNames == Seq(keyCol)),
-      s"$context: table $table is not $keyCol-bucketed " +
-        s"(bucketSpec=$spec) — not a buildBandIndex/buildKeyedTable " +
-        "product; a probe against it could not bucket-prune at any scale")
-    spec.get.numBuckets
-  }
-
-  /** Self-healing for a [[compactBandIndex]] swap interrupted between
-    * its two renames: the live name is missing but the data survives
-    * in full under `__compact_backup` — rename it back. Called by
-    * every band-index entry point (via [[requireBandBucketedTable]]),
-    * so the first probe/append/compact after the crash restores the
-    * pre-compaction table and the compaction is simply redone. Runs
-    * under the band lock: a reader entry point racing a LIVE
-    * compaction's two-rename window would otherwise see the
-    * moved-away live table and rename the backup back, making the
-    * compactor's staging→live rename fail and orphaning the staging
-    * table — the lock serializes the heal against the swap it heals
-    * (the single-writer contract makes that race a caller bug, but
-    * the heal must not widen the surface it exists to close). */
-  private def restoreInterruptedSwap(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    bandConfLock.synchronized {
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val backup = ident.copy(table = ident.table + "__compact_backup")
-        .unquotedString
-      if (!spark.catalog.tableExists(table) &&
-          spark.catalog.tableExists(backup)) {
-        spark.sql(s"ALTER TABLE $backup RENAME TO ${ident.unquotedString}")
-        ()
-      }
-    }
-
-  /** Number of data files currently backing a band-index or keyed
-    * table — the quantity [[compactBandIndex]]/[[compactKeyedTable]]
-    * exist to bound. Hidden files (`_SUCCESS`, dotfiles) excluded. */
-  def bandIndexFileCount(spark: org.apache.spark.sql.SparkSession,
-      table: String): Int = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(loc)) 0
-    else fs.listStatus(loc).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Compact a [[buildBandIndex]] table back to one file per bucket.
-    *
-    * Every [[appendToBandIndex]] delivery writes its own task-aligned
-    * file set, so after N deliveries each bucket holds N files and a
-    * probe's bucket-pruned scan opens N files per probed bucket — the
-    * probe cost degrades linearly in DELIVERIES, not in data. This
-    * pass rewrites the table coalesced (the f05 rewrite device: same
-    * bucket count and hash family read from the catalog, one
-    * task-aligned file per bucket) into a staging table, then swaps
-    * it in under the band lock, so no probe plan compilation or
-    * append interleaves with the swap. (A probe plan compiled before
-    * the swap that is still executing its checkpoint when the swap
-    * lands fails loudly on the moved files — never silently wrong —
-    * and the single-writer ingest contract makes that interleaving a
-    * caller bug.) The swap is two catalog renames, not atomic: live →
-    * `__compact_backup`, staging → live, then drop the backup — so a
-    * crash at ANY point leaves at least one full copy of the data
-    * (never zero, unlike a drop-then-rename). An interrupted swap is
-    * self-healing: every band-index entry point detects a missing
-    * live table with a surviving backup and renames it back before
-    * proceeding (the compaction itself is then simply redone). When
-    * the index has a tombstone
-    * side table ([[ingestResolveNearDups]]'s supersede mechanism),
-    * the rewrite also APPLIES it: tombstoned docs' bands are dropped
-    * and the tombstone table truncated — deletes cost O(corpus) only
-    * here, never per delivery. Verdict-neutral by construction apart
-    * from exactly those applied tombstones — row set, bucketing spec,
-    * and bucket hash are all unchanged (spec'd: identical probe
-    * verdicts before/after with the file count reduced) — and
-    * idempotent: re-running rewrites the same one-file-per-bucket
-    * layout. */
+  /** Compact a [[buildBandIndex]] table back to one file per bucket,
+    * applying its pending tombstones ([[BucketedStore.compact]]):
+    * verdict-neutral apart from exactly those, idempotent. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val buckets = requireBandBucketedTable(spark, table, "compactBandIndex")
-    val tomb = tombstoneTable(table)
-    val applyTombs = spark.catalog.tableExists(tomb)
-    compactBucketedTable(spark, table, "band", buckets,
-      rows =>
-        if (applyTombs) {
-          val idName = bandIndexIdColumn(spark, table)
-          rows.join(spark.table(tomb).select(col(idName)), Seq(idName),
-            "left_anti")
-        } else rows,
-      () => if (applyTombs) { spark.sql(s"TRUNCATE TABLE $tomb"); () })
-  }
+      table: String): Unit =
+    BucketedStore.compact(spark, table, "compactBandIndex", Some("band"))
 
-  /** [[compactBandIndex]]'s rewrite for a [[buildKeyedTable]] side
-    * table — same degradation, same fix: every [[appendToKeyedTable]]
-    * delivery writes its own task-aligned file set, so after N
-    * deliveries a probe's bucket-pruned point lookup opens N files
-    * per probed bucket and probe cost grows linearly in DELIVERIES.
-    * Row-neutral (keyed tables have no tombstone side — appends are
-    * anti-joined, so there is nothing to delete), idempotent, same
-    * backup dance and self-healing swap. Run it on the fingerprint/
-    * score/sink tables the streamed flows maintain, on the same
-    * schedule the band index compacts. */
+  /** [[compactBandIndex]] for a [[buildKeyedTable]] side table:
+    * row-neutral (appends are anti-joined, so there is nothing to
+    * delete). Run it on the fingerprint/score/sink tables the streamed
+    * flows maintain, on the band index's schedule. */
   def compactKeyedTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, keyCol: String): Unit = {
-    val buckets = requireKeyBucketedTable(spark, table, keyCol,
-      "compactKeyedTable")
-    compactBucketedTable(spark, table, keyCol, buckets,
-      identity, () => ())
-  }
-
-  /** [[compactKeyedTable]] for an id-carrying index table with a
-    * tombstone side ([[graft.operators.Similarity.deleteFromIndex]]'s
-    * pending deletes — the vector families): the rewrite additionally
-    * APPLIES the tombstones (the [[compactBandIndex]] device) —
-    * tombstoned ids' rows are dropped and the tombstone table
-    * truncated, so deletes cost O(corpus) only here, never per probe.
-    * The id column's name is read from the tombstone table's own
-    * schema (stamped by the delete — the side table is
-    * self-describing), so the bucket column need not be the id column
-    * (the IVF/PQ families bucket by `cid` and delete by the caller's
-    * id). The tombstone anti-join is broadcast (pending deletes are
-    * bounded by the delete path), so the rewrite stays zero-shuffle.
-    * A crash between the swap and the truncate leaves tombstones
-    * naming already-removed ids — benign: probes' anti-joins no-op on
-    * them and the next compact re-applies and truncates. */
-  def compactIdKeyedTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, bucketCol: String): Unit = {
-    val buckets = requireKeyBucketedTable(spark, table, bucketCol,
-      "compactIdKeyedTable")
-    val tomb = tombstoneTable(table)
-    val applyTombs = spark.catalog.tableExists(tomb)
-    compactBucketedTable(spark, table, bucketCol, buckets,
-      rows =>
-        if (applyTombs) {
-          val idName = spark.table(tomb).columns.head
-          rows.join(broadcast(spark.table(tomb).select(col(idName))),
-            Seq(idName), "left_anti")
-        } else rows,
-      () => if (applyTombs) { spark.sql(s"TRUNCATE TABLE $tomb"); () })
-  }
-
-  /** Run `body` under the engine's ONE maintenance lock (the same
-    * object every conf window and compaction swap synchronizes on) —
-    * for mutations that must not interleave with a compact's
-    * read-rewrite-truncate cycle, e.g. a tombstone append landing
-    * between a compact's tombstone read and its truncate would be
-    * silently wiped unapplied. */
-  private[graft] def withBandLock[T](body: => T): T =
-    bandConfLock.synchronized(body)
-
-  /** The shared zero-shuffle compaction core: rewrite `table` (its
-    * rows through `transform` — the band index's tombstone apply)
-    * coalesced to one task-aligned file per bucket into a staging
-    * table, swap it in under the band lock via the never-zero-copies
-    * backup dance, then run `afterSwap` (the tombstone truncate)
-    * still under the lock. */
-  private def compactBucketedTable(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      bucketCol: String, buckets: Int,
-      transform: DataFrame => DataFrame, afterSwap: () => Unit): Unit =
-      DriverBounded.labeled(spark, s"compactBucketedTable:$table") {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val stagingIdent = ident.copy(table = ident.table + "__compact_stage")
-    val staging = stagingIdent.unquotedString
-    val backup = ident.copy(table = ident.table + "__compact_backup")
-      .unquotedString
-    // leftovers of a crashed prior compact: the staging rewrite is
-    // redone from scratch, and a backup that survived past its swap
-    // (crash after the stage→live rename, before the drop) is stale
-    Similarity.dropTableAndLocation(spark, staging)
-    Similarity.dropTableAndLocation(spark, backup)
-    bandConfLock.synchronized {
-      val rows = transform(spark.table(table))
-      // the rewrite is METADATA-preserving too: the live table's sort
-      // spec (the vector store sorts within buckets for single-file
-      // point lookups) and its graft.* serving stamps (index width,
-      // codebook fingerprint — Similarity.stampTableProps) must
-      // survive the staging swap, or a compact would silently strip
-      // the layout/identity guarantees the probes assert on
-      val meta = spark.sessionState.catalog.getTableMetadata(ident)
-      val sortCols = meta.bucketSpec.map(_.sortColumnNames).getOrElse(Nil)
-      val graftProps = meta.properties.filter(_._1.startsWith("graft."))
-      // Force the bucketed scan for the rewrite: the scan then claims
-      // HashPartitioning(bucketCol, buckets), the repartition below
-      // elides, and each task reads ONE bucket's file sets and writes
-      // its one replacement file — a zero-shuffle, per-bucket-parallel
-      // rewrite. Left to the default heuristic,
-      // DisableUnnecessaryBucketedScan drops the bucketed read AFTER
-      // the repartition was already elided against its claimed
-      // partitioning, and the write tasks hold arbitrary bucket
-      // mixtures — compaction would then GROW the file count it
-      // exists to bound.
-      withAutoBucketedScanOff(spark) {
-        val bucketed = rows.repartition(buckets, col(bucketCol))
-          .write.bucketBy(buckets, bucketCol)
-        val writer =
-          if (sortCols.isEmpty) bucketed
-          else bucketed.sortBy(sortCols.head, sortCols.tail: _*)
-        writer.mode("overwrite").saveAsTable(staging)
-      }
-      if (graftProps.nonEmpty)
-        Similarity.stampTableProps(spark, staging, graftProps)
-      // backup dance (never zero copies): live→backup, stage→live,
-      // drop backup. A crash between the renames strands the data
-      // under the backup name; restoreInterruptedSwap renames it back
-      // at the next entry-point call.
-      spark.sql(s"ALTER TABLE ${ident.unquotedString} RENAME TO $backup")
-      spark.sql(s"ALTER TABLE $staging RENAME TO ${ident.unquotedString}")
-      Similarity.dropTableAndLocation(spark, backup)
-      afterSwap()
-      // the rewrite preserves stamps and rows, but conservatively drop
-      // the table's serving-identity cache with the files it replaced
-      Similarity.invalidateServingIdentity(table)
-    }
-    spark.catalog.refreshTable(table)
-  }
-
-  /** The tombstone side table of a band index: superseded index doc
-    * ids awaiting physical removal at the next [[compactBandIndex]]. */
-  private[graft] def tombstoneTable(table: String): String =
-    table + "__tombstones"
-
-  /** The id column of a band-index table (its one non-`band` column). */
-  private def bandIndexIdColumn(
-      spark: org.apache.spark.sql.SparkSession, table: String): String =
-    spark.table(table).columns.filter(_ != "band") match {
-      case Array(one) => one
-      case other => throw new IllegalArgumentException(
-        s"band index $table must have exactly (id, band) columns, " +
-          s"saw ${other.mkString(",")} besides band")
-    }
+      table: String, keyCol: String): Unit =
+    BucketedStore.compact(spark, table, "compactKeyedTable", Some(keyCol))
 
   /** Incremental near-dup RESOLUTION at ingest — the [[probeBandIndex]]
     * + [[resolveNearDupsByQuality]] composition the one-shot d42 pass
@@ -1097,13 +743,13 @@ object Dedup {
     *
     * Policy (the d42 total order): a batch doc WINS iff it beats every
     * live index-side candidate under (`scoreCol` desc, id asc).
-    * Winners are ingested ([[appendToBandIndex]], idempotent) and
-    * their candidates become TOMBSTONES (appended to the side table;
-    * physically removed at the next [[compactBandIndex]]); losers are
-    * dropped and never enter the index. Tombstoned docs are dead to
-    * every later delivery — their verdict rows are filtered before
-    * resolution — so a better-scored late arrival genuinely
-    * supersedes its index-side near-dup.
+    * Winners are ingested (the [[appendToBandIndex]] append,
+    * idempotent) and their candidates become TOMBSTONES (physically
+    * removed at the next [[compactBandIndex]]); losers are dropped and
+    * never enter the index. Tombstoned docs are dead to every later
+    * delivery — their verdict rows are filtered before resolution — so
+    * a better-scored late arrival genuinely supersedes its index-side
+    * near-dup.
     *
     * `indexScores` must cover every index doc id (`idCol`,
     * `scoreCol`) — it is scanned ONCE, semi-joined by the broadcast
@@ -1125,28 +771,22 @@ object Dedup {
     * winner finds its candidates tombstoned and itself appended (both
     * appends anti-joined), a replayed loser loses again.
     *
-    * Per-delivery cost note: the tombstone side table is read twice
-    * per delivery (the probe's exclusion anti-join — shared with
-    * ad-hoc probes since the takedown unification — and the tombstone
-    * append's own anti-join; the winner append's re-entry guard is a
-    * third, limit(1)-bounded). It is TOMBSTONE-grain — superseded
-    * docs awaiting the
-    * next [[compactBandIndex]], which truncates it — so the
-    * compaction CADENCE is what bounds those two reads, not the
-    * corpus; schedule compaction accordingly on high-supersede
-    * workloads. Because tombstones BROADCAST into every probe, the
-    * pending set is additionally configuration-bounded
-    * (`maxPendingTombstones`, the [[Similarity.deleteFromIndex]]
-    * invariant): a high-supersede stream with a slow compaction
-    * cadence fails loudly with direction (run [[compactBandIndex]])
-    * instead of growing the probe broadcast without bound.
+    * The tombstone side table is TOMBSTONE-grain and read a few times
+    * per delivery (the probe's exclusion, the tombstone append, the
+    * winner's re-entry guard); the next [[compactBandIndex]] truncates
+    * it, so the compaction CADENCE bounds those reads. Because
+    * tombstones broadcast into every probe, the pending set is also
+    * configuration-bounded (`maxPendingTombstones`, checked before the
+    * write): a delivery that would exceed it fails loudly with
+    * direction (run [[compactBandIndex]]) and leaves the tombstones
+    * and the index unchanged.
     *
     * Returns one row per batch doc:
     * (idCol, n_candidates, kept, n_superseded). */
   def ingestResolveNearDups(spark: org.apache.spark.sql.SparkSession,
       table: String, batch: DataFrame, textCol: String, idCol: String,
       scoreCol: String, indexScores: DataFrame, k: Int = 6,
-      bandWidth: Int = 2, shingleSize: Int = 3, buckets: Int = 32,
+      bandWidth: Int = 2, shingleSize: Int = 3,
       maxBatchBands: Int = 1 << 20,
       maxPendingTombstones: Int = 1 << 20): DataFrame =
     resolveAtIngest(spark, table, batch, textCol, idCol, scoreCol,
@@ -1162,8 +802,7 @@ object Dedup {
         .join(broadcast(withBatch), Seq("index_id")),
       coverageGuarded = false,
       _ => (), "the indexScores frame argument",
-      k, bandWidth, shingleSize, buckets, maxBatchBands,
-      maxPendingTombstones)
+      k, bandWidth, shingleSize, maxBatchBands, maxPendingTombstones)
 
   /** [[ingestResolveNearDups]] with the score side PERSISTED — the
     * per-delivery shape: candidate scores come from bucket-pruned
@@ -1180,7 +819,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       table: String, batch: DataFrame, textCol: String, idCol: String,
       scoreCol: String, scoreTable: String, k: Int = 6,
-      bandWidth: Int = 2, shingleSize: Int = 3, buckets: Int = 32,
+      bandWidth: Int = 2, shingleSize: Int = 3,
       maxBatchBands: Int = 1 << 20,
       maxPendingTombstones: Int = 1 << 20): DataFrame =
     resolveAtIngest(spark, table, batch, textCol, idCol, scoreCol,
@@ -1209,8 +848,7 @@ object Dedup {
       winners => appendToKeyedTable(
         winners.select(col(idCol), col(scoreCol)), scoreTable, idCol),
       s"the persisted score table $scoreTable",
-      k, bandWidth, shingleSize, buckets, maxBatchBands,
-      maxPendingTombstones)
+      k, bandWidth, shingleSize, maxBatchBands, maxPendingTombstones)
 
   /** Why score coverage is a hard contract — shared by the in-row
     * guard (indexed form) and the separate probe (frame form). */
@@ -1232,36 +870,26 @@ object Dedup {
     * triage reads which side actually lacked the candidate's score.
     *
     * Per-delivery job shape (measured r22, guide §1.2): the batch is
-    * banded ONCE — the probe and the winner append previously each ran
-    * their own minhash pipeline + driver collect — the winner ids come
-    * from one bounded collect over the checkpointed resolution rows
-    * (their band literals are a driver-side subset of the banding
-    * collect), the coverage guard rides the pairs checkpoint, and the
-    * pending-tombstone cap is enforced by one post-append limit probe
-    * of the tombstone table alone (bounding the probe broadcast at
-    * maxPendingTombstones + one batch) instead of a second evaluation
-    * of the tombstone anti-join under a union. */
+    * banded ONCE and its rows feed both the probe and the winner
+    * append (the winners' band literals are a driver-side subset of
+    * the banding collect), the winner ids come from one bounded
+    * collect over the checkpointed resolution rows, and the coverage
+    * guard rides the pairs checkpoint. */
   private def resolveAtIngest(spark: org.apache.spark.sql.SparkSession,
       table: String, batch: DataFrame, textCol: String, idCol: String,
       scoreCol: String,
       attachScores: (DataFrame, DataFrame) => DataFrame,
       coverageGuarded: Boolean,
       onWinners: DataFrame => Unit, scoreSource: String, k: Int,
-      bandWidth: Int, shingleSize: Int, buckets: Int,
+      bandWidth: Int, shingleSize: Int,
       maxBatchBands: Int, maxPendingTombstones: Int): DataFrame =
       DriverBounded.labeled(spark, s"resolveAtIngest:$table") {
-    val tomb = tombstoneTable(table)
-    if (!spark.catalog.tableExists(tomb))
-      spark.table(table).select(col(idCol)).limit(0)
-        .write.saveAsTable(tomb)
-    requireBandBucketedTable(spark, table, "resolveAtIngest")
-    // ONE banding pass per delivery, shared by the probe and the
-    // winner append (guide §1.2 — the two used to band independently)
-    val (banded, release) = freshBatchBands(batch, textCol, idCol, k,
+    val layout = BucketedStore.open(spark, table, "resolveAtIngest",
+      Some("band"))
+    BucketedStore.ensureTombstones(spark, table, idCol)
+    val (bandedDf, bandRows) = freshBatchBands(batch, textCol, idCol, k,
       bandWidth, shingleSize, maxBatchBands, "resolveAtIngest")
     try {
-      val bandedDf = banded._1
-      val bandRows = banded._2
       val bands = bandRows.map(_.get(1)).distinct.toSeq
       // tombstone exclusion lives INSIDE the probe (one read per
       // delivery, shared with ad-hoc probes) — verdicts arrive already
@@ -1311,8 +939,7 @@ object Dedup {
       // by the banding collect's own cap — so it comes back as ONE
       // bounded collect and re-enters as a LocalRelation: the returned
       // frame, the winner id literals, and the tombstone-skip decision
-      // all read the same driver rows (the old shape paid a checkpoint
-      // job plus a winner-collect job per delivery for the same data)
+      // all read the same driver rows
       val resolvedRows = DriverBounded.collectCapped(resolvedPlan,
         maxBatchBands,
         "resolveAtIngest: resolution rows exceed maxBatchBands")
@@ -1320,78 +947,32 @@ object Dedup {
         java.util.Arrays.asList(resolvedRows: _*), resolvedPlan.schema)
       val winnerIds = resolvedRows.filter(_.getBoolean(2))
         .map(_.get(0)).toSeq
-      val winnerIdSet = winnerIds.toSet
-      val winnerBands = bandRows
-        .filter(r => winnerIdSet.contains(r.get(0)))
-        .map(_.get(1)).distinct.toSeq
-      // tombstones: superseded index docs awaiting the next compact.
-      // Skipped entirely when no winner had a candidate (nothing can
-      // be superseded). The side table is self-describing — its stored
-      // id column name is authoritative (a tomb first stamped by
-      // deleteFromIndex may carry a different name than idCol), so the
-      // anti-join renames it in and the append renames back out.
-      if (resolvedRows.exists(r => r.getBoolean(2) && r.getLong(1) > 0)) {
-        val tombT = spark.table(tomb)
-        val storedId = tombT.columns.head
-        val freshTombs = pairs
-          .join(broadcast(byDoc.filter(col("__wins")).select(col(idCol))),
-            Seq(idCol), "left_semi")
-          .select(col("index_id").as(idCol)).distinct()
-          .join(tombT.select(col(storedId).as(idCol)), Seq(idCol),
-            "left_anti")
-        freshTombs.select(col(idCol).as(storedId))
-          .write.mode("append").saveAsTable(tomb)
-        spark.catalog.refreshTable(tomb)
-        // tombstones broadcast into every probe (the exclusion
-        // anti-join), so the pending set must stay configuration-sized
-        // — the deleteFromIndex invariant applied to supersede
-        // tombstones: refuse loudly with direction instead of growing
-        // the probe broadcast unboundedly under a slow compaction
-        // cadence. Enforced by one limit probe of the table AFTER the
-        // append (bound: maxPendingTombstones + one batch) — the
-        // pre-append union form paid a second evaluation of the
-        // anti-join every delivery.
-        require(!DriverBounded.exceeds(
-            spark.table(tomb), maxPendingTombstones),
-          s"ingestResolveNearDups: pending deletes for $table " +
-            s"exceed $maxPendingTombstones — supersede tombstones " +
-            "broadcast into every probe, so they must stay " +
-            "configuration-sized; run compactBandIndex to apply and " +
-            "clear them, or raise maxPendingTombstones deliberately")
-      }
+      // tombstones: the superseded index docs, skipped entirely when no
+      // winner had a candidate (nothing can be superseded); the cap is
+      // enforced before the write, so an over-cap delivery changes
+      // neither the tombstones nor the index
+      if (resolvedRows.exists(r => r.getBoolean(2) && r.getLong(1) > 0))
+        BucketedStore.addTombstones(spark, table,
+          pairs.join(broadcast(byDoc.filter(col("__wins"))
+              .select(col(idCol))), Seq(idCol), "left_semi")
+            .select(col("index_id").as(idCol)),
+          idCol, maxPendingTombstones, "maxPendingTombstones",
+          "ingestResolveNearDups")
       if (winnerIds.nonEmpty) {
-        val winners = batch.filter(col(idCol).isin(winnerIds: _*))
-        // a winner that was itself superseded THIS delivery (a batch
-        // doc whose id is also an index doc another winner beat) must
-        // not re-enter until compacted — same guard as the standalone
-        // append path
-        Similarity.requireNotTombstoned(spark, table, winners, idCol,
-          "appendToBandIndex")
-        // idempotence check over the winners' own (band, id) literals,
-        // pinned to bucket-prune exactly like the standalone append;
-        // fresh bands come from the SAME persisted banding the probe
+        // the winners' bands are the SAME persisted banding the probe
         // used (deterministic pipeline, so a replayed winner finds its
-        // identical bands and appends nothing)
-        val existing = compileAndPinBucketedScan(spark,
-          spark.table(table)
-            .filter(col("band").isin(winnerBands: _*) &&
-              col(idCol).isin(winnerIds: _*))
-            .select(col(idCol)),
-          table, reliable = false, "appendToBandIndex")
-        val fresh = bandedDf.filter(col(idCol).isin(winnerIds: _*))
-          .join(existing, Seq(idCol), "left_anti")
-          .select(col(idCol), col("band"))
-        withAutoBucketedScanOff(spark) {
-          fresh.repartition(buckets, col("band")).write
-            .bucketBy(buckets, "band")
-            .mode("append")
-            .saveAsTable(table)
-        }
-        spark.catalog.refreshTable(table)
-        onWinners(winners)
+        // identical bands and appends nothing); a winner superseded
+        // THIS delivery (a batch doc whose id is also an index doc
+        // another winner beat) trips the store's re-entry guard
+        val winnerIdSet = winnerIds.toSet
+        BucketedStore.appendCollected(spark, table, layout, Seq(idCol),
+          bandedDf.filter(col(idCol).isin(winnerIds: _*)),
+          bandRows.filter(r => winnerIdSet.contains(r.get(0))).toSeq,
+          "appendToBandIndex")
+        onWinners(batch.filter(col(idCol).isin(winnerIds: _*)))
       }
       resolved
-    } finally release()
+    } finally { bandedDf.unpersist(blocking = false); () }
   }
 
   /** Materialize the pairs frame, surfacing an in-row coverage-guard
@@ -1423,15 +1004,9 @@ object Dedup {
   // corpus-sized frame per delivery makes delivery cost proportional
   // to the CORPUS, not the batch. Persisting the lookup side as a
   // catalog table bucketed by the probe key makes every per-batch
-  // lookup a bucket-pruned point probe — the batch's keys enter the
-  // plan as literals, the scan opens only their buckets (asserted,
-  // like probeBandIndex), and delivery cost is O(batch) at any corpus
-  // size. Same lifecycle as the band index: build / idempotent append
-  // / asserted-pruned probe / zero-shuffle compaction
-  // ([[compactKeyedTable]] — appends are anti-joined so there is
-  // never a duplicate key to resolve, but each delivery stacks its
-  // own file set and probe cost grows linearly in deliveries until
-  // the rewrite folds each bucket back to one file).
+  // lookup a bucket-pruned point probe — delivery cost is O(batch) at
+  // any corpus size. The lifecycle is [[BucketedStore]]'s; compact
+  // with [[compactKeyedTable]].
 
   /** Persist `df` as a catalog table bucketed by `keyCol`, one
     * task-aligned file per bucket. `df` must be key-distinct (one row
@@ -1448,8 +1023,6 @@ object Dedup {
     * buckets; the default 32 is the local-mode test shape. */
   def buildKeyedTable(df: DataFrame, keyCol: String, table: String,
       buckets: Int = 32): Unit = {
-    val spark = df.sparkSession
-    Similarity.dropTableAndLocation(spark, table)
     // repartition FIRST: the duplicate-key window's required clustering
     // is then already satisfied (hashpartitioning on keyCol), so the
     // guard rides the write's own task-alignment exchange — one
@@ -1479,12 +1052,8 @@ object Dedup {
           .otherwise(col(c)).as(c)
       else col(c)
     }
-    keyed.select(guarded.toIndexedSeq: _*)
-      .write
-      .bucketBy(buckets, keyCol)
-      .mode("overwrite")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    BucketedStore.rebuild(keyed.select(guarded.toIndexedSeq: _*), table,
+      keyCol, buckets, aligned = true)
   }
 
   /** Idempotently append `batch` to a [[buildKeyedTable]] table at key
@@ -1498,94 +1067,68 @@ object Dedup {
     *
     * The idempotence check mirrors [[probeKeyedTable]]'s two forms:
     * at micro-batch sizes (≤ `joinFormThreshold` distinct keys) it is
-    * bucket-pruned point lookups — the batch's keys enter the plan as
-    * literals (bounded by `maxKeys`, loud fail past it), the scan
-    * asserted to prune, so the check opens only the batch's buckets —
-    * and above the threshold (a backfill-sized delivery) it switches
-    * to the bucket-aligned join form with every validation pushed to
-    * the cluster: no driver hop, no literal plan, zero table-side
+    * the store's bucket-pruned point lookups ([[BucketedStore.append]]
+    * — the batch's keys as literals, bounded by `maxKeys`), and above
+    * the threshold (a backfill-sized delivery) it switches to the
+    * bucket-aligned join form with every validation pushed to the
+    * cluster: no driver hop, no literal plan, zero table-side
     * exchange, and the same first-writer-wins effect. */
   def appendToKeyedTable(batch: DataFrame, table: String, keyCol: String,
       maxKeys: Int = 1 << 20, joinFormThreshold: Int = 1 << 16): Unit = {
     val spark = batch.sparkSession
     DriverBounded.labeled(spark, s"appendToKeyedTable:$table") {
-    val buckets = requireKeyBucketedTable(spark, table, keyCol,
-      "appendToKeyedTable")
+    val layout = BucketedStore.open(spark, table, "appendToKeyedTable",
+      Some(keyCol))
     val b = batch.persist()
     try {
       // form decision, driver-bounded by construction (the literal
       // path re-uses these rows as its key list)
       val headRows = b.select(col(keyCol))
         .limit(joinFormThreshold + 1).collect()
-      val existing: Option[DataFrame] =
-        if (headRows.length > joinFormThreshold) {
-          // JOIN FORM: validations run distributed (limit(1) failure
-          // probes — driver-cheap), the existence check is the probe's
-          // bucket-aligned join, and nothing batch-sized ever lands on
-          // the driver
-          val nullKey = b.filter(col(keyCol).isNull).limit(1).collect()
-          require(nullKey.isEmpty,
-            s"appendToKeyedTable: null $keyCol key in the batch — the " +
-              "idempotence anti-join never matches null, so a " +
-              "null-keyed row would re-append on every redelivery; " +
-              "filter or key-derive upstream")
-          val dup = b.groupBy(col(keyCol))
-            .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-            .limit(1).collect()
-          require(dup.isEmpty,
-            s"appendToKeyedTable: batch has duplicate $keyCol keys " +
-              s"(e.g. ${dup.headOption.map(_.get(0)).getOrElse("")}) — " +
-              "the table is a key-indexed map and a within-batch " +
-              "duplicate has no deterministic winner; dedupe the batch " +
-              "upstream")
-          Some(probeKeyedTableViaJoin(spark, table,
-              b.select(col(keyCol)).distinct(), keyCol, buckets,
-              reliable = false)
-            .select(col(keyCol)))
-        } else {
-          val keys = headRows.map(_.get(0)).toSeq
-          require(keys.size <= maxKeys,
-            s"appendToKeyedTable: batch exceeds maxKeys $maxKeys (the " +
-              "batch's keys become planning-time point-lookup " +
-              "literals); split the batch, raise the bound " +
-              "deliberately, or lower joinFormThreshold to take the " +
-              "join form")
-          require(!keys.contains(null),
-            s"appendToKeyedTable: null $keyCol key in the batch — the " +
-              "idempotence anti-join never matches null, so a " +
-              "null-keyed row would re-append on every redelivery; " +
-              "filter or key-derive upstream")
-          require(keys.distinct.length == keys.length,
-            s"appendToKeyedTable: batch has duplicate $keyCol keys — " +
-              "the table is a key-indexed map and a within-batch " +
-              "duplicate has no deterministic winner; dedupe the batch " +
-              "upstream")
-          if (keys.isEmpty) None
-          else
-            // the idempotence check is compiled and ASSERTED to
-            // bucket-prune exactly like a probe (and checkpointed, so
-            // the anti-join below derives from batch-proportional
-            // rows, never from the table the append is about to
-            // extend) — a plan that failed to prune would silently
-            // full-scan the table once per delivery
-            Some(compileAndPinBucketedScan(spark,
-              spark.table(table).filter(col(keyCol).isin(keys: _*))
-                .select(col(keyCol)),
-              table, reliable = false, "appendToKeyedTable"))
-        }
-      existing.foreach { ex =>
-        val fresh = b.join(ex, Seq(keyCol), "left_anti")
-        withAutoBucketedScanOff(spark) {
-          fresh.repartition(buckets, col(keyCol)).write
-            .bucketBy(buckets, keyCol)
-            .mode("append")
-            .saveAsTable(table)
-        }
-        spark.catalog.refreshTable(table)
+      if (headRows.length > joinFormThreshold) {
+        // JOIN FORM: validations run distributed (limit(1) failure
+        // probes — driver-cheap), the existence check is the probe's
+        // bucket-aligned join, and nothing batch-sized ever lands on
+        // the driver
+        val nullKey = b.filter(col(keyCol).isNull).limit(1).collect()
+        require(nullKey.isEmpty,
+          s"appendToKeyedTable: null $keyCol key in the batch — the " +
+            "idempotence anti-join never matches null, so a " +
+            "null-keyed row would re-append on every redelivery; " +
+            "filter or key-derive upstream")
+        val dup = b.groupBy(col(keyCol))
+          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
+          .limit(1).collect()
+        require(dup.isEmpty,
+          s"appendToKeyedTable: batch has duplicate $keyCol keys " +
+            s"(e.g. ${dup.headOption.map(_.get(0)).getOrElse("")}) — " +
+            DuplicateKeyWhy)
+        val existing = probeKeyedTableViaJoin(spark, table,
+          b.select(col(keyCol)).distinct(), keyCol, layout.buckets,
+          reliable = false)
+        BucketedStore.appendRows(spark, table, layout,
+          b.join(existing.select(col(keyCol)), Seq(keyCol), "left_anti"))
+      } else {
+        require(headRows.length <= maxKeys,
+          s"appendToKeyedTable: batch exceeds maxKeys $maxKeys (the " +
+            "batch's keys become planning-time point-lookup " +
+            "literals); split the batch, raise the bound " +
+            "deliberately, or lower joinFormThreshold to take the " +
+            "join form")
+        val keys = headRows.map(_.get(0))
+        require(keys.distinct.length == keys.length,
+          s"appendToKeyedTable: batch has duplicate $keyCol keys — " +
+            DuplicateKeyWhy)
+        BucketedStore.appendCollected(spark, table, layout, Seq(keyCol),
+          b, headRows.toSeq, "appendToKeyedTable")
       }
     } finally { b.unpersist(blocking = false); () }
     }
   }
+
+  private val DuplicateKeyWhy =
+    "the table is a key-indexed map and a within-batch duplicate has " +
+      "no deterministic winner; dedupe the batch upstream"
 
   /** [[appendToKeyedTable]] for a batch whose key set was ALREADY
     * probed this delivery: `probed` must be the [[probeKeyedTable]]
@@ -1609,17 +1152,10 @@ object Dedup {
       keyCol: String, probed: DataFrame): Unit = {
     val spark = batch.sparkSession
     DriverBounded.labeled(spark, s"appendProbedToKeyedTable:$table") {
-      val buckets = requireKeyBucketedTable(spark, table, keyCol,
-        "appendProbedToKeyedTable")
-      val fresh = batch.join(probed.select(col(keyCol)), Seq(keyCol),
-        "left_anti")
-      withAutoBucketedScanOff(spark) {
-        fresh.repartition(buckets, col(keyCol)).write
-          .bucketBy(buckets, keyCol)
-          .mode("append")
-          .saveAsTable(table)
-      }
-      spark.catalog.refreshTable(table)
+      val layout = BucketedStore.open(spark, table,
+        "appendProbedToKeyedTable", Some(keyCol))
+      BucketedStore.appendRows(spark, table, layout,
+        batch.join(probed.select(col(keyCol)), Seq(keyCol), "left_anti"))
     }
   }
 
@@ -1633,11 +1169,11 @@ object Dedup {
     *
     *  - '''Literal form''' (≤ `joinFormThreshold` keys — the
     *    micro-batch norm): the keys become planning-time literals,
-    *    the scan is ASSERTED to bucket-prune and re-asserted on the
-    *    executed plan (the probeBandIndex device) — a mis-built table
-    *    refuses loudly instead of full-scanning at corpus size. The
-    *    loud `maxKeys` cap applies to this form only (it bounds the
-    *    driver materialization and the plan's literal count).
+    *    the scan is pinned to bucket-prune
+    *    ([[BucketedStore.compileAndPinBucketedScan]]) — a mis-built
+    *    table refuses loudly instead of full-scanning at corpus size.
+    *    The loud `maxKeys` cap applies to this form only (it bounds
+    *    the driver materialization and the plan's literal count).
     *  - '''Join form''' (above the threshold): a million-literal
     *    `isin` would bloat planning time and driver memory, so the
     *    probe switches to a bucket-ALIGNED join — the key frame
@@ -1658,8 +1194,8 @@ object Dedup {
       reliableCheckpoint: Boolean = false,
       joinFormThreshold: Int = 1 << 16): DataFrame =
       DriverBounded.labeled(spark, s"probeKeyedTable:$table") {
-    val buckets = requireKeyBucketedTable(spark, table, keyCol,
-      "probeKeyedTable")
+    val buckets = BucketedStore.open(spark, table, "probeKeyedTable",
+      Some(keyCol)).buckets
     val distinctKeys = keys.select(col(keyCol)).distinct()
     // form decision, driver-bounded by construction: fetch at most
     // threshold+1 rows — never the whole key set
@@ -1682,7 +1218,7 @@ object Dedup {
       if (lits.isEmpty)
         spark.table(table).limit(0).localCheckpoint(true)
       else
-        compileAndPinBucketedScan(spark,
+        BucketedStore.compileAndPinBucketedScan(spark,
           spark.table(table).filter(col(keyCol).isin(lits: _*)),
           table, reliableCheckpoint, "probeKeyedTable")
     }
@@ -1690,12 +1226,11 @@ object Dedup {
 
   /** The join form of [[probeKeyedTable]]: table left-semi-joined by
     * the key frame repartitioned to the table's own bucketing. The
-    * bucketed scan is forced (same conf window as every other
-    * band-device compile) so it claims HashPartitioning(keyCol,
-    * buckets) and the join needs no table-side exchange; the executed
-    * plan is asserted to have NO shuffle above the table's scan —
-    * cost is one bucketed read of the table plus one batch-side
-    * shuffle, at any key count. */
+    * bucketed scan is forced (the store's conf window) so it claims
+    * HashPartitioning(keyCol, buckets) and the join needs no
+    * table-side exchange; the executed plan is asserted to have NO
+    * shuffle above the table's scan — cost is one bucketed read of the
+    * table plus one batch-side shuffle, at any key count. */
   private def probeKeyedTableViaJoin(
       spark: org.apache.spark.sql.SparkSession, table: String,
       distinctKeys: DataFrame, keyCol: String, buckets: Int,
@@ -1710,12 +1245,12 @@ object Dedup {
     val joined = spark.table(table).join(
       distinctKeys.repartition(buckets, col(keyCol)).hint("shuffle_hash"),
       Seq(keyCol), "left_semi")
-    // compile inside the window only — executedPlan is a cached
-    // lazy val on this QueryExecution, so the checkpoint below
-    // (OUTSIDE the lock, like compileAndPinBucketedScan) merely
-    // executes the already-compiled plan: concurrent appends never
-    // serialize behind this probe's execution
-    withAutoBucketedScanOff(spark) { joined.queryExecution.executedPlan; () }
+    // compile inside the window only — executedPlan is a cached lazy
+    // val, so the checkpoint below (outside the lock) merely executes
+    // the already-compiled plan
+    BucketedStore.withAutoBucketedScanOff(spark) {
+      joined.queryExecution.executedPlan; ()
+    }
     val out =
       if (reliable) joined.checkpoint(true)
       else joined.localCheckpoint(true)

@@ -344,72 +344,16 @@ object Similarity {
       .select(col("a_id"), col("b_id"))
   }
 
-  /** Drop `table` and clear a MANAGED location orphaned by a previous
-    * session (fresh metastore over a persistent warehouse dir blocks
-    * CREATE otherwise), so index builds are safely re-runnable.
-    *
-    * Only directories the warehouse manages are ever deleted: when the
-    * table exists, its actual catalog location is used (and left alone
-    * for EXTERNAL tables — that data is not ours); only when the table
-    * is absent from the metastore is the DEFAULT managed path cleared,
-    * which is exactly the orphaned-directory case. */
-  private[graft] def dropTableAndLocation(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val db = ident.database.getOrElse(spark.catalog.currentDatabase)
-    val toClear: Option[org.apache.hadoop.fs.Path] =
-      if (spark.catalog.tableExists(table)) {
-        val meta = spark.sessionState.catalog.getTableMetadata(ident)
-        // managed data may survive the DROP when the metastore was
-        // recreated mid-session; external locations are never touched
-        if (meta.tableType == CatalogTableType.MANAGED)
-          Some(new org.apache.hadoop.fs.Path(meta.location))
-        else None
-      } else Some(new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getDatabaseMetadata(db).locationUri.toString,
-        ident.table))
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    toClear.foreach { loc =>
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    // every rebuild routes through this drop: the dropped table's
-    // serving-identity cache entries die with it
-    invalidateServingIdentity(table)
-  }
-
-  /** Serving-guard table properties, stamped at build/append time so
+  /** Serving-guard table properties beside the store's width stamp
+    * ([[BucketedStore.DimProp]]), stamped at build/append time so
     * external probes read index identity from CATALOG METADATA (one
     * driver call, no Spark job) instead of paying a scheduler
     * round-trip per guard — the high-QPS serving shape. A table built
     * before the properties existed still probes correctly: every
     * reader keeps a distributed fallback. */
-  private[graft] val DimProp = "graft.dim"
   private[graft] val PrefixDimsProp = "graft.prefix_dims"
   private[graft] val CodebookProp = "graft.codebook_md5"
   private[graft] val PqMProp = "graft.pq_m"
-
-  /** One graft serving property off the catalog — a driver-side
-    * metadata read, never a Spark job. */
-  private[graft] def tableProp(spark: org.apache.spark.sql.SparkSession,
-      table: String, key: String): Option[String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties.get(key)
-
-  /** Stamp graft serving metadata onto `table`. Idempotent; appends
-    * never clear TBLPROPERTIES, and [[Dedup.compactKeyedTable]]'s
-    * staging swap copies `graft.*` keys across, so a stamp survives
-    * the table's whole maintenance lifecycle. */
-  private[graft] def stampTableProps(spark: org.apache.spark.sql.SparkSession,
-      table: String, props: Map[String, String]): Unit = {
-    require(props.nonEmpty && props.forall { case (k, v) =>
-      k.startsWith("graft.") && !v.contains("'") })
-    val kvs = props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($kvs)")
-    ()
-  }
 
   /** Canonical identity of a centroid codebook: md5 over the id-ordered
     * (id, exact float bits) serialization, plus the codebook's single
@@ -487,26 +431,27 @@ object Similarity {
   /** Drop `table`'s serving-identity entries — called by every
     * build/drop/compact path, under the shared engine lock. */
   private[graft] def invalidateServingIdentity(table: String): Unit =
-    Dedup.withBandLock {
+    BucketedStore.withBandLock {
       servingFingerprints.filterInPlace { case ((t, _), _) => t != table }
       servingCodebooks.remove(table)
       ()
     }
 
   /** [[codebookFingerprint]] behind the serving cache: a hit — same
-    * table, same canonicalized centroid plan, stamped fingerprint
-    * unchanged (or table unstamped) — runs ZERO Spark jobs
-    * (spec-pinned); a miss computes, stores, and returns. */
+    * table, same canonicalized centroid plan, and a stamped fingerprint
+    * equal to the cached one — runs ZERO Spark jobs (spec-pinned); a
+    * miss computes, stores, and returns. An unstamped table never
+    * hits: there is nothing to re-validate the entry against. */
   private def cachedCodebookFingerprint(
       spark: org.apache.spark.sql.SparkSession, table: String,
       centroids: DataFrame, idCol: String): (String, Int) = {
     val plan = centroids.queryExecution.analyzed.canonicalized
-    val stamped = tableProp(spark, table, CodebookProp)
-    Dedup.withBandLock(servingFingerprints.get((table, plan)))
-      .filter { case (fp, _) => stamped.forall(_ == fp) }
+    val stamped = BucketedStore.tableProp(spark, table, CodebookProp)
+    BucketedStore.withBandLock(servingFingerprints.get((table, plan)))
+      .filter { case (fp, _) => stamped.contains(fp) }
       .getOrElse {
         val computed = codebookFingerprint(centroids, idCol)
-        Dedup.withBandLock {
+        BucketedStore.withBandLock {
           if (servingFingerprints.size >= ServingCacheCap)
             servingFingerprints.clear()
           servingFingerprints((table, plan)) = computed
@@ -521,15 +466,48 @@ object Similarity {
   private def cachedPqCodebooks(
       spark: org.apache.spark.sql.SparkSession,
       table: String): Seq[Seq[Array[Float]]] =
-    Dedup.withBandLock(servingCodebooks.get(table)).getOrElse {
+    BucketedStore.withBandLock(servingCodebooks.get(table)).getOrElse {
       val cbs = loadPqCodebooks(spark, table)
-      Dedup.withBandLock {
+      BucketedStore.withBandLock {
         if (servingCodebooks.size >= ServingCacheCap)
           servingCodebooks.clear()
         servingCodebooks(table) = cbs
       }
       cbs
     }
+
+  /** The IVF/PQ codebook-identity guard: the centroids handed to an
+    * append or serving probe must be the codebook `table` is
+    * partitioned by — another assigns rows to buckets the index was
+    * never partitioned by, and a probe silently scans the wrong
+    * buckets. Their fingerprint must equal the table's stamp, and their
+    * width the index's `width` (0: not yet known). A `writer` (append)
+    * derives the fingerprint afresh and stamps an unstamped table with
+    * it, its width and `stamps`; a reader (serving probe) goes through
+    * the session cache and never stamps. */
+  private def requireCodebook(spark: org.apache.spark.sql.SparkSession,
+      table: String, centroids: DataFrame, idCol: String, context: String,
+      width: Int, writer: Boolean,
+      stamps: Map[String, String] = Map.empty): Unit = {
+    val (fp, centDim) =
+      if (writer) codebookFingerprint(centroids, idCol)
+      else cachedCodebookFingerprint(spark, table, centroids, idCol)
+    val stamped = BucketedStore.tableProp(spark, table, CodebookProp)
+    stamped.foreach { st =>
+      require(st == fp,
+        s"$context: the centroid codebook passed here (md5 $fp) is not " +
+          s"the one $table is partitioned by (md5 $st) — the codebook is " +
+          "part of the index's identity; another would append or probe " +
+          "by the wrong buckets (retraining is a batch rebuild)")
+    }
+    require(width == 0 || centDim == width,
+      s"$context: the centroid codebook's width ($centDim) differs from " +
+        s"the index's ($width) — not the geometry this index was " +
+        "partitioned by")
+    if (writer && stamped.isEmpty)
+      BucketedStore.stampTableProps(spark, table, Map(CodebookProp -> fp,
+        BucketedStore.DimProp -> centDim.toString) ++ stamps)
+  }
 
   /** One bounded job guarding BOTH serving-batch bounds — the query
     * count (the probe side broadcasts, so it must stay
@@ -546,56 +524,27 @@ object Similarity {
     require(!bad.exists(_.getBoolean(0)), dimMsg)
   }
 
-  /** The vector width stored in a table's serving properties, falling
-    * back to a null-safe one-row scan for tables stamped before the
-    * property existed (0 when the table is empty of usable vectors —
-    * callers decide whether that is loud). */
-  private[graft] def storedDim(spark: org.apache.spark.sql.SparkSession,
-      table: String, vecCol: String): Int =
-    tableProp(spark, table, DimProp).map(_.toInt).getOrElse {
-      spark.table(table).select(size(col(vecCol)))
-        .filter(col(vecCol).isNotNull).limit(1).collect()
-        .headOption.map(_.getInt(0)).getOrElse(0)
-    }
-
   /** Persist centroid assignments as a catalog table bucketed by
     * centroid id — the 100 TB serving shape: probes become scans of one
     * bucket with no shuffle on the corpus side. Stamps the vector width
-    * as a serving property ([[DimProp]]); the codebook fingerprint is
-    * stamped by the first [[appendToIvfIndex]]/verified by
-    * [[probeIvfIndexExternal]] (they receive the centroids; this build
-    * sees only the assignment). */
-  def buildIvfIndex(assigned: DataFrame, table: String, buckets: Int = 32): Unit = {
-    val spark = assigned.sparkSession
-    dropTableAndLocation(spark, table)
-    // a rebuilt index starts with no pending deletes: a stale tombstone
-    // would silently hide rebuilt rows from every probe
-    dropTableAndLocation(spark, Dedup.tombstoneTable(table))
-    // task-aligned to buckets (same hash family): one file per bucket
-    // instead of one per (task x bucket) — see RawVault.writeTable
-    assigned.repartition(buckets, col("cid")).write
-      .bucketBy(buckets, "cid")
-      .mode("overwrite")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
-    // stamp the width once at build (one tiny job against the table
-    // just written) so every later serving probe reads it off the
-    // catalog instead of scheduling a job per call
-    val dim = spark.table(table).select(size(col("v")))
-      .filter(col("v").isNotNull).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    if (dim > 0) stampTableProps(spark, table, Map(DimProp -> dim.toString))
-  }
+    * ([[BucketedStore.DimProp]]); the codebook fingerprint is stamped
+    * by the first [[appendToIvfIndex]] (it receives the centroids; this
+    * build sees only the assignment). */
+  def buildIvfIndex(assigned: DataFrame, table: String, buckets: Int = 32): Unit =
+    BucketedStore.rebuild(assigned, table, "cid", buckets,
+      widthOf = Some("v"))
 
   /** Probe a persisted IVF index for one query vector set drawn FROM
     * the index (query-by-id: `queryIds` selects index rows). External
     * vectors — the serving path — go through
     * [[probeIvfIndexExternal]]. */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      queryIds: Column, idCol: String, k: Int): DataFrame =
+      queryIds: Column, idCol: String, k: Int): DataFrame = {
+    BucketedStore.open(spark, table, "probeIvfIndex", Some("cid"))
     // tombstoned rows are absent — as candidates AND as by-id queries
-    knnIvf(liveRows(spark, table, spark.table(table), idCol),
+    knnIvf(BucketedStore.liveRows(spark, table, spark.table(table), idCol),
       queryIds, idCol, k)
+  }
 
   /** Probe a persisted IVF index with EXTERNAL query vectors — the
     * serving path: the queries are not (or need not be) in the index.
@@ -616,10 +565,9 @@ object Similarity {
     * (provably configuration-bounded: at most the codebook size, the
     * maxCentroids contract) and re-enters the plan as literals, so
     * probe cost is proportional to the PROBED buckets, never the
-    * index (the probeBandIndex device: compiled inside the conf
-    * window, `SelectedBucketsCount` asserted at compile time and on
-    * the executed plan, and the Q×k verdict rows eagerly checkpointed
-    * so derived plans never re-read the index). An index row whose id
+    * index (pinned by [[BucketedStore.compileAndPinBucketedScan]],
+    * the Q×k verdict rows eagerly checkpointed so derived plans never
+    * re-read the index). An index row whose id
     * equals a query id is excluded from that query's candidates (the
     * knnIvf self-exclusion contract — it makes re-sending a
     * known-corpus vector return its true neighbors, not itself); keep
@@ -630,49 +578,27 @@ object Similarity {
       probes: Int = 1): DataFrame = {
     require(probes >= 1, s"probeIvfIndexExternal: probes must be >= 1, got $probes")
     DriverBounded.labeled(spark, s"probeIvfIndexExternal:$table") {
-    Dedup.requireKeyBucketedTable(spark, table, "cid",
-      "probeIvfIndexExternal")
+    BucketedStore.open(spark, table, "probeIvfIndexExternal", Some("cid"))
     // the serving batch is broadcast as the probe side and its cid set
     // becomes pruning literals — both bounded by contract, so an
     // oversized batch fails with direction, not with a broadcast
-    // OOM mid-job (the probeVectorStoreExternal bound, same shape);
-    // the broadcast probe frame is Q x probes rows (each carrying the
-    // query vector) — the enforced bound scales with nprobe, like the
-    // PQ sibling. Enforced together with the width guard in ONE
-    // bounded job (requireServingBatch) below, after the widths are
-    // known.
+    // OOM mid-job; the broadcast probe frame is Q x probes rows, so
+    // the enforced bound scales with nprobe
     val maxQueriesAtProbes = math.max(1, maxQueries / probes)
-    // codebook identity guard: the centroids handed to a probe MUST be
-    // the codebook the index was built/appended with — a different one
-    // assigns queries to buckets the corpus was never partitioned by,
-    // and the probe silently scans the wrong buckets. The fingerprint
-    // collect also yields the codebook's width, closing the remaining
-    // silent corner: a query that matches the INDEX width but not the
-    // CENTROIDS' would be dropped by assignToCentroids and return no
-    // rows with no error. Cached per (table, centroid plan) — a
-    // serving loop's repeat probes run zero fingerprint jobs.
-    val (fp, centDim) = cachedCodebookFingerprint(spark, table,
-      centroids, idCol)
-    tableProp(spark, table, CodebookProp).foreach { stamped =>
-      require(stamped == fp,
-        s"probeIvfIndexExternal: the centroid codebook passed to this " +
-          s"probe (md5 $fp) is not the one $table was built with " +
-          s"(md5 $stamped) — the codebook is part of the index's " +
-          "identity; probing with another would scan the wrong buckets")
-    }
     // loud dim guards: width off the catalog stamp (no job) when
     // present, one null-safe row otherwise; an EMPTY unstamped index
     // has no width to validate against and refuses rather than
     // returning silently-empty verdicts for any query width
-    val idxDim = storedDim(spark, table, "v")
+    val idxDim = BucketedStore.storedDim(spark, table, "v")
     require(idxDim > 0,
       s"probeIvfIndexExternal: $table is empty and carries no " +
-        s"$DimProp property — no index width to validate serving " +
-        "queries against; build or append before probing")
-    require(centDim == idxDim,
-      s"probeIvfIndexExternal: the centroid codebook's width " +
-        s"($centDim) differs from the index's ($idxDim) — not the " +
-        "codebook this index was partitioned by")
+        s"${BucketedStore.DimProp} property — no index width to validate " +
+        "serving queries against; build or append before probing")
+    // the codebook's width must be the index's too: a query matching
+    // the INDEX width but not the CENTROIDS' would be dropped by
+    // assignToCentroids and return no rows with no error
+    requireCodebook(spark, table, centroids, idCol,
+      "probeIvfIndexExternal", idxDim, writer = false)
     // one bounded job enforcing the batch bound AND the width guard (a
     // wrong-width external query would null every similarity — both
     // its centroid assignment and its in-bucket ranking — and silently
@@ -687,176 +613,87 @@ object Similarity {
         s"differs from the index's ($idxDim) — its similarities would " +
         "all be null and the returned neighbors meaningless; encode " +
         "serving queries with the index's embedding dimension")
-    // persisted: two consumers (the cid collect and the probe join) —
-    // the pruned buckets must be exactly the buckets the join's
-    // probe rows were assigned to, so the assignment runs once
-    val q = assignProbeBuckets(queries, centroids, idCol, probes)
-      .select(col(idCol).as("qid"), col("cid").as("qcid"),
-        col("v").as("qv"), col("nrm").as("qn")).persist()
-    try {
-      val cids = DriverBounded.collectCapped(
-        q.select(col("qcid")).distinct(), 1 << 16,
-        "probeIvfIndexExternal: probed centroid set exceeds 2^16 — " +
-          "the codebook is configuration-sized by the maxCentroids " +
-          "contract, so this is not a buildIvfIndex codebook")
-        .map(_.get(0)).toSeq
-      if (cids.isEmpty)
-        // no queries: nothing to probe, empty verdicts
-        knnProbe(spark.table(table).limit(0), q, idCol, k)
-          .localCheckpoint(true)
-      else
-        // pending deletes excluded ABOVE the pruned scan, BEFORE
-        // ranking — next-best candidates refill the top-k
-        Dedup.compileAndPinBucketedScan(spark,
-          knnProbe(liveRows(spark, table,
-            spark.table(table).filter(col("cid").isin(cids: _*)), idCol),
-            q, idCol, k),
-          table, reliable = false, "probeIvfIndexExternal")
-    } finally { q.unpersist(blocking = false); () }
+    probeCidBuckets(spark, table,
+      assignProbeBuckets(queries, centroids, idCol, probes)
+        .select(col(idCol).as("qid"), col("cid").as("qcid"),
+          col("v").as("qv"), col("nrm").as("qn")),
+      idCol, "probeIvfIndexExternal")(knnProbe(_, _, idCol, k))
     }
   }
 
-  /** Incrementally extend a persisted [[buildIvfIndex]] table with new
-    * vectors — the streaming half of index maintenance (wire a
+  /** The external probes' shared tail: `q` — probe rows carrying the
+    * `qcid` bucket key — is persisted (the pruned buckets must be
+    * exactly the buckets its rows were assigned to), its cid set
+    * collected (configuration-bounded by the maxCentroids contract)
+    * and re-entered as literals, and `rank` (candidates, q) runs over
+    * the live rows of the probed buckets only — tombstones excluded
+    * ABOVE the pruned scan, BEFORE ranking, so next-best candidates
+    * refill the top-k — pinned to bucket-prune and checkpointed. */
+  private def probeCidBuckets(spark: org.apache.spark.sql.SparkSession,
+      table: String, q: DataFrame, idCol: String, context: String)(
+      rank: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val p = q.persist()
+    try {
+      val cids = DriverBounded.collectCapped(
+        p.select(col("qcid")).distinct(), 1 << 16,
+        s"$context: probed centroid set exceeds 2^16 — the codebook is " +
+          "configuration-sized by the maxCentroids contract, so this is " +
+          "not the index's codebook")
+        .map(_.get(0)).toSeq
+      if (cids.isEmpty)  // no queries: nothing to probe, empty verdicts
+        rank(spark.table(table).limit(0), p).localCheckpoint(true)
+      else
+        BucketedStore.compileAndPinBucketedScan(spark,
+          rank(BucketedStore.liveRows(spark, table,
+            spark.table(table).filter(col("cid").isin(cids: _*)), idCol), p),
+          table, reliable = false, context)
+    } finally { p.unpersist(blocking = false); () }
+  }
+
+  /** Incrementally extend a persisted [[buildIvfIndex]] table with
+    * new vectors — the streaming half of index maintenance (wire a
     * readStream through `CdcStream.foreachBatchLoader(s)(b =>
     * appendToIvfIndex(b, …))`). Each batch (a [[withNorm]] projection)
     * is assigned against the index's FIXED centroid codebook — the
     * geometry never drifts mid-stream; retraining is a batch
-    * [[buildIvfIndex]] rebuild — anti-joined on (cid, id) against the
-    * current table so micro-batch replays are idempotent (at-least-once
-    * delivery → exactly-once table effect, the vault loaders'
-    * contract), and appended task-aligned with the existing bucket
-    * layout.
-    *
-    * Scale shape: the centroid assignment is the zero-shuffle argmax,
-    * and the idempotence check is POINT LOOKUPS, not a corpus join —
-    * the micro-batch's (cid, id) pairs are bounded (`maxBatchIds`,
-    * loud fail past it), so they re-enter the plan as literals: the
-    * index scan bucket-prunes to the batch's cids
-    * (SelectedBucketsCount, plan-pinned) with the id filter pushed to
-    * parquet, and the anti-join broadcasts batch-sized sides. A plain
-    * (cid, id) anti-join against the table is NOT this shape — the
-    * planner re-shuffles the whole index on the composite key (its
-    * hash(cid) buckets don't co-partition a (cid, id) join, even with
-    * subset co-partitioning allowed — measured both ways), which at
-    * 100 TB is a corpus shuffle per micro-batch. */
+    * [[buildIvfIndex]] rebuild — and appended at (cid, id) grain by
+    * [[BucketedStore.append]]: zero-shuffle argmax assignment, then
+    * bucket-pruned point-lookup idempotence, O(batch) at any index
+    * size. `buckets` must equal the table's bucket count (the write
+    * reads the layout from the catalog; a different count fails here,
+    * before anything is written). */
   def appendToIvfIndex(batch: DataFrame, table: String,
       centroids: DataFrame, idCol: String, buckets: Int = 32,
       maxBatchIds: Int = 1 << 20): Unit = {
     val spark = batch.sparkSession
-    // codebook identity: the first append stamps the codebook's
-    // fingerprint (build cannot — it sees only the assignment); every
-    // later append and serving probe must hand the SAME codebook, or
-    // the index's geometry would drift mid-stream — new rows
-    // partitioned by one set of centroids, probes pruned by another
-    val (fp, centDim) = codebookFingerprint(centroids, idCol)
-    tableProp(spark, table, CodebookProp) match {
-      case Some(stamped) =>
-        require(stamped == fp,
-          s"appendToIvfIndex: the centroid codebook passed to this " +
-            s"append (md5 $fp) is not the one $table is partitioned " +
-            s"by (md5 $stamped) — appending under a different codebook " +
-            "drifts the index geometry mid-stream; retraining is a " +
-            "batch buildIvfIndex rebuild")
-      case None =>
-        stampTableProps(spark, table, Map(CodebookProp -> fp,
-          DimProp -> centDim.toString))
-    }
-    // and the codebook's width must be the index's: a narrower
-    // codebook would assign (and admit) narrower batch vectors into a
+    val layout = BucketedStore.open(spark, table, "appendToIvfIndex",
+      Some("cid"))
+    require(buckets == layout.buckets,
+      s"appendToIvfIndex: buckets = $buckets, but $table has " +
+        s"${layout.buckets} buckets — appends keep the table's own " +
+        "layout; pass the count the index was built with")
+    // codebook identity (the first append stamps it) and width: a
+    // narrower codebook would admit narrower batch vectors into a
     // wider index, poisoning every later probe's similarities
-    val idxDim = storedDim(spark, table, "v")
-    require(idxDim == 0 || idxDim == centDim,
-      s"appendToIvfIndex: the centroid codebook's width ($centDim) " +
-        s"differs from the index's ($idxDim) — batch rows admitted " +
-        "under it would carry the wrong vector width")
-    requireNotTombstoned(spark, table, batch, idCol, "appendToIvfIndex")
-    val (fresh, release) = freshIndexRows(batch, table, centroids, idCol,
-      maxBatchIds)
-    try {
-      // plan the append with the auto-bucketed-scan heuristic OFF:
-      // DisableUnnecessaryBucketedScan keeps a bucketed scan only for
-      // its output DISTRIBUTION, and nothing above the point-lookup
-      // anti-join needs one — so under the default heuristic the
-      // In(cid) bucket pruning is discarded with the bucketed scan and
-      // the check reads every bucket (measured). Here the bucket
-      // layout's value IS the pruning; one task per selected bucket is
-      // exactly the right execution for a point lookup. The conf flip
-      // is session-global and serializes on the engine's ONE shared
-      // conf lock (Dedup.withAutoBucketedScanOff): a serving probe's
-      // compile window (probeIvfIndexExternal →
-      // compileAndPinBucketedScan) concurrent with this append can
-      // then never interleave save/flip/restore on the same key —
-      // which would spuriously fail the probe's pruning assert or
-      // leave the heuristic flipped session-wide.
-      Dedup.withAutoBucketedScanOff(spark) {
-        fresh.repartition(buckets, col("cid")).write
-          .bucketBy(buckets, "cid")
-          .mode("append")
-          .saveAsTable(table)
-      }
-    } finally release()
-    spark.catalog.refreshTable(table)
+    requireCodebook(spark, table, centroids, idCol, "appendToIvfIndex",
+      BucketedStore.storedDim(spark, table, "v"), writer = true)
+    // one row per id within the batch: an at-least-once source can
+    // redeliver inside a single micro-batch, and the table anti-join
+    // cannot see rows that are not in the table yet (a stream carrying
+    // multiple VERSIONS of an id per batch resolves latest-wins
+    // upstream, the assignToCentroids unique-id contract)
+    BucketedStore.append(spark, table, layout, Seq("cid", idCol),
+      assignToCentroids(batch.dropDuplicates(Seq(idCol)), centroids, idCol)
+        .select(col(idCol), col("cid"), col("v"), col("nrm")),
+      maxBatchIds, "maxBatchIds", "appendToIvfIndex")
   }
 
-  /** Fold a [[buildIvfIndex]] table back to one file per bucket —
-    * the third grain of the compaction story (band index, keyed side
-    * table, IVF index): every [[appendToIvfIndex]] delivery writes
-    * its own task-aligned file set, so after N deliveries a probe's
-    * bucket scan opens N files per bucket and probe cost degrades
-    * linearly in DELIVERIES, not data. The index is cid-bucketed with
-    * MANY rows per cid (a partition of the corpus, not a keyed map),
-    * which the shared rewrite core does not care about: the rewrite
-    * is row-neutral identity, zero-shuffle (the forced bucketed scan
-    * claims the table's own partitioning, so each task reads one
-    * bucket's file sets and writes its one replacement file), swapped
-    * in via the never-zero-copies backup dance, idempotent, and
-    * self-healing at every band/keyed/IVF entry point. Single-writer,
-    * like every graft maintenance pass: run it BETWEEN deliveries
-    * (the w07 gate does, mid-stream), never concurrent with one. */
+  /** Fold a [[buildIvfIndex]] table back to one file per bucket,
+    * applying pending deletes ([[BucketedStore.compact]]). Run it
+    * between deliveries (the w07 gate does, mid-stream). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
-    Dedup.compactIdKeyedTable(spark, table, "cid")
-
-  /** [[appendToIvfIndex]]'s idempotence join, exposed for plan pinning:
-    * batch rows not yet in the index, via bucket-pruned point lookups
-    * (the knnPqRefineIndexed pattern — the batch's keys become
-    * planning-time literals, bounded and loud-failing at
-    * `maxBatchIds`). Returns the frame plus an unpersist handle (the
-    * release-handle pattern): the assigned batch is persisted because
-    * it has two consumers — the key collect and the append's anti-join
-    * — and the cache both runs the batch pipeline once and guarantees
-    * the keys the collect saw are the rows the join filters (a
-    * re-execution of a non-deterministic batch source could otherwise
-    * yield rows whose keys were never collected, which would slip past
-    * the point lookups and append as duplicates). */
-  private[graft] def freshIndexRows(batch: DataFrame, table: String,
-      centroids: DataFrame, idCol: String,
-      maxBatchIds: Int = 1 << 20): (DataFrame, () => Unit) = {
-    // one row per id WITHIN the batch too: an at-least-once source can
-    // redeliver a row inside a single micro-batch, and the table
-    // anti-join below cannot see rows that are not in the table yet.
-    // dropDuplicates picks one row per id — exact for redelivered
-    // copies (identical rows); a stream carrying multiple VERSIONS of
-    // an id per batch must resolve latest-wins upstream, same as the
-    // assignToCentroids unique-id contract
-    val assigned = assignToCentroids(
-      batch.dropDuplicates(Seq(idCol)), centroids, idCol).persist()
-    val keys = DriverBounded.collectCapped(
-      assigned.select(col(idCol), col("cid")), maxBatchIds,
-      s"appendToIvfIndex: micro-batch exceeds maxBatchIds $maxBatchIds " +
-        "(the batch's keys become planning-time point-lookup literals); " +
-        "split the batch or raise the bound deliberately")
-    val ids = keys.map(_.get(0)).toSeq
-    val cids = keys.map(_.get(1)).distinct.toSeq
-    val existing = batch.sparkSession.table(table)
-      .filter(col("cid").isin(cids: _*) && col(idCol).isin(ids: _*))
-      .select(col(idCol), col("cid"))
-    val fresh = assigned
-      .join(existing, Seq("cid", idCol), "left_anti")
-      .select(col(idCol), col("cid"), col("v"), col("nrm"))
-    (fresh, () => { assigned.unpersist(blocking = false); () })
-  }
+    BucketedStore.compact(spark, table, "compactIvfIndex", Some("cid"))
 
   /** IVF-style ANN: probe only the query vector's centroid bucket. */
   /** Matryoshka-style two-stage ANN (the published MRL retrieval
@@ -1046,12 +883,11 @@ object Similarity {
     * an In(id) probe from a shortlist prunes to the matching buckets at
     * planning time (SelectedBucketsCount in the scan) and never
     * shuffles or fully scans the store. Counterpart of
-    * [[buildIvfIndex]] for the full-vector side. */
+    * [[buildIvfIndex]] for the full-vector side. Stamps the full width
+    * and the prefix width (a build parameter — no job), so
+    * probeVectorStoreExternal's guards are catalog reads per call. */
   def buildVectorStore(base: DataFrame, idCol: String, table: String,
       buckets: Int = 32, prefixDims: Int = 0): Unit = {
-    dropTableAndLocation(base.sparkSession, table)
-    // a rebuilt store starts with no pending deletes (see buildIvfIndex)
-    dropTableAndLocation(base.sparkSession, Dedup.tombstoneTable(table))
     // Matryoshka serving layout: the first prefixDims dims and their
     // norm persist as their OWN narrow columns, so a prefix-shortlist
     // scan reads prefixDims floats per row off parquet (column
@@ -1062,61 +898,35 @@ object Similarity {
       base.withColumn("vt", slice(col("v"), 1, prefixDims))
         .withColumn("nt", sqrt(dot(col("vt"), col("vt"))))
     } else base
-    // task-aligned to buckets: one sorted file per bucket, so the
-    // In(id) point lookups prune to single files — see RawVault.writeTable
-    projected.repartition(buckets, col(idCol)).write
-      .bucketBy(buckets, idCol)
-      .sortBy(idCol)
-      .mode("overwrite")
-      .saveAsTable(table)
-    val spark = base.sparkSession
-    spark.catalog.refreshTable(table)
-    // serving stamps: the full width (one tiny job at build time) and
-    // the prefix width (a build parameter — no job at all), so
-    // probeVectorStoreExternal's guards are catalog reads per call
-    val dim = spark.table(table).select(size(col("v")))
-      .filter(col("v").isNotNull).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    val props: Map[String, String] =
-      (if (dim > 0) Map(DimProp -> dim.toString)
-       else Map.empty[String, String]) ++
-      (if (prefixDims > 0) Map(PrefixDimsProp -> prefixDims.toString)
-       else Map.empty[String, String])
-    if (props.nonEmpty) stampTableProps(spark, table, props)
+    // sorted within buckets, so In(id) point lookups prune to single
+    // files
+    BucketedStore.rebuild(projected, table, idCol, buckets,
+      sortCols = Seq(idCol),
+      stamps = if (prefixDims > 0) Map(PrefixDimsProp -> prefixDims.toString)
+        else Map.empty,
+      widthOf = Some("v"))
   }
 
   /** Incrementally extend a persisted [[buildVectorStore]] table with
-    * new vectors — the store's streaming half, completing the
-    * append/probe/compact lifecycle the band index, keyed tables, and
-    * IVF index already have (wire a readStream through
-    * `CdcStream.foreachBatchLoader(s)(b => appendToVectorStore(…))`).
-    * Each batch (a [[withNorm]] projection keyed by `idCol`)
-    * recomputes the store's persisted prefix columns at the STORE's
-    * own stamped width — read from the catalog ([[PrefixDimsProp]]),
-    * so a batch can never mis-slice against a store built with a
-    * different `prefixDims` — is anti-joined on id against the
-    * current table so micro-batch replays are idempotent
-    * (at-least-once delivery → exactly-once table effect), and
-    * appends task-aligned AND bucket-sorted with the existing layout.
-    *
-    * Scale shape (the [[appendToIvfIndex]] device at the id grain):
-    * the idempotence check is bucket-pruned POINT LOOKUPS — the
-    * batch's ids are bounded (`maxBatchIds`, loud fail past it) and
-    * re-enter the plan as literals, so the store scan opens only the
-    * batch's buckets (SelectedBucketsCount, plan-pinned) with the id
-    * filter pushed to parquet, and the anti-join broadcasts
-    * batch-sized sides — per-delivery cost is O(batch) at any store
-    * size. Batch vectors must match the store's stamped width
-    * ([[DimProp]]): a mismatched row would null every similarity it
-    * later appears in, so the append refuses loudly up front. */
+    * new vectors — the store's streaming half (wire a readStream
+    * through `CdcStream.foreachBatchLoader(s)(b =>
+    * appendToVectorStore(…))`). Each batch (a [[withNorm]] projection
+    * keyed by `idCol`) recomputes the store's persisted prefix columns
+    * at the STORE's own stamped width — read from the catalog
+    * ([[PrefixDimsProp]]), so a batch can never mis-slice against a
+    * store built with a different `prefixDims` — and is appended at id
+    * grain by [[BucketedStore.append]] (bucket-pruned point-lookup
+    * idempotence, O(batch) per delivery at any store size). Batch
+    * vectors must match the store's stamped width: a mismatched row
+    * would null every similarity it later appears in, so the append
+    * refuses loudly up front. */
   def appendToVectorStore(batch: DataFrame, table: String, idCol: String,
       maxBatchIds: Int = 1 << 20): Unit = {
     val spark = batch.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val buckets = Dedup.requireKeyBucketedTable(spark, table, idCol,
-      "appendToVectorStore")
-    requireNotTombstoned(spark, table, batch, idCol, "appendToVectorStore")
-    val dim = storedDim(spark, table, "v")
+    val layout = BucketedStore.open(spark, table, "appendToVectorStore",
+      Some(idCol))
+    val dim = BucketedStore.storedDim(spark, table, "v")
     if (dim > 0) {
       val bad = batch.filter(size(col("v")) =!= dim).limit(1).collect()
       require(bad.isEmpty,
@@ -1125,78 +935,36 @@ object Similarity {
           "every similarity it later appears in; encode the batch with " +
           "the store's embedding dimension")
     }
-    val prefixDims = tableProp(spark, table, PrefixDimsProp).map(_.toInt)
-      .getOrElse {
-        // a store built before the stamp existed: one null-safe row
-        if (spark.table(table).columns.contains("vt"))
-          spark.table(table).select(size(col("vt")))
-            .filter(col("vt").isNotNull).limit(1).collect()
-            .headOption.map(_.getInt(0)).getOrElse(0)
-        else 0
-      }
-    require(prefixDims > 0 || !spark.table(table).columns.contains("vt"),
+    val tableCols = spark.table(table).columns
+    val prefixDims =
+      if (tableCols.contains("vt"))
+        BucketedStore.storedDim(spark, table, "vt", PrefixDimsProp)
+      else 0
+    require(prefixDims > 0 || !tableCols.contains("vt"),
       s"appendToVectorStore: $table has prefix columns but no " +
         s"readable prefix width (empty store without a $PrefixDimsProp " +
         "stamp) — rebuild with buildVectorStore to stamp it")
     // one row per id within the batch (an at-least-once source can
     // redeliver inside a single micro-batch; multiple VERSIONS of an
-    // id must resolve latest-wins upstream — the freshIndexRows
-    // contract), persisted: two consumers (the id collect and the
-    // append's anti-join) and the collected literals must be exactly
-    // the rows the join filters
-    val projected0 = batch.dropDuplicates(Seq(idCol))
-    val projected = (if (prefixDims > 0)
-        projected0.withColumn("vt", slice(col("v"), 1, prefixDims))
+    // id must resolve latest-wins upstream)
+    val deduped = batch.dropDuplicates(Seq(idCol))
+    val projected =
+      if (prefixDims > 0)
+        deduped.withColumn("vt", slice(col("v"), 1, prefixDims))
           .withColumn("nt", sqrt(dot(col("vt"), col("vt"))))
-      else projected0).persist()
-    try {
-      val ids = DriverBounded.collectCapped(
-        projected.select(col(idCol)), maxBatchIds,
-        s"appendToVectorStore: micro-batch exceeds maxBatchIds " +
-          s"$maxBatchIds (the batch's ids become planning-time " +
-          "point-lookup literals); split the batch or raise the bound " +
-          "deliberately")
-        .map(_.get(0)).toSeq
-      require(!ids.contains(null),
-        s"appendToVectorStore: null $idCol in the batch — the " +
-          "idempotence anti-join never matches null, so a null-keyed " +
-          "row would re-append on every redelivery; filter or " +
-          "key-derive upstream")
-      if (ids.nonEmpty) {
-        val existing = Dedup.compileAndPinBucketedScan(spark,
-          spark.table(table).filter(col(idCol).isin(ids: _*))
-            .select(col(idCol)),
-          table, reliable = false, "appendToVectorStore")
-        val fresh = projected.join(existing, Seq(idCol), "left_anti")
-          .select(spark.table(table).columns.map(col).toIndexedSeq: _*)
-        Dedup.withAutoBucketedScanOff(spark) {
-          fresh.repartition(buckets, col(idCol)).write
-            .bucketBy(buckets, idCol)
-            .sortBy(idCol)
-            .mode("append")
-            .saveAsTable(table)
-        }
-        spark.catalog.refreshTable(table)
-      }
-    } finally { projected.unpersist(blocking = false); () }
+      else deduped
+    BucketedStore.append(spark, table, layout, Seq(idCol),
+      projected.select(tableCols.map(col).toIndexedSeq: _*),
+      maxBatchIds, "maxBatchIds", "appendToVectorStore")
   }
 
   /** Fold a [[buildVectorStore]] table back to one sorted file per
-    * bucket — the fourth and final grain of the compaction story
-    * (band index, keyed table, IVF index, vector store): every
-    * [[appendToVectorStore]] delivery writes its own task-aligned
-    * file set, so after N deliveries an In(id) point lookup opens N
-    * files per probed bucket and rerank cost degrades linearly in
-    * DELIVERIES, not data. The shared zero-shuffle rewrite core
-    * preserves the store's within-bucket SORT spec and its graft.*
-    * serving stamps across the staging swap (both read from the live
-    * catalog), keeps the never-zero-copies backup dance, and is
-    * idempotent and self-healing at every entry point. Single-writer:
-    * run it BETWEEN deliveries (the w15 gate does, mid-stream), never
-    * concurrent with one. */
+    * bucket, applying pending deletes ([[BucketedStore.compact]] keeps
+    * the sort spec and the serving stamps). Run it between deliveries
+    * (the w15 gate does). */
   def compactVectorStore(spark: org.apache.spark.sql.SparkSession,
       table: String, idCol: String): Unit =
-    Dedup.compactIdKeyedTable(spark, table, idCol)
+    BucketedStore.compact(spark, table, "compactVectorStore", Some(idCol))
 
   /** [[knnMatryoshkaIndexed]]'s stage 1 as a frame, factored so the
     * plan pin can assert the store scan reads (id, vt, nt) ONLY —
@@ -1236,7 +1004,8 @@ object Similarity {
     // tombstoned rows are absent — as shortlist candidates AND as
     // by-id queries (excluded before ranking, so live next-best
     // candidates refill the shortlist)
-    val store = liveRows(spark, table, spark.table(table), idCol)
+    BucketedStore.open(spark, table, "knnMatryoshkaIndexed", Some(idCol))
+    val store = BucketedStore.liveRows(spark, table, spark.table(table), idCol)
     require(store.columns.contains("vt") && store.columns.contains("nt"),
       s"knnMatryoshkaIndexed: $table has no persisted prefix columns — " +
         "build the store with buildVectorStore(..., prefixDims = d)")
@@ -1254,22 +1023,21 @@ object Similarity {
         s"shortlist exceeds maxCandidates $maxCandidates (a driver-side " +
         "collect + In-literal predicate); raise maxCandidates deliberately " +
         "or use the lazy knnMatryoshka for large batches")
-    matryoshkaShortlistRerank(spark, store, q, idCol, k, shortlist,
+    rerankShortlist(spark, store,
+      matryoshkaShortlistFrame(store, q, idCol, shortlist), q, idCol, k,
       maxCandidates, "knnMatryoshkaIndexed")
   }
 
-  /** The shared two-stage tail of [[knnMatryoshkaIndexed]] and
-    * [[probeVectorStoreExternal]]: prefix-cosine shortlist over the
-    * store's narrow (id, vt, nt) columns, Q×shortlist candidate hop
-    * (bounded, the serving contract), exact full-dimension rerank over
-    * In(id) point lookups that bucket-prune at planning time. `q`
-    * carries (qid, qv, qn, qvt, qnt) — from the store itself (the id
-    * form) or from an external frame (the serving form). */
-  private def matryoshkaShortlistRerank(
+  /** The shared stage 2 of [[knnMatryoshkaIndexed]],
+    * [[probeVectorStoreExternal]] and [[knnPqRefineIndexed]]: the
+    * (qid, neighbor_id) shortlist `cands` hops to the driver (bounded,
+    * the serving contract), its ids re-enter as In(id) point lookups
+    * that bucket-prune the store at planning time, and the full
+    * vectors rerank exactly against `q` (qid, qv, qn). */
+  private def rerankShortlist(
       spark: org.apache.spark.sql.SparkSession, store: DataFrame,
-      q: DataFrame, idCol: String, k: Int, shortlist: Int,
+      cands: DataFrame, q: DataFrame, idCol: String, k: Int,
       maxCandidates: Int, context: String): DataFrame = {
-    val cands = matryoshkaShortlistFrame(store, q, idCol, shortlist)
     val candRows = DriverBounded.collectCapped(cands, maxCandidates,
       s"$context: candidate pairs exceed maxCandidates $maxCandidates")
     val ids = candRows.map(_.get(1)).distinct.toSeq
@@ -1308,7 +1076,8 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     // pending deletes excluded before the shortlist ranks (liveRows) —
     // a deleted row can neither surface nor occupy a shortlist slot
-    val store = liveRows(spark, table, spark.table(table), idCol)
+    BucketedStore.open(spark, table, "probeVectorStoreExternal", Some(idCol))
+    val store = BucketedStore.liveRows(spark, table, spark.table(table), idCol)
     require(store.columns.contains("vt") && store.columns.contains("nt"),
       s"probeVectorStoreExternal: $table has no persisted prefix " +
         "columns — build the store with buildVectorStore(..., " +
@@ -1316,25 +1085,17 @@ object Similarity {
     // prefix and full widths off the catalog stamps (no job) when
     // present — the serving fast path; one null-safe row otherwise
     // (a store built before the properties existed)
-    val stampedPrefix = tableProp(spark, table, PrefixDimsProp).map(_.toInt)
-    val stampedDim = tableProp(spark, table, DimProp).map(_.toInt)
-    val head =
-      if (stampedPrefix.isDefined && stampedDim.isDefined) Array.empty[org.apache.spark.sql.Row]
-      else store.select(size(col("vt")), size(col("v")))
-        .filter(col("vt").isNotNull && col("v").isNotNull)
-        .limit(1).collect()
-    val prefixDims = stampedPrefix
-      .orElse(head.headOption.map(_.getInt(0))).getOrElse(0)
+    val prefixDims = BucketedStore.storedDim(spark, table, "vt",
+      PrefixDimsProp)
     require(prefixDims > 0,
       s"probeVectorStoreExternal: $table is empty and carries no " +
         s"$PrefixDimsProp property — no prefix width to slice external " +
         "queries to")
-    val storeDim = stampedDim
-      .orElse(head.headOption.map(_.getInt(1))).getOrElse(0)
+    val storeDim = BucketedStore.storedDim(spark, table, "v")
     require(storeDim > 0,
       s"probeVectorStoreExternal: $table is empty and carries no " +
-        s"$DimProp property — no store width to validate serving " +
-        "queries against")
+        s"${BucketedStore.DimProp} property — no store width to validate " +
+        "serving queries against")
     val maxQueries = maxCandidates / shortlist
     require(maxQueries > 0,
       s"probeVectorStoreExternal: shortlist $shortlist exceeds " +
@@ -1359,7 +1120,8 @@ object Similarity {
       .select(col(idCol).as("qid"), col("v").as("qv"),
         col("nrm").as("qn"), col("qvt"),
         sqrt(dot(col("qvt"), col("qvt"))).as("qnt"))
-    matryoshkaShortlistRerank(spark, store, q, idCol, k, shortlist,
+    rerankShortlist(spark, store,
+      matryoshkaShortlistFrame(store, q, idCol, shortlist), q, idCol, k,
       maxCandidates, "probeVectorStoreExternal")
   }
 
@@ -1401,30 +1163,19 @@ object Similarity {
         "collect + In-literal predicate); raise maxCandidates deliberately " +
         "or use knnPqRefine for large batches")
     val spark = encoded.sparkSession
+    BucketedStore.open(spark, vecTable, "knnPqRefineIndexed", Some(idCol))
     // the store's pending deletes excluded from the ADC shortlist
     // itself (stage 1, before ranking), so live next-best candidates
     // refill the shortlist and stage 2 never fetches a deleted row
-    val cands = knnPq(liveRows(spark, vecTable, encoded, idCol),
+    val cands = knnPq(BucketedStore.liveRows(spark, vecTable, encoded, idCol),
         queries, idCol, codebooks, shortlist)
       .select(col("qid"), col("neighbor_id"))
-    // the query-count guard above already bounds this to maxCandidates;
-    // the capped collect re-asserts it at the hop itself
-    val candRows = DriverBounded.collectCapped(cands, maxCandidates,
-      s"knnPqRefineIndexed: candidate pairs exceed maxCandidates $maxCandidates")
-    val ids = candRows.map(_.get(1)).distinct.toSeq
-    val candsDf = spark.createDataFrame(
-      java.util.Arrays.asList(candRows: _*), cands.schema)
-    val fetched = spark.table(vecTable)
-      .filter(col(idCol).isin(ids: _*))
-      .select(col(idCol).as("neighbor_id"), col("v").as("bv"), col("nrm").as("bn"))
-    val q = queries.select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(col("xsim").desc, col("neighbor_id").asc)
-    fetched.join(broadcast(candsDf), "neighbor_id")
-      .join(broadcast(q), "qid")
-      .withColumn("xsim", dot(col("bv"), col("qv")) / (col("bn") * col("qn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"))
+    // the query-count guard above already bounds the hop to
+    // maxCandidates; the capped collect re-asserts it
+    rerankShortlist(spark, spark.table(vecTable), cands,
+      queries.select(col(idCol).as("qid"), col("v").as("qv"),
+        col("nrm").as("qn")),
+      idCol, k, maxCandidates, "knnPqRefineIndexed")
   }
 
   /** The side table holding a [[buildPqIndex]] index's PQ codebooks. */
@@ -1452,16 +1203,18 @@ object Similarity {
     val spark = encodedAssigned.sparkSession
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "buildPqIndex: empty PQ codebooks")
-    dropTableAndLocation(spark, table)
-    dropTableAndLocation(spark, pqCodebookTable(table))
-    // a rebuilt index starts with no pending deletes (see buildIvfIndex)
-    dropTableAndLocation(spark, Dedup.tombstoneTable(table))
-    encodedAssigned.select(col(idCol), col("cid"), col("pq_code"))
-      .repartition(buckets, col("cid")).write
-      .bucketBy(buckets, "cid")
-      .mode("overwrite")
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val (fp, centDim) = codebookFingerprint(centroids, idCol)
+    val dim = codebooks.size * codebooks.head.head.length
+    require(centDim == dim,
+      s"buildPqIndex: the centroid codebook's width ($centDim) differs " +
+        s"from the PQ codebooks' reconstruction width ($dim) — not the " +
+        "geometry this index encodes")
+    BucketedStore.dropTableAndLocation(spark, pqCodebookTable(table))
+    BucketedStore.rebuild(
+      encodedAssigned.select(col(idCol), col("cid"), col("pq_code")),
+      table, "cid", buckets,
+      stamps = Map(BucketedStore.DimProp -> dim.toString,
+        PqMProp -> codebooks.size.toString, CodebookProp -> fp))
     import spark.implicits._
     val cbRows = for {
       (cws, m) <- codebooks.zipWithIndex
@@ -1469,16 +1222,6 @@ object Similarity {
     } yield (m, k, cw.toSeq)
     cbRows.toDF("m", "k", "cw").coalesce(1).write
       .mode("overwrite").saveAsTable(pqCodebookTable(table))
-    val (fp, centDim) = codebookFingerprint(centroids, idCol)
-    val dim = codebooks.size * codebooks.head.head.length
-    require(centDim == dim,
-      s"buildPqIndex: the centroid codebook's width ($centDim) differs " +
-        s"from the PQ codebooks' reconstruction width ($dim) — not the " +
-        "geometry this index encodes")
-    stampTableProps(spark, table, Map(
-      DimProp -> dim.toString,
-      PqMProp -> codebooks.size.toString,
-      CodebookProp -> fp))
   }
 
   /** Reconstruct a [[buildPqIndex]] index's persisted PQ codebooks —
@@ -1554,8 +1297,7 @@ object Similarity {
     require(probes >= 1,
       s"probePqIndexExternal: probes must be >= 1, got $probes")
     DriverBounded.labeled(spark, s"probePqIndexExternal:$table") {
-    Dedup.requireKeyBucketedTable(spark, table, "cid",
-      "probePqIndexExternal")
+    BucketedStore.open(spark, table, "probePqIndexExternal", Some("cid"))
     // the broadcast probe frame is Q x probes rows, EACH carrying an
     // M x K-double ADC table — the enforced bound must scale with
     // nprobe or a caller inside maxQueries could still blow the
@@ -1568,19 +1310,8 @@ object Similarity {
     val codebooks = cachedPqCodebooks(spark, table)
     val m = codebooks.size
     val dim = m * codebooks.head.head.length
-    val (fp, centDim) = cachedCodebookFingerprint(spark, table,
-      centroids, idCol)
-    tableProp(spark, table, CodebookProp).foreach { stamped =>
-      require(stamped == fp,
-        s"probePqIndexExternal: the centroid codebook passed to this " +
-          s"probe (md5 $fp) is not the one $table was built with " +
-          s"(md5 $stamped) — probing with another would scan the wrong " +
-          "buckets")
-    }
-    require(centDim == dim,
-      s"probePqIndexExternal: the centroid codebook's width ($centDim) " +
-        s"differs from the index's PQ reconstruction width ($dim) — " +
-        "not this index's geometry")
+    requireCodebook(spark, table, centroids, idCol,
+      "probePqIndexExternal", dim, writer = false)
     requireServingBatch(queries, maxQueriesAtProbes, dim,
       s"probePqIndexExternal: more than $maxQueriesAtProbes external " +
         s"queries in one probe at probes=$probes (the ADC-table probe " +
@@ -1590,265 +1321,90 @@ object Similarity {
       s"probePqIndexExternal: an external query's vector width differs " +
         s"from the index's ($dim) — its ADC table would be meaningless; " +
         "encode serving queries with the index's embedding dimension")
-    // persisted: two consumers (the cid collect and the probe join) —
-    // the pruned buckets must be exactly the buckets the probe rows
-    // were assigned to
-    val q = assignProbeBuckets(queries, centroids, idCol, probes)
-      .select(col(idCol).as("qid"), col("cid").as("qcid"),
-        pqQueryTable(col("v"), codebooks).as("qtab")).persist()
-    try {
-      val cids = DriverBounded.collectCapped(
-        q.select(col("qcid")).distinct(), 1 << 16,
-        "probePqIndexExternal: probed centroid set exceeds 2^16 — " +
-          "the codebook is configuration-sized by the maxCentroids " +
-          "contract, so this is not a buildPqIndex codebook")
-        .map(_.get(0)).toSeq
-      if (cids.isEmpty)
-        pqRank(spark.table(table).limit(0), q, idCol, m, k,
-          col("cid") === col("qcid")).localCheckpoint(true)
-      else
-        // pending deletes excluded ABOVE the pruned scan, BEFORE the
-        // ADC ranking — next-best candidates refill the top-k
-        Dedup.compileAndPinBucketedScan(spark,
-          pqRank(liveRows(spark, table,
-            spark.table(table).filter(col("cid").isin(cids: _*)), idCol),
-            q, idCol, m, k, col("cid") === col("qcid")),
-          table, reliable = false, "probePqIndexExternal")
-    } finally { q.unpersist(blocking = false); () }
+    probeCidBuckets(spark, table,
+      assignProbeBuckets(queries, centroids, idCol, probes)
+        .select(col(idCol).as("qid"), col("cid").as("qcid"),
+          pqQueryTable(col("v"), codebooks).as("qtab")),
+      idCol, "probePqIndexExternal")(
+      pqRank(_, _, idCol, m, k, col("cid") === col("qcid")))
     }
   }
 
   /** Incrementally extend a persisted [[buildPqIndex]] codes table
-    * with new vectors — the PQ family's streaming half, so ALL FOUR
-    * persisted index grains (band, keyed/store, IVF, PQ) carry the
-    * full build/append/probe/compact lifecycle. Each batch (a
+    * with new vectors — the PQ family's streaming half. Each batch (a
     * [[withNorm]] projection) is assigned against the index's
-    * fingerprint-verified centroid codebook and ENCODED WITH THE
+    * fingerprint-verified centroid codebook, ENCODED WITH THE
     * PERSISTED PQ CODEBOOKS ([[loadPqCodebooks]] — the quantizer is
     * part of the index's identity and never drifts mid-stream;
     * retraining either codebook is a batch [[buildPqIndex]] rebuild),
-    * anti-joined on (cid, id) against the current codes so replays
-    * are idempotent, and appended task-aligned with the existing
-    * bucket layout. Scale shape: the [[appendToIvfIndex]] device —
+    * and appended at (cid, id) grain by [[BucketedStore.append]] —
     * zero-shuffle argmax assignment, narrow codegen'd encode,
-    * point-lookup idempotence (batch keys as bounded literals, the
-    * codes scan bucket-pruned inside the append's conf window),
-    * batch-sized broadcast anti-join — O(batch) at any index size. */
+    * point-lookup idempotence: O(batch) at any index size. */
   def appendToPqIndex(batch: DataFrame, table: String,
       centroids: DataFrame, idCol: String,
       maxBatchIds: Int = 1 << 20): Unit = {
     val spark = batch.sparkSession
-    val buckets = Dedup.requireKeyBucketedTable(spark, table, "cid",
-      "appendToPqIndex")
-    requireNotTombstoned(spark, table, batch, idCol, "appendToPqIndex")
+    val layout = BucketedStore.open(spark, table, "appendToPqIndex",
+      Some("cid"))
     val codebooks = loadPqCodebooks(spark, table)
     val dim = codebooks.size * codebooks.head.head.length
-    val (fp, centDim) = codebookFingerprint(centroids, idCol)
-    tableProp(spark, table, CodebookProp) match {
-      case Some(stamped) =>
-        require(stamped == fp,
-          s"appendToPqIndex: the centroid codebook passed to this " +
-            s"append (md5 $fp) is not the one $table is partitioned " +
-            s"by (md5 $stamped) — appending under a different codebook " +
-            "drifts the index geometry mid-stream; retraining is a " +
-            "batch buildPqIndex rebuild")
-      case None =>
-        // a pre-stamp table (buildPqIndex always stamps; this is the
-        // appendToIvfIndex convention for hand-migrated tables)
-        stampTableProps(spark, table, Map(CodebookProp -> fp,
-          DimProp -> dim.toString, PqMProp -> codebooks.size.toString))
-    }
-    require(centDim == dim,
-      s"appendToPqIndex: the centroid codebook's width ($centDim) " +
-        s"differs from the index's PQ reconstruction width ($dim) — " +
-        "not this index's geometry")
+    requireCodebook(spark, table, centroids, idCol, "appendToPqIndex",
+      dim, writer = true,
+      Map(BucketedStore.DimProp -> dim.toString,
+        PqMProp -> codebooks.size.toString))
     val bad = batch.filter(size(col("v")) =!= dim).limit(1).collect()
     require(bad.isEmpty,
       s"appendToPqIndex: a batch vector's width differs from the " +
         s"index's ($dim) — its codes would be meaningless; encode the " +
         "batch with the index's embedding dimension")
-    // one row per id within the batch (the freshIndexRows contract),
-    // persisted: two consumers — the key collect and the anti-join
-    val encoded = pqEncode(
-      assignToCentroids(batch.dropDuplicates(Seq(idCol)), centroids,
-        idCol), idCol, codebooks)
-      .select(col(idCol), col("cid"), col("pq_code")).persist()
-    try {
-      val keys = DriverBounded.collectCapped(
-        encoded.select(col(idCol), col("cid")), maxBatchIds,
-        s"appendToPqIndex: micro-batch exceeds maxBatchIds $maxBatchIds " +
-          "(the batch's keys become planning-time point-lookup " +
-          "literals); split the batch or raise the bound deliberately")
-      if (keys.nonEmpty) {
-        val ids = keys.map(_.get(0)).toSeq
-        val cids = keys.map(_.get(1)).distinct.toSeq
-        // the idempotence lookup compiles inside the conf window AND
-        // asserts SelectedBucketsCount on the compiled and executed
-        // plans (the appendToVectorStore device) — if the layout or
-        // the conf window ever drifts, the append fails loudly here
-        // instead of silently degrading to a full codes scan per
-        // micro-batch
-        val existing = Dedup.compileAndPinBucketedScan(spark,
-          spark.table(table)
-            .filter(col("cid").isin(cids: _*) && col(idCol).isin(ids: _*))
-            .select(col(idCol), col("cid")),
-          table, reliable = false, "appendToPqIndex")
-        val fresh = encoded.join(existing, Seq("cid", idCol), "left_anti")
-          .select(col(idCol), col("cid"), col("pq_code"))
-        Dedup.withAutoBucketedScanOff(spark) {
-          fresh.repartition(buckets, col("cid")).write
-            .bucketBy(buckets, "cid")
-            .mode("append")
-            .saveAsTable(table)
-        }
-        spark.catalog.refreshTable(table)
-      }
-    } finally { encoded.unpersist(blocking = false); () }
+    // one row per id within the batch (an at-least-once source can
+    // redeliver inside a single micro-batch)
+    BucketedStore.append(spark, table, layout, Seq("cid", idCol),
+      pqEncode(
+        assignToCentroids(batch.dropDuplicates(Seq(idCol)), centroids,
+          idCol), idCol, codebooks)
+        .select(col(idCol), col("cid"), col("pq_code")),
+      maxBatchIds, "maxBatchIds", "appendToPqIndex")
   }
 
-  /** Fold a [[buildPqIndex]] codes table back to one file per bucket —
-    * [[compactIvfIndex]] for the PQ grain, same shared rewrite core
-    * (zero-shuffle, metadata-preserving, backup dance, self-healing).
-    * The `__codebook` side table never compacts (one file by
-    * construction). Single-writer; run between deliveries (the w16
-    * gate does, mid-stream). */
+  /** Fold a [[buildPqIndex]] codes table back to one file per bucket,
+    * applying pending deletes ([[BucketedStore.compact]]). The
+    * `__codebook` side table never compacts (one file by
+    * construction). Run between deliveries (the w16 gate does). */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
-    Dedup.compactIdKeyedTable(spark, table, "cid")
+    BucketedStore.compact(spark, table, "compactPqIndex", Some("cid"))
 
   /** Logically DELETE ids from a persisted vector index — takedowns
     * (copyright, PII, opt-out) without rewriting the index: the ids
-    * land in a tiny tombstone side table (`table__tombstones`, its one
-    * column named `idCol` so later passes are self-describing); every
-    * probe excludes tombstoned rows BEFORE ranking (a broadcast
-    * anti-join over the pruned scan — next-best candidates refill the
-    * top-k, deleted rows can never occupy shortlist slots), and the
-    * family's compact physically APPLIES the pending deletes and
-    * truncates the side table (the Lucene/RocksDB delete shape: mark
-    * now, reclaim at merge). Works uniformly on all three vector
-    * families (IVF index, vector store, PQ codes — `idCol` keyed,
-    * bucketed tables) and composes with the band index's own
-    * supersede tombstones, which ride the same side-table name and
-    * compact apply.
+    * land in the store's tombstone side table
+    * ([[BucketedStore.addTombstones]]); every probe excludes tombstoned
+    * rows BEFORE ranking (next-best candidates refill the top-k,
+    * deleted rows can never occupy shortlist slots), and the family's
+    * compact physically APPLIES the pending deletes and truncates the
+    * side table (the Lucene/RocksDB delete shape: mark now, reclaim at
+    * merge). Works uniformly on every bucketed family and composes
+    * with the band index's supersede tombstones.
     *
-    * Contract and bounds: idempotent (ids are distinct-ed and
-    * anti-joined against pending tombstones — re-deleting is a no-op);
+    * Contract and bounds: idempotent (re-deleting is a no-op);
     * deleting an id not in the index is allowed (it guards the id
     * against a racing append); a tombstoned id REFUSES to re-append
-    * until a compact applies the delete (the append's idempotence
-    * anti-join would otherwise silently resurrect the OLD row: the
-    * physical row still exists, so the new version would be absorbed
-    * and the deleted value would serve again). Pending tombstones are
-    * broadcast into every probe, so they must stay configuration-
-    * sized: the delete refuses loudly past `maxPendingDeletes` —
-    * compact to apply and clear. Serialized with compaction under the
-    * engine's one maintenance lock (a tombstone landing between a
-    * compact's read and its truncate would be wiped unapplied).
-    * Crash mid-append: partial tombstones are visible, the retry's
-    * anti-join completes the set — at-least-once delivery, exactly-
-    * once table effect, like every graft maintenance pass. */
+    * until a compact applies the delete. Pending tombstones broadcast
+    * into every probe, so the delete refuses loudly, before writing,
+    * past `maxPendingDeletes` — compact to apply and clear. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, ids: DataFrame, idCol: String,
       maxPendingDeletes: Int = 1 << 20): Unit = {
-    require(spark.catalog.tableExists(table),
-      s"deleteFromIndex: $table does not exist")
-    val tomb = Dedup.tombstoneTable(table)
-    Dedup.withBandLock {
-      val del = ids.select(col(idCol)).distinct()
-      require(del.filter(col(idCol).isNull).limit(1).collect().isEmpty,
-        s"deleteFromIndex: null $idCol in the delete set — the probe " +
-          "exclusion anti-join never matches null, so a null tombstone " +
-          "would silently delete nothing; filter upstream")
-      // the tombstone table's stored id-column name is authoritative
-      // (stamped by the FIRST delete; the side table is
-      // self-describing) — read it once and rename consistently, so a
-      // caller whose idCol differs from the stored name still
-      // anti-joins, unions and appends against the right column
-      // instead of dying on an AnalysisException at the union
-      val tombExists = spark.catalog.tableExists(tomb)
-      val storedId =
-        if (tombExists) spark.table(tomb).columns.head else idCol
-      val fresh =
-        if (tombExists)
-          del.join(spark.table(tomb).select(col(storedId).as(idCol)),
-            Seq(idCol), "left_anti")
-        else del
-      val pendingAfter =
-        if (tombExists)
-          spark.table(tomb).select(col(storedId).as(idCol)).union(fresh)
-        else fresh
-      require(!DriverBounded.exceeds(pendingAfter, maxPendingDeletes),
-        s"deleteFromIndex: pending deletes for $table would exceed " +
-          s"$maxPendingDeletes — tombstones broadcast into every probe, " +
-          "so they must stay configuration-sized; run the family's " +
-          "compact to apply and clear them, or raise maxPendingDeletes " +
-          "deliberately")
-      // one tiny file per delete call, folded away at the next compact
-      fresh.select(col(idCol).as(storedId))
-        .coalesce(1).write.mode("append").saveAsTable(tomb)
-      spark.catalog.refreshTable(tomb)
-    }
+    BucketedStore.open(spark, table, "deleteFromIndex")
+    BucketedStore.addTombstones(spark, table, ids, idCol,
+      maxPendingDeletes, "maxPendingDeletes", "deleteFromIndex")
   }
 
   /** Ids logically deleted from `table` but not yet physically
     * applied — the pending tombstone set, empty if none. */
   def pendingDeletes(spark: org.apache.spark.sql.SparkSession,
-      table: String, idCol: String): DataFrame = {
-    val tomb = Dedup.tombstoneTable(table)
-    if (spark.catalog.tableExists(tomb)) {
-      val t = spark.table(tomb)
-      t.select(col(t.columns.head).as(idCol))
-    } else if (spark.catalog.tableExists(table) &&
-        spark.table(table).columns.contains(idCol))
-      // derive the empty frame from the index's own id column so its
-      // TYPE always matches — a hard-coded LongType empty frame
-      // miscasts (or refuses to union) against a string-keyed index
-      spark.table(table).select(col(idCol)).limit(0)
-    else
-      spark.range(0).select(col("id").as(idCol)).limit(0)
-  }
-
-  /** `df` minus `table`'s tombstoned rows — the probe-side exclusion:
-    * a broadcast anti-join (pending deletes are configuration-bounded
-    * by the delete path) applied BEFORE any ranking, so deleted rows
-    * neither surface nor displace live candidates from a top-k or a
-    * shortlist. No tombstone table → `df` unchanged (one catalog
-    * call, no job). */
-  private[operators] def liveRows(spark: org.apache.spark.sql.SparkSession,
-      table: String, df: DataFrame, idCol: String): DataFrame = {
-    val tomb = Dedup.tombstoneTable(table)
-    if (!spark.catalog.tableExists(tomb)) df
-    else {
-      val t = spark.table(tomb)
-      df.join(broadcast(t.select(col(t.columns.head).as(idCol))),
-        Seq(idCol), "left_anti")
-    }
-  }
-
-  /** Loud re-append guard: a tombstoned id cannot re-enter the index
-    * until its delete is physically applied — the append's idempotence
-    * anti-join sees the still-present physical row, would absorb the
-    * new version, and the DELETED value would silently serve again.
-    * One tiny lookup per append, only when a tombstone table exists. */
-  private[operators] def requireNotTombstoned(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String, batch: DataFrame, idCol: String,
-      context: String): Unit = {
-    val tomb = Dedup.tombstoneTable(table)
-    if (spark.catalog.tableExists(tomb)) {
-      val t = spark.table(tomb)
-      val hit = batch.select(col(idCol))
-        .join(broadcast(t.select(col(t.columns.head).as(idCol))),
-          Seq(idCol), "left_semi")
-        .limit(1).collect()
-      require(hit.isEmpty,
-        s"$context: batch $idCol '${hit.headOption.map(_.get(0)).orNull}' " +
-          s"is tombstoned in $table — a deleted id cannot re-enter until " +
-          "the delete is physically applied (the idempotence anti-join " +
-          "would silently resurrect the old row); run the family's " +
-          "compact first")
-    }
-  }
+      table: String, idCol: String): DataFrame =
+    BucketedStore.pendingDeletes(spark, table, idCol)
 
   /** Two-stage retrieval: PQ ADC shortlist → exact cosine re-rank — the
     * standard serving shape at corpus scale. Stage 1 scans only the

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
 object StreamSlices {
 
   /** Three ascending cut bounds quartering `ms` over `df`, with each
-    * quarter asserted non-empty (one aggregate job; `df` should be
+    * quarter asserted non-empty (two aggregate jobs: the min/max that
+    * places the cuts, then the per-quarter counts; `df` should be
     * persisted by the caller — it is about to be sliced four ways). */
   def guardedQuarterCuts(df: DataFrame, ms: Column, tag: String): Seq[Long] = {
     val mnmx = df.agg(min(ms).as("mn"), max(ms).as("mx")).collect().head

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, GraphOps, Packing, Sampling, TextAnalysis}
+import graft.operators.{BucketedStore, Dedup, GraphOps, Packing, Sampling, TextAnalysis}
 import graft.sources.Tables
 
 /** Oracle-checked coverage of the text pipeline operators in
@@ -548,13 +548,13 @@ object TextOps {
         .groupBy("doc_id").agg(count(lit(1)).as("n_index_candidates"))
         .write.mode("overwrite").parquet(out)
       Dedup.appendToBandIndex(batch, tbl, "text", "doc_id",
-        k = 6, bandWidth = 2, buckets = 8)
+        k = 6, bandWidth = 2)
       val afterFirst = s.table(tbl).count()
       require(afterFirst == planted.count() * 3,
         s"d44: index must hold 3 bands per doc after the append, " +
           s"saw $afterFirst")
       Dedup.appendToBandIndex(batch, tbl, "text", "doc_id",
-        k = 6, bandWidth = 2, buckets = 8)
+        k = 6, bandWidth = 2)
       require(s.table(tbl).count() == afterFirst,
         "d44: replayed batch was re-appended")
       s.read.parquet(out)
@@ -578,16 +578,16 @@ object TextOps {
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       Dedup.appendToBandIndex(batch.filter(col("doc_id") % 8 === 0), tbl,
-        "text", "doc_id", k = 6, bandWidth = 2, buckets = 8)
+        "text", "doc_id", k = 6, bandWidth = 2)
       Dedup.appendToBandIndex(batch.filter(col("doc_id") % 8 =!= 0), tbl,
-        "text", "doc_id", k = 6, bandWidth = 2, buckets = 8)
+        "text", "doc_id", k = 6, bandWidth = 2)
       val rowsBefore = s.table(tbl).count()
-      val filesBefore = Dedup.bandIndexFileCount(s, tbl)
+      val filesBefore = BucketedStore.fileCount(s, tbl)
       require(filesBefore > 8,
         s"d51: three deliveries must leave more file sets than buckets, " +
           s"saw $filesBefore")
       Dedup.compactBandIndex(s, tbl)
-      require(Dedup.bandIndexFileCount(s, tbl) <= 8,
+      require(BucketedStore.fileCount(s, tbl) <= 8,
         "d51: compaction must leave at most one file per bucket")
       require(s.table(tbl).count() == rowsBefore,
         "d51: compaction with no tombstones must be row-neutral")
@@ -622,20 +622,20 @@ object TextOps {
       val idxDocs = idxSet.count()
       val r1 = Dedup.ingestResolveNearDups(s, tbl,
         batch.filter(col("doc_id") % 8 === 0), "text", "doc_id", "q",
-        scores, k = 6, bandWidth = 2, buckets = 8)
+        scores, k = 6, bandWidth = 2)
       val r2 = Dedup.ingestResolveNearDups(s, tbl,
         batch.filter(col("doc_id") % 8 =!= 0), "text", "doc_id", "q",
-        scores, k = 6, bandWidth = 2, buckets = 8)
+        scores, k = 6, bandWidth = 2)
       val kept = r1.filter(col("kept")).count() +
         r2.filter(col("kept")).count()
       require(s.table(tbl).count() == (idxDocs + kept) * 3,
         "d52: index must hold 3 bands per index doc + per kept batch doc")
-      val tombN = s.table(Dedup.tombstoneTable(tbl)).count()
+      val tombN = s.table(BucketedStore.tombstoneTable(tbl)).count()
       val rowsBefore = s.table(tbl).count()
       Dedup.compactBandIndex(s, tbl)
       require(s.table(tbl).count() == rowsBefore - tombN * 3,
         "d52: compaction must remove exactly the tombstoned docs' bands")
-      require(s.table(Dedup.tombstoneTable(tbl)).count() == 0,
+      require(s.table(BucketedStore.tombstoneTable(tbl)).count() == 0,
         "d52: compaction must truncate the applied tombstones")
       r1.unionByName(r2)
     }),
@@ -902,11 +902,11 @@ object TextOps {
       // compaction: the delivery stacked its own file set — the
       // zero-shuffle rewrite folds back to one file per bucket,
       // row-neutral, probes unchanged
-      require(Dedup.bandIndexFileCount(s, tbl) > 8,
+      require(BucketedStore.fileCount(s, tbl) > 8,
         "d55: the append should have stacked a second file set")
       val rowsBefore = s.table(tbl).count()
       Dedup.compactKeyedTable(s, tbl, "fp")
-      require(Dedup.bandIndexFileCount(s, tbl) <= 8,
+      require(BucketedStore.fileCount(s, tbl) <= 8,
         "d55: compaction must leave at most one file per bucket")
       require(s.table(tbl).count() == rowsBefore,
         "d55: keyed compaction must be row-neutral")
@@ -1066,7 +1066,7 @@ object TextOps {
         // idempotence (it persists + materializes before writing)
         Dedup.appendToKeyedTable(verdicts, sinkTbl, "doc_id")
         Dedup.appendToBandIndex(b, tbl, "text", "doc_id",
-          k = 6, bandWidth = 2, buckets = 8)
+          k = 6, bandWidth = 2)
       }.trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       val batches = q.recentProgress.count(_.numInputRows > 0)
@@ -1153,9 +1153,9 @@ object TextOps {
         // slice + replay then probe, append to, and finally read the
         // COMPACTED table, and the gate's oracle must not move
         if (sliceNo.incrementAndGet() == 2) {
-          val before = Dedup.bandIndexFileCount(bs, sinkTbl)
+          val before = BucketedStore.fileCount(bs, sinkTbl)
           Dedup.compactKeyedTable(bs, sinkTbl, "doc_id")
-          val after = Dedup.bandIndexFileCount(bs, sinkTbl)
+          val after = BucketedStore.fileCount(bs, sinkTbl)
           require(after > 0 && after <= 8 && after <= before,
             s"w10: mid-stream keyed compaction must bound the sink to " +
               s"one file per bucket (before=$before, after=$after)")
@@ -1255,7 +1255,7 @@ object TextOps {
         // table; NO corpus-sized frame is read in this delivery
         val resolved = Dedup.ingestResolveNearDupsIndexed(bs, tbl,
           b.withColumn("q", score), "text", "doc_id", "q", scoreTbl,
-          k = 6, bandWidth = 2, buckets = 8)
+          k = 6, bandWidth = 2)
         // first-delivery verdicts: the keyed append's bucket-pruned
         // idempotence (resolved is checkpointed by the operator)
         Dedup.appendToKeyedTable(resolved, sinkTbl, "doc_id")
@@ -1273,7 +1273,7 @@ object TextOps {
       require(s.table(tbl).count() == (idxDocs + kept) * 3,
         "w11: index must hold 3 bands per index doc + per kept batch " +
           "doc (replay must not re-append)")
-      val tombN = s.table(Dedup.tombstoneTable(tbl)).count()
+      val tombN = s.table(BucketedStore.tombstoneTable(tbl)).count()
       val rowsBefore = s.table(tbl).count()
       Dedup.compactBandIndex(s, tbl)
       require(s.table(tbl).count() == rowsBefore - tombN * 3,

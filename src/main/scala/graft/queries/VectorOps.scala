@@ -227,14 +227,14 @@ object VectorOps {
         // must find slice 0's rows INSIDE the compacted files
         if (sliceNo.incrementAndGet() == 2) {
           val bs = batch.sparkSession
-          val before = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
           Similarity.compactVectorStore(bs, tbl, "vec_id")
-          val after = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
           require(after > 0 && after <= 8 && after <= before,
             s"w15: mid-stream store compaction must bound the store to " +
               s"one file per bucket (before=$before, after=$after)")
           // and the serving stamps must survive the staging swap
-          require(Similarity.tableProp(bs, tbl,
+          require(graft.operators.BucketedStore.tableProp(bs, tbl,
               Similarity.PrefixDimsProp).contains("16"),
             "w15: the compaction swap dropped the store's prefix-width " +
               "serving stamp")
@@ -440,13 +440,13 @@ object VectorOps {
         // rows inside the compacted files
         if (sliceNo.incrementAndGet() == 2) {
           val bs = batch.sparkSession
-          val before = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
           Similarity.compactPqIndex(bs, tbl)
-          val after = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
           require(after > 0 && after <= 4 && after <= before,
             s"w16: mid-stream PQ compaction must bound the codes to " +
               s"one file per bucket (before=$before, after=$after)")
-          require(Similarity.tableProp(bs, tbl,
+          require(graft.operators.BucketedStore.tableProp(bs, tbl,
               Similarity.CodebookProp).isDefined,
             "w16: the compaction swap dropped the codebook stamp")
         }
@@ -535,9 +535,9 @@ object VectorOps {
         // slice 0's rows INSIDE the compacted files (append nothing)
         if (sliceNo.incrementAndGet() == 2) {
           val bs = batch.sparkSession
-          val before = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
           Similarity.compactIvfIndex(bs, tbl)
-          val after = graft.operators.Dedup.bandIndexFileCount(bs, tbl)
+          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
           require(after > 0 && after <= 4 && after <= before,
             s"w07: mid-stream IVF compaction must bound the index to " +
               s"one file per bucket (before=$before, after=$after)")

@@ -178,11 +178,11 @@ class DedupSpec extends AnyFunSuite {
       s"derived frame re-scanned the index:\n$derivedScans")
     // append, then REPLAY the same batch: second append adds nothing
     Dedup.appendToBandIndex(batch, tbl, "text", "doc_id", k = 6,
-      bandWidth = 2, buckets = 4)
+      bandWidth = 2)
     val afterFirst = spark.table(tbl).count()
     assert(afterFirst == 5L * 3, s"expected 15 band rows, got $afterFirst")
     Dedup.appendToBandIndex(batch, tbl, "text", "doc_id", k = 6,
-      bandWidth = 2, buckets = 4)
+      bandWidth = 2)
     assert(spark.table(tbl).count() == afterFirst, "replayed batch was re-appended")
     // a replayed doc is not its own near-dup, but IS a candidate of
     // docs it collides with (10 now in the index; probing 10 again
@@ -202,7 +202,7 @@ class DedupSpec extends AnyFunSuite {
     // possible — the call-time assertion must fail loudly instead of
     // shipping a silent full-index-scan probe
     val flat = "graft_bandidx.spec_flat"
-    Similarity.dropTableAndLocation(spark, flat)
+    BucketedStore.dropTableAndLocation(spark, flat)
     Dedup.lshBands(Dedup.minHashSignatures(docs, "text", "doc_id", 6),
         "doc_id", 6, 2)
       .write.mode("overwrite").saveAsTable(flat)
@@ -271,19 +271,19 @@ class DedupSpec extends AnyFunSuite {
       bandWidth = 2, buckets = 4)
     Dedup.appendToBandIndex(Seq((10L, s"alpha beta gamma delta $filler tail"))
         .toDF("doc_id", "text"),
-      tbl, "text", "doc_id", k = 6, bandWidth = 2, buckets = 4)
+      tbl, "text", "doc_id", k = 6, bandWidth = 2)
     Dedup.appendToBandIndex(Seq((11L, (0 until 30).map(i => s"q$i")
         .mkString(" "))).toDF("doc_id", "text"),
-      tbl, "text", "doc_id", k = 6, bandWidth = 2, buckets = 4)
+      tbl, "text", "doc_id", k = 6, bandWidth = 2)
     val before = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
         k = 6, bandWidth = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val filesBefore = Dedup.bandIndexFileCount(spark, tbl)
+    val filesBefore = BucketedStore.fileCount(spark, tbl)
     assert(filesBefore > 4,
       s"three deliveries should stack file sets, saw $filesBefore")
     val rowsBefore = spark.table(tbl).count()
     Dedup.compactBandIndex(spark, tbl)
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4,
+    assert(BucketedStore.fileCount(spark, tbl) <= 4,
       "compaction must leave at most one file per bucket")
     assert(spark.table(tbl).count() == rowsBefore,
       "compaction with no tombstones must be row-neutral")
@@ -296,7 +296,7 @@ class DedupSpec extends AnyFunSuite {
     assert(after == before, s"verdicts drifted: $after vs $before")
     // idempotent: a second compaction rewrites the same layout
     Dedup.compactBandIndex(spark, tbl)
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4)
+    assert(BucketedStore.fileCount(spark, tbl) <= 4)
     assert(spark.table(tbl).count() == rowsBefore)
   }
 
@@ -377,14 +377,51 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "q")
     val e = intercept[IllegalArgumentException] {
       Dedup.ingestResolveNearDups(spark, tbl, batch, "text", "doc_id",
-        "q", scores, k = 6, bandWidth = 2, buckets = 4)
+        "q", scores, k = 6, bandWidth = 2)
     }
     assert(e.getMessage.contains("no row in the indexScores frame argument"),
       e.getMessage)
     // and nothing mutated: no tombstones, no winner appended
-    assert(spark.table(Dedup.tombstoneTable(tbl)).count() == 0)
+    assert(spark.table(BucketedStore.tombstoneTable(tbl)).count() == 0)
     assert(spark.table(tbl).select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
+  }
+
+  test("ingestResolveNearDups: the pending-tombstone cap refuses BEFORE writing — tombstones and index unchanged") {
+    val filler = (0 until 30).map(i => s"w$i").mkString(" ")
+    val idxDocs = Seq(
+      (1L, s"alpha beta gamma delta $filler"),
+      (2L, s"alpha beta gamma delta $filler"),
+      (3L, (0 until 30).map(i => s"z$i").mkString(" "))).toDF("doc_id", "text")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+    val tbl = "graft_bandidx.spec_resolve_cap"
+    Dedup.buildBandIndex(idxDocs, "text", "doc_id", tbl, k = 6,
+      bandWidth = 2, buckets = 4)
+    val scores = Seq((1L, 5L), (2L, 5L), (3L, 5L), (10L, 9L))
+      .toDF("doc_id", "q")
+    // 10 beats BOTH near-copies 1 and 2: two supersede tombstones
+    // against a cap of one
+    val batch = Seq((10L, s"alpha beta gamma delta $filler tail", 9L))
+      .toDF("doc_id", "text", "q")
+    val indexBefore = spark.table(tbl).collect().toSet
+    val e = intercept[IllegalArgumentException] {
+      Dedup.ingestResolveNearDups(spark, tbl, batch, "text", "doc_id",
+        "q", scores, k = 6, bandWidth = 2, maxPendingTombstones = 1)
+    }
+    assert(e.getMessage.contains("pending deletes") &&
+      e.getMessage.contains("maxPendingTombstones"), e.getMessage)
+    // nothing was written: no tombstone half-applied, no winner
+    // appended — the superseded docs are still live, nothing replaced
+    assert(spark.table(BucketedStore.tombstoneTable(tbl)).count() == 0)
+    assert(spark.table(tbl).collect().toSet == indexBefore)
+    // under a cap that fits, the same delivery resolves normally
+    val r = Dedup.ingestResolveNearDups(spark, tbl, batch, "text",
+        "doc_id", "q", scores, k = 6, bandWidth = 2,
+        maxPendingTombstones = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+    assert(r == Map(10L -> 2L), s"got $r")
+    assert(spark.table(BucketedStore.tombstoneTable(tbl))
+      .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
   test("ingestResolveNearDups: better-scored arrival supersedes; worse is dropped") {
@@ -405,12 +442,12 @@ class DedupSpec extends AnyFunSuite {
       (12L, (0 until 30).map(i => s"y$i").mkString(" "), 7L))
       .toDF("doc_id", "text", "q")
     val rA = Dedup.ingestResolveNearDups(spark, tbl, batchA, "text",
-        "doc_id", "q", scores, k = 6, bandWidth = 2, buckets = 4)
+        "doc_id", "q", scores, k = 6, bandWidth = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
     assert(rA(10L) == ((1L, true, 1L)), s"got ${rA(10L)}")
     assert(rA(12L) == ((0L, true, 0L)), s"got ${rA(12L)}")
-    assert(spark.table(Dedup.tombstoneTable(tbl))
+    assert(spark.table(BucketedStore.tombstoneTable(tbl))
       .collect().map(_.getLong(0)).toSet == Set(1L))
     // 11 near-dups 10 (now index-resident) with a WORSE score -> dropped;
     // and 1 is tombstone-dead: a near-copy of 1 sees only live docs
@@ -418,7 +455,7 @@ class DedupSpec extends AnyFunSuite {
       (11L, s"alpha beta gamma delta $filler tail", 2L))
       .toDF("doc_id", "text", "q")
     val rB = Dedup.ingestResolveNearDups(spark, tbl, batchB, "text",
-        "doc_id", "q", scores, k = 6, bandWidth = 2, buckets = 4)
+        "doc_id", "q", scores, k = 6, bandWidth = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
     assert(!rB(11L)._2, "worse-scored arrival must be dropped")
@@ -429,7 +466,7 @@ class DedupSpec extends AnyFunSuite {
     Dedup.compactBandIndex(spark, tbl)
     assert(spark.table(tbl).filter(col("doc_id") === 1L).isEmpty,
       "superseded doc survived compaction")
-    assert(spark.table(Dedup.tombstoneTable(tbl)).count() == 0)
+    assert(spark.table(BucketedStore.tombstoneTable(tbl)).count() == 0)
     assert(spark.table(tbl).select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet == Set(3L, 10L, 12L))
   }

@@ -65,9 +65,41 @@ class IndexDeleteSpec extends AnyFunSuite {
     Similarity.compactIvfIndex(spark, tbl)
     assert(spark.table(tbl).count() === full - 1)
     assert(Similarity.pendingDeletes(spark, tbl, "vec_id").count() === 0)
-    assert(Similarity.tableProp(spark, tbl, Similarity.DimProp).isDefined)
+    assert(BucketedStore.tableProp(spark, tbl, BucketedStore.DimProp).isDefined)
     assert(probe() === after,
       "serving results moved when the pending delete became physical")
+  }
+
+  test("a compaction swap interrupted between its renames heals at the IVF append and delete entry points") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val tbl = "sim_idx.ivf_heal"
+    val corpus = base.filter(col("vec_id") >= 10 && col("vec_id") < 200)
+    Similarity.buildIvfIndex(
+      Similarity.assignToCentroids(corpus, cents, "vec_id"), tbl, buckets = 4)
+    val n = spark.table(tbl).count()
+    // the state a crash after live → backup, before staging → live
+    // leaves: the live name is gone, the data survives under the backup
+    def crash(): Unit = {
+      spark.sql(s"ALTER TABLE $tbl RENAME TO ${tbl}__compact_backup")
+      assert(!spark.catalog.tableExists(tbl))
+    }
+    crash()
+    Similarity.appendToIvfIndex(base.filter(col("vec_id") < 10), tbl,
+      cents, "vec_id", buckets = 4)
+    assert(spark.table(tbl).count() === n + 10,
+      "the append must heal the swap and then append its batch")
+    assert(!spark.catalog.tableExists(s"${tbl}__compact_backup"))
+    crash()
+    Similarity.deleteFromIndex(spark, tbl,
+      base.filter(col("vec_id") === 11), "vec_id")
+    assert(spark.catalog.tableExists(tbl) &&
+      !spark.catalog.tableExists(s"${tbl}__compact_backup"))
+    assert(Similarity.pendingDeletes(spark, tbl, "vec_id")
+      .collect().map(_.getLong(0)).toSeq === Seq(11L))
+    // the by-id probe, after one more crash, serves the healed table
+    crash()
+    assert(Similarity.probeIvfIndex(spark, tbl, col("vec_id") === 12,
+      "vec_id", 3).count() > 0)
   }
 
   test("a tombstoned id refuses re-append until compacted, then re-enters cleanly") {
@@ -118,7 +150,7 @@ class IndexDeleteSpec extends AnyFunSuite {
     val full = spark.table(tbl).count()
     Similarity.compactVectorStore(spark, tbl, "vec_id")
     assert(spark.table(tbl).count() === full - 1)
-    assert(Similarity.tableProp(spark, tbl, Similarity.PrefixDimsProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.PrefixDimsProp)
       .contains("16"), "compaction dropped the prefix stamp")
     assert(probe() === after)
     // the applied id re-enters through the store's own append path
@@ -155,7 +187,7 @@ class IndexDeleteSpec extends AnyFunSuite {
     val full = spark.table(tbl).count()
     Similarity.compactPqIndex(spark, tbl)
     assert(spark.table(tbl).count() === full - 1)
-    assert(Similarity.tableProp(spark, tbl, Similarity.CodebookProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp)
       .isDefined, "compaction dropped the codebook stamp")
     assert(probe() === after)
   }
@@ -186,16 +218,16 @@ class IndexDeleteSpec extends AnyFunSuite {
     val bandRows = spark.table(tbl).count()
     val er = intercept[IllegalArgumentException] {
       Dedup.appendToBandIndex(idxDocs.filter(col("doc_id") === 1L), tbl,
-        "text", "doc_id", k = 6, bandWidth = 2, buckets = 4)
+        "text", "doc_id", k = 6, bandWidth = 2)
     }
     assert(er.getMessage.contains("tombstoned"), er.getMessage)
     Dedup.compactBandIndex(spark, tbl)
     assert(spark.table(tbl).count() < bandRows,
       "compact did not reclaim the tombstoned doc's bands")
-    assert(spark.table(Dedup.tombstoneTable(tbl)).count() === 0)
+    assert(spark.table(BucketedStore.tombstoneTable(tbl)).count() === 0)
     // reclaimed: the doc may re-enter and candidates again
     Dedup.appendToBandIndex(idxDocs.filter(col("doc_id") === 1L), tbl,
-      "text", "doc_id", k = 6, bandWidth = 2, buckets = 4)
+      "text", "doc_id", k = 6, bandWidth = 2)
     assert(probe().contains((10L, 1L)),
       "a re-appended doc must serve as a candidate again")
   }

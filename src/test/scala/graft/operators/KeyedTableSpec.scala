@@ -47,7 +47,7 @@ class KeyedTableSpec extends AnyFunSuite {
     // a flat (unbucketed) table with the right columns: the catalog
     // check refuses before any probe could silently full-scan
     val flat = "graft_keyed.spec_flat"
-    graft.operators.Similarity.dropTableAndLocation(spark, flat)
+    graft.operators.BucketedStore.dropTableAndLocation(spark, flat)
     Seq(("a", 1)).toDF("k", "v").write.saveAsTable(flat)
     val e2 = intercept[IllegalArgumentException] {
       Dedup.probeKeyedTable(spark, flat, Seq("a").toDF("k"), "k")
@@ -117,11 +117,11 @@ class KeyedTableSpec extends AnyFunSuite {
     val probeKeys = Seq("k3", "k105", "k210", "nope").toDF("k")
     val before = Dedup.probeKeyedTable(spark, tbl, probeKeys, "k")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(Dedup.bandIndexFileCount(spark, tbl) > 4,
+    assert(BucketedStore.fileCount(spark, tbl) > 4,
       "three deliveries should stack file sets")
     val rows = spark.table(tbl).count()
     Dedup.compactKeyedTable(spark, tbl, "k")
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4,
+    assert(BucketedStore.fileCount(spark, tbl) <= 4,
       "compaction must leave at most one file per bucket")
     assert(spark.table(tbl).count() == rows,
       "keyed compaction must be row-neutral")
@@ -131,7 +131,7 @@ class KeyedTableSpec extends AnyFunSuite {
       s"probes drifted: $after vs $before")
     // idempotent; and the table still accepts pruned appends after
     Dedup.compactKeyedTable(spark, tbl, "k")
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4)
+    assert(BucketedStore.fileCount(spark, tbl) <= 4)
     Dedup.appendToKeyedTable(Seq(("k300", 300L)).toDF("k", "v"), tbl, "k")
     assert(spark.table(tbl).count() == rows + 1)
   }
@@ -221,11 +221,11 @@ class KeyedTableSpec extends AnyFunSuite {
     assert(reps.select("doc_id").as[Long].collect().toSet == Set(20L),
       "the d42 pass must keep the better-scored within-batch copy")
     val r = Dedup.ingestResolveNearDupsIndexed(spark, tbl, reps, "text",
-        "doc_id", "q", scoreTbl, k = 6, bandWidth = 2, buckets = 4)
+        "doc_id", "q", scoreTbl, k = 6, bandWidth = 2)
       .collect().map(x => x.getLong(0) -> x.getBoolean(2)).toMap
     assert(r == Map(20L -> true),
       "the surviving representative resolves against the index alone")
-    assert(spark.table(Dedup.tombstoneTable(tbl))
+    assert(spark.table(BucketedStore.tombstoneTable(tbl))
       .as[Long].collect().toSet == Set(1L),
       "the superseded index doc must be tombstoned")
     Dedup.compactBandIndex(spark, tbl)  // applies the tombstone
@@ -253,7 +253,7 @@ class KeyedTableSpec extends AnyFunSuite {
       (12L, (0 until 30).map(i => s"y$i").mkString(" "), 7L))
       .toDF("doc_id", "text", "q")
     val rA = Dedup.ingestResolveNearDupsIndexed(spark, tbl, batchA,
-        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2, buckets = 4)
+        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
     assert(rA(10L) == ((1L, true, 1L)), s"got ${rA(10L)}")
@@ -269,7 +269,7 @@ class KeyedTableSpec extends AnyFunSuite {
     val batchB = Seq((11L, s"alpha beta gamma delta $filler tail", 2L))
       .toDF("doc_id", "text", "q")
     val rB = Dedup.ingestResolveNearDupsIndexed(spark, tbl, batchB,
-        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2, buckets = 4)
+        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
     assert(!rB(11L)._2, "worse-scored arrival must be dropped")
@@ -279,7 +279,7 @@ class KeyedTableSpec extends AnyFunSuite {
     // replay of batch A: verdicts identical, no table growth anywhere
     val bandRows = spark.table(tbl).count()
     val rA2 = Dedup.ingestResolveNearDupsIndexed(spark, tbl, batchA,
-        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2, buckets = 4)
+        "text", "doc_id", "q", scoreTbl, k = 6, bandWidth = 2)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(rA2(10L) && rA2(12L), "replayed winners must win again")
     assert(spark.table(tbl).count() == bandRows)
@@ -373,7 +373,7 @@ class KeyedTableSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "q")
     val e = intercept[IllegalArgumentException] {
       Dedup.ingestResolveNearDupsIndexed(spark, tbl, batch, "text",
-        "doc_id", "q", scoreTbl, k = 6, bandWidth = 2, buckets = 4)
+        "doc_id", "q", scoreTbl, k = 6, bandWidth = 2)
     }
     assert(e.getMessage.contains(
         s"no row in the persisted score table $scoreTbl"),

@@ -30,6 +30,10 @@ class ServingIdentityCacheSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(
       Similarity.assignToCentroids(base.filter(col("vec_id") >= 5), c,
         "vec_id"), tbl, buckets = 4)
+    // a replayed append adds no rows but stamps the codebook — the
+    // stamp every cache hit is re-validated against
+    Similarity.appendToIvfIndex(base.filter(col("vec_id") === 5), tbl, c,
+      "vec_id", buckets = 4)
     val q = base.filter(col("vec_id") < 5)
     val first = Similarity.probeIvfIndexExternal(spark, tbl, q, c,
       "vec_id", 3).collect().toSet
@@ -47,6 +51,27 @@ class ServingIdentityCacheSpec extends AnyFunSuite {
       .collect()
     assert(derivations > before,
       "a rebuild must invalidate the serving-identity cache")
+  }
+
+  test("an IVF index with no codebook stamp never serves the fingerprint from the cache") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+    val tbl = "graft_vecstore.spec_servcache_unstamped"
+    val c = cents
+    // built but never appended: the build sees only the assignment, so
+    // there is no codebook stamp to re-validate a cached entry against
+    Similarity.buildIvfIndex(
+      Similarity.assignToCentroids(base.filter(col("vec_id") >= 5), c,
+        "vec_id"), tbl, buckets = 4)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp)
+      .isEmpty)
+    val q = base.filter(col("vec_id") < 5)
+    Similarity.probeIvfIndexExternal(spark, tbl, q, c, "vec_id", 3)
+      .collect()
+    val before = derivations
+    Similarity.probeIvfIndexExternal(spark, tbl, q, c, "vec_id", 3)
+      .collect()
+    assert(derivations > before,
+      "a repeat probe of an unstamped index must re-derive the fingerprint")
   }
 
   test("repeat PQ external probe runs zero identity derivations and " +

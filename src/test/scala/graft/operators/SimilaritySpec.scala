@@ -432,6 +432,16 @@ class SimilaritySpec extends AnyFunSuite {
     val batch2 = base.filter(col("vec_id") >= 400)
     Similarity.buildIvfIndex(
       Similarity.assignToCentroids(prefix, cents, "vec_id"), tbl, buckets = 4)
+    // a bucket count other than the table's refuses with direction
+    // before anything is written (no rows, no codebook stamp)
+    val eb = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfIndex(batch1, tbl, cents, "vec_id", buckets = 8)
+    }
+    assert(eb.getMessage.contains("buckets = 8") &&
+      eb.getMessage.contains("4 buckets"), eb.getMessage)
+    assert(spark.table(tbl).count() === prefix.count())
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp)
+      .isEmpty)
     Similarity.appendToIvfIndex(batch1, tbl, cents, "vec_id", buckets = 4)
     Similarity.appendToIvfIndex(batch2, tbl, cents, "vec_id", buckets = 4)
     val full = spark.table(tbl).count()
@@ -578,14 +588,14 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.assignToCentroids(prefix, cents, "vec_id"), tbl, buckets = 4)
     Similarity.appendToIvfIndex(batch1, tbl, cents, "vec_id", buckets = 4)
     Similarity.appendToIvfIndex(batch2, tbl, cents, "vec_id", buckets = 4)
-    assert(Dedup.bandIndexFileCount(spark, tbl) > 4,
+    assert(BucketedStore.fileCount(spark, tbl) > 4,
       "three deliveries should stack file sets")
     val rows = spark.table(tbl).count()
     val before = Similarity.probeIvfIndex(spark, tbl,
         col("vec_id") < 5, "vec_id", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     Similarity.compactIvfIndex(spark, tbl)
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4,
+    assert(BucketedStore.fileCount(spark, tbl) <= 4,
       "compaction must leave at most one file per bucket")
     assert(spark.table(tbl).count() === rows,
       "IVF compaction must be row-neutral")
@@ -600,7 +610,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(spark.table(tbl).count() === rows,
       "replayed batch must be absorbed by lookups into compacted files")
     Similarity.compactIvfIndex(spark, tbl)
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4)
+    assert(BucketedStore.fileCount(spark, tbl) <= 4)
     assert(spark.table(tbl).count() === rows)
   }
 
@@ -616,9 +626,9 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.buildVectorStore(corpus.filter(col("vec_id") < 300),
       "vec_id", tbl, buckets = 4, prefixDims = 16)
     // serving stamps present from build (the property-read assertion)
-    assert(Similarity.tableProp(spark, tbl, Similarity.DimProp)
+    assert(BucketedStore.tableProp(spark, tbl, BucketedStore.DimProp)
       .contains("64"))
-    assert(Similarity.tableProp(spark, tbl, Similarity.PrefixDimsProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.PrefixDimsProp)
       .contains("16"))
     val batch1 = corpus.filter(col("vec_id") >= 300 && col("vec_id") < 400)
     val batch2 = corpus.filter(col("vec_id") >= 400)
@@ -638,19 +648,19 @@ class SimilaritySpec extends AnyFunSuite {
     assert(badPrefix === 0L, "appended rows carry mis-sliced prefixes")
     // compact mid-lifecycle: file count bounded, rows unmoved, the
     // SORT spec and graft.* stamps survive the staging swap
-    assert(Dedup.bandIndexFileCount(spark, tbl) > 4,
+    assert(BucketedStore.fileCount(spark, tbl) > 4,
       "three deliveries should stack file sets")
     Similarity.compactVectorStore(spark, tbl, "vec_id")
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4)
+    assert(BucketedStore.fileCount(spark, tbl) <= 4)
     assert(spark.table(tbl).count() === full)
     val spec = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(tbl)).bucketSpec
     assert(spec.exists(s => s.bucketColumnNames == Seq("vec_id") &&
         s.sortColumnNames == Seq("vec_id")),
       s"compaction dropped the store's bucket/sort spec: $spec")
-    assert(Similarity.tableProp(spark, tbl, Similarity.PrefixDimsProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.PrefixDimsProp)
         .contains("16") &&
-      Similarity.tableProp(spark, tbl, Similarity.DimProp).contains("64"),
+      BucketedStore.tableProp(spark, tbl, BucketedStore.DimProp).contains("64"),
       "compaction dropped the serving stamps")
     // a replay against the COMPACTED files is still absorbed
     Similarity.appendToVectorStore(batch2, tbl, "vec_id")
@@ -677,6 +687,28 @@ class SimilaritySpec extends AnyFunSuite {
     assert(e.getMessage.contains("width"), e.getMessage)
   }
 
+  test("an IVF append whose batch keys hash to every bucket passes the pinned lookup") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val tbl = "sim_idx.ivf_every_bucket"
+    val cents = base.filter(col("vec_id") % 50 === 0)
+    val prefix = base.filter(col("vec_id") < 300)
+    val batch = base.filter(col("vec_id") >= 300)
+    Similarity.buildIvfIndex(
+      Similarity.assignToCentroids(prefix, cents, "vec_id"), tbl, buckets = 2)
+    // precondition: the batch's centroids hash to BOTH buckets (Spark's
+    // bucket id is pmod(murmur3(cid), n)), so the pinned idempotence
+    // lookup selects every bucket — the pin asserts a bucketed scan
+    // ("2 out of 2"), and must not refuse a batch this wide
+    assert(Similarity.assignToCentroids(batch, cents, "vec_id")
+      .select(pmod(hash(col("cid")), lit(2))).distinct().count() === 2)
+    Similarity.appendToIvfIndex(batch, tbl, cents, "vec_id", buckets = 2)
+    val n = spark.table(tbl).count()
+    assert(n === base.count())
+    Similarity.appendToIvfIndex(batch, tbl, cents, "vec_id", buckets = 2)
+    assert(spark.table(tbl).count() === n,
+      "a replayed batch must be absorbed by the unpruned lookup")
+  }
+
   test("IVF serving stamps: codebook identity enforced on append and probe; bounded serving batch") {
     spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
     val tbl = "sim_idx.ivf_stamped"
@@ -685,12 +717,12 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.assignToCentroids(base.filter(col("vec_id") >= 10), cents,
         "vec_id"), tbl, buckets = 4)
     // width stamped at build (property read, no job)
-    assert(Similarity.tableProp(spark, tbl, Similarity.DimProp)
+    assert(BucketedStore.tableProp(spark, tbl, BucketedStore.DimProp)
       .contains("64"))
     // first append stamps the codebook fingerprint
     Similarity.appendToIvfIndex(base.filter(col("vec_id") < 10 ), tbl,
       cents, "vec_id", buckets = 4)
-    val fp = Similarity.tableProp(spark, tbl, Similarity.CodebookProp)
+    val fp = BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp)
     assert(fp.isDefined, "the first append must stamp the codebook")
     // a DIFFERENT codebook refuses on append AND on probe
     val otherCents = base.filter(col("vec_id") % 50 === 1)
@@ -708,7 +740,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ep.getMessage.contains("codebook"), ep.getMessage)
     // the stamped codebook still probes (and survives a compact)
     Similarity.compactIvfIndex(spark, tbl)
-    assert(Similarity.tableProp(spark, tbl, Similarity.CodebookProp) == fp,
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp) == fp,
       "compaction dropped the codebook stamp")
     val got = Similarity.probeIvfIndexExternal(spark, tbl,
         base.filter(col("vec_id") < 5)
@@ -748,9 +780,9 @@ class SimilaritySpec extends AnyFunSuite {
           x.toSeq == y.toSeq } },
       "persisted PQ codebooks must round-trip bit-exactly")
     // serving stamps
-    assert(Similarity.tableProp(spark, tbl, Similarity.DimProp)
+    assert(BucketedStore.tableProp(spark, tbl, BucketedStore.DimProp)
       .contains("64"))
-    assert(Similarity.tableProp(spark, tbl, Similarity.PqMProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.PqMProp)
       .contains("8"))
     // external probe equals the in-memory IVF-PQ on the same split
     val heldOut = base.filter(col("vec_id") < 10)
@@ -811,11 +843,11 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(ea.getMessage.contains("codebook"), ea.getMessage)
     // compact mid-lifecycle: files bounded, rows unmoved, stamps kept
-    assert(Dedup.bandIndexFileCount(spark, tbl) > 4)
+    assert(BucketedStore.fileCount(spark, tbl) > 4)
     Similarity.compactPqIndex(spark, tbl)
-    assert(Dedup.bandIndexFileCount(spark, tbl) <= 4)
+    assert(BucketedStore.fileCount(spark, tbl) <= 4)
     assert(spark.table(tbl).count() === full)
-    assert(Similarity.tableProp(spark, tbl, Similarity.CodebookProp)
+    assert(BucketedStore.tableProp(spark, tbl, Similarity.CodebookProp)
       .isDefined, "compaction dropped the codebook stamp")
     // replays against the COMPACTED files still absorbed
     Similarity.appendToPqIndex(batch2, tbl, cents, "vec_id")
@@ -926,7 +958,7 @@ class SimilaritySpec extends AnyFunSuite {
       .filter(col("cid").isin(someCids: _*) &&
         col("vec_id").isin(Seq(11L, 12L): _*))
       .select(col("vec_id"), col("cid"))
-    val pinned = Dedup.compileAndPinBucketedScan(spark, lookup, tbl,
+    val pinned = BucketedStore.compileAndPinBucketedScan(spark, lookup, tbl,
       reliable = false, "SimilaritySpec pin")
     assert(pinned.columns.toSeq === Seq("vec_id", "cid"))
     // and the real append path end to end: a replayed batch is

@@ -361,13 +361,15 @@ class QueryPlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
-    import graft.operators.Similarity
+    import graft.operators.{BucketedStore, Similarity}
     import graft.sources.Tables
-    // appendToIvfIndex's scale claim: the idempotence check is point
-    // lookups — the batch's (cid, id) keys enter as planning-time
-    // literals, the index scan bucket-prunes to the batch's cids with
-    // the id filter pushed down, and NOTHING shuffles (batch-sized
-    // broadcast anti-join; the zero-shuffle argmax assignment upstream).
+    // appendToIvfIndex's scale claim, pinned on the store's append
+    // lookup (BucketedStore.freshRows — the one idempotence core every
+    // family's append runs): the batch's (cid, id) keys enter as
+    // planning-time literals, the index scan bucket-prunes to the
+    // batch's cids with the id filter pushed down, and the index side
+    // never shuffles (the lookup is checkpointed, the anti-join is
+    // batch-sized; the zero-shuffle argmax assignment upstream).
     // A naive (cid, id) anti-join against the table re-shuffles the
     // whole index on the composite key instead (measured; the hash(cid)
     // buckets don't co-partition it) — this pin is what fails if that
@@ -384,43 +386,51 @@ class QueryPlanSpec extends AnyFunSuite {
         Tables.embeddings(spark, sf), "vec_id", "embedding")
       val cents = base.filter(col("vec_id") % 100 === 0)
       // 32 buckets over 5 centroids: the batch's cids cover at most 5
-      // buckets, so pruning has real benefit (with buckets <= cid
-      // count every bucket is selected and Spark disables the bucketed
-      // scan as useless — measured). The batch OVERLAPS the table
-      // (350..399 already present): with a disjoint batch the pruned
-      // index side is empty and AQE correctly elides the whole
+      // buckets, so pruning has real benefit. The batch OVERLAPS
+      // the table (350..399 already present): with a disjoint batch the
+      // pruned index side is empty and AQE correctly elides the whole
       // anti-join, leaving nothing to pin.
+      val tbl = "sim_idx.ivf_append_pin"
       Similarity.buildIvfIndex(
         Similarity.assignToCentroids(base.filter(col("vec_id") < 400), cents,
-          "vec_id"), "sim_idx.ivf_append_pin", buckets = 32)
-      val (fresh, release) = Similarity.freshIndexRows(
-        base.filter(col("vec_id") >= 350), "sim_idx.ivf_append_pin", cents,
-        "vec_id")
-      // plan under the operator's own execution conf: appendToIvfIndex
-      // turns the auto-bucketed-scan heuristic off for the append
-      // action, because that heuristic keeps bucketed scans only for
-      // their distribution and would discard the In(cid) pruning here
-      val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try fresh.collect() finally {
-        spark.conf.set(key, old)
-        release()
-      }
-      val plan = fresh.queryExecution.executedPlan
-      val anti = flatten(plan).collectFirst {
-        case j: BaseJoinExec if j.joinType.toString == "LeftAnti" => j }
-      assert(anti.isDefined, s"no anti join in:\n$plan")
-      val tableSide = flatten(anti.get.right)
-      val tableScan = tableSide.collectFirst {
+          "vec_id"), tbl, buckets = 32)
+      // the exact rows appendToIvfIndex hands the store
+      val rows = Similarity.assignToCentroids(
+          base.filter(col("vec_id") >= 350).dropDuplicates(Seq("vec_id")),
+          cents, "vec_id")
+        .select(col("vec_id"), col("cid"), col("v"), col("nrm"))
+      val grain = Seq("cid", "vec_id")
+      val layout = BucketedStore.open(spark, tbl, "QueryPlanSpec",
+        Some("cid"))
+      val keyRows = rows.select(
+        BucketedStore.lookupCols(layout, grain).map(col): _*).collect()
+      val (fresh, lookup) = BucketedStore.freshRows(spark, tbl, layout,
+        grain, rows, keyRows.toSeq, "QueryPlanSpec")
+      fresh.collect()
+      // the index side: the pinned lookup's executed plan
+      val indexPlan = lookup.queryExecution.executedPlan
+      val tableScan = flatten(indexPlan).collectFirst {
         case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f }
       assert(tableScan.isDefined,
-        s"index side is not a bucketed scan:\n${anti.get.right}")
+        s"index side is not a bucketed scan:\n$indexPlan")
       // pruning is ENGAGED (SelectedBucketsCount present) — how many
       // buckets survive depends on which cids the batch happens to hit
       assert(tableScan.get.metadata.contains("SelectedBucketsCount"),
         s"index scan did not bucket-prune: ${tableScan.get.metadata}")
-      assert(!tableSide.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      // ("n out of 32" with n < 32: the batch's cids really did prune)
+      assert("(\\d+) out of (\\d+)".r
+          .findFirstMatchIn(tableScan.get.metadata("SelectedBucketsCount"))
+          .exists(m => m.group(1).toInt < m.group(2).toInt),
+        s"index scan read every bucket: ${tableScan.get.metadata}")
+      assert(!flatten(indexPlan).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"the index side must be shuffle-free point lookups:\n$indexPlan")
+      // the append's anti-join reads the checkpointed lookup rows —
+      // still no shuffle on the index side
+      val plan = fresh.queryExecution.executedPlan
+      val anti = flatten(plan).collectFirst {
+        case j: BaseJoinExec if j.joinType.toString == "LeftAnti" => j }
+      assert(anti.isDefined, s"no anti join in:\n$plan")
+      assert(!flatten(anti.get.right).exists(_.isInstanceOf[ShuffleExchangeExec]),
         s"the index side must be shuffle-free point lookups:\n${anti.get.right}")
       // the ONLY shuffle anywhere is the batch's own dropDuplicates —
       // micro-batch-sized by contract; the corpus never moves
