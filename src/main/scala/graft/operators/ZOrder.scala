@@ -56,8 +56,8 @@ object ZOrder {
 
   /** Write `df` hive-partitioned by the Morton bucket of (xCol, yCol).
     *
-    * Task-aligned to the buckets (the RawVault.writeTable /
-    * WriteAlignAB lesson, optimization guide §6): without the
+    * Task-aligned to the buckets (the RawVault.writeTable lesson,
+    * measured in SCALING.md "Vault loads"; guide §6): without the
     * repartition every write task holds rows of ~all 2^(2·bitsPerDim)
     * buckets and emits one file PER (task × bucket) — at 32 tasks and
     * the default 256 buckets that is up to 8,192 small files per

@@ -213,32 +213,11 @@ object Relational {
       // Slice cut points are replay scaffolding: the accumulated
       // stream result equals the batch interval join for ANY ascending
       // time cuts (inner joins emit on match and slices stay
-      // time-ordered), so derive them from min/max aggregates — O(1)
-      // driver memory at any corpus size (the pre-r21 form collected
-      // every distinct timestamp) — with each quarter asserted
-      // non-empty so a degenerate fixture fails loudly instead of
-      // weakening the multi-micro-batch replay (StreamSlices scaladoc).
-      val bounds = StreamSlices.guardedQuarterCuts(ordered,
-        unix_millis(col("ts")), "w06")
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val base = System.currentTimeMillis() - 3600000L
-      val ms = unix_millis(col("ts"))
-      Seq(
-        ordered.filter(ms < bounds(0)),
-        ordered.filter(ms >= bounds(0) && ms < bounds(1)),
-        ordered.filter(ms >= bounds(1) && ms < bounds(2)),
-        ordered.filter(ms >= bounds(2))).zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$loc/tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(s"$feed/slice-$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 60000L)
-      }
+      // time-ordered), so quarter the time range with min/max
+      // aggregates — O(1) driver memory at any corpus size — each
+      // quarter asserted non-empty (StreamSlices scaladoc).
+      val feed = StreamSlices.writeFeed(loc, StreamSlices.guardedQuarters(
+        ordered, unix_millis(col("ts")), "w06"))
       val sliceSchema = ordered.schema
       ordered.unpersist(blocking = false)
       // stateful stream: pin the state-partition count deliberately
@@ -269,6 +248,7 @@ object Relational {
           .option("checkpointLocation", s"$loc/ckpt")
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
+        StreamSlices.requireBatches(q, 4, "w06")
       }
       s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
           "user_id BIGINT, p_event_id BIGINT, e_event_id BIGINT, " +
@@ -300,6 +280,7 @@ object Relational {
         batch.write.mode("append").parquet(s"$scratch/events")
       }.trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
+      StreamSlices.requireBatches(q, 1, "w02")
       val w = Window.partitionBy("user_id").orderBy("event_id")
       Tables.normalizeTs(s.read.schema(schema).parquet(s"$scratch/events"))
         .select(col("user_id"), col("event_id"),

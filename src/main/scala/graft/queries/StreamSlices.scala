@@ -1,31 +1,94 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 
-/** Shared replay-scaffolding cut points for the streamed gates (w05/
-  * w06): quarter the [min, max] of a millisecond column with ONE
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+/** The one replay feed behind every streamed gate (w02–w16). The
+  * reference's "stream" is ordered CDC batches replayed through
+  * anti-join + append loaders; the gates prove those loaders stay
+  * exactly-once under at-least-once replay. This object owns how a
+  * gate feeds its slices and how it proves the replay actually ran:
+  *
+  *  - [[writeFeed]] writes each slice as ONE parquet file with a
+  *    pinned modification time (the file source schedules oldest
+  *    first, so slice order — replays included — is the feed order);
+  *  - [[replay]] streams that feed one file per micro-batch through
+  *    `CdcStream.foreachBatchLoader` under `AvailableNow`;
+  *  - [[requireBatches]] is the non-vacuity check: a gate whose
+  *    replayed slice never arrived as its own non-empty micro-batch
+  *    tests nothing, even when its hash still matches, so it fails
+  *    loudly instead.
+  *
+  * [[guardedQuarters]] slices the gates that cut on a timestamp
+  * (w05/w06): quarter the [min, max] of a millisecond column with ONE
   * aggregate — O(1) driver memory at any corpus size — and assert in
   * the same job that every quarter is non-empty.
-  *
-  * Why the guard (r21 ADVICE): the gates' results are cut-invariant
-  * (any ascending cuts converge), but their NON-VACUITY is not — w05
-  * requires 5 non-empty micro-batches, and a replayed empty slice
-  * tests nothing. Arithmetic quarters of [min, max] can yield an empty
-  * middle slice under timestamp skew (or max − min < 4), which would
-  * fail the batch-count require SPURIOUSLY (an empty micro-batch never
-  * fires) or silently weaken the replay claim. The old quantile cuts
-  * guaranteed non-empty slices but cost a full shuffle + global sort +
-  * an O(distinct) driver collect; this keeps the min/max form and
-  * makes a degenerate fixture fail HERE, loudly and directed, before
-  * anything is written. */
+  * Arithmetic quarters can yield an empty middle slice under timestamp
+  * skew (or max − min < 4); an empty slice never fires a micro-batch,
+  * so the batch-count check would fail spuriously or the replay claim
+  * would silently weaken. The guard makes a degenerate fixture fail
+  * HERE, directed, before anything is written. */
 object StreamSlices {
 
-  /** Three ascending cut bounds quartering `ms` over `df`, with each
-    * quarter asserted non-empty (two aggregate jobs: the min/max that
-    * places the cuts, then the per-quarter counts; `df` should be
-    * persisted by the caller — it is about to be sliced four ways). */
-  def guardedQuarterCuts(df: DataFrame, ms: Column, tag: String): Seq[Long] = {
+  /** Write `slices` under `$loc/feed` as `slice-<i>.parquet`, one file
+    * each (`coalesce(1)`), modification times one minute apart in
+    * slice order. Returns the feed directory. A slice with no rows may
+    * leave no file at all; [[requireBatches]] then reports it. */
+  def writeFeed(loc: String, slices: Seq[DataFrame]): String = {
+    val feed = s"$loc/feed"
+    Files.createDirectories(new File(feed).toPath)
+    val mt0 = System.currentTimeMillis() - 3600000L
+    slices.zipWithIndex.foreach { case (df, i) =>
+      val tmp = s"$loc/tmp_slice-$i"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      new File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .foreach { part =>
+          val dst = new File(s"$feed/slice-$i.parquet")
+          Files.move(part.toPath, dst.toPath,
+            StandardCopyOption.REPLACE_EXISTING)
+          dst.setLastModified(mt0 + i * 60000L)
+        }
+    }
+    feed
+  }
+
+  /** Fail unless `q` ran exactly `n` non-empty micro-batches. Input
+    * rows are counted as the sink reads them, so a foreachBatch load
+    * that never evaluates its batch counts as empty too. */
+  def requireBatches(q: StreamingQuery, n: Int, tag: String): Unit = {
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    require(batches == n,
+      s"$tag expected $n non-empty micro-batches (one per slice, " +
+        s"replays included), saw $batches — an empty slice or a " +
+        "skipped file leaves the replay untested")
+  }
+
+  /** Write `slices` as a feed under `loc`, stream it one file per
+    * micro-batch through `load`, wait for the stream to drain, and
+    * require one non-empty micro-batch per slice. Every slice must
+    * share `slices.head`'s schema. */
+  def replay(s: SparkSession, loc: String, tag: String,
+      slices: Seq[DataFrame])(load: DataFrame => Unit): Unit = {
+    val feed = writeFeed(loc, slices)
+    val stream = s.readStream.schema(slices.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(feed)
+    val q = graft.streaming.CdcStream.foreachBatchLoader(stream)(load)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    requireBatches(q, slices.size, tag)
+  }
+
+  /** `df` in four ascending quarters of `ms`, each asserted non-empty
+    * (two aggregate jobs: the min/max that places the cuts, then the
+    * per-quarter counts; `df` should be persisted by the caller — it is
+    * about to be sliced four ways). */
+  def guardedQuarters(df: DataFrame, ms: Column, tag: String): Seq[DataFrame] = {
     val mnmx = df.agg(min(ms).as("mn"), max(ms).as("mx")).collect().head
     val (mn, mx) = (mnmx.getLong(0), mnmx.getLong(1))
     val bounds = Seq(mn + (mx - mn) / 4, mn + (mx - mn) / 2,
@@ -44,6 +107,9 @@ object StreamSlices {
           "would be vacuous; use a fixture with spread timestamps or " +
           "switch this gate to quantile cuts")
     }
-    bounds
+    Seq(df.filter(ms < bounds(0)),
+      df.filter(ms >= bounds(0) && ms < bounds(1)),
+      df.filter(ms >= bounds(1) && ms < bounds(2)),
+      df.filter(ms >= bounds(2)))
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{BucketedStore, Dedup, GraphOps, Packing, Sampling, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Oracle-checked coverage of the text pipeline operators in
   * graft.operators.{TextAnalysis, Dedup} over the `documents` table.
@@ -305,7 +305,7 @@ object TextOps {
     "w03_gopher_stream" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val scratch = graft.sources.Scratch.dir("w03", d)
+      val scratch = Scratch.dir("w03", d)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "documents.parquet")
@@ -314,6 +314,7 @@ object TextOps {
         batch.write.mode("append").parquet(s"$scratch/documents")
       }.trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
+      StreamSlices.requireBatches(q, 1, "w03")
       TextAnalysis.gopherQualityFilter(
         s.read.schema(schema).parquet(s"$scratch/documents"),
         "text", Seq("doc_id"))
@@ -372,7 +373,7 @@ object TextOps {
     "p14_incremental_lm_scoring" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val train = docs.filter(col("doc_id") % 97 === 0)
-      val store = graft.sources.Scratch.dir("p14", d) + "/lmstore"
+      val store = Scratch.dir("p14", d) + "/lmstore"
       def halfStats(i: Int) = graft.operators.TextAnalysis.lmStats(
         train.filter(col("doc_id") % 2 === i), "text",
         ctxBuckets = 1024, pairBuckets = 16384)
@@ -537,12 +538,10 @@ object TextOps {
       val planted = plantBoundaryCopies(Tables.documents(s, d))
       val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
       val batch = planted.filter(col("doc_id") % 4 === 0)
-      val tbl = "graft_bandidx.d44_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "d44", d)
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
-      val out = graft.sources.Scratch.dir("d44", d) + "/verdicts"
+      val out = Scratch.dir("d44", d) + "/verdicts"
       Dedup.probeBandIndex(s, tbl, batch, "text", "doc_id",
           k = 6, bandWidth = 2)
         .groupBy("doc_id").agg(count(lit(1)).as("n_index_candidates"))
@@ -572,9 +571,7 @@ object TextOps {
       val planted = plantBoundaryCopies(Tables.documents(s, d))
       val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
       val batch = planted.filter(col("doc_id") % 4 === 0)
-      val tbl = "graft_bandidx.d51_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "d51", d)
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       Dedup.appendToBandIndex(batch.filter(col("doc_id") % 8 === 0), tbl,
@@ -614,9 +611,7 @@ object TextOps {
         .withColumn("q", score)
       val scores = Tables.documents(s, d)
         .select(col("doc_id"), score.as("q"))
-      val tbl = "graft_bandidx.d52_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "d52", d)
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       val idxDocs = idxSet.count()
@@ -674,9 +669,7 @@ object TextOps {
       val s2 = s1.join(mem.filter(!col("is_member")).select("doc_id"),
         Seq("doc_id"), "left_semi")
       // stage 3: band-index near-dup vs the corpus
-      val tbl = "graft_bandidx.p12_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "p12", d)
       Dedup.buildBandIndex(corpus, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       val nd = Dedup.probeBandIndex(s, tbl, s2, "text", "doc_id",
@@ -703,12 +696,9 @@ object TextOps {
     // one-shot p12 survivor set row for row, so the oracle IS the p12
     // mirror.
     "w12_stream_capstone" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w12", d)
+      val loc = Scratch.dir("w12", d)
       val (marked, corpus, batch0, releaseFixture) = capstoneFixture(s, d)
-      val tbl = "graft_bandidx.w12_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "w12", d)
       Dedup.buildBandIndex(corpus, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       // the corpus bitmap builds ONCE, localized — every slice probes
@@ -725,42 +715,22 @@ object TextOps {
       // accumulation is the keyed append's pruned idempotence on the
       // SURVIVOR table (the old parquet sinks re-read their whole
       // accumulation per slice)
-      val sfx = new java.io.File(d).getName.replace('.', '_')
-      val fpTbl = s"graft_keyed.w12fp_$sfx"
-      val sinkTbl = s"graft_keyed.w12s_$sfx"
-      val curlTbl = s"graft_keyed.w12c_$sfx"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+      val fpTbl = Scratch.catalogTable(s, "graft_keyed", "w12fp", d)
+      val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w12s", d)
+      val curlTbl = Scratch.catalogTable(s, "graft_keyed", "w12c", d)
       Dedup.buildFingerprintTable(corpus, "text", fpTbl, buckets = 8)
       Dedup.buildKeyedTable(batch0.limit(0)
           .select(col("doc_id"), lit("").as("domain")),
         "doc_id", sinkTbl, buckets = 8)
       Dedup.buildKeyedTable(batch0.limit(0).select(lit("").as("curl")),
         "curl", curlTbl, buckets = 8)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      // documents ids are dense 0..n-1, so n/2 splits the id range
+      // documents ids are dense 0..n-1, so n/2 splits the id range;
+      // two ascending slices + slice 0 redelivered last
       val median = Tables.documents(s, d).count() / 2
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(
-          (batch0.filter(col("doc_id") < median), "slice-0"),
-          (batch0.filter(col("doc_id") >= median), "slice-1"),
-          (batch0.filter(col("doc_id") < median), "slice-2-replay")))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      releaseFixture()
-      val stream = s.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+      val slice0 = batch0.filter(col("doc_id") < median)
+      val slices = Seq(slice0, batch0.filter(col("doc_id") >= median),
+        slice0)
+      StreamSlices.replay(s, loc, "w12", slices) { b =>
         val bs = b.sparkSession  // the w08 cloned-session discipline
         // URL stage: within-slice min-id dedup, then cross-slice dups
         // dropped against the seen-curl TABLE — a bucket-pruned point
@@ -802,12 +772,8 @@ object TextOps {
           s1.select(col("curl")).distinct(), curlTbl, "curl", seen)
         s1.unpersist()
         ()
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 3,
-        s"w12 expected 3 non-empty micro-batches (2 slices + replay), " +
-          s"saw $batches")
+      }
+      releaseFixture()
       // the appends refreshed the CLONED sessions' caches only (w08)
       s.catalog.refreshTable(sinkTbl)
       capstoneFinish(s, d, marked,
@@ -875,9 +841,7 @@ object TextOps {
     // probe confirms every batch doc a member.
     "d55_fingerprint_membership" -> ((s, d) => {
       val (corpus, batch) = bloomFixture(Tables.documents(s, d))
-      val tbl = "graft_keyed.d55_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+      val tbl = Scratch.catalogTable(s, "graft_keyed", "d55", d)
       Dedup.buildFingerprintTable(corpus, "text", tbl, buckets = 8)
       val bloom = graft.operators.TextAnalysis.localizeStats(
         Dedup.buildBloom(corpus.select(md5(col("text")).as("fp")), "fp",
@@ -1002,48 +966,25 @@ object TextOps {
     // idempotently. The replayed slice must contribute nothing to
     // either table.
     "w08_band_stream_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w08", d)
+      val loc = Scratch.dir("w08", d)
       val planted = plantBoundaryCopies(Tables.documents(s, d))
       val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
       val batchAll = planted.filter(col("doc_id") % 4 === 0)
-      val tbl = "graft_bandidx.w08_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "w08", d)
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       // the accumulating verdict sink is a doc_id-bucketed keyed
       // table (the d55 device): first-delivery accumulation is the
       // keyed append's bucket-pruned idempotence, not a full sink
       // re-read per slice
-      val sinkTbl = "graft_keyed.w08_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+      val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w08", d)
       Dedup.buildKeyedTable(batchAll.limit(0)
           .select(col("doc_id"), lit(0L).as("n_prior_candidates")),
         "doc_id", sinkTbl, buckets = 8)
       // three slices in doc_id % 3 order + slice 0 redelivered last
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0L, 1L, 2L).map(i =>
-          (batchAll.filter(col("doc_id") % 3 === i), s"slice-$i"))
-        :+ (batchAll.filter(col("doc_id") % 3 === 0L), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(batchAll.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+      val slices = (Seq(0L, 1L, 2L) :+ 0L)
+        .map(i => batchAll.filter(col("doc_id") % 3 === i))
+      StreamSlices.replay(s, loc, "w08", slices) { b =>
         // every read/refresh inside the batch goes through the BATCH's
         // session: foreachBatch runs under a cloned session, and a
         // refreshTable there does not invalidate the OUTER session's
@@ -1067,12 +1008,7 @@ object TextOps {
         Dedup.appendToKeyedTable(verdicts, sinkTbl, "doc_id")
         Dedup.appendToBandIndex(b, tbl, "text", "doc_id",
           k = 6, bandWidth = 2)
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w08 expected 4 non-empty micro-batches (3 slices + replay), " +
-          s"saw $batches")
+      }
       // the appends refreshed the CLONED session's caches; invalidate
       // the outer session's listing before it reads the grown table
       s.catalog.refreshTable(tbl)
@@ -1093,8 +1029,7 @@ object TextOps {
     // artifact bit-identical by algebra, which the gate proves by
     // comparing against the one-shot bitmap over corpus + batch.
     "w10_bloom_stream" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w10", d)
+      val loc = Scratch.dir("w10", d)
       val (corpus, batchAll) = bloomFixture(Tables.documents(s, d))
       // Scratch.dir wipes on entry: fresh artifact per run
       val bloomPath = s"$loc/bloom"
@@ -1107,34 +1042,15 @@ object TextOps {
       // batch's ids — O(batch) per delivery, where the old parquet
       // sink's anti-join re-READ the whole accumulated sink per slice
       // (delivery cost ∝ corpus once the sink has absorbed it)
-      val sinkTbl = "graft_keyed.w10_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+      val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w10", d)
       Dedup.buildKeyedTable(batchAll.limit(0)
           .select(col("doc_id"), lit(false).as("maybe_member")),
         "doc_id", sinkTbl, buckets = 8)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0L, 1L, 2L).map(i =>
-          (batchAll.filter(col("doc_id") % 3 === i), s"slice-$i"))
-        :+ (batchAll.filter(col("doc_id") % 3 === 0L), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(batchAll.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
+      // three doc_id % 3 slices + slice 0 redelivered last
+      val slices = (Seq(0L, 1L, 2L) :+ 0L)
+        .map(i => batchAll.filter(col("doc_id") % 3 === i))
       val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+      StreamSlices.replay(s, loc, "w10", slices) { b =>
         val bs = b.sparkSession
         val keyed = b.select(col("doc_id"), md5(col("text")).as("__key"))
         // probe BEFORE merging: the verdict reflects the artifact as
@@ -1160,12 +1076,7 @@ object TextOps {
             s"w10: mid-stream keyed compaction must bound the sink to " +
               s"one file per bucket (before=$before, after=$after)")
         }
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w10 expected 4 non-empty micro-batches (3 slices + replay), " +
-          s"saw $batches")
+      }
       // replay absorbed by algebra: the streamed artifact must be
       // bit-identical to the one-shot bitmap over corpus + batch
       val oneShot = graft.operators.TextAnalysis.localizeStats(
@@ -1198,15 +1109,12 @@ object TextOps {
     // The sink therefore equals the one-shot two-slice d52 run row
     // for row: the oracle IS the d52 mirror.
     "w11_resolve_stream" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w11", d)
+      val loc = Scratch.dir("w11", d)
       val planted = plantBoundaryCopies(Tables.documents(s, d))
       val score = (col("doc_id") * 37) % 100
       val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
       val batchAll = planted.filter(col("doc_id") % 4 === 0)
-      val tbl = "graft_bandidx.w11_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+      val tbl = Scratch.catalogTable(s, "graft_bandidx", "w11", d)
       Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
         k = 6, bandWidth = 2, buckets = 8)
       val idxDocs = idxSet.count()
@@ -1217,39 +1125,19 @@ object TextOps {
       // scanning a corpus-sized score frame per delivery; the verdict
       // sink is a keyed table for the same reason (the accumulation
       // anti-join was a full sink read per slice)
-      val scoreTbl = "graft_keyed.w11s_" +
-        new java.io.File(d).getName.replace('.', '_')
-      val sinkTbl = "graft_keyed.w11_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+      val scoreTbl = Scratch.catalogTable(s, "graft_keyed", "w11s", d)
+      val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w11", d)
       Dedup.buildKeyedTable(idxSet.select(col("doc_id"), score.as("q")),
         "doc_id", scoreTbl, buckets = 8)
       Dedup.buildKeyedTable(batchAll.limit(0)
           .select(col("doc_id"), lit(0L).as("n_candidates"),
             lit(true).as("kept"), lit(0L).as("n_superseded")),
         "doc_id", sinkTbl, buckets = 8)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(
-          (batchAll.filter(col("doc_id") % 8 === 0), "slice-0"),
-          (batchAll.filter(col("doc_id") % 8 =!= 0), "slice-1"),
-          (batchAll.filter(col("doc_id") % 8 === 0), "slice-2-replay")))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(batchAll.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+      // the two doc_id % 8 slices + slice 0 redelivered last
+      val slice0 = batchAll.filter(col("doc_id") % 8 === 0)
+      val slices = Seq(slice0, batchAll.filter(col("doc_id") % 8 =!= 0),
+        slice0)
+      StreamSlices.replay(s, loc, "w11", slices) { b =>
         val bs = b.sparkSession  // the w08 cloned-session discipline
         // candidate scores come back bucket-pruned from the score
         // table; NO corpus-sized frame is read in this delivery
@@ -1260,12 +1148,7 @@ object TextOps {
         // idempotence (resolved is checkpointed by the operator)
         Dedup.appendToKeyedTable(resolved, sinkTbl, "doc_id")
         ()
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 3,
-        s"w11 expected 3 non-empty micro-batches (2 slices + replay), " +
-          s"saw $batches")
+      }
       s.catalog.refreshTable(tbl)
       s.catalog.refreshTable(sinkTbl)
       val out = s.table(sinkTbl)
@@ -1296,31 +1179,12 @@ object TextOps {
     // production's file/partition key), since the streaming batchId
     // numbers a redelivered file as a fresh batch.
     "w13_stream_lm_stats" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w13", d)
+      val loc = Scratch.dir("w13", d)
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val store = s"$loc/lmstore"
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0L, 1L, 2L).map(i =>
-          (docs.filter(col("doc_id") % 3 === i), s"slice-$i"))
-        :+ (docs.filter(col("doc_id") % 3 === 0L), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+      val slices = (Seq(0L, 1L, 2L) :+ 0L)
+        .map(i => docs.filter(col("doc_id") % 3 === i))
+      StreamSlices.replay(s, loc, "w13", slices) { b =>
         // content-keyed delivery identity: the slice's residue class
         val sl = graft.operators.DriverBounded.collectCapped(
           b.select((col("doc_id") % 3).as("s")).distinct(), 4,
@@ -1331,12 +1195,7 @@ object TextOps {
           s"slice${sl(0).getLong(0)}",
           graft.operators.TextAnalysis.lmStats(b, "text",
             ctxBuckets = 1024, pairBuckets = 16384))
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w13 expected 4 non-empty micro-batches (3 slices + replay), " +
-          s"saw $batches")
+      }
       graft.operators.StatsStore.compact(s, store, Seq("kind", "bucket"))
       // POST-compaction replay: the partition is gone — the manifest
       // must absorb it (this is exactly the double-count hazard)
@@ -1358,7 +1217,7 @@ object TextOps {
       val marked = markedDocs(Tables.documents(s, d))
       val train = marked.filter(col("doc_id") % 5 === 0)
         .withColumn("pos", col("doc_id") % 10 === 0)
-      val store = graft.sources.Scratch.dir("d56", d) + "/nbstore"
+      val store = Scratch.dir("d56", d) + "/nbstore"
       def half(i: Int) = train.filter(col("doc_id") % 10 === i * 5)
       // halves by doc_id % 10: residue 0 (the positives) and 5
       def stats(i: Int) = graft.operators.TextAnalysis.nbStats(
@@ -1903,11 +1762,11 @@ object TextOps {
     * write is absorbed at delivery grain (marker or manifest). */
   private def streamedWebCuration(s: SparkSession, d: String,
       tag: String, maintainLmStats: Boolean): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val loc = graft.sources.Scratch.dir(tag, d)
+    val loc = Scratch.dir(tag, d)
     val lmStore = s"$loc/lmstore"
     // persisted: the count + four slice writes + replay write are six
-    // consumers of the same scan (guide §5); released after the writes
+    // consumers of the same scan (guide §5); released once the replay
+    // drains
     val planted = Tables.documents(s, d).withColumn("text",
       when(col("doc_id") % 50 === 0,
         concat(lit("subscribe to our newsletter\ncookie policy\n"),
@@ -1921,25 +1780,6 @@ object TextOps {
       planted.filter(col("doc_id") >= bounds(0) && col("doc_id") < bounds(1)),
       planted.filter(col("doc_id") >= bounds(1) && col("doc_id") < bounds(2)),
       planted.filter(col("doc_id") >= bounds(2)))
-    val feed = s"$loc/feed"
-    new java.io.File(feed).mkdirs()
-    val mt0 = System.currentTimeMillis() - 3600000L
-    def writeSlice(df: DataFrame, name: String, mt: Long): Unit = {
-      val tmp = s"$loc/tmp_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$feed/$name.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.setLastModified(mt)
-      ()
-    }
-    slices.zipWithIndex.foreach { case (df, i) =>
-      writeSlice(df, s"slice-$i", mt0 + i * 60000L) }
-    writeSlice(slices(1), "slice-4-replay", mt0 + 4 * 60000L)
-    planted.unpersist(blocking = false)
     // the accumulating clean table and line-hash index are keyed
     // tables (the d55 device): the strip probes the line index
     // bucket-pruned by THIS slice's hashes — exactly the
@@ -1947,20 +1787,17 @@ object TextOps {
     // the stripDuplicatedLinesVsIndex scaladoc prescribes — and
     // both accumulations are the keyed append's idempotence, so no
     // corpus-sized frame is read per delivery
-    val sfx = new java.io.File(d).getName.replace('.', '_')
-    val cleanTbl = s"graft_keyed.${tag}c_$sfx"
-    val lineTbl = s"graft_keyed.${tag}l_$sfx"
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+    val cleanTbl = Scratch.catalogTable(s, "graft_keyed", s"${tag}c", d)
+    val lineTbl = Scratch.catalogTable(s, "graft_keyed", s"${tag}l", d)
     Dedup.buildKeyedTable(planted.limit(0)
         .select(col("doc_id"), col("text").as("clean_text")),
       "doc_id", cleanTbl, buckets = 8)
     Dedup.buildKeyedTable(planted.limit(0)
         .select(md5(col("text")).as("line_hash")),
       "line_hash", lineTbl, buckets = 8)
-    val stream = s.readStream.schema(planted.schema)
-      .option("maxFilesPerTrigger", 1).parquet(feed)
     val lmDeliveries = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { b =>
+    // four ascending slices + slice 1 redelivered last
+    StreamSlices.replay(s, loc, tag, slices :+ slices(1)) { b =>
       val bs = b.sparkSession
       val kept = TextAnalysis.gopherQualityKept(b, "text")
       val batchHashes = Dedup.lineHashes(kept, "text")
@@ -2037,12 +1874,8 @@ object TextOps {
         }
       }
       ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    require(batches == 5,
-      s"$tag expected 5 non-empty micro-batches (4 slices + replay), " +
-        s"saw $batches")
+    }
+    planted.unpersist(blocking = false)
     s.catalog.refreshTable(cleanTbl)
     if (maintainLmStats) {
       // the replayed slice arrived AFTER the mid-stream compact folded

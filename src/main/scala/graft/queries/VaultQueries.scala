@@ -467,7 +467,6 @@ object VaultQueries {
     // LOAD_DATE) cross-batch anti-join then drops exactly the replayed
     // rows and nothing else, independent of micro-batch order.
     "w04_cdc_vault_stream" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType}
       val loc = graft.sources.Scratch.dir("w04", d)
       val sfx = graft.sources.Scratch.sfKey(d)
@@ -518,28 +517,18 @@ object VaultQueries {
         .foreach { case (t, df) =>
           df.write.mode("append").saveAsTable(s"$rawDb.`$t`") }
 
-      // the feed: four deterministic slices written as separate files
-      // (one micro-batch each under maxFilesPerTrigger=1), then slice 0
-      // appended AGAIN — the at-least-once redelivery the loaders must
-      // absorb. RAW file schema throughout; canonicalization happens
-      // per batch via Tables.normalizeTs before staging.
+      // the feed: four deterministic slices, one micro-batch each,
+      // then slice 0 AGAIN — the at-least-once redelivery the loaders
+      // must absorb. RAW file schema throughout; canonicalization
+      // happens per batch via Tables.normalizeTs before staging.
       val raw = Tables.eventsRaw(s, d)
-      val feed = s"$loc/feed"
-      (0 until 4).foreach { i =>
-        raw.filter(col("event_id") % 4 === i)
-          .coalesce(1).write.mode("append").parquet(feed)
+      StreamSlices.replay(s, loc, "w04",
+        ((0 until 4) :+ 0).map(i => raw.filter(col("event_id") % 4 === i))) {
+        batch =>
+          val staged = stagedFeed(graft.sources.Tables.normalizeTs(batch))
+            .withColumn(c.loadDate, timestamp_millis(col(c.loadDate)))
+          vault.loadHub(staged, "USERS", Seq("user_id"), Seq(satDef))
       }
-      raw.filter(col("event_id") % 4 === 0)
-        .coalesce(1).write.mode("append").parquet(feed)
-
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { batch =>
-        val staged = stagedFeed(graft.sources.Tables.normalizeTs(batch))
-          .withColumn(c.loadDate, timestamp_millis(col(c.loadDate)))
-        vault.loadHub(staged, "USERS", Seq("user_id"), Seq(satDef))
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
 
       val hubNew = s.table(s"$rawDb.`$hubName`")
         .join(hubSeed.select(col(c.hkey)), Seq(c.hkey), "left_anti")
@@ -577,7 +566,6 @@ object VaultQueries {
     // (HKEY, LOAD_DATE) anti-join absorbs — the convergence contract,
     // driver-verified under streaming replay.
     "w05_cdc_link_stream" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val loc = graft.sources.Scratch.dir("w05", d)
       val ev = Tables.events(s, d)
         .filter(col("event_type").isin("purchase", "error"))
@@ -586,50 +574,21 @@ object VaultQueries {
       // persisted: the windowed dedup feeds SIX consumers (the min/max
       // cut aggregate, four slice writes, the replay write) — without
       // the cache each one re-runs the scan + window shuffle (guide §5
-      // / the C1 reused-branch pattern); released before the stream
-      // starts, which reads only the written slice files
+      // / the C1 reused-branch pattern); released once the replay
+      // drains
       val one = ev.withColumn("rn", row_number().over(w1))
         .filter(col("rn") === 1)
         .select("user_id", "event_type", "ld", "event_id")
         .persist()
 
-      // Slice boundaries are replay scaffolding (like w04's slice
-      // writer): the accumulated vault equals the batch v09 reconcile
-      // for ANY ascending ld cuts (the convergence contract), so
-      // derive them from min/max aggregates — O(1) driver memory at
-      // any corpus size (the pre-r21 form collected every distinct
-      // ld) — with each quarter asserted non-empty: the
-      // require(batches == 5) below counts NON-EMPTY micro-batches,
-      // so a skew-emptied middle slice would fail it spuriously and
-      // an empty slice 1 would make the replay-absorption claim
-      // vacuous (StreamSlices scaladoc).
-      val bounds = StreamSlices.guardedQuarterCuts(one, col("ld"), "w05")
-      val slices = Seq(
-        one.filter(col("ld") < bounds(0)),
-        one.filter(col("ld") >= bounds(0) && col("ld") < bounds(1)),
-        one.filter(col("ld") >= bounds(1) && col("ld") < bounds(2)),
-        one.filter(col("ld") >= bounds(2)))
-
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val base = System.currentTimeMillis() - 3600000L
-      def writeSlice(df: DataFrame, name: String, mt: Long): Unit = {
-        val tmp = s"$loc/tmp_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(s"$feed/$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(mt)
-        ()
-      }
-      slices.zipWithIndex.foreach { case (df, i) =>
-        writeSlice(df, s"slice-$i", base + i * 60000L) }
-      // the at-least-once redelivery: the SECOND batch replayed last —
-      // its events predate state already recorded by batches 2 and 3
-      writeSlice(slices(1), "slice-4-replay", base + 4 * 60000L)
+      // Slice boundaries are replay scaffolding: the accumulated vault
+      // equals the batch v09 reconcile for ANY ascending ld cuts (the
+      // convergence contract), so quarter the ld range with min/max
+      // aggregates — O(1) driver memory at any corpus size — each
+      // quarter asserted non-empty: an empty slice would make the
+      // batch-count check fail spuriously or the replay-absorption
+      // claim vacuous (StreamSlices scaladoc).
+      val slices = StreamSlices.guardedQuarters(one, col("ld"), "w05")
 
       // empty schema-carrying seeds for the accumulating tables
       val linkPath = s"$loc/link"
@@ -641,11 +600,10 @@ object VaultQueries {
         lit("").as(c.hdiff), lit(0L).as(c.loadDate), lit(false).as(c.deleted))
       emptyLink.write.mode("overwrite").parquet(linkPath)
       emptyEff.write.mode("overwrite").parquet(effPath)
-      one.unpersist(blocking = false)
 
-      val stream = s.readStream.schema(one.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { batch =>
+      // the at-least-once redelivery: the SECOND slice replayed last —
+      // its events predate state already recorded by slices 2 and 3
+      StreamSlices.replay(s, loc, "w05", slices :+ slices(1)) { batch =>
         // per-batch staging: the same hkey derivation as the v09 query
         val fk = batch.select(
           Dv.hash(Seq(col("user_id"))).as("FROM_HKEY"),
@@ -682,14 +640,8 @@ object VaultQueries {
             col(c.deleted))
           .write.mode("append").parquet(effPath)
         ()
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // non-vacuity: 4 slices + the replay each processed as their own
-      // micro-batch — a silently-skipped replay file would leave the
-      // absorption claim untested while the hash still matched
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 5,
-        s"w05 expected 5 non-empty micro-batches (4 slices + replay), saw $batches")
+      }
+      one.unpersist(blocking = false)
 
       s.read.parquet(effPath).select(col(c.hkey).as("hkey"),
         col(c.loadDate).as("ld"), col(c.deleted).as("deleted"))

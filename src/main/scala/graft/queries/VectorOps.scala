@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Oracle-checked coverage of graft.operators.Similarity over the
   * `embeddings` table. Query vectors are vec_id < 10; centroids for the
@@ -87,9 +87,7 @@ object VectorOps {
     "e13_knn_ivf_external" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val tbl = "graft_vecstore.e13_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e13", d)
       Similarity.buildIvfIndex(
         Similarity.assignToCentroids(
           base.filter(col("vec_id") >= NQ), cents, "vec_id"),
@@ -110,9 +108,7 @@ object VectorOps {
     "e18_knn_ivf_delete" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val tbl = "graft_vecstore.e18_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e18", d)
       Similarity.buildIvfIndex(
         Similarity.assignToCentroids(
           base.filter(col("vec_id") >= NQ), cents, "vec_id"),
@@ -137,9 +133,7 @@ object VectorOps {
     // exactly reranked over bucket-pruned In(id) point lookups.
     "e14_knn_store_external" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
-      val tbl = "graft_vecstore.e14_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e14", d)
       Similarity.buildVectorStore(base.filter(col("vec_id") >= NQ),
         "vec_id", tbl, buckets = 8, prefixDims = 16)
       Similarity.probeVectorStoreExternal(s, tbl,
@@ -153,9 +147,7 @@ object VectorOps {
     // compact and one left pending at probe time.
     "e19_knn_store_delete" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
-      val tbl = "graft_vecstore.e19_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e19", d)
       Similarity.buildVectorStore(base.filter(col("vec_id") >= NQ),
         "vec_id", tbl, buckets = 8, prefixDims = 16)
       Similarity.deleteFromIndex(s, tbl,
@@ -184,39 +176,19 @@ object VectorOps {
     // check, probing INTO the compacted files), and the compaction
     // moved no rows and kept the sort spec + serving stamps.
     "w15_store_stream_append" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w15", d)
+      val loc = Scratch.dir("w15", d)
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val corpus = base.filter(col("vec_id") >= NQ)
-      val tbl = "graft_vecstore.w15_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "w15", d)
       Similarity.buildVectorStore(corpus.filter(col("vec_id") % 2 === 0),
         "vec_id", tbl, buckets = 8, prefixDims = 16)
       // the odd half as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d)
         .filter(col("vec_id") >= NQ && col("vec_id") % 2 === 1)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0, 1, 2).map(i => (rest.filter(col("vec_id") % 3 === i), s"slice-$i"))
-        :+ (rest.filter(col("vec_id") % 3 === 0), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(rest.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
+      val slices = (Seq(0, 1, 2) :+ 0)
+        .map(i => rest.filter(col("vec_id") % 3 === i))
       val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { batch =>
+      StreamSlices.replay(s, loc, "w15", slices) { batch =>
         Similarity.appendToVectorStore(
           Similarity.withNorm(batch, "vec_id", "embedding"),
           tbl, "vec_id")
@@ -239,11 +211,7 @@ object VectorOps {
             "w15: the compaction swap dropped the store's prefix-width " +
               "serving stamp")
         }
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w15 expected 4 non-empty micro-batches (3 slices + replay), saw $batches")
+      }
       Similarity.probeVectorStoreExternal(s, tbl,
         base.filter(col("vec_id") < NQ), "vec_id", K, shortlist = 50)
     }),
@@ -298,9 +266,7 @@ object VectorOps {
         maxCodewords = PqK)
       val assigned = Similarity.assignToCentroids(
         base.filter(col("vec_id") >= NQ), cents, "vec_id")
-      val tbl = "graft_vecstore.e15_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e15", d)
       Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
         "vec_id", tbl, cb, cents, buckets = 4)
       Similarity.probePqIndexExternal(s, tbl,
@@ -319,9 +285,7 @@ object VectorOps {
         maxCodewords = PqK)
       val assigned = Similarity.assignToCentroids(
         base.filter(col("vec_id") >= NQ), cents, "vec_id")
-      val tbl = "graft_vecstore.e20_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e20", d)
       Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
         "vec_id", tbl, cb, cents, buckets = 4)
       Similarity.deleteFromIndex(s, tbl,
@@ -343,9 +307,7 @@ object VectorOps {
     "e16_knn_ivf_ext_multiprobe" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val tbl = "graft_vecstore.e16_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e16", d)
       Similarity.buildIvfIndex(
         Similarity.assignToCentroids(
           base.filter(col("vec_id") >= NQ), cents, "vec_id"),
@@ -371,9 +333,7 @@ object VectorOps {
         maxCodewords = PqK)
       val assigned = Similarity.assignToCentroids(
         base.filter(col("vec_id") >= NQ), cents, "vec_id")
-      val tbl = "graft_vecstore.e17_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "e17", d)
       Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
         "vec_id", tbl, cb, cents, buckets = 4)
       Similarity.probePqIndexExternal(s, tbl,
@@ -391,16 +351,13 @@ object VectorOps {
     // table served external queries — results must hash-match the
     // one-shot e15 oracle exactly.
     "w16_pq_stream_append" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w16", d)
+      val loc = Scratch.dir("w16", d)
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
       val cb = Similarity.pqTrainSampled(
         base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
         maxCodewords = PqK)
-      val tbl = "graft_vecstore.w16_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "w16", d)
       val seed = base.filter(col("vec_id") >= NQ && col("vec_id") % 2 === 0)
       Similarity.buildPqIndex(
         Similarity.pqEncode(
@@ -410,27 +367,10 @@ object VectorOps {
       // the odd half as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d)
         .filter(col("vec_id") >= NQ && col("vec_id") % 2 === 1)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0, 1, 2).map(i => (rest.filter(col("vec_id") % 3 === i), s"slice-$i"))
-        :+ (rest.filter(col("vec_id") % 3 === 0), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(rest.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
+      val slices = (Seq(0, 1, 2) :+ 0)
+        .map(i => rest.filter(col("vec_id") % 3 === i))
       val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { batch =>
+      StreamSlices.replay(s, loc, "w16", slices) { batch =>
         Similarity.appendToPqIndex(
           Similarity.withNorm(batch, "vec_id", "embedding"),
           tbl, cents, "vec_id")
@@ -450,11 +390,7 @@ object VectorOps {
               Similarity.CodebookProp).isDefined,
             "w16: the compaction swap dropped the codebook stamp")
         }
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w16 expected 4 non-empty micro-batches (3 slices + replay), saw $batches")
+      }
       Similarity.probePqIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -468,9 +404,7 @@ object VectorOps {
       val cb = Similarity.pqTrainSampled(
         base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
         maxCodewords = PqK)
-      val tbl = "graft_vecstore.v_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "v", d)
       Similarity.buildVectorStore(base, "vec_id", tbl, buckets = 8)
       Similarity.knnPqRefineIndexed(tbl,
         Similarity.pqEncode(base, "vec_id", cb),
@@ -489,41 +423,21 @@ object VectorOps {
     // bucket-pruned idempotence check, probing INTO the compacted
     // files), and the compaction moved no rows.
     "w07_ivf_stream_append" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val loc = graft.sources.Scratch.dir("w07", d)
+      val loc = Scratch.dir("w07", d)
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
       val n = base.count()
       val cut = n / 2
-      val tbl = "graft_vecstore.w07_" +
-        new java.io.File(d).getName.replace('.', '_')
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_vecstore")
+      val tbl = Scratch.catalogTable(s, "graft_vecstore", "w07", d)
       Similarity.buildIvfIndex(
         Similarity.assignToCentroids(base.filter(col("vec_id") < cut),
           cents, "vec_id"), tbl, buckets = 4)
       // the rest as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d).filter(col("vec_id") >= cut)
-      val feed = s"$loc/feed"
-      new java.io.File(feed).mkdirs()
-      val mt0 = System.currentTimeMillis() - 3600000L
-      (Seq(0, 1, 2).map(i => (rest.filter(col("vec_id") % 3 === i), s"slice-$i"))
-        :+ (rest.filter(col("vec_id") % 3 === 0), "slice-3-replay"))
-        .zipWithIndex.foreach { case ((df, name), i) =>
-          val tmp = s"$loc/tmp_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$feed/$name.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(mt0 + i * 60000L)
-          ()
-        }
-      val stream = s.readStream.schema(rest.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
+      val slices = (Seq(0, 1, 2) :+ 0)
+        .map(i => rest.filter(col("vec_id") % 3 === i))
       val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = graft.streaming.CdcStream.foreachBatchLoader(stream) { batch =>
+      StreamSlices.replay(s, loc, "w07", slices) { batch =>
         Similarity.appendToIvfIndex(
           Similarity.withNorm(batch, "vec_id", "embedding"),
           tbl, cents, "vec_id", buckets = 4)
@@ -542,11 +456,7 @@ object VectorOps {
             s"w07: mid-stream IVF compaction must bound the index to " +
               s"one file per bucket (before=$before, after=$after)")
         }
-      }.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches == 4,
-        s"w07 expected 4 non-empty micro-batches (3 slices + replay), saw $batches")
+      }
       Similarity.probeIvfIndex(s, tbl, col("vec_id") < NQ, "vec_id", K)
     }),
 

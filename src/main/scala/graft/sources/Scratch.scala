@@ -32,6 +32,14 @@ object Scratch {
   def sfKey(inputDir: String): String =
     inputDir.split('/').filter(_.nonEmpty).last.replaceAll("[^A-Za-z0-9]", "_")
 
+  /** The sf-keyed catalog table `db.prefix_<sfKey>`, creating `db` if
+    * absent — so runs at different scale factors never share a table. */
+  def catalogTable(spark: org.apache.spark.sql.SparkSession, db: String,
+      prefix: String, inputDir: String): String = {
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    s"$db.${prefix}_${sfKey(inputDir)}"
+  }
+
   private val pid: Long = ProcessHandle.current().pid()
   private val PidDir = "graft-p([0-9]+)-.*".r
 

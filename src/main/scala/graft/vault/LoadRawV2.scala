@@ -122,22 +122,6 @@ object LoadRawV2Ops {
     names.foldLeft(df)((d, n) => d.withColumnRenamed(s"$DvPrefix$n", n))
 }
 
-/** Where the intermediate full-table copy of a v2 overwrite lives.
-  *
-  * The v2 rewrite must fully materialize the new table state before
-  * overwriting the table it read (see [[LoadRawV2Ops]]). The default
-  * pins it to executor memory+disk — fastest, but doubles peak executor
-  * storage by the table size per load. `DiskCheckpoint` keeps the copy
-  * on executor disk only; `TempTableSwap` writes it as a temp catalog
-  * table on the warehouse filesystem and swaps — no executor storage
-  * pinned at all, at the cost of one extra table write. */
-sealed trait V2Overwrite
-object V2Overwrite {
-  case object MemoryCheckpoint extends V2Overwrite
-  case object DiskCheckpoint extends V2Overwrite
-  case object TempTableSwap extends V2Overwrite
-}
-
 /** Catalog-backed v2 raw vault, mirroring LoadRaw's public API surface
   * (SURVEY §2.12: create_hub:100 ... stage_table:397). Naming follows the
   * reference: `{shortName}__staging` / `{shortName}__raw` databases
@@ -153,8 +137,7 @@ class LoadRawV2(
     val sourceSystemShortName: String,
     val sourceBasePath: String,
     val stagingDatabasePath: Option[String] = None,
-    val rawDatabasePath: Option[String] = None,
-    val overwriteMode: V2Overwrite = V2Overwrite.MemoryCheckpoint) {
+    val rawDatabasePath: Option[String] = None) {
 
   import LoadRawV2Ops._
 
@@ -212,29 +195,11 @@ class LoadRawV2(
   /** Overwrite a raw-vault table with its computed new state — the
     * parquet-storage stand-in for the reference's Delta MERGE. The state
     * frame reads the table it replaces, so the read must complete before
-    * the overwrite starts; [[V2Overwrite]] picks where the intermediate
-    * full-table copy lives (executor memory, executor disk, or a
-    * temp-table swap on the warehouse filesystem). */
+    * the overwrite starts: the new state is checkpointed (executor
+    * memory+disk, one table-sized copy per load) before the write. */
   private def overwriteWithState(name: String, state: DataFrame): Unit = {
     val target = s"$rawDatabaseName.`$name`"
-    overwriteMode match {
-      case V2Overwrite.MemoryCheckpoint =>
-        state.localCheckpoint(true)
-          .write.mode("overwrite").saveAsTable(target)
-      case V2Overwrite.DiskCheckpoint =>
-        state.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          .write.mode("overwrite").saveAsTable(target)
-      case V2Overwrite.TempTableSwap =>
-        // one table-sized write, then a metadata-level rename (a
-        // directory move for managed tables) — NOT a second rewrite.
-        // The drop→rename window is not atomic; a crash between the two
-        // leaves the fully-written swap table to recover from.
-        val tmp = s"$rawDatabaseName.`${name}__SWAP`"
-        state.write.mode("overwrite").saveAsTable(tmp)
-        spark.sql(s"DROP TABLE IF EXISTS $target")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $target")
-    }
+    state.localCheckpoint(true).write.mode("overwrite").saveAsTable(target)
     spark.catalog.refreshTable(target)
   }
 

@@ -34,15 +34,13 @@ class LoadRawV2Spec extends AnyFunSuite {
       Seq("d1", "d2")),
     t3 -> (Seq(("m1", "A", 1, "d1")), Seq("d1")))
 
-  private def loadBatch(loadDate: String, short: String = "tv2",
-      mode: V2Overwrite = V2Overwrite.MemoryCheckpoint): LoadRawV2 = {
+  private def loadBatch(loadDate: String, short: String = "tv2"): LoadRawV2 = {
     val (movies, directors) = batches(loadDate)
     movies.toDF("PublicID", "NAME", "RANK", "DIRECTOR_ID")
       .write.mode("overwrite").parquet(s"$srcDir/movies")
     directors.toDF("PublicID")
       .write.mode("overwrite").parquet(s"$srcDir/directors")
-    val v2 = new LoadRawV2(spark, loadDate, "test_v2", short, srcDir,
-      overwriteMode = mode)
+    val v2 = new LoadRawV2(spark, loadDate, "test_v2", short, srcDir)
     v2.initializeDatabase()
     v2.createHub("HUB__MOVIES", Seq(("PublicID", "STRING")))
     v2.createHub("HUB__DIRECTORS", Seq(("PublicID", "STRING")))
@@ -173,21 +171,6 @@ class LoadRawV2Spec extends AnyFunSuite {
     // replay must not multiply matched keys either (the kept-join path)
     v2.loadHubFromStagingTable("movies_dup", "HUB__MOVIES_DUP", Seq("PublicID"))
     assert(dupCount() === 1)
-  }
-
-  test("overwrite storage modes produce identical table states") {
-    loaded
-    for ((short, mode) <- Seq(("tv2d", V2Overwrite.DiskCheckpoint),
-        ("tv2s", V2Overwrite.TempTableSwap))) {
-      loadBatch(t1, short, mode); loadBatch(t2, short, mode)
-      loadBatch(t3, short, mode)
-      for (t <- Seq("HUB__MOVIES", "SAT__MOVIES", "LNK__MOVIE__DIRECTOR"))
-        assert(spark.table(s"${short}__raw.`$t`").collect().toSet ===
-          spark.table(s"tv2__raw.`$t`").collect().toSet, s"$mode $t")
-      // the swap path must clean up its temp tables
-      assert(!spark.catalog.listTables(s"${short}__raw").collect()
-        .exists(_.name.toUpperCase.endsWith("__SWAP")))
-    }
   }
 
   test("v2 load is idempotent: replaying the last batch changes nothing") {
