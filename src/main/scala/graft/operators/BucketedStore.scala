@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   *  - '''tombstones''' — logical deletes in a `__tombstones` side table,
   *    excluded by every probe before ranking, refused on re-append;
   *  - '''compact''' — fold every bucket back to one file, applying the
-  *    pending tombstones, swapped in so no crash point leaves zero
-  *    copies.
+  *    pending tombstones, committed through [[StagedReplace]].
   *
   * The families keep only their own logic (banding, centroid
   * assignment, PQ encoding, codebook identity). Single-writer, like
@@ -99,16 +98,15 @@ private[graft] object BucketedStore {
   // ---- open
 
   /** Entry-point check for every read and write of a bucketed table:
-    * heal a compaction swap interrupted between its two renames (the
-    * data survives in full under `__compact_backup` — it is renamed
-    * back, and the compaction is simply redone), then require the table
-    * to be bucketed (by exactly `key` when given — the metadata
+    * complete an interrupted compaction ([[StagedReplace.healTable]]:
+    * one catalog lookup when nothing was interrupted), then require the
+    * table to be bucketed (by exactly `key` when given — the metadata
     * complement of the compiled-plan assert, covering paths where no
     * plan exists to inspect) and return its catalog layout, so no
     * layout-preserving write needs a bucket parameter. */
   def open(spark: SparkSession, table: String, context: String,
       key: Option[String] = None): Layout = {
-    heal(spark, table)
+    StagedReplace.healTable(spark, table)
     require(spark.catalog.tableExists(table),
       s"$context: $table does not exist")
     val spec = metadata(spark, table).bucketSpec
@@ -119,20 +117,6 @@ private[graft] object BucketedStore {
     val s = spec.get
     Layout(s.bucketColumnNames.head, s.numBuckets, s.sortColumnNames)
   }
-
-  /** Rename a surviving `__compact_backup` back to the missing live
-    * name. Under the lock: a reader racing a LIVE compaction's rename
-    * window would otherwise rename the backup back and orphan the
-    * compactor's staging table. */
-  private def heal(spark: SparkSession, table: String): Unit =
-    withBandLock {
-      val backup = sibling(spark, table, "__compact_backup")
-      if (!spark.catalog.tableExists(table) &&
-          spark.catalog.tableExists(backup)) {
-        spark.sql(s"ALTER TABLE $backup RENAME TO ${liveName(spark, table)}")
-        ()
-      }
-    }
 
   // ---- rebuild
 
@@ -378,23 +362,17 @@ private[graft] object BucketedStore {
     * the bucketed read would be dropped after the repartition was
     * elided against it, and compaction would GROW the file count).
     *
-    * The swap is two renames under the maintenance lock — live →
-    * `__compact_backup`, staging → live, then drop the backup — so a
-    * crash at any point leaves at least one full copy, which [[open]]
-    * heals. A probe plan compiled before the swap fails loudly on the
-    * moved files, never silently wrong. Idempotent. A crash between the
-    * swap and the truncate leaves tombstones naming removed ids, which
-    * probes no-op on and the next compact clears. */
+    * The rewrite commits through [[StagedReplace.replaceTable]], which
+    * carries the stamps across, under the maintenance lock, and
+    * [[open]] heals whatever a crash leaves. A probe plan compiled
+    * before the swap fails loudly on the moved files, never silently
+    * wrong. Idempotent. A crash between the swap and the truncate
+    * leaves tombstones naming removed ids, which probes no-op on and
+    * the next compact clears. */
   def compact(spark: SparkSession, table: String, context: String,
       key: Option[String] = None): Unit =
       DriverBounded.labeled(spark, s"compactBucketedTable:$table") {
     val layout = open(spark, table, context, key)
-    val staging = sibling(spark, table, "__compact_stage")
-    val backup = sibling(spark, table, "__compact_backup")
-    // leftovers of a crashed prior compact: the staging rewrite is
-    // redone, and a backup that outlived its swap is stale
-    dropTableAndLocation(spark, staging)
-    dropTableAndLocation(spark, backup)
     withBandLock {
       val tomb = tombstoneTable(table)
       val applyTombs = spark.catalog.tableExists(tomb)
@@ -406,21 +384,16 @@ private[graft] object BucketedStore {
           live.join(broadcast(spark.table(tomb).select(col(id))), Seq(id),
             "left_anti").select(live.columns.map(col).toIndexedSeq: _*)
         }
-      val stamps = metadata(spark, table).properties
-        .filter(_._1.startsWith("graft."))
-      withAutoBucketedScanOff(spark) {
-        writer(rows, layout).mode("overwrite").saveAsTable(staging)
+      StagedReplace.replaceTable(spark, table) { stage =>
+        withAutoBucketedScanOff(spark) {
+          writer(rows, layout).mode("overwrite").saveAsTable(stage)
+        }
       }
-      if (stamps.nonEmpty) stampTableProps(spark, staging, stamps)
-      spark.sql(s"ALTER TABLE ${liveName(spark, table)} RENAME TO $backup")
-      spark.sql(s"ALTER TABLE $staging RENAME TO ${liveName(spark, table)}")
-      dropTableAndLocation(spark, backup)
       if (applyTombs) { spark.sql(s"TRUNCATE TABLE $tomb"); () }
       // rows and stamps are preserved, but the serving-identity cache
       // is conservatively dropped with the files it replaced
       Similarity.invalidateServingIdentity(table)
     }
-    spark.catalog.refreshTable(table)
   }
 
   // ---- storage helpers
@@ -428,16 +401,7 @@ private[graft] object BucketedStore {
   private def ident(spark: SparkSession, table: String) =
     spark.sessionState.sqlParser.parseTableIdentifier(table)
 
-  private def liveName(spark: SparkSession, table: String): String =
-    ident(spark, table).unquotedString
-
-  private def sibling(spark: SparkSession, table: String,
-      suffix: String): String = {
-    val id = ident(spark, table)
-    id.copy(table = id.table + suffix).unquotedString
-  }
-
-  private def metadata(spark: SparkSession, table: String) =
+  def metadata(spark: SparkSession, table: String) =
     spark.sessionState.catalog.getTableMetadata(ident(spark, table))
 
   /** Drop `table` and clear a MANAGED location orphaned by a previous
@@ -449,7 +413,6 @@ private[graft] object BucketedStore {
     * cache entries die with it. */
   def dropTableAndLocation(spark: SparkSession, table: String): Unit = {
     import org.apache.spark.sql.catalyst.catalog.CatalogTableType
-    val id = ident(spark, table)
     val toClear: Option[org.apache.hadoop.fs.Path] =
       if (spark.catalog.tableExists(table)) {
         val meta = metadata(spark, table)
@@ -457,10 +420,7 @@ private[graft] object BucketedStore {
           Some(new org.apache.hadoop.fs.Path(meta.location))
         else None
       } else Some(new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getDatabaseMetadata(
-          id.database.getOrElse(spark.catalog.currentDatabase))
-          .locationUri.toString,
-        id.table))
+        spark.sessionState.catalog.defaultTablePath(ident(spark, table))))
     spark.sql(s"DROP TABLE IF EXISTS $table")
     toClear.foreach { loc =>
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -476,8 +436,8 @@ private[graft] object BucketedStore {
     metadata(spark, table).properties.get(key)
 
   /** Stamp `graft.*` serving properties onto `table`. Idempotent;
-    * appends never clear TBLPROPERTIES and [[compact]] copies them
-    * across its swap, so a stamp lives as long as the table. */
+    * appends never clear TBLPROPERTIES and [[StagedReplace]] copies
+    * them across every swap, so a stamp lives as long as the table. */
   def stampTableProps(spark: SparkSession, table: String,
       props: Map[String, String]): Unit = {
     require(props.nonEmpty && props.forall { case (k, v) =>

@@ -1481,19 +1481,13 @@ object Dedup {
     * BEFORE any write, so the rewrite never reads the path it
     * replaces.
     *
-    * The rewrite is STAGED so no crash point leaves zero copies of
-    * the membership artifact (a lost bloom means a full corpus
-    * re-aggregation to rebuild it): the merged bitmap is written to
-    * `path__stage` first, and the live directory is deleted only
-    * after the stage has COMMITTED (`_SUCCESS`), then the stage
-    * renamed into place — at every instant either the live artifact
-    * or a committed full stage exists. An interrupted swap
-    * self-heals at the next [[mergeBloomInto]] or [[loadBloom]]: a
-    * committed stage with no live directory is promoted (it holds
-    * the full merged bitmap); a leftover stage NEXT TO a live
-    * directory is a merge that crashed before its swap began and is
-    * discarded — OR-idempotence means the redelivered batch simply
-    * redoes that merge, losing nothing. */
+    * The rewrite commits through [[StagedReplace.replaceDir]], so no
+    * crash point leaves zero copies of the membership artifact (a lost
+    * bloom means a full corpus re-aggregation to rebuild it); the next
+    * [[mergeBloomInto]] or [[loadBloom]] heals an interrupted one by
+    * StagedReplace's one rule — a committed stage is the full merged
+    * bitmap and is promoted, an uncommitted one is discarded and the
+    * redelivered batch redoes its merge (OR-idempotent, nothing lost). */
   def mergeBloomInto(path: String, df: DataFrame, keyCol: String,
       mBits: Int = 1 << 20, k: Int = 3): Unit = {
     val spark = df.sparkSession
@@ -1506,7 +1500,7 @@ object Dedup {
     // contract)
     val hadoopPath = new org.apache.hadoop.fs.Path(path)
     val fs = hadoopPath.getFileSystem(spark.sessionState.newHadoopConf())
-    healBloomSwap(fs, path)
+    StagedReplace.healDir(spark, hadoopPath)
     val merged =
       if (fs.exists(hadoopPath)) {
         val existing = spark.read.parquet(path)
@@ -1523,57 +1517,20 @@ object Dedup {
           .groupBy("word")
           .agg(expr("bit_or(bits)").as("bits", cfg))
       } else add
-    val stage = bloomStage(path)
-    TextAnalysis.localizeStats(merged)
-      .write.mode("overwrite").parquet(stage.toString)
-    // the stage is committed (parquet job commit wrote _SUCCESS):
-    // from here the swap is crash-safe — a crash before the delete
-    // leaves both copies, between delete and rename leaves the
-    // committed stage, and healBloomSwap completes either state
-    if (fs.exists(hadoopPath)) { fs.delete(hadoopPath, true); () }
-    fs.rename(stage, hadoopPath)
-    ()
+    StagedReplace.replaceDir(spark, hadoopPath) { stage =>
+      TextAnalysis.localizeStats(merged)
+        .write.mode("overwrite").parquet(stage.toString)
+    }
   }
 
-  /** Read a [[mergeBloomInto]] artifact, completing any interrupted
-    * rewrite swap first — the probe-side half of the staging
-    * contract (a probe landing between a crash and the next merge
-    * still sees one full committed copy). */
+  /** Read a [[mergeBloomInto]] artifact, healing an interrupted
+    * rewrite first — the probe-side half of the staging contract (a
+    * probe landing between a crash and the next merge still sees one
+    * full committed copy). */
   def loadBloom(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sessionState.newHadoopConf())
-    healBloomSwap(fs, path)
+    StagedReplace.healDir(spark, new org.apache.hadoop.fs.Path(path))
     spark.read.parquet(path)
-  }
-
-  private def bloomStage(path: String) =
-    new org.apache.hadoop.fs.Path(path + "__stage")
-
-  /** Self-heal for a [[mergeBloomInto]] swap: live present → any
-    * stage is a pre-swap crash, discard it (the redelivered merge
-    * redoes it — OR is idempotent); live absent + committed stage →
-    * promote it (it is the full merged bitmap); live absent +
-    * uncommitted stage → a first-ever merge crashed mid-write with
-    * nothing to lose, discard. The live directory is only ever
-    * deleted after a committed stage exists, so "live absent,
-    * stage absent or uncommitted" cannot strand an artifact. */
-  private def healBloomSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val stage = bloomStage(path)
-    if (!fs.exists(stage)) return
-    if (fs.exists(live)) {
-      fs.delete(stage, true)
-      ()
-    } else if (fs.exists(
-        new org.apache.hadoop.fs.Path(stage, "_SUCCESS"))) {
-      fs.rename(stage, live)
-      ()
-    } else {
-      fs.delete(stage, true)
-      ()
-    }
   }
 
   /** Jaccard similarity of the distinct-token sets of candidate pairs.

@@ -30,12 +30,13 @@ import org.apache.spark.sql.functions._
   * parquet discovery). [[writeDelivery]] consults the manifest, so a
   * replay arriving AFTER its partition was compacted away is still
   * absorbed instead of double-counting — the band index's tombstone
-  * discipline applied to counts. Compaction itself is staged through
-  * a hidden `_base_tmp` directory and is self-healing: every entry
-  * point completes an interrupted compact (the rolled base supersedes
-  * exactly the manifest-listed partitions it absorbed; partitions
-  * delivered after the crash are untouched), so no crash point loses
-  * or double-counts a delivery. The `_SUCCESS` marker is the
+  * discipline applied to counts. Compaction commits the manifest and
+  * then the rolled base through [[StagedReplace.replaceDir]], and every
+  * entry point heals an interrupted one by StagedReplace's one rule (a
+  * committed base stage supersedes exactly the manifest-listed
+  * partitions it absorbed; partitions delivered after the crash are
+  * untouched), so no crash point loses or double-counts a delivery.
+  * The `_SUCCESS` marker ([[StagedReplace.committed]]) is the
   * committed/crashed boundary EVERYWHERE: [[writeDelivery]] redoes an
   * uncommitted partition, and [[readStats]]/[[compact]] skip it — a
   * crashed write is invisible until its redelivery heals it, never
@@ -60,24 +61,11 @@ object StatsStore {
   /** The compacted partition's delivery id. */
   val BasePartition = "__base__"
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def partDir(path: String, id: String) =
     new org.apache.hadoop.fs.Path(path, s"delivery_id=$id")
 
-  private def tmpBase(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_base_tmp")
-
   private def absorbedDir(path: String) =
     new org.apache.hadoop.fs.Path(path, "_absorbed")
-
-  private def absorbedTmp(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_absorbed_tmp")
-
-  private def committed(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
 
   /** Delivery ids become partition directory names AND must inference-
     * stably read back as strings: letters required, a safe charset,
@@ -87,7 +75,7 @@ object StatsStore {
       s"StatsStore: delivery id '$id' must be non-empty [A-Za-z0-9._-] " +
         "containing at least one letter (it becomes a partition " +
         "directory name and must read back as a string)")
-    require(id != BasePartition && id != "_base_tmp",
+    require(id != BasePartition,
       s"StatsStore: delivery id '$id' is reserved")
   }
 
@@ -97,7 +85,7 @@ object StatsStore {
     * silent driver OOM. */
   private def absorbedIds(spark: SparkSession, path: String): Set[String] = {
     val dir = absorbedDir(path)
-    if (!fsOf(spark, dir).exists(dir)) Set.empty
+    if (!StagedReplace.fsOf(spark, dir).exists(dir)) Set.empty
     else DriverBounded.collectCapped(
       spark.read.parquet(dir.toString).distinct(), 1 << 22,
       s"StatsStore: absorbed-delivery manifest at $dir exceeds 2^22 " +
@@ -116,12 +104,12 @@ object StatsStore {
   private def partitionIds(spark: SparkSession, path: String,
       committedOnly: Boolean): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
+    val fs = StagedReplace.fsOf(spark, root)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith("delivery_id="))
-      .filter(st => !committedOnly || committed(fs, st.getPath))
+      .filter(st => !committedOnly || StagedReplace.committed(fs, st.getPath))
       .map(_.getPath.getName.stripPrefix("delivery_id="))
   }
 
@@ -132,55 +120,25 @@ object StatsStore {
   def visibleDeliveryIds(spark: SparkSession, path: String): Seq[String] =
     partitionIds(spark, path, committedOnly = true)
 
-  /** Self-healing for a [[compact]] interrupted after its staged base
-    * committed: the staged rollup supersedes exactly the manifest-
-    * listed partitions it absorbed — delete those (deliveries that
-    * arrived after the crash are not listed and survive), then
-    * promote the stage. Called by every entry point. */
+  /** Heal a [[compact]] interrupted at either commit — the manifest's
+    * first, then the base's, in the order compact makes them. Called by
+    * every entry point. */
   private def completeInterruptedCompact(spark: SparkSession,
       path: String): Unit = {
-    completeInterruptedManifestFold(spark, path)
-    val tmp = tmpBase(path)
-    val fs = fsOf(spark, tmp)
-    if (fs.exists(tmp) && committed(fs, tmp)) {
-      val absorbed = absorbedIds(spark, path)
-      // the staged rollup summed everything visible when it was built:
-      // the manifest-listed partitions AND the old base — delete both;
-      // deliveries that landed after the crash are neither, and survive
-      partitionIds(spark, path, committedOnly = false)
-        .filter(id => absorbed.contains(id) || id == BasePartition)
-        .foreach { id => fs.delete(partDir(path, id), true); () }
-      fs.rename(tmp, partDir(path, BasePartition))
-      ()
-    } else if (fs.exists(tmp)) {
-      // an UNcommitted stage is a crashed rewrite that absorbed
-      // nothing — discard it; the partitions are all still live
-      fs.delete(tmp, true)
-      ()
-    }
+    StagedReplace.healDir(spark, absorbedDir(path))
+    StagedReplace.healDir(spark, partDir(path, BasePartition),
+      () => supersedeAbsorbed(spark, path))
   }
 
-  /** Self-healing for a manifest fold ([[compact]]'s final step)
-    * interrupted between its staged rewrite committing and the swap:
-    * a COMMITTED `_absorbed_tmp` holds the full id set (it was read
-    * from the live manifest, which nothing appends to outside
-    * [[compact]] — single-writer), so it supersedes the live
-    * directory; an uncommitted one is a crashed rewrite that absorbed
-    * nothing and is discarded. Either way exactly one full copy of
-    * the manifest survives every crash point. */
-  private def completeInterruptedManifestFold(spark: SparkSession,
-      path: String): Unit = {
-    val tmp = absorbedTmp(path)
-    val fs = fsOf(spark, tmp)
-    if (fs.exists(tmp) && committed(fs, tmp)) {
-      val live = absorbedDir(path)
-      if (fs.exists(live)) { fs.delete(live, true); () }
-      fs.rename(tmp, live)
-      ()
-    } else if (fs.exists(tmp)) {
-      fs.delete(tmp, true)
-      ()
-    }
+  /** The staged base summed every partition visible when it was built:
+    * the manifest-listed ones and the old base (which the promotion
+    * replaces). Delete the listed ones; deliveries that landed after
+    * are not listed, and survive. */
+  private def supersedeAbsorbed(spark: SparkSession, path: String): Unit = {
+    val absorbed = absorbedIds(spark, path)
+    val fs = StagedReplace.fsOf(spark, new org.apache.hadoop.fs.Path(path))
+    partitionIds(spark, path, committedOnly = false).filter(absorbed)
+      .foreach { id => fs.delete(partDir(path, id), true); () }
   }
 
   /** Fold one delivery's stats partial in: writes
@@ -202,10 +160,11 @@ object StatsStore {
     val spark = stats.sparkSession
     completeInterruptedCompact(spark, path)
     val dir = partDir(path, deliveryId)
-    val fs = fsOf(spark, dir)
-    if (!committed(fs, dir) && !absorbedIds(spark, path)(deliveryId)) {
-      // a dir without _SUCCESS is a crashed write: redo it whole
-      if (fs.exists(dir)) { fs.delete(dir, true); () }
+    val fs = StagedReplace.fsOf(spark, dir)
+    if (!StagedReplace.committed(fs, dir) &&
+        !absorbedIds(spark, path)(deliveryId)) {
+      // a dir without _SUCCESS is a crashed write: the overwrite
+      // clears it and redoes it whole
       stats.write.mode("overwrite").parquet(dir.toString)
     }
   }
@@ -243,20 +202,20 @@ object StatsStore {
       .agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** Fold every COMMITTED partition into one `__base__` partition,
-    * recording the absorbed delivery ids in the hidden manifest FIRST
-    * (a crash at any later point leaves the store readable and
-    * replay-safe — see [[completeInterruptedCompact]]), staging the
-    * rollup through a hidden directory so readers never see base and
-    * partials together. An UNCOMMITTED partition (a crashed
-    * [[writeDelivery]]) is skipped entirely — absorbing it would
-    * manifest its id with zero/partial rows and permanently suppress
-    * the healing redelivery, silently losing the delivery; skipped,
-    * it sits inert until the redelivery redoes it. Idempotent; read
-    * cost drops back to one config-sized partition. The manifest is
-    * then folded to a single file (it grows one file per compact
-    * otherwise, read at every [[writeDelivery]]) via its own staged,
-    * self-healing swap. */
+  /** Fold every COMMITTED partition into one `__base__` partition:
+    * the absorbed delivery ids are committed to the hidden manifest
+    * FIRST (a crash at any later point leaves the store readable and
+    * replay-safe — see [[completeInterruptedCompact]]), then the rollup
+    * replaces the base, superseding the partitions it absorbed, so
+    * readers never see base and partials together. Both commits are
+    * [[StagedReplace.replaceDir]]s; the manifest is rewritten whole as
+    * one delivery-grain file (it is read at every [[writeDelivery]]).
+    * An UNCOMMITTED partition (a crashed [[writeDelivery]]) is skipped
+    * entirely — absorbing it would manifest its id with zero/partial
+    * rows and permanently suppress the healing redelivery, silently
+    * losing the delivery; skipped, it sits inert until the redelivery
+    * redoes it. Idempotent; read cost drops back to one config-sized
+    * partition. */
   def compact(spark: SparkSession, path: String,
       keyCols: Seq[String]): Unit =
       DriverBounded.labeled(spark, s"statsStore.compact") {
@@ -266,33 +225,27 @@ object StatsStore {
     // the rollup is config-sized by grain (the localizeStats
     // discipline): materialize it BEFORE any delete
     //
-    // ORDERING INVARIANT — the manifest append below deliberately
-    // precedes the staged base's commit: a crash between them leaves
-    // the manifest listing still-LIVE committed partitions, which is
-    // benign (readStats sums each live partition once; a redelivery
-    // of a listed-but-live id is a no-op because its partition is
-    // committed; the next compact re-rolls and re-lists it, deduped
-    // by the manifest read's distinct()). The REVERSE order opens a
-    // real hole: a base committed before its absorbed ids are
-    // manifest-listed would double-count every absorbed delivery that
-    // replays after the crash — completeInterruptedCompact deletes
-    // only manifest-listed partitions, so do not "fix" this ordering.
+    // ORDERING INVARIANT — the manifest commit below deliberately
+    // precedes the base's: a crash between them leaves the manifest
+    // listing still-LIVE committed partitions, which is benign
+    // (readStats sums each live partition once; a redelivery of a
+    // listed-but-live id is a no-op because its partition is
+    // committed; the next compact re-rolls and re-lists it). The
+    // REVERSE order opens a real hole: a base committed before its
+    // absorbed ids are manifest-listed would double-count every
+    // absorbed delivery that replays after the crash — the base's heal
+    // supersedes only manifest-listed partitions, so do not "fix" this
+    // ordering.
     val rolled = TextAnalysis.localizeStats(readStats(spark, path, keyCols))
     import spark.implicits._
-    ids.filter(_ != BasePartition).toDF("delivery_id")
-      .coalesce(1).write.mode("append")
-      .parquet(absorbedDir(path).toString)
-    val tmp = tmpBase(path)
-    rolled.write.mode("overwrite").parquet(tmp.toString)
-    completeInterruptedCompact(spark, path)
-    // manifest fold: one delivery-grain file replaces the
-    // one-file-per-compact accumulation. The staged rewrite holds the
-    // full id set before the live directory is touched, so every
-    // crash point leaves one complete copy (heal: see
-    // completeInterruptedManifestFold).
-    absorbedIds(spark, path).toSeq.toDF("delivery_id")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(absorbedTmp(path).toString)
-    completeInterruptedManifestFold(spark, path)
+    val absorbed = absorbedIds(spark, path) ++ ids.filter(_ != BasePartition)
+    StagedReplace.replaceDir(spark, absorbedDir(path)) { stage =>
+      absorbed.toSeq.toDF("delivery_id").coalesce(1)
+        .write.mode("overwrite").parquet(stage.toString)
+    }
+    StagedReplace.replaceDir(spark, partDir(path, BasePartition),
+        () => supersedeAbsorbed(spark, path)) { stage =>
+      rolled.write.mode("overwrite").parquet(stage.toString)
+    }
   }
 }

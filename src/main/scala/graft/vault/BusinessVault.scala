@@ -54,40 +54,6 @@ object BusinessVaultOps {
       .agg(min(c.loadEndDate).as(c.loadEndDate))
   }
 
-  /** Literal port of the reference PIT build (self-join + groupBy-min,
-    * BusinessVault.py:48-63) — kept for parity testing against the window
-    * variant above. */
-  def pitFromSatAndEffReference(sat: DataFrame, eff: DataFrame)(
-      implicit c: Conventions): DataFrame = {
-    val l = sat.select(col(c.hkey), col(c.loadDate)).as("l")
-    val r = sat.select(col(c.hkey), col(c.loadDate)).as("r")
-    val pit = l
-      .join(r, col(s"l.${c.hkey}") === col(s"r.${c.hkey}") &&
-        col(s"l.${c.loadDate}") < col(s"r.${c.loadDate}"), "left")
-      .select(col(s"l.${c.hkey}").as(c.hkey),
-        col(s"l.${c.loadDate}").as(c.loadDate),
-        col(s"r.${c.loadDate}").as(c.loadEndDate))
-      .groupBy(col(c.hkey), col(c.loadDate))
-      .agg(min(c.loadEndDate).as(c.loadEndDate))
-
-    val deletes = eff
-      .filter(col(c.deleted) === true)
-      .select(col(c.hkey).as("del_hkey"), col(c.loadDate).as("del_load_date"))
-    val joinCond =
-      (pit(c.hkey) === deletes("del_hkey")) &&
-        (pit(c.loadDate) < deletes("del_load_date")) &&
-        (pit(c.loadEndDate) > deletes("del_load_date") || pit(c.loadEndDate).isNull)
-    pit
-      .join(deletes, joinCond, "left")
-      .withColumn(c.loadEndDate,
-        when(deletes("del_load_date").isNotNull, deletes("del_load_date"))
-          .otherwise(col(c.loadEndDate)))
-      .withColumn(c.loadEndDate,
-        when(isnull(col(c.loadEndDate)), Dv.maxTimestamp)
-          .otherwise(col(c.loadEndDate)))
-      .drop("del_hkey", "del_load_date")
-  }
-
   /** SCD2 view of a satellite: `$__LOAD_END_DATE` derived per HKEY as
     * the next version's load date (null = current). This is the v2
     * library's MERGE-maintained end-dating (LoadRaw.py:497-535)

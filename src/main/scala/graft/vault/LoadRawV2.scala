@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.StagedReplace
 
 /** The reference's v2 engine mode (LoadRaw.py:1-535): Delta-MERGE upsert
   * semantics with `last_seen_date` hubs/links and SCD2 `load_end_date`
@@ -24,10 +25,10 @@ import org.apache.spark.sql.types._
   *
   * Where the reference relies on Delta MERGE, each loader here computes
   * the FULL NEW TABLE STATE as a DataFrame. The catalog-backed
-  * [[LoadRawV2]] persists it via read → localCheckpoint (cuts the lineage
-  * so the table being read can be overwritten) → overwrite. On a
+  * [[LoadRawV2]] writes it as a staged table that then replaces the
+  * one it was read from ([[graft.operators.StagedReplace]]). On a
   * lakehouse format these same frames feed `MERGE INTO` unchanged; the
-  * read-modify-overwrite is the price of plain parquet and is why v3's
+  * read-modify-replace is the price of plain parquet and is why v3's
   * append-only anti-join idiom is the default engine. End-dating with
   * several versions per key per batch is well-defined here
   * (min-over-strictly-later); the reference's second MERGE would fail on
@@ -161,7 +162,7 @@ class LoadRawV2(
       StructField(n, DataType.fromDDL(t), nullable)
     })
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("ignore").saveAsTable(s"$rawDatabaseName.`$name`")
+      .write.mode("ignore").saveAsTable(rawName(name))
   }
 
   def createHub(name: String, businessKeyColumns: Seq[(String, String)]): Unit =
@@ -192,19 +193,22 @@ class LoadRawV2(
 
   // ---- Loads (LoadRaw.py:169-395) ----
 
-  /** Overwrite a raw-vault table with its computed new state — the
-    * parquet-storage stand-in for the reference's Delta MERGE. The state
-    * frame reads the table it replaces, so the read must complete before
-    * the overwrite starts: the new state is checkpointed (executor
-    * memory+disk, one table-sized copy per load) before the write. */
-  private def overwriteWithState(name: String, state: DataFrame): Unit = {
-    val target = s"$rawDatabaseName.`$name`"
-    state.localCheckpoint(true).write.mode("overwrite").saveAsTable(target)
-    spark.catalog.refreshTable(target)
-  }
+  private def rawName(name: String) = s"$rawDatabaseName.`$name`"
 
-  private def rawTable(name: String): DataFrame =
-    spark.table(s"$rawDatabaseName.`$name`")
+  /** Replace a raw-vault table with its computed new state — the
+    * parquet-storage stand-in for the reference's Delta MERGE. The state
+    * frame reads the live table while it writes the stage, and the live
+    * table is dropped only once the stage has committed, so a load that
+    * fails mid-write leaves the table as it was. */
+  private def overwriteWithState(name: String, state: DataFrame): Unit =
+    StagedReplace.replaceTable(spark, rawName(name))(
+      state.write.saveAsTable(_))
+
+  /** A raw-vault table, after healing a replace a crash interrupted. */
+  private def rawTable(name: String): DataFrame = {
+    StagedReplace.healTable(spark, rawName(name))
+    spark.table(rawName(name))
+  }
   private def stagedTable(name: String): DataFrame =
     spark.table(s"$stagingDatabaseName.`$name`")
 

@@ -147,8 +147,9 @@ class BloomSpec extends AnyFunSuite {
   test("mergeBloomInto staging: every swap crash window heals with zero lost bits") {
     val dir = java.nio.file.Files.createTempDirectory("bloomswap").toString
     val path = s"$dir/bf"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val live = new org.apache.hadoop.fs.Path(path)
+    val stage = StagedReplace.stageDir(live)
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.as[(Long, Long)].collect().toMap
     val a = Seq("x", "y").toDF("k")
@@ -159,26 +160,35 @@ class BloomSpec extends AnyFunSuite {
     // window 1: crash BETWEEN the live delete and the stage rename —
     // live gone, committed stage holds the full merged bitmap.
     // Simulate by renaming live to the stage name.
-    fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__stage"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path)))
+    fs.rename(live, stage)
+    assert(!fs.exists(live))
     // a probe-side load heals it: the committed stage is promoted
     assert(bits(Dedup.loadBloom(spark, path)) == want,
       "loadBloom must promote a committed stage when live is gone")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__stage")))
-    // window 2: crash BEFORE the swap began — a committed stage next
-    // to an intact live. The stage is a crashed merge; discarded, and
-    // the redelivered merge redoes it (OR-idempotent).
-    spark.read.parquet(path).write.parquet(path + "__stage")
+    assert(!fs.exists(stage))
+    // window 2: crash after the stage COMMITTED, before the live delete
+    // — a committed stage next to an intact live. The stage is the full
+    // merged bitmap, so the next entry point promotes it: the live
+    // directory then holds exactly the stage's files.
+    def dataFiles(d: org.apache.hadoop.fs.Path) =
+      fs.listStatus(d).map(_.getPath.getName).filter(_.startsWith("part-"))
+        .toSet
+    spark.read.parquet(path).write.parquet(stage.toString)
+    val staged = dataFiles(stage)
+    assert(bits(Dedup.loadBloom(spark, path)) == want)
+    assert(!fs.exists(stage) && dataFiles(live) == staged,
+      "a committed stage next to a live artifact must be promoted")
+    // the same window healed by the redelivered merge, which then
+    // redoes its batch on top (OR-idempotent)
+    spark.read.parquet(path).write.parquet(stage.toString)
     Dedup.mergeBloomInto(path, b, "k", 1 << 10, 2) // the redelivery
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__stage")),
-      "a pre-swap stage next to a live artifact must be discarded")
+    assert(!fs.exists(stage))
     assert(bits(spark.read.parquet(path)) == want)
     // window 3: an UNCOMMITTED stage (no _SUCCESS) next to live —
     // crashed mid-write, discarded
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path + "__stage"))
+    fs.mkdirs(stage)
     assert(bits(Dedup.loadBloom(spark, path)) == want)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__stage")))
+    assert(!fs.exists(stage))
     // at no point above did the merged bitmap regress: the artifact
     // still equals the incremental union
     assert(bits(spark.read.parquet(path)) == want)

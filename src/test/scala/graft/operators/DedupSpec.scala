@@ -314,9 +314,11 @@ class DedupSpec extends AnyFunSuite {
     val before = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
         k = 6, bandWidth = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // simulate the crash window: live→backup happened, stage→live did
-    // not — the live name is gone, the data survives under the backup
-    spark.sql(s"ALTER TABLE $tbl RENAME TO ${tbl}__compact_backup")
+    // simulate the crash window: the live table was dropped, the
+    // committed stage not yet renamed — the live name is gone, the
+    // data survives as the stage
+    val stage = StagedReplace.stageTable(spark, tbl)
+    spark.sql(s"ALTER TABLE $tbl RENAME TO $stage")
     assert(!spark.catalog.tableExists(tbl))
     // the next entry point (any probe/append/compact) restores it
     val after = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
@@ -325,11 +327,11 @@ class DedupSpec extends AnyFunSuite {
     assert(after == before && after.nonEmpty,
       s"recovered verdicts drifted: $after vs $before")
     assert(spark.catalog.tableExists(tbl) &&
-      !spark.catalog.tableExists(s"${tbl}__compact_backup"),
-      "recovery must rename the backup back to the live name")
+      !spark.catalog.tableExists(stage),
+      "recovery must promote the stage to the live name")
     // and a redone compaction completes normally on the restored table
     Dedup.compactBandIndex(spark, tbl)
-    assert(!spark.catalog.tableExists(s"${tbl}__compact_backup"))
+    assert(!spark.catalog.tableExists(stage))
   }
 
   test("compactBandIndex under load: a probe plan compiled pre-swap fails loudly post-swap") {

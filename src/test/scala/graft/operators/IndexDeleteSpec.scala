@@ -77,10 +77,12 @@ class IndexDeleteSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(
       Similarity.assignToCentroids(corpus, cents, "vec_id"), tbl, buckets = 4)
     val n = spark.table(tbl).count()
-    // the state a crash after live → backup, before staging → live
-    // leaves: the live name is gone, the data survives under the backup
+    val stage = StagedReplace.stageTable(spark, tbl)
+    // the state a crash after the live drop, before the stage rename
+    // leaves: the live name is gone, the full data is the committed
+    // stage
     def crash(): Unit = {
-      spark.sql(s"ALTER TABLE $tbl RENAME TO ${tbl}__compact_backup")
+      spark.sql(s"ALTER TABLE $tbl RENAME TO $stage")
       assert(!spark.catalog.tableExists(tbl))
     }
     crash()
@@ -88,12 +90,12 @@ class IndexDeleteSpec extends AnyFunSuite {
       cents, "vec_id", buckets = 4)
     assert(spark.table(tbl).count() === n + 10,
       "the append must heal the swap and then append its batch")
-    assert(!spark.catalog.tableExists(s"${tbl}__compact_backup"))
+    assert(!spark.catalog.tableExists(stage))
     crash()
     Similarity.deleteFromIndex(spark, tbl,
       base.filter(col("vec_id") === 11), "vec_id")
     assert(spark.catalog.tableExists(tbl) &&
-      !spark.catalog.tableExists(s"${tbl}__compact_backup"))
+      !spark.catalog.tableExists(stage))
     assert(Similarity.pendingDeletes(spark, tbl, "vec_id")
       .collect().map(_.getLong(0)).toSeq === Seq(11L))
     // the by-id probe, after one more crash, serves the healed table

@@ -21,6 +21,12 @@ class StatsStoreSpec extends AnyFunSuite {
     StatsStore.readStats(spark, path, Seq("k"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  /** Where a compaction stages its rollup and its manifest. */
+  private def baseStage(p: String) = StagedReplace.stageDir(
+    new org.apache.hadoop.fs.Path(s"$p/delivery_id=${StatsStore.BasePartition}"))
+  private def manifestStage(p: String) =
+    StagedReplace.stageDir(new org.apache.hadoop.fs.Path(s"$p/_absorbed"))
+
   test("deliveries sum; replay is a no-op by layout; compaction preserves the rollup") {
     val p = dir()
     StatsStore.writeDelivery(p, "day1", statsOf("a" -> 2L, "b" -> 1L))
@@ -64,8 +70,8 @@ class StatsStoreSpec extends AnyFunSuite {
     val want = Map("a" -> 3L)
     val root = new org.apache.hadoop.fs.Path(p)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // window 1: crash after the manifest append, before the stage —
-    // simulate by appending the manifest by hand
+    // window 1: crash after the manifest commit, before the base's
+    // stage — simulate by appending the manifest by hand
     Seq("d1", "d2").toDF("delivery_id").write.mode("append")
       .parquet(s"$p/_absorbed")
     assert(read(p) == want, "manifest-only state must read unchanged")
@@ -74,14 +80,14 @@ class StatsStoreSpec extends AnyFunSuite {
     StatsStore.writeDelivery(p, "d1", statsOf("a" -> 999L))
     assert(read(p) == want)
     // window 2: crash with an UNCOMMITTED stage — discarded on entry
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$p/_base_tmp"))
+    fs.mkdirs(baseStage(p))
     assert(read(p) == want)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_base_tmp")),
+    assert(!fs.exists(baseStage(p)),
       "an uncommitted stage must be discarded")
     // window 3: crash after the stage COMMITTED, before the swap —
     // stage the rollup by hand, plus a delivery that lands post-crash
     StatsStore.readStats(spark, p, Seq("k"))
-      .write.mode("overwrite").parquet(s"$p/_base_tmp")
+      .write.mode("overwrite").parquet(baseStage(p).toString)
     StatsStore.writeDelivery(p, "late", statsOf("z" -> 7L))
     // the recovery (any entry point) promotes the stage, deletes only
     // the absorbed partitions, and keeps the late delivery
@@ -184,19 +190,19 @@ class StatsStoreSpec extends AnyFunSuite {
     }
     assert(manifestIds() == Set("d1", "d2", "d3"))
     assert(read(p) == Map("a" -> 6L))
-    // window A: fold crashed with a COMMITTED stage (full set), live
-    // still present — any entry promotes the stage
+    // window A: the manifest commit crashed with a COMMITTED stage
+    // (full set), live still present — any entry promotes the stage
     manifestIds().toSeq.toDF("delivery_id").coalesce(1)
-      .write.parquet(s"$p/_absorbed_tmp")
+      .write.parquet(manifestStage(p).toString)
     StatsStore.writeDelivery(p, "d2", statsOf("a" -> 999L)) // replay: absorbed
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_absorbed_tmp")),
+    assert(!fs.exists(manifestStage(p)),
       "a committed fold stage must be promoted on the next entry")
     assert(manifestIds() == Set("d1", "d2", "d3") && read(p) == Map("a" -> 6L))
     // window B: an UNCOMMITTED fold stage is a crashed rewrite —
     // discarded, live manifest untouched
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$p/_absorbed_tmp"))
+    fs.mkdirs(manifestStage(p))
     assert(read(p) == Map("a" -> 6L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/_absorbed_tmp")),
+    assert(!fs.exists(manifestStage(p)),
       "an uncommitted fold stage must be discarded")
     assert(manifestIds() == Set("d1", "d2", "d3"))
   }

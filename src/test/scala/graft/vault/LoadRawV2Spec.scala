@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.operators.StagedReplace
 
 /** End-to-end v2 (LoadRaw) mode: three staged batches through the
   * catalog-backed loaders, asserting the v2-specific semantics —
@@ -185,5 +186,41 @@ class LoadRawV2Spec extends AnyFunSuite {
       spark.table("tv2__raw.`SAT__MOVIES`").collect().toSet,
       spark.table("tv2__raw.`LNK__MOVIE__DIRECTOR`").collect().toSet)
     assert(before === after)
+  }
+
+  test("an interrupted replace heals on the next load; a load failing mid-write leaves the table intact") {
+    loaded
+    val tables = Seq("HUB__MOVIES", "SAT__MOVIES", "LNK__MOVIE__DIRECTOR")
+    def state(short: String) =
+      tables.map(t => spark.table(s"${short}__raw.`$t`").collect().toSet)
+    Seq(t1, t2, t3).foreach(loadBatch(_, "tv2h"))
+    // the state a crash of t3's replace leaves after dropping the live
+    // table, before renaming its committed stage
+    for (t <- Seq("HUB__MOVIES", "SAT__MOVIES")) {
+      val live = s"tv2h__raw.`$t`"
+      spark.sql(s"ALTER TABLE $live RENAME TO " +
+        StagedReplace.stageTable(spark, live))
+      assert(!spark.catalog.tableExists(live))
+    }
+    loadBatch(t3, "tv2h") // the redelivery heals, then upserts again
+    assert(state("tv2h") === state("tv2"),
+      "the healed load must equal an uninterrupted one")
+    // a satellite load whose state throws inside the write job
+    val before = state("tv2h")
+    val boom = org.apache.spark.sql.functions.udf { (s: String) =>
+      if (s != null) throw new IllegalStateException("injected write failure")
+      s
+    }
+    val v2 = new LoadRawV2(spark, t3, "test_v2", "tv2h", srcDir)
+    intercept[Exception] {
+      v2.loadSatelliteFromDf(spark.table("tv2h__staging.movies")
+        .withColumn("NAME", boom(col("NAME"))), "SAT__MOVIES",
+        Seq("NAME", "RANK"))
+    }
+    assert(state("tv2h") === before,
+      "a failed load must leave the live table as it was")
+    // and the next load, whose stage name the failed write used, succeeds
+    loadBatch(t3, "tv2h")
+    assert(state("tv2h") === state("tv2"))
   }
 }
