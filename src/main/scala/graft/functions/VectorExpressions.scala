@@ -323,7 +323,9 @@ case class PqQueryTableFloat(left: Expression, right: Expression)
   *
   * `third`/`fourth` must be FOLDABLE array<array<float>> centroids and
   * array<double> norms — configuration-sized by contract, like the PQ
-  * codebooks.
+  * codebooks. Both the interpreted and the generated path call the
+  * companion's kernel, which the external serving probes also use to
+  * pick each query's buckets on the driver.
   */
 case class ArgMaxCosFloat(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {
@@ -368,64 +370,20 @@ case class ArgMaxCosFloat(first: Expression, second: Expression,
     fourth.eval(null).asInstanceOf[ArrayData].toDoubleArray()
 
   override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val nrm = b.asInstanceOf[Double]
-    val n = v.numElements()
-    var best = 0.0
-    var bestK = -1
-    var k = 0
-    while (k < cb.length) {
-      val cw = cb(k)
-      if (cw.length != n) return null
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        if (v.isNullAt(i)) return null
-        acc += v.getFloat(i).toDouble * cw(i).toDouble
-        i += 1
-      }
-      val cs = acc / (nrm * cn(k))
-      if (bestK < 0 || java.lang.Double.compare(cs, best) > 0) {
-        best = cs; bestK = k
-      }
-      k += 1
-    }
-    if (bestK < 0) null else bestK
+    val k = ArgMaxCosFloat.argmax(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[Double], cb, cn)
+    if (k < 0) null else k
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("ivfCentroids", cb, "float[][]")
     val cnRef = ctx.addReferenceObj("ivfNorms", cn, "double[]")
+    val kernel = ArgMaxCosFloat.getClass.getName + ".MODULE$"
     nullSafeCodeGen(ctx, ev, (a, b, _, _) => {
-      val n = ctx.freshName("n")
       val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val cs = ctx.freshName("cs")
-      val best = ctx.freshName("best")
-      val bestK = ctx.freshName("bestK")
-      val cw = ctx.freshName("cw")
       s"""
-         |final int $n = $a.numElements();
-         |double $best = 0.0;
-         |int $bestK = -1;
-         |for (int $k = 0; $k < $cbRef.length && !${ev.isNull}; $k++) {
-         |  final float[] $cw = $cbRef[$k];
-         |  if ($cw.length != $n) { ${ev.isNull} = true; break; }
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += (double) $a.getFloat($i) * (double) $cw[$i];
-         |  }
-         |  if (!${ev.isNull}) {
-         |    final double $cs = $acc / ($b * $cnRef[$k]);
-         |    if ($bestK < 0 || java.lang.Double.compare($cs, $best) > 0) {
-         |      $best = $cs; $bestK = $k;
-         |    }
-         |  }
-         |}
-         |if ($bestK < 0) { ${ev.isNull} = true; }
-         |if (!${ev.isNull}) { ${ev.value} = $bestK; }
+         |final int $k = $kernel.argmax($a, $b, $cbRef, $cnRef);
+         |if ($k < 0) { ${ev.isNull} = true; } else { ${ev.value} = $k; }
        """.stripMargin
     })
   }
@@ -435,6 +393,64 @@ case class ArgMaxCosFloat(first: Expression, second: Expression,
       newThird: Expression, newFourth: Expression): ArgMaxCosFloat =
     copy(first = newFirst, second = newSecond,
       third = newThird, fourth = newFourth)
+}
+
+/** The kernel behind `graft_argmax_cos`, shared with the driver-side
+  * bucket choice of the external serving probes: the same cosines in
+  * the same accumulation order, ranked by the same comparison. */
+object ArgMaxCosFloat {
+
+  /** Whether `v` can be scored: no null element, and every centroid has
+    * its width. */
+  private def scorable(v: ArrayData, cb: Array[Array[Float]]): Boolean = {
+    val n = v.numElements()
+    var i = 0
+    while (i < n) { if (v.isNullAt(i)) return false; i += 1 }
+    cb.forall(_.length == n)
+  }
+
+  /** v·c / (|v|·|c|), the dot a left fold of float-widened products. */
+  private def cosine(v: ArrayData, nrm: Double, cw: Array[Float],
+      cn: Double): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < cw.length) { acc += v.getFloat(i).toDouble * cw(i).toDouble; i += 1 }
+    acc / (nrm * cn)
+  }
+
+  /** `v`'s cosine to every centroid; null when `v` cannot be scored. */
+  def cosines(v: ArrayData, nrm: Double, cb: Array[Array[Float]],
+      cn: Array[Double]): Array[Double] =
+    if (!scorable(v, cb)) null
+    else Array.tabulate(cb.length)(k => cosine(v, nrm, cb(k), cn(k)))
+
+  /** Centroid indices in (cosine DESC, index ASC) order under
+    * `java.lang.Double.compare` (NaN greatest) — with centroids in id
+    * order, the row_number-over-(csim DESC, cid ASC) order. */
+  def ranked(cs: Array[Double]): Array[Int] =
+    cs.indices.toArray.sortWith { (x, y) =>
+      val c = java.lang.Double.compare(cs(x), cs(y))
+      c > 0 || (c == 0 && x < y)
+    }
+
+  /** The first index of [[ranked]], without allocating; -1 when `v`
+    * cannot be scored or there is no centroid. */
+  def argmax(v: ArrayData, nrm: Double, cb: Array[Array[Float]],
+      cn: Array[Double]): Int =
+    if (!scorable(v, cb)) -1
+    else {
+      var best = 0.0
+      var bestK = -1
+      var k = 0
+      while (k < cb.length) {
+        val cs = cosine(v, nrm, cb(k), cn(k))
+        if (bestK < 0 || java.lang.Double.compare(cs, best) > 0) {
+          best = cs; bestK = k
+        }
+        k += 1
+      }
+      bestK
+    }
 }
 
 /** Scaled matrix-vector product: out[j] = float(v · planes[j] / divisor)

@@ -66,17 +66,18 @@ private[graft] object BucketedStore {
   /** Compile `df`'s physical plan inside the conf window, assert the
     * compiled plan bucket-prunes its scan of `table` (a mis-built
     * table refuses loudly instead of full-scanning at corpus size), then
-    * materialize via an eager checkpoint OUTSIDE the window:
-    * `executedPlan` is a cached lazy val, so the checkpoint only runs
-    * the compiled plan and the lock covers compilation alone, never
-    * the job. The assert is repeated on the executed plan: under AQE,
+    * `materialize` it OUTSIDE the window: `executedPlan` is a cached
+    * lazy val, so materializing `df` itself (a checkpoint, or a
+    * collect — never a derived frame, which would re-plan) only runs the
+    * compiled plan, and the lock covers compilation alone, never the
+    * job. The assert is repeated on the executed plan: under AQE,
     * re-optimization runs with the conf restored, and a Spark version
     * whose stage-preparation rules drop the bucketed scan would
     * otherwise pass the compile-time check on a plan it never ran.
     * (`SelectedBucketsCount` marks a bucketed scan with its bucket set —
     * "n out of n" when the literal keys hash to every bucket.) */
-  def compileAndPinBucketedScan(spark: SparkSession, df: DataFrame,
-      table: String, reliable: Boolean, context: String): DataFrame = {
+  def pinBucketedScan[T](spark: SparkSession, df: DataFrame, table: String,
+      context: String)(materialize: DataFrame => T): T = {
     def prunes =
       df.queryExecution.executedPlan.toString.contains("SelectedBucketsCount")
     withAutoBucketedScanOff(spark) {
@@ -85,7 +86,7 @@ private[graft] object BucketedStore {
           "must be bucketed by its probe key (a buildBandIndex/" +
           "buildKeyedTable product); refusing to run a full-index-scan probe")
     }
-    val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    val out = materialize(df)
     require(prunes,
       s"$context: the EXECUTED plan against $table lost its bucket " +
         "pruning (AQE re-optimization re-ran DisableUnnecessaryBucketedScan " +
@@ -94,6 +95,13 @@ private[graft] object BucketedStore {
         "incompatible with the compile-inside-the-conf-window device")
     out
   }
+
+  /** [[pinBucketedScan]] materialized by an eager checkpoint (`reliable`:
+    * to the checkpoint directory, else executor-local). */
+  def compileAndPinBucketedScan(spark: SparkSession, df: DataFrame,
+      table: String, reliable: Boolean, context: String): DataFrame =
+    pinBucketedScan(spark, df, table, context)(d =>
+      if (reliable) d.checkpoint(true) else d.localCheckpoint(true))
 
   // ---- open
 
@@ -390,9 +398,9 @@ private[graft] object BucketedStore {
         }
       }
       if (applyTombs) { spark.sql(s"TRUNCATE TABLE $tomb"); () }
-      // rows and stamps are preserved, but the serving-identity cache
-      // is conservatively dropped with the files it replaced
-      Similarity.invalidateServingIdentity(table)
+      // the serving-identity cache survives: rows, stamps and the PQ
+      // `__codebook` side table are unchanged, and every hit is
+      // re-validated against the carried-over codebook stamp
     }
   }
 
@@ -412,6 +420,15 @@ private[graft] object BucketedStore {
     * exactly the orphaned-directory case. The table's serving-identity
     * cache entries die with it. */
   def dropTableAndLocation(spark: SparkSession, table: String): Unit = {
+    dropStorage(spark, table)
+    Similarity.invalidateServingIdentity(table)
+  }
+
+  /** [[dropTableAndLocation]] without the cache invalidation — for the
+    * live side of a staged swap ([[StagedReplace]]), which replaces the
+    * table's files but not its identity: the stamps are carried across,
+    * and every serving-identity hit is re-validated against them. */
+  def dropStorage(spark: SparkSession, table: String): Unit = {
     import org.apache.spark.sql.catalyst.catalog.CatalogTableType
     val toClear: Option[org.apache.hadoop.fs.Path] =
       if (spark.catalog.tableExists(table)) {
@@ -426,7 +443,6 @@ private[graft] object BucketedStore {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-    Similarity.invalidateServingIdentity(table)
   }
 
   /** One `graft.*` serving property off the catalog — a driver-side

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * single place such hops are allowed: each call either asserts its
   * cap loudly ([[collectCapped]]) or is an explicit deliberate
   * truncation ([[takeFirst]]), so `grep collect src/main` audits to
-  * exactly these three entry points plus their call sites.
+  * exactly these four entry points plus their call sites.
   */
 object DriverBounded {
 
@@ -25,6 +25,18 @@ object DriverBounded {
     require(cap > 0 && cap < Int.MaxValue,
       s"collectCapped: cap must be in [1, ${Int.MaxValue - 1}], got $cap")
     val rows = df.limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"$context (driver-bounded collect exceeded cap $cap)")
+    rows
+  }
+
+  /** Collect a frame whose own plan bounds its size (a per-query top-k
+    * over a capped serving batch), running `df`'s compiled plan as is —
+    * a limit would re-plan it, undoing a plan pinned at compile time,
+    * and a never-reached limit scans partitions in widening jobs — then
+    * assert the bound. */
+  def collectBounded(df: DataFrame, cap: Long, context: => String): Array[Row] = {
+    val rows = df.collect()
     require(rows.length <= cap,
       s"$context (driver-bounded collect exceeded cap $cap)")
     rows

@@ -63,61 +63,71 @@ object Similarity {
     * projection is — the window form would have collapsed duplicate
     * ids to one arbitrary row instead). */
   def assignToCentroids(base: DataFrame, centroids: DataFrame, idCol: String,
-      maxCentroids: Int = 4096): DataFrame = {
+      maxCentroids: Int = 4096): DataFrame =
+    assignWith(base,
+      collectCodebook(centroids, idCol, maxCentroids, "assignToCentroids"),
+      idCol)
+
+  /** [[assignToCentroids]] against an already-collected codebook. */
+  private def assignWith(base: DataFrame, cb: Codebook,
+      idCol: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     graft.functions.GraftFunctions.register(base.sparkSession)
-    val spark = base.sparkSession
-    val rows = DriverBounded.collectCapped(
-      centroids.select(col(idCol), col("v"), col("nrm")).orderBy(col(idCol)),
-      maxCentroids,
-      s"assignToCentroids: centroid set exceeds maxCentroids $maxCentroids " +
-        "— centroids are configuration, not data; cap the input " +
-        "(cf. pqTrainSampled.maxCodewords) or raise the bound deliberately")
-    require(rows.nonEmpty, "assignToCentroids: empty centroid set")
-    val vecs = rows.map(_.getSeq[Float](1).toSeq).toSeq
-    val norms = rows.map(_.getDouble(2)).toSeq
-    val idField = centroids.schema(idCol)
-    val indexDf = spark.createDataFrame(
-      java.util.Arrays.asList(rows.zipWithIndex.map {
-        case (r, i) => Row(i, r.get(0)) }: _*),
+    val indexDf = base.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cb.ids.zipWithIndex.map {
+        case (id, i) => Row(i, id) }: _*),
       StructType(Seq(StructField("__ci", IntegerType, nullable = false),
-        StructField("__cid", idField.dataType, idField.nullable))))
+        cb.idField.copy(name = "__cid"))))
     base.withColumn("__ci", call_function("graft_argmax_cos",
-        col("v"), col("nrm"), typedlit(vecs), typedlit(norms)))
+        col("v"), col("nrm"), typedlit(cb.vecs.map(_.toSeq).toSeq),
+        typedlit(cb.norms.toSeq)))
       .join(broadcast(indexDf), Seq("__ci"))
       .select(col(idCol), col("__cid").as("cid"), col("v"), col("nrm"))
   }
 
-  /** Each query's `probes` highest-cosine centroid buckets as probe
-    * rows — [[assignToCentroids]] generalized for multi-probe serving
-    * (the [[knnIvfMultiProbe]] recall lever on the EXTERNAL path):
-    * `probes` = 1 takes the zero-shuffle argmax verbatim; above it,
-    * each query fans out to one row per probed bucket via a broadcast
-    * centroid join and a per-query (psim DESC, cid ASC) window — Q × C
-    * candidate rows, both configuration-bounded, so the expansion
-    * never touches the corpus. Output shape matches assignToCentroids
-    * (idCol, cid, v, nrm), one row per (query, probed bucket). Same
-    * tie order as the by-id multi-probe; same degenerate-corner
-    * contract as assignToCentroids for P = 1 (null/mismatched vectors
-    * drop — the external probes' width guard refuses them earlier
-    * anyway). */
-  private def assignProbeBuckets(queries: DataFrame, centroids: DataFrame,
-      idCol: String, probes: Int): DataFrame =
-    if (probes <= 1) assignToCentroids(queries, centroids, idCol)
-    else {
-      val cent = centroids.select(col(idCol).as("__pcid"),
-        col("v").as("__cv"), col("nrm").as("__cn"))
-      val wp = Window.partitionBy(col(idCol))
-        .orderBy(col("__psim").desc, col("__pcid").asc)
-      queries.select(col(idCol), col("v"), col("nrm"))
-        .join(broadcast(cent))
-        .withColumn("__psim",
-          dot(col("v"), col("__cv")) / (col("nrm") * col("__cn")))
-        .withColumn("__prn", row_number().over(wp))
-        .filter(col("__prn") <= probes)
-        .select(col(idCol), col("__pcid").as("cid"), col("v"), col("nrm"))
+  /** A centroid codebook collected once, in id order: the ids (typed by
+    * `idField`), vectors and norms that [[assignToCentroids]] ships into
+    * `graft_argmax_cos` and the external probes rank query buckets
+    * against on the driver. `fingerprint` is the codebook's identity:
+    * md5 over the id-ordered (id, exact float bits) serialization —
+    * float bits, not decimal rendering, so two codebooks differing below
+    * print precision still differ. */
+  private[graft] final case class Codebook(
+      idField: org.apache.spark.sql.types.StructField, ids: IndexedSeq[Any],
+      vecs: Array[Array[Float]], norms: Array[Double]) {
+    def dim: Int = vecs.head.length
+    lazy val fingerprint: String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      ids.zip(vecs).foreach { case (id, v) =>
+        md.update(String.valueOf(id).getBytes("UTF-8"))
+        md.update(':'.toByte)
+        v.foreach { x =>
+          val bits = java.lang.Float.floatToIntBits(x)
+          md.update(Array[Byte]((bits >>> 24).toByte, (bits >>> 16).toByte,
+            (bits >>> 8).toByte, bits.toByte))
+        }
+        md.update(';'.toByte)
+      }
+      md.digest().map("%02x".format(_)).mkString
     }
+  }
+
+  /** One bounded collect of `centroids`' (id, v, nrm) in id order. */
+  private def collectCodebook(centroids: DataFrame, idCol: String,
+      maxCentroids: Int, context: String): Codebook = {
+    val rows = DriverBounded.collectCapped(
+      centroids.select(col(idCol), col("v"), col("nrm")).orderBy(col(idCol)),
+      maxCentroids,
+      s"$context: centroid set exceeds maxCentroids $maxCentroids " +
+        "— centroids are configuration, not data; cap the input " +
+        "(cf. pqTrainSampled.maxCodewords) or raise the bound deliberately")
+    require(rows.nonEmpty, s"$context: empty centroid set")
+    rows.foreach(r => require(!r.isNullAt(1),
+      s"$context: centroid ${r.get(0)} has a null vector"))
+    Codebook(centroids.schema(idCol), rows.map(_.get(0)).toIndexedSeq,
+      rows.map(_.getSeq[Float](1).toArray), rows.map(_.getDouble(2)))
+  }
 
   /** A fitted spherical-k-means model: the final per-vector assignment
     * (same shape as [[assignToCentroids]] output, with `cid` = 0-based
@@ -355,113 +365,94 @@ object Similarity {
   private[graft] val CodebookProp = "graft.codebook_md5"
   private[graft] val PqMProp = "graft.pq_m"
 
-  /** Canonical identity of a centroid codebook: md5 over the id-ordered
-    * (id, exact float bits) serialization, plus the codebook's single
-    * vector width. The fingerprint is what makes "the codebook is part
-    * of the index's identity" ENFORCEABLE: build/append stamp it as a
-    * table property, and a later append or serving probe handing a
-    * different codebook — retrained, truncated, or simply the wrong
-    * variable — fails loudly instead of silently scanning the wrong
-    * buckets. Float bits (not decimal rendering) so two codebooks
-    * differing below print precision still differ here. */
-  private[graft] def codebookFingerprint(centroids: DataFrame,
-      idCol: String, maxCentroids: Int = 4096): (String, Int) = {
+  /** Derive a centroid codebook's identity: one bounded collect, whose
+    * [[Codebook.fingerprint]] and single vector width are what makes
+    * "the codebook is part of the index's identity" ENFORCEABLE —
+    * build/append stamp the fingerprint as a table property, and a later
+    * append or serving probe handing a different codebook (retrained,
+    * truncated, or simply the wrong variable) fails loudly instead of
+    * silently scanning the wrong buckets. */
+  private[graft] def deriveCodebook(centroids: DataFrame, idCol: String,
+      maxCentroids: Int = 4096): Codebook = {
     servingIdentityDerivations.incrementAndGet()
-    val rows = DriverBounded.collectCapped(
-      centroids.select(col(idCol), col("v")).orderBy(col(idCol)),
-      maxCentroids,
-      s"codebookFingerprint: centroid set exceeds maxCentroids " +
-        s"$maxCentroids — centroids are configuration, not data")
-    require(rows.nonEmpty, "codebookFingerprint: empty centroid set")
-    val widths = rows.map { r =>
-      require(!r.isNullAt(1),
-        s"codebookFingerprint: centroid ${r.get(0)} has a null vector")
-      r.getSeq[Float](1).length
-    }.distinct
+    val cb = collectCodebook(centroids, idCol, maxCentroids, "deriveCodebook")
+    val widths = cb.vecs.map(_.length).distinct
     require(widths.length == 1,
-      s"codebookFingerprint: centroids carry mixed vector widths " +
+      s"deriveCodebook: centroids carry mixed vector widths " +
         s"${widths.sorted.mkString(",")} — not one codebook")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach { r =>
-      md.update(String.valueOf(r.get(0)).getBytes("UTF-8"))
-      md.update(':'.toByte)
-      r.getSeq[Float](1).foreach { x =>
-        val bits = java.lang.Float.floatToIntBits(x)
-        md.update(Array[Byte]((bits >>> 24).toByte, (bits >>> 16).toByte,
-          (bits >>> 8).toByte, bits.toByte))
-      }
-      md.update(';'.toByte)
-    }
-    (md.digest().map("%02x".format(_)).mkString, widths.head)
+    cb
   }
 
   // ---- Serving-identity session cache (guide §1.2; VERDICT r21 #2).
   // A serving loop hands the SAME codebook frame to every external
-  // probe, and the per-probe identity work — fingerprinting the handed
-  // centroids (one bounded driver job) and reloading a PQ index's
-  // persisted codebooks (another) — re-derives values that cannot
-  // change between index-maintenance events. Cache both, keyed so a
-  // hit is provably the same question: the fingerprint by (table,
+  // probe, and the per-probe identity work — collecting the handed
+  // centroids and fingerprinting them (one bounded driver job), and
+  // reloading a PQ index's persisted codebooks (another) — re-derives
+  // values that cannot change between index-maintenance events. Cache
+  // both, keyed so a hit is provably the same question: the collected
+  // codebook (ids, vectors, norms and fingerprint) by (table,
   // canonicalized centroid plan), RE-VALIDATED against the table's
   // stamped fingerprint at every hit (a rebuild under a retrained
   // codebook re-stamps, so stale entries fail the validation and
-  // recompute); the PQ codebooks by table, invalidated by every
-  // build/drop/compact under the engine's one shared lock. Appends
-  // need no invalidation: their own fingerprint guard refuses a
-  // drifted codebook, so a stamp-validated hit stays exact across
-  // them. The residual assumption is the codebook-identity contract
+  // recompute); the PQ codebooks by table. A hit serves both the
+  // identity check and the probe's bucket choice, so a repeat probe
+  // collects no centroids at all. Rebuild and drop invalidate under the
+  // engine's one shared lock; appends and compactions need not: an
+  // append's own fingerprint guard refuses a drifted codebook, a
+  // compaction never rewrites `__codebook` and carries every stamp
+  // across its swap, and every hit is validated against the stamp
+  // anyway. The residual assumption is the codebook-identity contract
   // itself — a centroid frame handed to a probe is deterministic
   // between maintenance events (retraining is a rebuild, which
   // re-stamps and invalidates).
 
-  private val servingFingerprints =
+  private val servingCentroids =
     scala.collection.mutable.Map.empty[
       (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      (String, Int)]
+      Codebook]
   private val servingCodebooks =
     scala.collection.mutable.Map.empty[String, Seq[Seq[Array[Float]]]]
   private val ServingCacheCap = 256
 
-  /** Count of serving-identity DERIVATIONS actually run (fingerprint
+  /** Count of serving-identity DERIVATIONS actually run (centroid
     * collects + codebook-table reads) — the observable the cache spec
     * pins: a repeat probe must not move it. */
   private[graft] val servingIdentityDerivations =
     new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Drop `table`'s serving-identity entries — called by every
-    * build/drop/compact path, under the shared engine lock. */
+    * build/drop path, under the shared engine lock. */
   private[graft] def invalidateServingIdentity(table: String): Unit =
     BucketedStore.withBandLock {
-      servingFingerprints.filterInPlace { case ((t, _), _) => t != table }
+      servingCentroids.filterInPlace { case ((t, _), _) => t != table }
       servingCodebooks.remove(table)
       ()
     }
 
-  /** [[codebookFingerprint]] behind the serving cache: a hit — same
-    * table, same canonicalized centroid plan, and a stamped fingerprint
-    * equal to the cached one — runs ZERO Spark jobs (spec-pinned); a
-    * miss computes, stores, and returns. An unstamped table never
-    * hits: there is nothing to re-validate the entry against. */
-  private def cachedCodebookFingerprint(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      centroids: DataFrame, idCol: String): (String, Int) = {
+  /** [[deriveCodebook]] behind the serving cache: a hit — same table,
+    * same canonicalized centroid plan, and a stamped fingerprint equal
+    * to the cached one — runs ZERO Spark jobs (spec-pinned); a miss
+    * derives, stores, and returns. An unstamped table never hits: there
+    * is nothing to re-validate the entry against. */
+  private def cachedCodebook(spark: org.apache.spark.sql.SparkSession,
+      table: String, centroids: DataFrame, idCol: String): Codebook = {
     val plan = centroids.queryExecution.analyzed.canonicalized
     val stamped = BucketedStore.tableProp(spark, table, CodebookProp)
-    BucketedStore.withBandLock(servingFingerprints.get((table, plan)))
-      .filter { case (fp, _) => stamped.contains(fp) }
+    BucketedStore.withBandLock(servingCentroids.get((table, plan)))
+      .filter(cb => stamped.contains(cb.fingerprint))
       .getOrElse {
-        val computed = codebookFingerprint(centroids, idCol)
+        val derived = deriveCodebook(centroids, idCol)
         BucketedStore.withBandLock {
-          if (servingFingerprints.size >= ServingCacheCap)
-            servingFingerprints.clear()
-          servingFingerprints((table, plan)) = computed
+          if (servingCentroids.size >= ServingCacheCap)
+            servingCentroids.clear()
+          servingCentroids((table, plan)) = derived
         }
-        computed
+        derived
       }
   }
 
   /** [[loadPqCodebooks]] behind the serving cache (by table; dropped
-    * on build/drop/compact): the second probe of a session pays no
+    * on build/drop): the second probe of a session pays no
     * codebook-table read. */
   private def cachedPqCodebooks(
       spark: org.apache.spark.sql.SparkSession,
@@ -482,16 +473,19 @@ object Similarity {
     * never partitioned by, and a probe silently scans the wrong
     * buckets. Their fingerprint must equal the table's stamp, and their
     * width the index's `width` (0: not yet known). A `writer` (append)
-    * derives the fingerprint afresh and stamps an unstamped table with
-    * it, its width and `stamps`; a reader (serving probe) goes through
-    * the session cache and never stamps. */
+    * derives the codebook afresh and stamps an unstamped table with its
+    * fingerprint, its width and `stamps`; a reader (serving probe) goes
+    * through the session cache and never stamps. Returns the checked
+    * codebook, so the caller assigns against it without collecting the
+    * centroids again. */
   private def requireCodebook(spark: org.apache.spark.sql.SparkSession,
       table: String, centroids: DataFrame, idCol: String, context: String,
       width: Int, writer: Boolean,
-      stamps: Map[String, String] = Map.empty): Unit = {
-    val (fp, centDim) =
-      if (writer) codebookFingerprint(centroids, idCol)
-      else cachedCodebookFingerprint(spark, table, centroids, idCol)
+      stamps: Map[String, String] = Map.empty): Codebook = {
+    val cb =
+      if (writer) deriveCodebook(centroids, idCol)
+      else cachedCodebook(spark, table, centroids, idCol)
+    val fp = cb.fingerprint
     val stamped = BucketedStore.tableProp(spark, table, CodebookProp)
     stamped.foreach { st =>
       require(st == fp,
@@ -500,29 +494,37 @@ object Similarity {
           "part of the index's identity; another would append or probe " +
           "by the wrong buckets (retraining is a batch rebuild)")
     }
-    require(width == 0 || centDim == width,
-      s"$context: the centroid codebook's width ($centDim) differs from " +
+    require(width == 0 || cb.dim == width,
+      s"$context: the centroid codebook's width (${cb.dim}) differs from " +
         s"the index's ($width) — not the geometry this index was " +
         "partitioned by")
     if (writer && stamped.isEmpty)
       BucketedStore.stampTableProps(spark, table, Map(CodebookProp -> fp,
-        BucketedStore.DimProp -> centDim.toString) ++ stamps)
+        BucketedStore.DimProp -> cb.dim.toString) ++ stamps)
+    cb
   }
 
-  /** One bounded job guarding BOTH serving-batch bounds — the query
-    * count (the probe side broadcasts, so it must stay
-    * configuration-sized) and every query's vector width (a
-    * wrong-width external query nulls its similarities and silently
-    * returns arbitrary "neighbors") — where the probes used to pay two
-    * driver jobs. Reads at most maxQ+1 (width-mismatch) booleans. */
-  private def requireServingBatch(queries: DataFrame, maxQ: Int,
-      dim: Int, countMsg: => String, dimMsg: => String): Unit = {
-    val bad = queries
-      .select(coalesce(size(col("v")) =!= dim, lit(false)).as("bad"))
-      .limit(maxQ + 1).collect()
-    require(bad.length <= maxQ, countMsg)
-    require(!bad.exists(_.getBoolean(0)), dimMsg)
+  /** The one serving-batch collect every external probe makes: `queries`'
+    * (id, v, nrm), at most `maxQ` of them — the probe side enters the
+    * plan as a local relation, so it must stay configuration-sized — and
+    * every vector non-null and `dim` wide (a wrong-width query would null
+    * every similarity, its bucket choice and its ranking alike, and
+    * silently return arbitrary "neighbors"). Both refusals come before
+    * any job touches the index. */
+  private def servingBatch(queries: DataFrame, idCol: String, maxQ: Int,
+      dim: Int, countMsg: => String, dimMsg: => String)
+      : Array[org.apache.spark.sql.Row] = {
+    val rows = DriverBounded.collectCapped(
+      queries.select(col(idCol), col("v"), col("nrm")), maxQ, countMsg)
+    require(rows.forall(r => !r.isNullAt(1) && r.getSeq[Any](1).length == dim),
+      dimMsg)
+    rows
   }
+
+  /** The (qid, qv, qn) probe-side schema, typed like `queries`. */
+  private def probeSchema(queries: DataFrame, idCol: String) =
+    queries.select(col(idCol).as("qid"), col("v").as("qv"),
+      col("nrm").as("qn")).schema
 
   /** Persist centroid assignments as a catalog table bucketed by
     * centroid id — the 100 TB serving shape: probes become scans of one
@@ -559,19 +561,19 @@ object Similarity {
     * probe side grows to Q × probes rows and the pruned scan to the
     * union of probed buckets, both still configuration-bounded.
     *
-    * Scale shape: the assignment is the zero-shuffle argmax, the probe
-    * side is broadcast, and the index scan BUCKET-PRUNES to the
-    * queries' centroid buckets — the probed cid set is collected
-    * (provably configuration-bounded: at most the codebook size, the
-    * maxCentroids contract) and re-enters the plan as literals, so
-    * probe cost is proportional to the PROBED buckets, never the
-    * index (pinned by [[BucketedStore.compileAndPinBucketedScan]],
-    * the Q×k verdict rows eagerly checkpointed so derived plans never
-    * re-read the index). An index row whose id
-    * equals a query id is excluded from that query's candidates (the
-    * knnIvf self-exclusion contract — it makes re-sending a
-    * known-corpus vector return its true neighbors, not itself); keep
-    * external id spaces disjoint from the corpus's. */
+    * Scale shape: one serving batch costs one bounded collect of the
+    * queries plus one pinned ranking job chain. The codebook comes from
+    * the serving-identity cache, each query's buckets are chosen on the
+    * driver ([[probeCidBuckets]]), the probe side enters the plan as a
+    * local relation, and the index scan BUCKET-PRUNES to the probed cid
+    * literals — probe cost is proportional to the PROBED buckets, never
+    * the index (pinned by [[BucketedStore.pinBucketedScan]]). The ≤ Q×k
+    * verdict rows come back as a local frame, so derived plans never
+    * re-read the index. An index row whose id equals a query id is
+    * excluded from that query's candidates (the knnIvf self-exclusion
+    * contract — it makes re-sending a known-corpus vector return its
+    * true neighbors, not itself); keep external id spaces disjoint from
+    * the corpus's. */
   def probeIvfIndexExternal(spark: org.apache.spark.sql.SparkSession,
       table: String, queries: DataFrame, centroids: DataFrame,
       idCol: String, k: Int, maxQueries: Int = 1 << 20,
@@ -579,11 +581,10 @@ object Similarity {
     require(probes >= 1, s"probeIvfIndexExternal: probes must be >= 1, got $probes")
     DriverBounded.labeled(spark, s"probeIvfIndexExternal:$table") {
     BucketedStore.open(spark, table, "probeIvfIndexExternal", Some("cid"))
-    // the serving batch is broadcast as the probe side and its cid set
-    // becomes pruning literals — both bounded by contract, so an
-    // oversized batch fails with direction, not with a broadcast
-    // OOM mid-job; the broadcast probe frame is Q x probes rows, so
-    // the enforced bound scales with nprobe
+    // the serving batch becomes a local probe relation of Q x probes
+    // rows and its cid set pruning literals — both bounded by
+    // contract, so an oversized batch fails with direction; the
+    // enforced bound scales with nprobe
     val maxQueriesAtProbes = math.max(1, maxQueries / probes)
     // loud dim guards: width off the catalog stamp (no job) when
     // present, one null-safe row otherwise; an EMPTY unstamped index
@@ -595,59 +596,69 @@ object Similarity {
         s"${BucketedStore.DimProp} property — no index width to validate " +
         "serving queries against; build or append before probing")
     // the codebook's width must be the index's too: a query matching
-    // the INDEX width but not the CENTROIDS' would be dropped by
-    // assignToCentroids and return no rows with no error
-    requireCodebook(spark, table, centroids, idCol,
+    // the INDEX width but not the CENTROIDS' could not be assigned and
+    // would return no rows with no error
+    val cb = requireCodebook(spark, table, centroids, idCol,
       "probeIvfIndexExternal", idxDim, writer = false)
-    // one bounded job enforcing the batch bound AND the width guard (a
-    // wrong-width external query would null every similarity — both
-    // its centroid assignment and its in-bucket ranking — and silently
-    // return arbitrary "neighbors"); refuse before the probe job runs
-    requireServingBatch(queries, maxQueriesAtProbes, idxDim,
+    val batch = servingBatch(queries, idCol, maxQueriesAtProbes, idxDim,
       s"probeIvfIndexExternal: more than $maxQueriesAtProbes external " +
         s"queries in one probe at probes=$probes (the probe side " +
-        "broadcasts and its centroid set becomes planning-time " +
+        "is a local relation and its centroid set becomes planning-time " +
         "literals); split the serving batch or " +
         "raise maxQueries deliberately",
       s"probeIvfIndexExternal: an external query's vector width " +
         s"differs from the index's ($idxDim) — its similarities would " +
         "all be null and the returned neighbors meaningless; encode " +
         "serving queries with the index's embedding dimension")
-    probeCidBuckets(spark, table,
-      assignProbeBuckets(queries, centroids, idCol, probes)
-        .select(col(idCol).as("qid"), col("cid").as("qcid"),
-          col("v").as("qv"), col("nrm").as("qn")),
-      idCol, "probeIvfIndexExternal")(knnProbe(_, _, idCol, k))
+    probeCidBuckets(spark, table, queries, idCol, cb, batch, probes, k,
+      "probeIvfIndexExternal")(knnProbe(_, _, idCol, k))
     }
   }
 
-  /** The external probes' shared tail: `q` — probe rows carrying the
-    * `qcid` bucket key — is persisted (the pruned buckets must be
-    * exactly the buckets its rows were assigned to), its cid set
-    * collected (configuration-bounded by the maxCentroids contract)
-    * and re-entered as literals, and `rank` (candidates, q) runs over
-    * the live rows of the probed buckets only — tombstones excluded
-    * ABOVE the pruned scan, BEFORE ranking, so next-best candidates
-    * refill the top-k — pinned to bucket-prune and checkpointed. */
+  /** The IVF/PQ external probes' shared tail. Each collected query's
+    * `probes` highest-cosine buckets are chosen on the driver against
+    * the collected codebook — the `graft_argmax_cos` kernel, ranked by
+    * its (cosine DESC, cid ASC) order, so P = 1 is exactly the
+    * assignToCentroids argmax; a query the kernel cannot score (a null
+    * element) is dropped, as the assignment drops it. The resulting
+    * (qid, qcid, qv, qn) rows enter the plan as a local relation, their
+    * cid set as pruning literals, and `rank(candidates, probeSide)`
+    * runs over the live rows of the probed buckets only — tombstones
+    * excluded ABOVE the pruned scan, BEFORE ranking, so next-best
+    * candidates refill the top-k. The ranking is pinned to bucket-prune,
+    * its ≤ Q×k rows collected, and returned as a local frame. */
   private def probeCidBuckets(spark: org.apache.spark.sql.SparkSession,
-      table: String, q: DataFrame, idCol: String, context: String)(
+      table: String, queries: DataFrame, idCol: String, cb: Codebook,
+      batch: Array[org.apache.spark.sql.Row], probes: Int, k: Int,
+      context: String)(
       rank: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val p = q.persist()
-    try {
-      val cids = DriverBounded.collectCapped(
-        p.select(col("qcid")).distinct(), 1 << 16,
-        s"$context: probed centroid set exceeds 2^16 — the codebook is " +
-          "configuration-sized by the maxCentroids contract, so this is " +
-          "not the index's codebook")
-        .map(_.get(0)).toSeq
-      if (cids.isEmpty)  // no queries: nothing to probe, empty verdicts
-        rank(spark.table(table).limit(0), p).localCheckpoint(true)
-      else
-        BucketedStore.compileAndPinBucketedScan(spark,
-          rank(BucketedStore.liveRows(spark, table,
-            spark.table(table).filter(col("cid").isin(cids: _*)), idCol), p),
-          table, reliable = false, context)
-    } finally { p.unpersist(blocking = false); () }
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.StructType
+    import graft.functions.ArgMaxCosFloat
+    val probeRows = batch.toSeq.flatMap { r =>
+      val cs =
+        if (r.isNullAt(2)) null
+        else ArgMaxCosFloat.cosines(
+          new GenericArrayData(r.getSeq[Any](1).toArray), r.getDouble(2),
+          cb.vecs, cb.norms)
+      if (cs == null) Nil
+      else ArgMaxCosFloat.ranked(cs).take(probes).toSeq
+        .map(ci => Row(r.get(0), cb.ids(ci), r.get(1), r.get(2)))
+    }
+    val probeSide = spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*),
+      StructType(probeSchema(queries, idCol).fields
+        .patch(1, Seq(cb.idField.copy(name = "qcid")), 0)))
+    val cids = probeRows.map(_.get(1)).distinct
+    val ranked = rank(BucketedStore.liveRows(spark, table,
+      spark.table(table).filter(col("cid").isin(cids: _*)), idCol), probeSide)
+    val verdicts =
+      if (probeRows.isEmpty) Array.empty[Row]  // nothing to probe
+      else BucketedStore.pinBucketedScan(spark, ranked, table, context)(
+        DriverBounded.collectBounded(_, batch.length.toLong * k,
+          s"$context: more verdict rows than queries x k"))
+    spark.createDataFrame(java.util.Arrays.asList(verdicts: _*), ranked.schema)
   }
 
   /** Incrementally extend a persisted [[buildIvfIndex]] table with
@@ -675,16 +686,16 @@ object Similarity {
     // codebook identity (the first append stamps it) and width: a
     // narrower codebook would admit narrower batch vectors into a
     // wider index, poisoning every later probe's similarities
-    requireCodebook(spark, table, centroids, idCol, "appendToIvfIndex",
-      BucketedStore.storedDim(spark, table, "v"), writer = true)
+    val cb = requireCodebook(spark, table, centroids, idCol,
+      "appendToIvfIndex", BucketedStore.storedDim(spark, table, "v"),
+      writer = true)
     // one row per id within the batch: an at-least-once source can
     // redeliver inside a single micro-batch, and the table anti-join
     // cannot see rows that are not in the table yet (a stream carrying
     // multiple VERSIONS of an id per batch resolves latest-wins
     // upstream, the assignToCentroids unique-id contract)
     BucketedStore.append(spark, table, layout, Seq("cid", idCol),
-      assignToCentroids(batch.dropDuplicates(Seq(idCol)), centroids, idCol)
-        .select(col(idCol), col("cid"), col("v"), col("nrm")),
+      assignWith(batch.dropDuplicates(Seq(idCol)), cb, idCol),
       maxBatchIds, "maxBatchIds", "appendToIvfIndex")
   }
 
@@ -1101,13 +1112,13 @@ object Similarity {
       s"probeVectorStoreExternal: shortlist $shortlist exceeds " +
         s"maxCandidates $maxCandidates — even one query would overflow " +
         "the candidate bound; raise maxCandidates deliberately")
-    // one bounded job enforcing the batch bound AND the width guard:
-    // graft_dot yields NULL on mismatched lengths (the engine-wide
-    // zip_with convention — benign for a few bad CORPUS rows, which
-    // sink below every real similarity), but an external query of the
-    // wrong width would null EVERY candidate's similarity and silently
-    // return arbitrary "neighbors" ranked by tiebreak
-    requireServingBatch(queries, maxQueries, storeDim,
+    // one bounded collect enforcing the batch bound AND the width
+    // guard: graft_dot yields NULL on mismatched lengths (the
+    // engine-wide zip_with convention — benign for a few bad CORPUS
+    // rows, which sink below every real similarity), but an external
+    // query of the wrong width would null EVERY candidate's similarity
+    // and silently return arbitrary "neighbors" ranked by tiebreak
+    val batch = servingBatch(queries, idCol, maxQueries, storeDim,
       s"probeVectorStoreExternal: more than $maxQueries queries x " +
         s"$shortlist shortlist exceeds maxCandidates $maxCandidates; " +
         "raise maxCandidates deliberately or split the serving batch",
@@ -1115,11 +1126,11 @@ object Similarity {
         s"differs from the store's ($storeDim) — its similarities " +
         "would all be null and the returned neighbors meaningless; " +
         "encode serving queries with the store's embedding dimension")
-    val q = queries
-      .withColumn("qvt", slice(col("v"), 1, prefixDims))
-      .select(col(idCol).as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("qvt"),
-        sqrt(dot(col("qvt"), col("qvt"))).as("qnt"))
+    // the collected batch is the local probe side of both stages
+    val q = spark.createDataFrame(java.util.Arrays.asList(batch: _*),
+        probeSchema(queries, idCol))
+      .withColumn("qvt", slice(col("qv"), 1, prefixDims))
+      .withColumn("qnt", sqrt(dot(col("qvt"), col("qvt"))))
     rerankShortlist(spark, store,
       matryoshkaShortlistFrame(store, q, idCol, shortlist), q, idCol, k,
       maxCandidates, "probeVectorStoreExternal")
@@ -1203,10 +1214,10 @@ object Similarity {
     val spark = encodedAssigned.sparkSession
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "buildPqIndex: empty PQ codebooks")
-    val (fp, centDim) = codebookFingerprint(centroids, idCol)
+    val cb = deriveCodebook(centroids, idCol)
     val dim = codebooks.size * codebooks.head.head.length
-    require(centDim == dim,
-      s"buildPqIndex: the centroid codebook's width ($centDim) differs " +
+    require(cb.dim == dim,
+      s"buildPqIndex: the centroid codebook's width (${cb.dim}) differs " +
         s"from the PQ codebooks' reconstruction width ($dim) — not the " +
         "geometry this index encodes")
     BucketedStore.dropTableAndLocation(spark, pqCodebookTable(table))
@@ -1214,7 +1225,7 @@ object Similarity {
       encodedAssigned.select(col(idCol), col("cid"), col("pq_code")),
       table, "cid", buckets,
       stamps = Map(BucketedStore.DimProp -> dim.toString,
-        PqMProp -> codebooks.size.toString, CodebookProp -> fp))
+        PqMProp -> codebooks.size.toString, CodebookProp -> cb.fingerprint))
     import spark.implicits._
     val cbRows = for {
       (cws, m) <- codebooks.zipWithIndex
@@ -1270,7 +1281,9 @@ object Similarity {
     * codes were written with — reconstructed from the catalog, no
     * training corpus involved), and the codes scan BUCKET-PRUNES to
     * the queries' centroid set (SelectedBucketsCount asserted at
-    * compile time and on the executed plan, verdicts checkpointed).
+    * compile time and on the executed plan; the ≤ Q×k verdicts come
+    * back as a local frame — the [[probeIvfIndexExternal]] shape: one
+    * bounded query collect plus one pinned ranking job chain).
     * Probe cost ∝ probed buckets × M ints per candidate — both scale
     * levers, served. Approximate by construction (PQ ADC ranking);
     * ranks carry the total (approx_sim DESC, id ASC) tiebreak. An
@@ -1280,14 +1293,13 @@ object Similarity {
     * `probes` is the nprobe recall lever on this serving path — the
     * [[probeIvfIndexExternal]] multi-probe device applied to the PQ
     * family: each serving query fans out to its `probes`
-    * highest-cosine centroid buckets ([[assignProbeBuckets]], a
-    * broadcast-centroid window over Q×C rows, both
-    * configuration-bounded), the pruned codes scan widens to the
-    * union of probed buckets, and each query's ADC table rides its
-    * probe rows (the broadcast grows to Q×P×M×K doubles — size
-    * `maxQueries` accordingly). A candidate's codes live in exactly
-    * one bucket, so no candidate can pair with a query twice and the
-    * rank window needs no dedup. `probes = 1` keeps the max-cosine
+    * highest-cosine centroid buckets (ranked on the driver against the
+    * cached codebook, Q×C cosines, both configuration-bounded), the
+    * pruned codes scan widens to the union of probed buckets, and each
+    * query's ADC table rides its probe rows (the broadcast grows to
+    * Q×P×M×K doubles — size `maxQueries` accordingly). A candidate's
+    * codes live in exactly one bucket, so no candidate can pair with a
+    * query twice and the rank window needs no dedup. `probes = 1` keeps the max-cosine
     * argmax assignment verbatim (spec-pinned bit-equal); `probes` =
     * codebook size degrades to brute ADC over the whole index. */
   def probePqIndexExternal(spark: org.apache.spark.sql.SparkSession,
@@ -1306,13 +1318,13 @@ object Similarity {
     val maxQueriesAtProbes = math.max(1, maxQueries / probes)
     // serving-identity reads behind the session cache: the second
     // probe of a session pays neither the codebook-table read nor the
-    // fingerprint job (spec-pinned)
+    // centroid collect (spec-pinned)
     val codebooks = cachedPqCodebooks(spark, table)
     val m = codebooks.size
     val dim = m * codebooks.head.head.length
-    requireCodebook(spark, table, centroids, idCol,
+    val cb = requireCodebook(spark, table, centroids, idCol,
       "probePqIndexExternal", dim, writer = false)
-    requireServingBatch(queries, maxQueriesAtProbes, dim,
+    val batch = servingBatch(queries, idCol, maxQueriesAtProbes, dim,
       s"probePqIndexExternal: more than $maxQueriesAtProbes external " +
         s"queries in one probe at probes=$probes (the ADC-table probe " +
         "side broadcasts at Q x probes x M x K doubles and its " +
@@ -1321,12 +1333,12 @@ object Similarity {
       s"probePqIndexExternal: an external query's vector width differs " +
         s"from the index's ($dim) — its ADC table would be meaningless; " +
         "encode serving queries with the index's embedding dimension")
-    probeCidBuckets(spark, table,
-      assignProbeBuckets(queries, centroids, idCol, probes)
-        .select(col(idCol).as("qid"), col("cid").as("qcid"),
-          pqQueryTable(col("v"), codebooks).as("qtab")),
-      idCol, "probePqIndexExternal")(
-      pqRank(_, _, idCol, m, k, col("cid") === col("qcid")))
+    probeCidBuckets(spark, table, queries, idCol, cb, batch, probes, k,
+      "probePqIndexExternal") { (cands, p) =>
+      pqRank(cands, p.select(col("qid"), col("qcid"),
+          pqQueryTable(col("qv"), codebooks).as("qtab")),
+        idCol, m, k, col("cid") === col("qcid"))
+    }
     }
   }
 
@@ -1348,8 +1360,8 @@ object Similarity {
       Some("cid"))
     val codebooks = loadPqCodebooks(spark, table)
     val dim = codebooks.size * codebooks.head.head.length
-    requireCodebook(spark, table, centroids, idCol, "appendToPqIndex",
-      dim, writer = true,
+    val cb = requireCodebook(spark, table, centroids, idCol,
+      "appendToPqIndex", dim, writer = true,
       Map(BucketedStore.DimProp -> dim.toString,
         PqMProp -> codebooks.size.toString))
     val bad = batch.filter(size(col("v")) =!= dim).limit(1).collect()
@@ -1360,9 +1372,8 @@ object Similarity {
     // one row per id within the batch (an at-least-once source can
     // redeliver inside a single micro-batch)
     BucketedStore.append(spark, table, layout, Seq("cid", idCol),
-      pqEncode(
-        assignToCentroids(batch.dropDuplicates(Seq(idCol)), centroids,
-          idCol), idCol, codebooks)
+      pqEncode(assignWith(batch.dropDuplicates(Seq(idCol)), cb, idCol),
+        idCol, codebooks)
         .select(col(idCol), col("cid"), col("pq_code")),
       maxBatchIds, "maxBatchIds", "appendToPqIndex")
   }

@@ -130,7 +130,7 @@ private[graft] object StagedReplace {
         .filter(_._1.startsWith("graft."))
       if (stamps.nonEmpty) BucketedStore.stampTableProps(spark, stage, stamps)
     }
-    BucketedStore.dropTableAndLocation(spark, table)
+    BucketedStore.dropStorage(spark, table)
     val live = spark.sessionState.sqlParser.parseTableIdentifier(table)
     spark.sql(s"ALTER TABLE $stage RENAME TO ${live.quotedString}")
     spark.catalog.refreshTable(table)

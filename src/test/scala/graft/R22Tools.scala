@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import java.util.concurrent.ConcurrentLinkedQueue
-
 /** Round-22 measurement tooling (guide §1: measure first).
   *
   * [[R22JobProfile]] answers the question the wall-clock sweep cannot:
@@ -40,9 +37,6 @@ object R22FinalPlan {
 }
 
 object R22JobProfile {
-  final case class JobRec(id: Int, desc: String, site: String, start: Long,
-      var end: Long = -1L)
-
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -51,46 +45,24 @@ object R22JobProfile {
     // warm like Bench does
     SparkEntry.queries("q01_agg")(spark, sf)
       .write.format("noop").mode("overwrite").save()
-    val recs = new ConcurrentLinkedQueue[JobRec]()
-    val byId = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val d = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("").replace('\n', '|')
-        // the result stage's name carries the action's call site
-        // ("collect at Dedup.scala:1361") — the attribution the
-        // description (a streaming batch banner) cannot give
-        val site = js.stageInfos.lastOption.map(_.name).getOrElse("?")
-        val r = JobRec(js.jobId, d, site, js.time)
-        recs.add(r); byId.put(js.jobId, r); ()
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(byId.get(je.jobId)).foreach(_.end = je.time); ()
-      }
-    }
     for (r <- 1 to rounds; name <- names) {
-      recs.clear(); byId.clear()
-      spark.sparkContext.addSparkListener(listener)
       spark.sparkContext.setJobDescription(s"r22:$name")
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
+      val (_, all) = JobLog.record(spark.sparkContext) {
+        SparkEntry.queries(name)(spark, sf)
+          .write.format("noop").mode("overwrite").save()
+      }
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(300)  // let late JobEnd events drain
-      import scala.jdk.CollectionConverters._
-      val all = recs.asScala.toVector.sortBy(_.start)
-      val tot = all.map(r => math.max(0L, r.end - r.start)).sum / 1e3
+      val tot = all.map(_.wallMs).sum / 1e3
       println(f"=== $name round $r: ${all.size} jobs, " +
         f"sum(job wall) $tot%.1f s, query wall $wall%.1f s ===")
       // per-label histogram (count, total seconds): graft operator
       // labels where present, else the call site
-      def key(r: JobRec) =
+      def key(r: JobLog.Job) =
         if (r.desc.startsWith("graft:")) r.desc else r.site
       all.groupBy(key).toSeq
         .map { case (d, rs) =>
-          (d, rs.size, rs.map(r => math.max(0L, r.end - r.start)).sum / 1e3) }
+          (d, rs.size, rs.map(_.wallMs).sum / 1e3) }
         .sortBy(-_._3)
         .foreach { case (d, n, s) =>
           println(f"  $s%8.2fs  n=$n%-4d ${d.take(110)}") }

@@ -518,6 +518,53 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ed.getMessage.contains("vector width"), ed.getMessage)
   }
 
+  test("external probe tail: empty batch, null and wrong-width queries, over-cap refusal before any job, local verdicts") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val tbl = "sim_idx.ivf_external_edges"
+    val cents = base.filter(col("vec_id") % 50 === 0)
+    Similarity.buildIvfIndex(
+      Similarity.assignToCentroids(base.filter(col("vec_id") >= 10), cents,
+        "vec_id"), tbl, buckets = 4)
+    // a replayed append stamps the codebook, so repeat probes hit the
+    // serving-identity cache
+    Similarity.appendToIvfIndex(base.filter(col("vec_id") === 10), tbl,
+      cents, "vec_id", buckets = 4)
+    val heldOut = base.filter(col("vec_id") < 10)
+    def probe(q: org.apache.spark.sql.DataFrame, maxQueries: Int = 1 << 20) =
+      Similarity.probeIvfIndexExternal(spark, tbl, q, cents, "vec_id", 3,
+        maxQueries = maxQueries)
+    // an empty serving batch: empty verdicts in the verdict schema
+    val empty = probe(heldOut.limit(0))
+    assert(empty.columns.toSeq === Seq("qid", "neighbor_id", "rank"))
+    assert(empty.collect().isEmpty)
+    // a null query vector refuses like a wrong-width one
+    val nullVec = heldOut.withColumn("v",
+      when(col("vec_id") === 3, lit(null)).otherwise(col("v")))
+    val en = intercept[IllegalArgumentException](probe(nullVec))
+    assert(en.getMessage.contains("vector width"), en.getMessage)
+    val ew = intercept[IllegalArgumentException](
+      probe(heldOut.withColumn("v", slice(col("v"), 1, 8))))
+    assert(ew.getMessage.contains("vector width"), ew.getMessage)
+    // over the cap: refused by the serving-batch collect itself — with
+    // a local batch and a warm cache, before ANY job runs
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(heldOut.collect(): _*), heldOut.schema)
+    val served = probe(local)
+    val (ec, jobs) = graft.JobLog.record(spark.sparkContext)(
+      intercept[IllegalArgumentException](probe(local, maxQueries = 5)))
+    assert(ec.getMessage.contains("split the serving batch"), ec.getMessage)
+    assert(jobs.isEmpty, s"refusal ran jobs: ${jobs.map(_.site)}")
+    // the verdicts are local rows: their plan scans no table, so moving
+    // every index file (a compaction) leaves them readable and equal
+    assert(served.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.isEmpty, served.queryExecution.executedPlan.toString)
+    val rows = served.collect().toSet
+    assert(rows.nonEmpty)
+    Similarity.compactIvfIndex(spark, tbl)
+    assert(served.collect().toSet === rows)
+  }
+
   test("probeVectorStoreExternal: serving probes slice to the store's prefix; refuses a prefixless store") {
     // value equality vs DuckDB is the e14 gate; this pins the API
     // contract: external ids are labels (shift-invariant), a re-sent
