@@ -1,13 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 /** The one storage lifecycle behind every persisted index family: the
   * band index, keyed side tables, the IVF index, PQ codes and the
   * vector store. Each is a catalog table bucketed by its probe key, and
   * this object is the only code that knows how such a table is laid
-  * out, written, made idempotent, tombstoned, compacted and healed:
+  * out, written, made idempotent, tombstoned, compacted and healed. It
+  * is also the raw vault's writer ([[save]]): every vault table and
+  * staging table is created, staged and appended through the same
+  * task-aligned bucketed write, in the layout its catalog entry holds.
   *
   *  - '''open''' — every entry point of every family: heal an
   *    interrupted compaction swap, check the bucket spec, return the
@@ -30,9 +36,41 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object BucketedStore {
 
-  /** A bucketed table's catalog layout. */
-  final case class Layout(bucketCol: String, buckets: Int,
-      sortCols: Seq[String])
+  /** A bucketed table's catalog layout. The index families bucket by
+    * one probe key; vault tables by their dedup keys. */
+  final case class Layout(bucketCols: Seq[String], buckets: Int,
+      sortCols: Seq[String] = Nil)
+
+  private def fromSpec(spec: Option[BucketSpec]): Option[Layout] =
+    spec.map(s => Layout(s.bucketColumnNames, s.numBuckets, s.sortColumnNames))
+
+  /** The catalog layout of `table` (`None`: not bucketed) — one
+    * driver-side metadata read, no Spark job. */
+  def catalogLayout(spark: SparkSession, table: String): Option[Layout] =
+    fromSpec(metadata(spark, table).bucketSpec)
+
+  /** The catalog layout of the table `df` reads — `None` unless `df` is
+    * a plain read of a bucketed catalog table (`spark.table`), so a
+    * derived or in-memory frame never steers a caller's alignment. */
+  def layoutOf(df: DataFrame): Option[Layout] =
+    EliminateSubqueryAliases(df.queryExecution.analyzed) match {
+      case r: LogicalRelation => fromSpec(r.catalogTable.flatMap(_.bucketSpec))
+      case _ => None
+    }
+
+  /** `rows` hash-partitioned the way `layout` buckets them — the
+    * partitioning a bucketed scan of the table reports, so a join
+    * against that scan shuffles only `rows`, and a write writes one
+    * file per bucket. */
+  private def alignToBuckets(rows: DataFrame, layout: Layout): DataFrame =
+    rows.repartition(layout.buckets, layout.bucketCols.map(col): _*)
+
+  /** `rows` aligned to the buckets of the table `existing` reads
+    * ([[layoutOf]]; unchanged when it reads none): a dedup anti-join
+    * against `existing` then shuffles only `rows` and meets the table
+    * as it lies, whatever bucket count it was created with. */
+  def alignedTo(existing: DataFrame, rows: DataFrame): DataFrame =
+    layoutOf(existing).fold(rows)(alignToBuckets(rows, _))
 
   /** Serving stamp: the table's vector width, read by probes off the
     * catalog (one driver call, no Spark job). */
@@ -117,20 +155,18 @@ private[graft] object BucketedStore {
     StagedReplace.healTable(spark, table)
     require(spark.catalog.tableExists(table),
       s"$context: $table does not exist")
-    val spec = metadata(spark, table).bucketSpec
-    require(spec.exists(s => key.forall(k => s.bucketColumnNames == Seq(k))),
+    val layout = catalogLayout(spark, table)
+    require(layout.exists(l => key.forall(k => l.bucketCols == Seq(k))),
       s"$context: table $table is not ${key.fold("")(_ + "-")}bucketed " +
-        s"(bucketSpec=$spec) — not a buildBandIndex/buildKeyedTable " +
+        s"(layout=$layout) — not a buildBandIndex/buildKeyedTable " +
         "product; a probe against it could not bucket-prune at any scale")
-    val s = spec.get
-    Layout(s.bucketColumnNames.head, s.numBuckets, s.sortColumnNames)
+    layout.get
   }
 
   // ---- rebuild
 
   /** Persist `rows` as `table`, bucketed by `key` with one task-aligned
-    * file per bucket (one file per bucket instead of one per task ×
-    * bucket — see RawVault.writeTable; `aligned` says `rows` is already
+    * file per bucket ([[save]]; `aligned` says `rows` is already
     * hash-partitioned that way). The table and its tombstones are
     * dropped first: a stale tombstone side table would silently hide
     * rebuilt rows from every probe. `stamps` and, when `widthOf` names
@@ -142,21 +178,40 @@ private[graft] object BucketedStore {
     val spark = rows.sparkSession
     dropTableAndLocation(spark, table)
     dropTableAndLocation(spark, tombstoneTable(table))
-    writer(rows, Layout(key, buckets, sortCols), aligned)
-      .mode("overwrite").saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    save(spark, table, Some(Layout(Seq(key), buckets, sortCols)), rows,
+      "overwrite", aligned)
     val props = stamps ++ widthOf.map(storedDim(spark, table, _))
       .filter(_ > 0).map(w => DimProp -> w.toString)
     if (props.nonEmpty) stampTableProps(spark, table, props)
   }
 
+  /** The one bucketed write: `rows` task-aligned to `layout` first, so
+    * each write emits one file per bucket instead of one per task ×
+    * bucket (measured in SCALING.md "Vault loads": 32 files instead of
+    * 1,024, and 4× faster). `aligned` says `rows` already are. */
   private def writer(rows: DataFrame, layout: Layout,
       aligned: Boolean = false) = {
-    val w = (if (aligned) rows
-      else rows.repartition(layout.buckets, col(layout.bucketCol)))
-      .write.bucketBy(layout.buckets, layout.bucketCol)
+    val w = (if (aligned) rows else alignToBuckets(rows, layout)).write
+      .bucketBy(layout.buckets, layout.bucketCols.head,
+        layout.bucketCols.tail: _*)
     if (layout.sortCols.isEmpty) w
     else w.sortBy(layout.sortCols.head, layout.sortCols.tail: _*)
+  }
+
+  /** Write `rows` to `table` with `mode` through [[writer]] when
+    * `layout` is given (a plain write otherwise: an unbucketed vault
+    * table), then refresh `table` on `spark` — the caller's own
+    * session, since `rows` may belong to a clone (streaming
+    * `foreachBatch` hands micro-batches from one), and later reads on
+    * `spark`, the next batch's dedup anti-join included, must see the
+    * write (the reference's REFRESH TABLE idiom,
+    * notebooks/load_raw.py:492). Outside the conf window: the vault's appends neither
+    * bucket-prune nor race a compaction. */
+  def save(spark: SparkSession, table: String, layout: Option[Layout],
+      rows: DataFrame, mode: String, aligned: Boolean = false): Unit = {
+    layout.fold(rows.write)(writer(rows, _, aligned))
+      .mode(mode).saveAsTable(table)
+    spark.catalog.refreshTable(table)
   }
 
   // ---- append
@@ -211,7 +266,7 @@ private[graft] object BucketedStore {
   /** The columns an append collects as literals: the grain plus the
     * bucket column, so the lookup prunes to the batch's buckets. */
   def lookupCols(layout: Layout, grain: Seq[String]): Seq[String] =
-    (grain :+ layout.bucketCol).distinct
+    (grain ++ layout.bucketCols).distinct
 
   /** The append's idempotence core: `rows` minus the grain keys already
     * in `table`, found by point lookups — the collected `keyRows` (the

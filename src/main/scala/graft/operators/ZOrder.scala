@@ -56,7 +56,7 @@ object ZOrder {
 
   /** Write `df` hive-partitioned by the Morton bucket of (xCol, yCol).
     *
-    * Task-aligned to the buckets (the RawVault.writeTable lesson,
+    * Task-aligned to the buckets (the BucketedStore.save lesson,
     * measured in SCALING.md "Vault loads"; guide §6): without the
     * repartition every write task holds rows of ~all 2^(2·bitsPerDim)
     * buckets and emits one file PER (task × bucket) — at 32 tasks and

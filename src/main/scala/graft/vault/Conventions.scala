@@ -134,7 +134,11 @@ object Conventions {
 /** Raw-vault configuration (RawVault.py:13-50). The optional base paths
   * mirror the reference's `staging_prepared_base_path` / `raw_base_path`:
   * when set, `initializeDatabase` creates the database at that explicit
-  * warehouse LOCATION; when absent, the session warehouse decides. */
+  * warehouse LOCATION; when absent, the session warehouse decides.
+  * `optimizePartitioning` / `partitionSize` (RawVault.py:23-24) decide
+  * only the layout of the tables a [[RawVault]] creates and of its
+  * staging tables — bucketed by their dedup keys into `partitionSize`
+  * buckets; loads follow each existing table's catalog layout. */
 final case class RawVaultConfig(
     stagingBasePath: String,
     stagingPreparedDatabase: String,

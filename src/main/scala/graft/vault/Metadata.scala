@@ -256,8 +256,8 @@ class MetadataVault(
             selfLeg.rawColumn, fkLeg.rawColumn, vault.sourceSystemName,
             vault.loadClock,
             tieBreak = when(col(c.operation) === CdcOp.Delete, 1).otherwise(0))
-          vault.appendToLink(l.name, newLinks)
-          vault.appendToEffectivity(effName, newEff)
+          vault.append(c.linkName(l.name), newLinks)
+          vault.append(effName, newEff)
 
         case _ =>
           val resolved0 = selfLegs.foldLeft(staged)(
@@ -271,7 +271,7 @@ class MetadataVault(
           val resolved = RawVaultOps.resolveMultilinkHubKeys(resolved0, fkDefs)
           val (stagedOut, newRows) = RawVaultOps.newMultilinkRows(resolved,
             linkTable, l.to.map(_.rawColumn), vault.sourceSystemName, vault.loadClock)
-          vault.appendToLink(l.name, newRows)
+          vault.append(c.linkName(l.name), newRows)
           // keep the link's effectivity satellite loaded (CDC deletes for
           // link-feeding rows must be visible), as loadMultilink does
           vault.loadEffectivitySatelliteFromPreparedStageDataframe(stagedOut,

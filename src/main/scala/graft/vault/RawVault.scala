@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.BucketedStore
+import graft.operators.BucketedStore.{Layout, alignedTo}
 
 /** Functional core of the raw-vault CDC loaders.
   *
@@ -16,8 +18,11 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: all dedup joins are `left_anti` on the (bucketable) hash
   * key, so with bucketed vault tables they become shuffle-free on one
-  * side; `distinct` is a partial-aggregate (map-side combine) in Spark.
-  * No collect(), no driver-side loops over data.
+  * side — the satellite and reference builders align the batch to the
+  * bucket spec of the table `existing` reads ([[BucketedStore.alignedTo]]),
+  * so only the batch shuffles; `distinct` is a partial-aggregate
+  * (map-side combine) in Spark. No collect(), no driver-side loops over
+  * data.
   */
 object RawVaultOps {
 
@@ -88,16 +93,14 @@ object RawVaultOps {
     * restored from CDC time, `$__HDIFF = md5(attrs)`, anti-join dedup on
     * (HKEY, LOAD_DATE). */
   def newSatelliteRows(staged: DataFrame, sat: DataFrame,
-      attributes: Seq[String], repartitionSize: Option[Int] = None)(
-      implicit c: Conventions): DataFrame = {
+      attributes: Seq[String])(implicit c: Conventions): DataFrame = {
     val allowed = Seq(CdcOp.Create, CdcOp.Update, CdcOp.Snapshot)
     val cols = Seq(c.hkey, c.hdiff, c.loadDate) ++ attributes
-    var out = staged
+    val out = alignedTo(sat, staged
       .filter(staged(c.operation).isin(allowed: _*))
       .withColumn(c.loadDate, staged(c.cdcLoadDate))
       .withColumn(c.hdiff, Dv.hashNames(attributes))
-      .select(cols.map(col): _*)
-    repartitionSize.foreach(n => out = out.repartition(n, col(c.hkey), col(c.loadDate)))
+      .select(cols.map(col): _*))
     RawVaultOps.antiExisting(out, sat, Seq(c.hkey, c.loadDate))
       .distinct()
   }
@@ -105,32 +108,29 @@ object RawVaultOps {
   /** New effectivity-satellite rows (RawVault.py:953-994): CDC ops
     * {CREATE, DELETE, SNAPSHOT}; `$__DELETED = (op == DELETE)`;
     * `$__HDIFF = md5($__DELETED)`; anti-join dedup on (HKEY, LOAD_DATE). */
-  def newEffectivityRows(staged: DataFrame, eff: DataFrame,
-      repartitionSize: Option[Int] = None)(implicit c: Conventions): DataFrame = {
+  def newEffectivityRows(staged: DataFrame, eff: DataFrame)(
+      implicit c: Conventions): DataFrame = {
     val allowed = Seq(CdcOp.Create, CdcOp.Delete, CdcOp.Snapshot)
     val cols = Seq(c.hkey, c.hdiff, c.loadDate, c.deleted)
     // literal `1` matches the reference exactly (RawVault.py:973)
     val deletedCol = when(col(c.operation) === 1, true).otherwise(false)
-    var out = staged
+    val out = alignedTo(eff, staged
       .filter(staged(c.operation).isin(allowed: _*))
       .withColumn(c.loadDate, staged(c.cdcLoadDate))
       .withColumn(c.deleted, deletedCol)
       .withColumn(c.hdiff, Dv.hash(Seq(col(c.deleted))))
-      .select(cols.map(col): _*)
-    repartitionSize.foreach(n => out = out.repartition(n, col(c.hkey), col(c.loadDate)))
+      .select(cols.map(col): _*))
     RawVaultOps.antiExisting(out, eff, Seq(c.hkey, c.loadDate))
       .distinct()
   }
 
   /** New reference-table rows (RawVault.py:737-768). */
   def newReferenceRows(staged: DataFrame, ref: DataFrame, idColumn: String,
-      attributes: Seq[String], repartitionSize: Option[Int] = None)(
-      implicit c: Conventions): DataFrame = {
+      attributes: Seq[String])(implicit c: Conventions): DataFrame = {
     val cols = Seq(idColumn, c.hdiff, c.loadDate) ++ attributes
-    var out = staged
+    val out = alignedTo(ref, staged
       .withColumn(c.hdiff, Dv.hashNames(attributes))
-      .select(cols.map(col): _*)
-    repartitionSize.foreach(n => out = out.repartition(n, col(idColumn), col(c.loadDate)))
+      .select(cols.map(col): _*))
     RawVaultOps.antiExisting(out, ref, Seq(idColumn, c.loadDate))
       .distinct()
   }
@@ -138,15 +138,13 @@ object RawVaultOps {
   /** New code-reference rows, grouped by `$__GROUP = staging table name`
     * (RawVault.py:797-833). */
   def newCodeReferenceRows(staged: DataFrame, ref: DataFrame,
-      groupName: String, idColumn: String, attributes: Seq[String],
-      repartitionSize: Option[Int] = None)(implicit c: Conventions): DataFrame = {
+      groupName: String, idColumn: String, attributes: Seq[String])(
+      implicit c: Conventions): DataFrame = {
     val cols = Seq(c.group, idColumn, c.hdiff, c.loadDate) ++ attributes
-    var out = staged
+    val out = alignedTo(ref, staged
       .withColumn(c.hdiff, Dv.hashNames(attributes))
       .withColumn(c.group, lit(groupName.toLowerCase))
-      .select(cols.map(col): _*)
-    repartitionSize.foreach(n =>
-      out = out.repartition(n, col(c.group), col(idColumn), col(c.loadDate)))
+      .select(cols.map(col): _*))
     RawVaultOps.antiExisting(out, ref, Seq(idColumn, c.group, c.loadDate))
       .distinct()
   }
@@ -476,9 +474,14 @@ object RawVaultOps {
 
 /** Catalog-backed raw vault, mirroring the reference's public API surface
   * (SURVEY §2.12; RawVault.py). Tables are created empty with mode
-  * `ignore` and appended via the anti-join functional core above; when
-  * `optimizePartitioning` is on, writes are bucketed by the dedup keys so
-  * repeated anti-joins against the vault avoid re-shuffling the big side.
+  * `ignore` and appended via the anti-join functional core above. Every
+  * write goes through [[BucketedStore.save]]. When `optimizePartitioning`
+  * is on, the tables this vault creates, and its staging tables, are
+  * bucketed by their dedup keys into `partitionSize` buckets, so
+  * repeated anti-joins against the vault avoid re-shuffling the big
+  * side. Loads take the layout from the catalog entry of the table they
+  * write to, never from the config: a vault created with any layout
+  * loads through any `RawVaultConfig` over the same databases.
   */
 class RawVault(
     val spark: SparkSession,
@@ -494,21 +497,25 @@ class RawVault(
     spark.table(s"${config.rawDatabase}.`$name`")
   private def stagedTable(name: String): DataFrame =
     spark.table(s"${config.stagingPreparedDatabase}.`$name`")
-  private def repartitionSize: Option[Int] =
-    if (config.optimizePartitioning) Some(config.partitionSize) else None
 
   /** The technical-load-date clock (injectable for deterministic tests). */
   def loadClock: Column = clock
 
-  /** Append pre-computed link rows (used by the metadata-driven loader). */
-  def appendToLink(linkTableName: String, rows: DataFrame): Unit =
-    writeTable(rows, config.rawDatabase, conventions.linkName(linkTableName),
-      Seq(conventions.hkey), "append")
+  /** Append `rows` to the raw table `name` in the layout its catalog
+    * entry holds (also used by the metadata-driven loader). */
+  private[vault] def append(name: String, rows: DataFrame): Unit = {
+    val table = s"${config.rawDatabase}.`$name`"
+    BucketedStore.save(spark, table, BucketedStore.catalogLayout(spark, table),
+      rows, "append")
+  }
 
-  /** Append pre-computed effectivity rows (metadata-driven loader). */
-  def appendToEffectivity(effTableName: String, rows: DataFrame): Unit =
-    writeTable(rows, config.rawDatabase, effTableName,
-      Seq(conventions.hkey, conventions.loadDate), "append")
+  /** The layout this vault creates a table with: bucketed by its dedup
+    * `keys` into `partitionSize` buckets when `optimizePartitioning` is
+    * on (RawVault.py:1068-1073). */
+  private def creationLayout(keys: Seq[String]): Option[Layout] =
+    if (config.optimizePartitioning && keys.nonEmpty)
+      Some(Layout(keys, config.partitionSize))
+    else None
 
   def initializeDatabase(): Unit = {
     spark.sql(VaultSql.createDatabase(
@@ -523,29 +530,8 @@ class RawVault(
       columns: Seq[ColumnDefinition], bucketColumns: Seq[String]): Unit = {
     val schema = StructType(columns.map(_.toField))
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    writeTable(df, database, name, bucketColumns, "ignore")
-  }
-
-  private def writeTable(df: DataFrame, database: String, name: String,
-      bucketColumns: Seq[String], mode: String): Unit = {
-    if (config.optimizePartitioning && bucketColumns.nonEmpty)
-      // align tasks to buckets before the bucketed write: without it
-      // every task writes a file per bucket it happens to hold (the
-      // upstream distinct partitions by ALL columns), so a load with T
-      // tasks emits up to T x partitionSize files — a file-count
-      // explosion at cluster scale. One batch-sized exchange caps the
-      // append at one file per bucket.
-      df.repartition(config.partitionSize, bucketColumns.map(col): _*)
-        .write
-        .bucketBy(config.partitionSize, bucketColumns.head, bucketColumns.tail: _*)
-        .mode(mode).saveAsTable(s"$database.`$name`")
-    else
-      df.write.mode(mode).saveAsTable(s"$database.`$name`")
-    // The input df may belong to a cloned session (streaming foreachBatch
-    // hands micro-batches from a clone); refresh on OUR session so later
-    // reads — including the next batch's dedup anti-join — see this
-    // write (the reference's REFRESH TABLE idiom, notebooks/load_raw.py:492).
-    spark.catalog.refreshTable(s"$database.`$name`")
+    BucketedStore.save(spark, s"$database.`$name`", creationLayout(bucketColumns),
+      df, "ignore")
   }
 
   def createHub(name: String, businessKeyColumns: Seq[ColumnDefinition]): Unit = {
@@ -618,7 +604,8 @@ class RawVault(
   def stageTable(name: String, source: String, hkeyColumns: Seq[String] = Nil): Unit = {
     val df = stageTableDf(source, hkeyColumns)
     val bucketCols = if (df.columns.contains(c.hkey)) Seq(c.hkey) else Nil
-    writeTable(df, config.stagingPreparedDatabase, name, bucketCols, "overwrite")
+    BucketedStore.save(spark, s"${config.stagingPreparedDatabase}.`$name`",
+      creationLayout(bucketCols), df, "overwrite")
   }
 
   // ---- hub + satellites + effectivity (RawVault.py:194-260) ----
@@ -641,23 +628,18 @@ class RawVault(
     loadEffectivitySatelliteFromPreparedStageDataframe(staged, effName)
     satellites.foreach(loadSatelliteFromPreparedStageDataframe(staged, _))
 
-    val newRows = newHubRows(staged, rawTable(hubName), businessKeyColumns)
-    writeTable(newRows, config.rawDatabase, hubName, Seq(c.hkey), "append")
+    append(hubName, newHubRows(staged, rawTable(hubName), businessKeyColumns))
   }
 
   def loadSatelliteFromPreparedStageDataframe(staged: DataFrame,
       satellite: SatelliteDefinition): Unit = {
-    val newRows = newSatelliteRows(staged, rawTable(satellite.name),
-      satellite.attributes.map(_.name), repartitionSize)
-    writeTable(newRows, config.rawDatabase, satellite.name,
-      Seq(c.hkey, c.loadDate), "append")
+    append(satellite.name, newSatelliteRows(staged, rawTable(satellite.name),
+      satellite.attributes.map(_.name)))
   }
 
   def loadEffectivitySatelliteFromPreparedStageDataframe(staged: DataFrame,
       effTableName: String): Unit = {
-    val newRows = newEffectivityRows(staged, rawTable(effTableName), repartitionSize)
-    writeTable(newRows, config.rawDatabase, effTableName,
-      Seq(c.hkey, c.loadDate), "append")
+    append(effTableName, newEffectivityRows(staged, rawTable(effTableName)))
   }
 
   // ---- 2-way FK link (RawVault.py:262-304,480-632) ----
@@ -699,9 +681,8 @@ class RawVault(
       stagedFromDf, fromForeignKey, toStaged, toHub, toSat, linkDf, effDf,
       fromHkeyColumnName, toHkeyColumnName)
 
-    writeTable(newLinkRows, config.rawDatabase, linkName, Seq(c.hkey), "append")
-    writeTable(newEffRows, config.rawDatabase, effName,
-      Seq(c.hkey, c.loadDate), "append")
+    append(linkName, newLinkRows)
+    append(effName, newEffRows)
     unpersist()
   }
 
@@ -732,7 +713,7 @@ class RawVault(
     loadEffectivitySatelliteFromPreparedStageDataframe(staged, effName)
     satellites.foreach(loadSatelliteFromPreparedStageDataframe(staged, _))
 
-    writeTable(newRows, config.rawDatabase, linkName, Seq(c.hkey), "append")
+    append(linkName, newRows)
   }
 
   // ---- reference tables (RawVault.py:710-911) ----
@@ -749,10 +730,8 @@ class RawVault(
   def loadReferences(stagedDf: DataFrame, referenceTableName: String,
       idColumn: String, attributes: Seq[String]): Unit = {
     val refName = c.refName(referenceTableName)
-    val newRows = newReferenceRows(stagedDf, rawTable(refName), idColumn,
-      attributes, repartitionSize)
-    writeTable(newRows, config.rawDatabase, refName,
-      Seq(idColumn, c.loadDate), "append")
+    append(refName, newReferenceRows(stagedDf, rawTable(refName), idColumn,
+      attributes))
   }
 
   def loadCodeReferencesFromPreparedStageTable(stagingTableName: String,
@@ -768,10 +747,8 @@ class RawVault(
   def loadCodeReferences(stagedDf: DataFrame, groupName: String,
       referenceTableName: String, idColumn: String, attributes: Seq[String]): Unit = {
     val refName = c.refName(referenceTableName)
-    val newRows = newCodeReferenceRows(stagedDf, rawTable(refName), groupName,
-      idColumn, attributes, repartitionSize)
-    writeTable(newRows, config.rawDatabase, refName,
-      Seq(c.group, idColumn, c.loadDate), "append")
+    append(refName, newCodeReferenceRows(stagedDf, rawTable(refName), groupName,
+      idColumn, attributes))
   }
 
   /** Multi-table code-reference load from raw source files
@@ -784,27 +761,24 @@ class RawVault(
   }
 
   /** Multi-table code-reference load (RawVault.py:835-872): one pass per
-    * staging table, pre-shuffled by group. */
+    * staging table, pre-shuffled by group. Each batch aligns to the raw
+    * table's buckets, not to the group-partitioned cache of it. */
   def loadCodeReferencesFromMultiplePreparedStageTables(stagingTableNames: Seq[String],
       referenceTableName: String, idColumn: String, attributes: Seq[String]): Unit = {
     val refName = c.refName(referenceTableName)
-    val refDf = rawTable(refName)
-      .repartition(stagingTableNames.size, col(c.group))
-      .cache()
+    val raw = rawTable(refName)
+    val refDf = raw.repartition(stagingTableNames.size, col(c.group)).cache()
     val newRows = stagingTableNames.map { name =>
       val staged = stagedTable(name)
         .withColumn(c.group, lit(name.toLowerCase))
         .withColumn(c.hdiff, Dv.hashNames(attributes))
         .select(refDf.columns.toSeq.map(col): _*)
         .dropDuplicates(Seq(idColumn, c.group, c.loadDate))
-      val pre = repartitionSize
-        .map(n => staged.repartition(n, col(c.group), col(idColumn), col(c.loadDate)))
-        .getOrElse(staged)
-      RawVaultOps.antiExisting(pre, refDf, Seq(idColumn, c.group, c.loadDate))
+      RawVaultOps.antiExisting(alignedTo(raw, staged), refDf,
+          Seq(idColumn, c.group, c.loadDate))
         .distinct()
     }.reduce(_ union _)
-    writeTable(newRows, config.rawDatabase, refName,
-      Seq(c.group, idColumn, c.loadDate), "append")
+    append(refName, newRows)
     refDf.unpersist(blocking = false)
   }
 }

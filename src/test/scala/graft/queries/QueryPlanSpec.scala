@@ -441,23 +441,59 @@ class QueryPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed vault sides of the hub+sat dedup anti-joins arrive shuffle-free") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.StringType
-    import graft.vault._
-    import spark.implicits._
-    // SCALING.md's core claim for the loaders: writeTable buckets vault
-    // tables by the dedup keys, so the anti-join's vault side is a
-    // bucket scan needing no Exchange — only the batch shuffles.
-    // Broadcast + AQE off so the shuffled path is what gets planned.
+  /** Run `body` with broadcast joins and AQE off, so a join plans its
+    * shuffled path and the executed plan is the compiled one. */
+  private def withShuffledJoins[T](body: => T): T = {
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevA = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try body
+    finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+      spark.conf.set("spark.sql.adaptive.enabled", prevA)
+    }
+  }
+
+  /** `df`'s dedup anti-join reads its vault side as a bucketed scan with
+    * no Exchange; only the batch side shuffles, to the vault's bucket
+    * partitioning. */
+  private def assertVaultSideUnshuffled(df: DataFrame, what: String): Unit = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val anti = flatten(plan).collectFirst {
+      case j: BaseJoinExec if j.joinType.toString == "LeftAnti" => j }
+    assert(anti.isDefined, s"$what: no anti join in:\n$plan")
+    val vaultSide = flatten(anti.get.right)
+    assert(vaultSide.collectFirst { case f: FileSourceScanExec
+        if f.relation.bucketSpec.isDefined => f }.isDefined,
+      s"$what: vault side is not a bucketed scan:\n${anti.get.right}")
+    assert(!vaultSide.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"$what: vault side re-shuffled despite bucketBy:\n${anti.get.right}")
+    assert(flatten(anti.get.left).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"$what: batch side should shuffle to the vault's bucket partitioning")
+  }
+
+  /** The data files under `table`'s catalog location. */
+  private def dataFiles(table: String): Int = {
+    val dir = new java.io.File(java.net.URI.create(
+      graft.operators.BucketedStore.metadata(spark, table).location.toString))
+    Option(dir.listFiles()).toSeq.flatten.count(_.getName.endsWith(".parquet"))
+  }
+
+  test("bucketed vault sides of the hub+sat dedup anti-joins arrive shuffle-free") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.StringType
+    import graft.vault._
+    import spark.implicits._
+    // SCALING.md's core claim for the loaders: BucketedStore.save buckets
+    // vault tables by the dedup keys, so the anti-join's vault side is a
+    // bucket scan needing no Exchange — only the batch shuffles.
+    // Broadcast + AQE off so the shuffled path is what gets planned.
+    withShuffledJoins {
       val config = RawVaultConfig(
         stagingBasePath = graft.TestScratch.dir("graft-bkt"),
         stagingPreparedDatabase = "plan_bkt_stg",
@@ -476,23 +512,6 @@ class QueryPlanSpec extends AnyFunSuite {
         "plan_bkt", "LOAD_DATE", "OPERATION", Seq("PublicID"))
       vault.loadHub(prepared(0 until 50), "ENTITY", Seq("PublicID"),
         Seq(SatelliteDefinition(c.satName("ENTITY"), nameAttr)))
-
-      def assertVaultSideUnshuffled(df: org.apache.spark.sql.DataFrame,
-          what: String): Unit = {
-        df.collect()
-        val plan = df.queryExecution.executedPlan
-        val anti = flatten(plan).collectFirst {
-          case j: BaseJoinExec if j.joinType.toString == "LeftAnti" => j }
-        assert(anti.isDefined, s"$what: no anti join in:\n$plan")
-        val vaultSide = flatten(anti.get.right)
-        assert(vaultSide.collectFirst { case f: FileSourceScanExec
-            if f.relation.bucketSpec.isDefined => f }.isDefined,
-          s"$what: vault side is not a bucketed scan:\n${anti.get.right}")
-        assert(!vaultSide.exists(_.isInstanceOf[ShuffleExchangeExec]),
-          s"$what: vault side re-shuffled despite bucketBy:\n${anti.get.right}")
-        assert(flatten(anti.get.left).exists(_.isInstanceOf[ShuffleExchangeExec]),
-          s"$what: batch side should shuffle to the vault's bucket partitioning")
-      }
 
       val stamped = RawVaultOps.stampForLoad(prepared(25 until 75), "plan_bkt", clock)
       // the write is task-aligned to buckets: one load appends at most
@@ -516,10 +535,67 @@ class QueryPlanSpec extends AnyFunSuite {
       // satellite: anti-join on (HKEY, LOAD_DATE), bucketed by both
       assertVaultSideUnshuffled(RawVaultOps.newSatelliteRows(stamped,
         spark.table(s"${config.rawDatabase}.`${c.satName("ENTITY")}`"),
-        Seq("NAME"), Some(config.partitionSize)), "satellite")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
+        Seq("NAME")), "satellite")
+    }
+  }
+
+  test("vault loads take each table's bucket layout from the catalog, not the config") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.StringType
+    import graft.operators.BucketedStore
+    import graft.vault._
+    import spark.implicits._
+    withShuffledJoins {
+      val created = RawVaultConfig(
+        stagingBasePath = graft.TestScratch.dir("graft-layout"),
+        stagingPreparedDatabase = "plan_layout_stg",
+        rawDatabase = "plan_layout_raw",
+        partitionSize = 4)
+      implicit val c: Conventions = created.conventions
+      val clock = lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+      val nameAttr = Seq(ColumnDefinition("NAME", StringType))
+      val sat = SatelliteDefinition(c.satName("ENTITY"), nameAttr)
+      val creator = new RawVault(spark, created, "plan_layout", clock)
+      creator.initializeDatabase()
+      creator.createHub("ENTITY", Seq(ColumnDefinition("PublicID", StringType)))
+      creator.createSatellite("ENTITY", nameAttr)
+      creator.createCodeReferenceTable("CODES",
+        ColumnDefinition("CODE", StringType), nameAttr)
+      val tables = Seq(c.hubName("ENTITY"), c.satName("ENTITY"),
+        c.effectivitySatName(c.hubName("ENTITY")), c.refName("CODES"))
+        .map(t => s"${created.rawDatabase}.`$t`")
+
+      def batch(ids: Range, day: Int) =
+        ids.map(i => (0, java.sql.Timestamp.valueOf(s"2024-01-0$day 00:00:00"),
+            s"e$i", s"name$i"))
+          .toDF("OPERATION", "LOAD_DATE", "PublicID", "NAME")
+      // a re-configured vault over the same databases: 8 buckets, then
+      // none — each load must follow the tables' 4-bucket catalog spec
+      for ((config, day) <- Seq(created.copy(partitionSize = 8) -> 2,
+          created.copy(optimizePartitioning = false) -> 3)) {
+        val vault = new RawVault(spark, config, "plan_layout", clock)
+        val before = tables.map(dataFiles)
+        val rows = batch(day * 20 until day * 20 + 40, day)
+        vault.loadHub(RawVaultOps.prepareStaged(rows, "plan_layout",
+          "LOAD_DATE", "OPERATION", Seq("PublicID")), "ENTITY", Seq("PublicID"),
+          Seq(sat))
+        vault.loadCodeReferences(RawVaultOps.prepareStaged(
+            rows.withColumnRenamed("PublicID", "CODE"), "plan_layout",
+            "LOAD_DATE", "OPERATION"),
+          "CODES_SRC", "CODES", "CODE", Seq("NAME"))
+        for ((t, n) <- tables.zip(before)) {
+          assert(BucketedStore.catalogLayout(spark, t).map(_.buckets)
+            .contains(4), s"$t lost its 4-bucket spec in a load through $config")
+          val added = dataFiles(t) - n
+          assert(added >= 1 && added <= 4,
+            s"$t: a load through $config added $added files to 4 buckets")
+        }
+        val stamped = RawVaultOps.stampForLoad(RawVaultOps.prepareStaged(
+          batch(0 until 100, 9), "plan_layout", "LOAD_DATE", "OPERATION",
+          Seq("PublicID")), "plan_layout", clock)
+        assertVaultSideUnshuffled(RawVaultOps.newSatelliteRows(stamped,
+          spark.table(tables(1)), Seq("NAME")), s"satellite via $config")
+      }
     }
   }
 

@@ -176,7 +176,7 @@ class CuratedSpec extends AnyFunSuite {
       Seq("PublicID", "ClaimNumber", "CreateUserID"))
     curated.joinUserInformation(claims).collect()
     // a NEW user + credential arrive through the normal load path
-    // (writeTable refreshes the catalog, which recaches dependent plans)
+    // (every vault write refreshes the catalog, which recaches dependent plans)
     val t1 = Timestamp.valueOf("2024-03-02 00:00:00")
     writeBatch("USER", df(entitySchema("ID" -> IntegerType),
       Row(0, t1, "u3", Integer.valueOf(300))))
