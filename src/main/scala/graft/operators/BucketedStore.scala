@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The one storage lifecycle behind every persisted index family: the
   * band index, keyed side tables, the IVF index, PQ codes and the
@@ -21,12 +22,15 @@ import org.apache.spark.sql.functions._
   *  - '''rebuild''' — drop the table and its tombstones, write one
   *    task-aligned file per bucket, stamp the vector width;
   *  - '''append''' — at-least-once delivery, exactly-once table effect:
-  *    the batch's keys become planning-time literals, the idempotence
-  *    lookup is compiled inside the conf window, asserted to
-  *    bucket-prune and checkpointed, and only the rows it does not find
-  *    are appended in the catalog's layout;
+  *    the batch's keys become planning-time literals, and ONE read —
+  *    the idempotence lookup, compiled inside the conf window and
+  *    asserted to bucket-prune, beside the tombstone guard — is
+  *    collected, bounded by the batch's keys; only the rows it did not
+  *    find are appended, in the catalog's layout (no checkpoint);
   *  - '''tombstones''' — logical deletes in a `__tombstones` side table,
-  *    excluded by every probe before ranking, refused on re-append;
+  *    excluded by every probe before ranking, refused on re-append,
+  *    written from one capped driver-side read of the delete set and
+  *    the pending set;
   *  - '''compact''' — fold every bucket back to one file, applying the
   *    pending tombstones, committed through [[StagedReplace]].
   *
@@ -221,33 +225,16 @@ private[graft] object BucketedStore {
     * is each family's idempotence unit — the id for the band index
     * (a doc's bands land together), (cid, id) for IVF and PQ, the key
     * for keyed tables and the vector store; its last column is the id
-    * the tombstone guard checks. `rows` are persisted (the collected
-    * literals must be exactly the rows the anti-join later filters — a
-    * re-executed non-deterministic source could otherwise slip
-    * uncollected keys past the lookup) and their keys collected under
-    * `maxKeys` (`capName` names the caller's bound). */
+    * the tombstone guard checks. The caller persists `rows` and
+    * collects their [[lookupCols]] as `keyRows` under its own bound —
+    * the collected literals must be exactly the rows the anti-join
+    * later filters (a re-executed non-deterministic source could
+    * otherwise slip uncollected keys past the lookup), and a family's
+    * guards ride that one collect. Refuses a null key — the anti-join
+    * never matches null, so a null-keyed row would re-append on every
+    * redelivery — and a tombstoned id ([[freshRows]]). An empty key set
+    * writes nothing. */
   def append(spark: SparkSession, table: String, layout: Layout,
-      grain: Seq[String], rows: DataFrame, maxKeys: Int, capName: String,
-      context: String): Unit = {
-    val p = rows.persist()
-    try {
-      val keyRows = DriverBounded.collectCapped(
-        p.select(lookupCols(layout, grain).map(col): _*), maxKeys,
-        s"$context: micro-batch exceeds $capName $maxKeys (the batch's " +
-          "keys become planning-time point-lookup literals); split the " +
-          "batch or raise the bound deliberately")
-      appendCollected(spark, table, layout, grain, p, keyRows.toSeq,
-        context)
-    } finally { p.unpersist(blocking = false); () }
-  }
-
-  /** [[append]] for rows the caller already persisted and whose
-    * [[lookupCols]] it already collected (resolve-at-ingest's winners,
-    * the keyed append's literal form). Refuses a null key — the
-    * anti-join never matches null, so a null-keyed row would re-append
-    * on every redelivery — and a tombstoned id. An empty key set writes
-    * nothing. */
-  def appendCollected(spark: SparkSession, table: String, layout: Layout,
       grain: Seq[String], rows: DataFrame, keyRows: Seq[Row],
       context: String): Unit = {
     val cols = lookupCols(layout, grain)
@@ -255,12 +242,9 @@ private[graft] object BucketedStore {
       s"$context: null ${cols(i)} key in the batch — the idempotence " +
         "anti-join never matches null, so a null-keyed row would " +
         "re-append on every redelivery; filter or key-derive upstream")
-    if (keyRows.nonEmpty) {
-      requireNotTombstoned(spark, table, grain.last,
-        keyRows.map(_.get(cols.indexOf(grain.last))).distinct, context)
+    if (keyRows.nonEmpty)
       appendRows(spark, table, layout,
         freshRows(spark, table, layout, grain, rows, keyRows, context)._1)
-    }
   }
 
   /** The columns an append collects as literals: the grain plus the
@@ -269,26 +253,54 @@ private[graft] object BucketedStore {
     (grain ++ layout.bucketCols).distinct
 
   /** The append's idempotence core: `rows` minus the grain keys already
-    * in `table`, found by point lookups — the collected `keyRows` (the
-    * rows' [[lookupCols]]) re-enter the plan as literals, so the scan
-    * opens only the batch's buckets with the filters pushed to parquet,
-    * and the lookup is pinned ([[compileAndPinBucketedScan]]), so the
-    * anti-join derives from batch-proportional rows, never from the
-    * table being appended to. A plain anti-join against the table is
-    * not this shape: the planner re-shuffles the whole table on the
-    * grain (hash(cid) buckets do not co-partition a (cid, id) join).
-    * Returns the fresh rows and the lookup frame whose plan was pinned. */
+    * in `table`, decided on the driver from ONE read. The collected
+    * `keyRows` (the rows' [[lookupCols]]) re-enter the plan as
+    * literals, so the lookup opens only the batch's buckets with the
+    * filters pushed to parquet; beside it, the batch's ids probe the
+    * (configuration-sized) tombstone side table. The read is pinned
+    * ([[pinBucketedScan]]) and collected — at most the batch's keys
+    * plus its tombstoned ids — so a tombstoned id refuses before
+    * anything is written (the idempotence anti-join would see the
+    * still-present old row, absorb the new version, and the DELETED
+    * value would serve again), and the rows it found re-enter as a
+    * broadcast local frame: the anti-join never touches the table being
+    * appended to. A plain anti-join against the table is not this
+    * shape: the planner re-shuffles the whole table on the grain
+    * (hash(cid) buckets do not co-partition a (cid, id) join). Returns
+    * the fresh rows and the read whose plan was pinned. */
   def freshRows(spark: SparkSession, table: String, layout: Layout,
       grain: Seq[String], rows: DataFrame, keyRows: Seq[Row],
       context: String): (DataFrame, DataFrame) = {
     val cols = lookupCols(layout, grain)
     val values = cols.indices.map(i => keyRows.map(_.get(i)).distinct)
+    val idCol = grain.last
     val lookup = spark.table(table)
       .filter(cols.zip(values)
         .map { case (c, vs) => col(c).isin(vs: _*) }.reduce(_ && _))
-      .select(grain.map(col): _*)
-    (rows.join(compileAndPinBucketedScan(spark, lookup, table,
-      reliable = false, context), grain, "left_anti"), lookup)
+      .select(grain.map(col) :+ lit(false).as("__tomb"): _*)
+    val tomb = tombstoneTable(table)
+    val read =
+      if (!spark.catalog.tableExists(tomb)) lookup
+      else {
+        val t = spark.table(tomb)
+        lookup.unionByName(t.filter(col(t.columns.head)
+            .isin(values(cols.indexOf(idCol)): _*))
+          .select(col(t.columns.head).as(idCol), lit(true).as("__tomb")),
+          allowMissingColumns = true)
+      }
+    val (tombstoned, found) = pinBucketedScan(spark, read, table, context)(
+      _.collect()).partition(_.getBoolean(grain.size))
+    require(tombstoned.isEmpty,
+      s"$context: batch $idCol '${tombstoned.headOption.map(
+        _.get(grain.size - 1)).orNull}' is tombstoned in $table — a " +
+        "deleted id cannot re-enter until the delete is physically " +
+        "applied (the idempotence anti-join would silently resurrect " +
+        "the old row); run the family's compact first")
+    val existing = spark.createDataFrame(
+      java.util.Arrays.asList(
+        found.map(r => Row(r.toSeq.init: _*)).distinct: _*),
+      StructType(read.schema.fields.init))
+    (rows.join(broadcast(existing), grain, "left_anti"), read)
   }
 
   /** Append `rows` in the table's catalog layout (bucket count, hash
@@ -335,28 +347,6 @@ private[graft] object BucketedStore {
     }
   }
 
-  /** Loud re-append guard: a tombstoned id cannot re-enter until its
-    * delete is physically applied — the idempotence anti-join would see
-    * the still-present old row, absorb the new version, and the DELETED
-    * value would serve again. The batch's collected `ids` probe the
-    * (configuration-sized) side table as literals: one tiny read, only
-    * when a side table exists. */
-  private def requireNotTombstoned(spark: SparkSession, table: String,
-      idCol: String, ids: Seq[Any], context: String): Unit = {
-    val tomb = tombstoneTable(table)
-    if (spark.catalog.tableExists(tomb)) {
-      val t = spark.table(tomb)
-      val hit = t.filter(col(t.columns.head).isin(ids: _*))
-        .limit(1).collect()
-      require(hit.isEmpty,
-        s"$context: batch $idCol '${hit.headOption.map(_.get(0)).orNull}' " +
-          s"is tombstoned in $table — a deleted id cannot re-enter until " +
-          "the delete is physically applied (the idempotence anti-join " +
-          "would silently resurrect the old row); run the family's " +
-          "compact first")
-    }
-  }
-
   /** Ids logically deleted from `table` but not yet applied, as an
     * `idCol` frame — typed like the table's id column when no side
     * table exists yet. */
@@ -372,44 +362,47 @@ private[graft] object BucketedStore {
     else spark.range(0).select(col("id").as(idCol)).limit(0)
   }
 
-  /** Tombstone `ids` (an `idCol` frame) in `table`: distinct, anti-joined
-    * against the pending set (re-deleting is a no-op), one tiny file per
-    * call. Tombstones broadcast into every probe, so the pending set
-    * must stay configuration-sized: ONE bounded probe refuses a null id
-    * (it would delete nothing) and a pending set past `cap` BEFORE
-    * anything is written (`capName` names the caller's bound). Under
-    * the maintenance lock, so a compaction's read-apply-truncate never
-    * interleaves with it. A crash mid-write leaves partial tombstones
-    * the retry's anti-join completes. */
+  /** Tombstone `ids` (an `idCol` frame) in `table`, decided on the
+    * driver: tombstones broadcast into every probe, so the pending set
+    * must stay configuration-sized, and both sets this needs are read
+    * under `cap` — the distinct delete set, then (under the maintenance
+    * lock, so a compaction's read-apply-truncate never interleaves) the
+    * pending set. A null id (it would delete nothing) and a pending set
+    * past `cap` refuse BEFORE anything is written (`capName` names the
+    * caller's bound); ids already pending are skipped (re-deleting is a
+    * no-op), and the fresh ones land as one tiny file. A crash
+    * mid-write leaves partial tombstones the retry skips. */
   def addTombstones(spark: SparkSession, table: String, ids: DataFrame,
-      idCol: String, cap: Int, capName: String, context: String): Unit =
+      idCol: String, cap: Int, capName: String, context: String): Unit = {
+    def overCap =
+      s"$context: pending deletes for $table would exceed $cap — " +
+        "tombstones broadcast into every probe, so they must stay " +
+        "configuration-sized; run the family's compact to apply and " +
+        s"clear them, or raise $capName deliberately"
+    val del = ids.select(col(idCol))
+    val delRows = DriverBounded.collectCapped(del.distinct(), cap, overCap)
+    require(!delRows.exists(_.isNullAt(0)),
+      s"$context: null $idCol in the delete set — the probe exclusion " +
+        "anti-join never matches null, so a null tombstone would " +
+        "silently delete nothing; filter upstream")
     withBandLock {
       val tomb = tombstoneTable(table)
       val exists = spark.catalog.tableExists(tomb)
-      val storedId = if (exists) spark.table(tomb).columns.head else idCol
-      val del = ids.select(col(idCol)).distinct()
       val pending =
-        if (exists) spark.table(tomb).select(col(storedId).as(idCol))
-        else del.limit(0)
-      val fresh = del.join(pending, Seq(idCol), "left_anti")
-      val probe = pending.select(lit(false).as("__null"))
-        .union(fresh.select(col(idCol).isNull.as("__null")))
-        .limit(cap + 1)
-        .agg(count(lit(1)), coalesce(max(col("__null")), lit(false)))
-        .head()
-      require(!probe.getBoolean(1),
-        s"$context: null $idCol in the delete set — the probe exclusion " +
-          "anti-join never matches null, so a null tombstone would " +
-          "silently delete nothing; filter upstream")
-      require(probe.getLong(0) <= cap,
-        s"$context: pending deletes for $table would exceed $cap — " +
-          "tombstones broadcast into every probe, so they must stay " +
-          "configuration-sized; run the family's compact to apply and " +
-          s"clear them, or raise $capName deliberately")
-      fresh.select(col(idCol).as(storedId))
-        .coalesce(1).write.mode("append").saveAsTable(tomb)
-      spark.catalog.refreshTable(tomb)
+        if (!exists) Set.empty[Any]
+        else DriverBounded.collectCapped(spark.table(tomb), cap, overCap)
+          .map(_.get(0)).toSet
+      val fresh = delRows.filterNot(r => pending.contains(r.get(0)))
+      require(pending.size + fresh.length <= cap, overCap)
+      if (fresh.nonEmpty || !exists) {
+        val storedId = if (exists) spark.table(tomb).columns.head else idCol
+        spark.createDataFrame(java.util.Arrays.asList(fresh: _*),
+            StructType(Seq(del.schema(0).copy(name = storedId))))
+          .coalesce(1).write.mode("append").saveAsTable(tomb)
+        spark.catalog.refreshTable(tomb)
+      }
     }
+  }
 
   // ---- compact
 

@@ -688,32 +688,28 @@ object Dedup {
     DriverBounded.labeled(spark, s"appendToBandIndex:$table") {
       val layout = BucketedStore.open(spark, table, "appendToBandIndex",
         Some("band"))
-      BucketedStore.append(spark, table, layout, Seq(idCol),
-        batchBands(batch, textCol, idCol, k, bandWidth, shingleSize),
-        maxBatchBands, "maxBatchBands", "appendToBandIndex")
+      val (bandedDf, bandRows) = freshBatchBands(batch, textCol, idCol, k,
+        bandWidth, shingleSize, maxBatchBands, "appendToBandIndex")
+      try BucketedStore.append(spark, table, layout, Seq(idCol), bandedDf,
+        bandRows.toSeq, "appendToBandIndex")
+      finally { bandedDf.unpersist(blocking = false); () }
     }
   }
 
-  /** A batch's (id, band) rows, banded once per distinct id. */
-  private def batchBands(batch: DataFrame, textCol: String, idCol: String,
-      k: Int, bandWidth: Int, shingleSize: Int): DataFrame =
-    lshBands(
-      minHashSignatures(batch.dropDuplicates(Seq(idCol)), textCol, idCol,
-        k, shingleSize),
-      idCol, k, bandWidth)
-
-  /** Shared probe scaffolding: the batch banded once, persisted (the
-    * collected literals must be the exact rows the joins later see;
-    * the caller unpersists), and its (id, band) rows collected under
-    * the `maxBatchBands` bound — callers derive their id/band literal
-    * sets from the rows (resolve-at-ingest additionally filters them
+  /** Shared probe and append scaffolding: the batch banded once per
+    * distinct id, persisted (the collected literals must be the exact
+    * rows the joins later see; the caller unpersists), and its
+    * (id, band) rows collected under the `maxBatchBands` bound — the
+    * store append's key rows, from which the probes derive their
+    * id/band literal sets (resolve-at-ingest additionally filters them
     * to the delivery's winners, driver-side). */
   private def freshBatchBands(batch: DataFrame, textCol: String,
       idCol: String, k: Int, bandWidth: Int, shingleSize: Int,
       maxBatchBands: Int, context: String)
       : (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    val banded = batchBands(batch, textCol, idCol, k, bandWidth,
-      shingleSize).persist()
+    val banded = lshBands(minHashSignatures(batch.dropDuplicates(
+      Seq(idCol)), textCol, idCol, k, shingleSize), idCol, k, bandWidth)
+      .persist()
     (banded, DriverBounded.collectCapped(banded, maxBatchBands,
       s"$context: micro-batch exceeds maxBatchBands $maxBatchBands (the " +
         "batch's bands become planning-time point-lookup literals); " +
@@ -875,7 +871,8 @@ object Dedup {
     * the banding collect), the winner ids come from one bounded
     * collect over the checkpointed resolution rows, and the coverage
     * guard rides the pairs checkpoint. */
-  private def resolveAtIngest(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def resolveAtIngest(
+      spark: org.apache.spark.sql.SparkSession,
       table: String, batch: DataFrame, textCol: String, idCol: String,
       scoreCol: String,
       attachScores: (DataFrame, DataFrame) => DataFrame,
@@ -938,15 +935,13 @@ object Dedup {
       // the resolution is batch-grain — one row per batch doc, bounded
       // by the banding collect's own cap — so it comes back as ONE
       // bounded collect and re-enters as a LocalRelation: the returned
-      // frame, the winner id literals, and the tombstone-skip decision
+      // frame, the winner semi-joins, and the tombstone-skip decision
       // all read the same driver rows
       val resolvedRows = DriverBounded.collectCapped(resolvedPlan,
         maxBatchBands,
         "resolveAtIngest: resolution rows exceed maxBatchBands")
       val resolved = spark.createDataFrame(
         java.util.Arrays.asList(resolvedRows: _*), resolvedPlan.schema)
-      val winnerIds = resolvedRows.filter(_.getBoolean(2))
-        .map(_.get(0)).toSeq
       // tombstones: the superseded index docs, skipped entirely when no
       // winner had a candidate (nothing can be superseded); the cap is
       // enforced before the write, so an over-cap delivery changes
@@ -958,18 +953,23 @@ object Dedup {
             .select(col("index_id").as(idCol)),
           idCol, maxPendingTombstones, "maxPendingTombstones",
           "ingestResolveNearDups")
+      val winnerIds =
+        resolvedRows.filter(_.getBoolean(2)).map(_.get(0)).toSet
       if (winnerIds.nonEmpty) {
         // the winners' bands are the SAME persisted banding the probe
         // used (deterministic pipeline, so a replayed winner finds its
         // identical bands and appends nothing); a winner superseded
         // THIS delivery (a batch doc whose id is also an index doc
-        // another winner beat) trips the store's re-entry guard
-        val winnerIdSet = winnerIds.toSet
-        BucketedStore.appendCollected(spark, table, layout, Seq(idCol),
-          bandedDf.filter(col(idCol).isin(winnerIds: _*)),
-          bandRows.filter(r => winnerIdSet.contains(r.get(0))).toSeq,
+        // another winner beat) trips the store's re-entry guard. The
+        // winners select rows by a broadcast semi-join against the
+        // local resolution rows, never by a list of id literals
+        val winners =
+          broadcast(resolved.filter(col("kept")).select(col(idCol)))
+        BucketedStore.append(spark, table, layout, Seq(idCol),
+          bandedDf.join(winners, Seq(idCol), "left_semi"),
+          bandRows.filter(r => winnerIds.contains(r.get(0))).toSeq,
           "appendToBandIndex")
-        onWinners(batch.filter(col(idCol).isin(winnerIds: _*)))
+        onWinners(batch.join(winners, Seq(idCol), "left_semi"))
       }
       resolved
     } finally { bandedDf.unpersist(blocking = false); () }
@@ -1119,7 +1119,7 @@ object Dedup {
         require(keys.distinct.length == keys.length,
           s"appendToKeyedTable: batch has duplicate $keyCol keys — " +
             DuplicateKeyWhy)
-        BucketedStore.appendCollected(spark, table, layout, Seq(keyCol),
+        BucketedStore.append(spark, table, layout, Seq(keyCol),
           b, headRows.toSeq, "appendToKeyedTable")
       }
     } finally { b.unpersist(blocking = false); () }

@@ -66,9 +66,11 @@ object Similarity {
       maxCentroids: Int = 4096): DataFrame =
     assignWith(base,
       collectCodebook(centroids, idCol, maxCentroids, "assignToCentroids"),
-      idCol)
+      idCol).filter(col("cid").isNotNull)
 
-  /** [[assignToCentroids]] against an already-collected codebook. */
+  /** [[assignToCentroids]] against an already-collected codebook, KEEPING
+    * the rows `graft_argmax_cos` cannot score (null `cid`), so an append
+    * can refuse them instead of dropping them. */
   private def assignWith(base: DataFrame, cb: Codebook,
       idCol: String): DataFrame = {
     import org.apache.spark.sql.Row
@@ -82,7 +84,7 @@ object Similarity {
     base.withColumn("__ci", call_function("graft_argmax_cos",
         col("v"), col("nrm"), typedlit(cb.vecs.map(_.toSeq).toSeq),
         typedlit(cb.norms.toSeq)))
-      .join(broadcast(indexDf), Seq("__ci"))
+      .join(broadcast(indexDf), Seq("__ci"), "left")
       .select(col(idCol), col("__cid").as("cid"), col("v"), col("nrm"))
   }
 
@@ -668,35 +670,73 @@ object Similarity {
     * is assigned against the index's FIXED centroid codebook — the
     * geometry never drifts mid-stream; retraining is a batch
     * [[buildIvfIndex]] rebuild — and appended at (cid, id) grain by
-    * [[BucketedStore.append]]: zero-shuffle argmax assignment, then
+    * [[appendVectors]]: zero-shuffle argmax assignment, then
     * bucket-pruned point-lookup idempotence, O(batch) at any index
     * size. `buckets` must equal the table's bucket count (the write
     * reads the layout from the catalog; a different count fails here,
     * before anything is written). */
   def appendToIvfIndex(batch: DataFrame, table: String,
       centroids: DataFrame, idCol: String, buckets: Int = 32,
-      maxBatchIds: Int = 1 << 20): Unit = {
+      maxBatchIds: Int = 1 << 20): Unit =
+    appendVectors(batch, table, idCol, "cid", "appendToIvfIndex",
+        maxBatchIds) { layout =>
+      val spark = batch.sparkSession
+      require(buckets == layout.buckets,
+        s"appendToIvfIndex: buckets = $buckets, but $table has " +
+          s"${layout.buckets} buckets — appends keep the table's own " +
+          "layout; pass the count the index was built with")
+      // codebook identity (the first append stamps it) and width: a
+      // narrower codebook would admit narrower batch vectors into a
+      // wider index, poisoning every later probe's similarities
+      val cb = requireCodebook(spark, table, centroids, idCol,
+        "appendToIvfIndex", BucketedStore.storedDim(spark, table, "v"),
+        writer = true)
+      (cb.dim, assignWith(_, cb, idCol))
+    }
+
+  /** The one body of every vector append ([[appendToIvfIndex]],
+    * [[appendToPqIndex]], [[appendToVectorStore]]): open the table
+    * (bucketed by `key`), let the family `prepare` its checks against
+    * the layout — returning the table's vector width (0: an empty store
+    * stamped with none) and its projection — then one row per id (an
+    * at-least-once source can redeliver inside a single micro-batch,
+    * and the table anti-join cannot see rows that are not in the table
+    * yet; multiple VERSIONS of an id resolve latest-wins upstream),
+    * projected, keeping `v`, `nrm` and every row, and persisted. The
+    * vector guard rides the (key, id) collect: a vector that is null,
+    * not `dim` wide, or holds a null element (one `graft_argmax_cos`
+    * cannot score) refuses the whole batch before anything is
+    * written, where the assignment would drop it and a probe null its
+    * similarities. The table's own columns are then appended at
+    * (key, id) grain ([[BucketedStore.append]]). */
+  private def appendVectors(batch: DataFrame, table: String, idCol: String,
+      key: String, context: String, maxBatchIds: Int)(
+      prepare: BucketedStore.Layout => (Int, DataFrame => DataFrame))
+      : Unit = {
+    import org.apache.spark.sql.Row
     val spark = batch.sparkSession
-    val layout = BucketedStore.open(spark, table, "appendToIvfIndex",
-      Some("cid"))
-    require(buckets == layout.buckets,
-      s"appendToIvfIndex: buckets = $buckets, but $table has " +
-        s"${layout.buckets} buckets — appends keep the table's own " +
-        "layout; pass the count the index was built with")
-    // codebook identity (the first append stamps it) and width: a
-    // narrower codebook would admit narrower batch vectors into a
-    // wider index, poisoning every later probe's similarities
-    val cb = requireCodebook(spark, table, centroids, idCol,
-      "appendToIvfIndex", BucketedStore.storedDim(spark, table, "v"),
-      writer = true)
-    // one row per id within the batch: an at-least-once source can
-    // redeliver inside a single micro-batch, and the table anti-join
-    // cannot see rows that are not in the table yet (a stream carrying
-    // multiple VERSIONS of an id per batch resolves latest-wins
-    // upstream, the assignToCentroids unique-id contract)
-    BucketedStore.append(spark, table, layout, Seq("cid", idCol),
-      assignWith(batch.dropDuplicates(Seq(idCol)), cb, idCol),
-      maxBatchIds, "maxBatchIds", "appendToIvfIndex")
+    val layout = BucketedStore.open(spark, table, context, Some(key))
+    val (dim, project) = prepare(layout)
+    val grain = Seq(key, idCol).distinct
+    val usable = coalesce(col("nrm").isNotNull &&
+      !exists(col("v"), _.isNull) && (size(col("v")) === dim || dim == 0),
+      lit(false))
+    val p = project(batch.dropDuplicates(Seq(idCol))).persist()
+    try {
+      val keyRows = DriverBounded.collectCapped(
+        p.select(grain.map(col) :+ usable: _*), maxBatchIds,
+        s"$context: micro-batch exceeds maxBatchIds $maxBatchIds (the " +
+          "batch's keys become planning-time point-lookup literals); " +
+          "split the batch or raise the bound deliberately")
+      require(keyRows.forall(r => r.getBoolean(r.length - 1)),
+        s"$context: a batch vector's width differs from the index's " +
+          s"($dim), or it is null or holds a null element — it would " +
+          "null every similarity, bucket and code it enters; encode the " +
+          "batch with the index's embedding dimension")
+      BucketedStore.append(spark, table, layout, grain,
+        p.select(spark.table(table).columns.map(col).toIndexedSeq: _*),
+        keyRows.map(r => Row(r.toSeq.init: _*)).toSeq, context)
+    } finally { p.unpersist(blocking = false); () }
   }
 
   /** Fold a [[buildIvfIndex]] table back to one file per bucket,
@@ -926,48 +966,32 @@ object Similarity {
     * at the STORE's own stamped width — read from the catalog
     * ([[PrefixDimsProp]]), so a batch can never mis-slice against a
     * store built with a different `prefixDims` — and is appended at id
-    * grain by [[BucketedStore.append]] (bucket-pruned point-lookup
+    * grain by [[appendVectors]] (bucket-pruned point-lookup
     * idempotence, O(batch) per delivery at any store size). Batch
     * vectors must match the store's stamped width: a mismatched row
     * would null every similarity it later appears in, so the append
-    * refuses loudly up front. */
+    * refuses loudly before writing. */
   def appendToVectorStore(batch: DataFrame, table: String, idCol: String,
-      maxBatchIds: Int = 1 << 20): Unit = {
-    val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val layout = BucketedStore.open(spark, table, "appendToVectorStore",
-      Some(idCol))
-    val dim = BucketedStore.storedDim(spark, table, "v")
-    if (dim > 0) {
-      val bad = batch.filter(size(col("v")) =!= dim).limit(1).collect()
-      require(bad.isEmpty,
-        s"appendToVectorStore: a batch vector's width differs from the " +
-          s"store's ($dim) — an appended wrong-width row would null " +
-          "every similarity it later appears in; encode the batch with " +
-          "the store's embedding dimension")
+      maxBatchIds: Int = 1 << 20): Unit =
+    appendVectors(batch, table, idCol, idCol, "appendToVectorStore",
+        maxBatchIds) { _ =>
+      val spark = batch.sparkSession
+      graft.functions.GraftFunctions.register(spark)
+      val tableCols = spark.table(table).columns
+      val prefixDims =
+        if (tableCols.contains("vt"))
+          BucketedStore.storedDim(spark, table, "vt", PrefixDimsProp)
+        else 0
+      require(prefixDims > 0 || !tableCols.contains("vt"),
+        s"appendToVectorStore: $table has prefix columns but no " +
+          s"readable prefix width (empty store without a $PrefixDimsProp " +
+          "stamp) — rebuild with buildVectorStore to stamp it")
+      (BucketedStore.storedDim(spark, table, "v"), deduped =>
+        if (prefixDims > 0)
+          deduped.withColumn("vt", slice(col("v"), 1, prefixDims))
+            .withColumn("nt", sqrt(dot(col("vt"), col("vt"))))
+        else deduped)
     }
-    val tableCols = spark.table(table).columns
-    val prefixDims =
-      if (tableCols.contains("vt"))
-        BucketedStore.storedDim(spark, table, "vt", PrefixDimsProp)
-      else 0
-    require(prefixDims > 0 || !tableCols.contains("vt"),
-      s"appendToVectorStore: $table has prefix columns but no " +
-        s"readable prefix width (empty store without a $PrefixDimsProp " +
-        "stamp) — rebuild with buildVectorStore to stamp it")
-    // one row per id within the batch (an at-least-once source can
-    // redeliver inside a single micro-batch; multiple VERSIONS of an
-    // id must resolve latest-wins upstream)
-    val deduped = batch.dropDuplicates(Seq(idCol))
-    val projected =
-      if (prefixDims > 0)
-        deduped.withColumn("vt", slice(col("v"), 1, prefixDims))
-          .withColumn("nt", sqrt(dot(col("vt"), col("vt"))))
-      else deduped
-    BucketedStore.append(spark, table, layout, Seq(idCol),
-      projected.select(tableCols.map(col).toIndexedSeq: _*),
-      maxBatchIds, "maxBatchIds", "appendToVectorStore")
-  }
 
   /** Fold a [[buildVectorStore]] table back to one sorted file per
     * bucket, applying pending deletes ([[BucketedStore.compact]] keeps
@@ -1349,34 +1373,23 @@ object Similarity {
     * PERSISTED PQ CODEBOOKS ([[loadPqCodebooks]] — the quantizer is
     * part of the index's identity and never drifts mid-stream;
     * retraining either codebook is a batch [[buildPqIndex]] rebuild),
-    * and appended at (cid, id) grain by [[BucketedStore.append]] —
+    * and appended at (cid, id) grain by [[appendVectors]] —
     * zero-shuffle argmax assignment, narrow codegen'd encode,
     * point-lookup idempotence: O(batch) at any index size. */
   def appendToPqIndex(batch: DataFrame, table: String,
       centroids: DataFrame, idCol: String,
-      maxBatchIds: Int = 1 << 20): Unit = {
-    val spark = batch.sparkSession
-    val layout = BucketedStore.open(spark, table, "appendToPqIndex",
-      Some("cid"))
-    val codebooks = loadPqCodebooks(spark, table)
-    val dim = codebooks.size * codebooks.head.head.length
-    val cb = requireCodebook(spark, table, centroids, idCol,
-      "appendToPqIndex", dim, writer = true,
-      Map(BucketedStore.DimProp -> dim.toString,
-        PqMProp -> codebooks.size.toString))
-    val bad = batch.filter(size(col("v")) =!= dim).limit(1).collect()
-    require(bad.isEmpty,
-      s"appendToPqIndex: a batch vector's width differs from the " +
-        s"index's ($dim) — its codes would be meaningless; encode the " +
-        "batch with the index's embedding dimension")
-    // one row per id within the batch (an at-least-once source can
-    // redeliver inside a single micro-batch)
-    BucketedStore.append(spark, table, layout, Seq("cid", idCol),
-      pqEncode(assignWith(batch.dropDuplicates(Seq(idCol)), cb, idCol),
-        idCol, codebooks)
-        .select(col(idCol), col("cid"), col("pq_code")),
-      maxBatchIds, "maxBatchIds", "appendToPqIndex")
-  }
+      maxBatchIds: Int = 1 << 20): Unit =
+    appendVectors(batch, table, idCol, "cid", "appendToPqIndex",
+        maxBatchIds) { _ =>
+      val spark = batch.sparkSession
+      val codebooks = loadPqCodebooks(spark, table)
+      val dim = codebooks.size * codebooks.head.head.length
+      val cb = requireCodebook(spark, table, centroids, idCol,
+        "appendToPqIndex", dim, writer = true,
+        Map(BucketedStore.DimProp -> dim.toString,
+          PqMProp -> codebooks.size.toString))
+      (dim, b => pqEncode(assignWith(b, cb, idCol), idCol, codebooks))
+    }
 
   /** Fold a [[buildPqIndex]] codes table back to one file per bucket,
     * applying pending deletes ([[BucketedStore.compact]]). The

@@ -473,6 +473,46 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(3L, 10L, 12L))
   }
 
+  test("resolveAtIngest hands onWinners exactly the winners, selected without id literals") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    val filler = (0 until 30).map(i => s"w$i").mkString(" ")
+    val idxDocs = Seq(
+      (1L, s"alpha beta gamma delta $filler"),
+      (2L, s"one two three four five $filler")).toDF("doc_id", "text")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+    val tbl = "graft_bandidx.spec_resolve_winner_join"
+    Dedup.buildBandIndex(idxDocs, "text", "doc_id", tbl, k = 6,
+      bandWidth = 2, buckets = 4)
+    // 10 beats index doc 1, 11 loses to index doc 2, 20..59 are unique;
+    // the delivery is a table read, so a filter on it stays in the plan
+    val delivery = Seq(
+        (10L, s"alpha beta gamma delta $filler tail", 9L),
+        (11L, s"one two three four five $filler tail", 1L)) ++
+      (20L until 60L).map(i =>
+        (i, (0 until 30).map(j => s"u${i}x$j").mkString(" "), 5L))
+    delivery.toDF("doc_id", "text", "q").write.mode("overwrite")
+      .saveAsTable("graft_bandidx.spec_resolve_winner_batch")
+    val batch = spark.table("graft_bandidx.spec_resolve_winner_batch")
+    val scores = Seq((1L, 5L), (2L, 5L)).toDF("doc_id", "q")
+    var handed: org.apache.spark.sql.DataFrame = null
+    Dedup.resolveAtIngest(spark, tbl, batch, "text", "doc_id", "q",
+      (_, withBatch) => scores
+        .select(col("doc_id").as("index_id"), col("q").as("__is"))
+        .join(broadcast(withBatch), Seq("index_id")),
+      coverageGuarded = false, handed = _, "the scores frame", k = 6,
+      bandWidth = 2, shingleSize = 3, maxBatchBands = 1 << 20,
+      maxPendingTombstones = 1 << 20)
+    val literals = handed.queryExecution.optimizedPlan.flatMap(
+      _.expressions.flatMap(_.collect {
+        case e: In if e.value.references.exists(_.name == "doc_id") => e
+        case e: InSet if e.child.references.exists(_.name == "doc_id") => e
+      }))
+    assert(literals.isEmpty,
+      s"winner ids entered the plan as literals: $literals")
+    assert(handed.select("doc_id").collect().map(_.getLong(0)).toSet ===
+      (Set(10L) ++ (20L until 60L)))
+  }
+
   test("incremental line dedup over ascending slices equals the one-shot pass") {
     // every dup shape: within-doc (doc 1), cross-doc within-slice
     // (B: docs 1/2; Z within doc 4; Y: docs 3/5), and CROSS-SLICE

@@ -286,6 +286,31 @@ class IndexDeleteSpec extends AnyFunSuite {
       heldOut, cents, "vec_id", 3)) === settled)
   }
 
+  test("write-path jobs: an IVF append beside pending tombstones runs at most 8, a delete at most 4") {
+    import spark.implicits._
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val tbl = "sim_idx.ivf_write_jobs"
+    Similarity.buildIvfIndex(Similarity.assignToCentroids(
+      base.filter(col("vec_id") >= 20), cents, "vec_id"), tbl, buckets = 4)
+    Similarity.deleteFromIndex(spark, tbl, Seq(30L).toDF("vec_id"),
+      "vec_id")
+    // fresh ids, as a serving index's deliveries carry
+    val (_, append) = graft.JobLog.record(spark.sparkContext)(
+      Similarity.appendToIvfIndex(
+        base.filter(col("vec_id") >= 10 && col("vec_id") < 20), tbl, cents,
+        "vec_id", buckets = 4))
+    assert(spark.table(tbl).count() === base.count() - 10)
+    val (_, delete) = graft.JobLog.record(spark.sparkContext)(
+      Similarity.deleteFromIndex(spark, tbl, (40L until 60L).toDF("vec_id"),
+        "vec_id"))
+    assert(Similarity.pendingDeletes(spark, tbl, "vec_id").count() === 21)
+    def sites(jobs: Seq[graft.JobLog.Job]) = jobs.map(_.site).mkString("; ")
+    info(s"append: ${append.size} jobs (${sites(append)})")
+    info(s"delete: ${delete.size} jobs (${sites(delete)})")
+    assert(append.size <= 8, sites(append))
+    assert(delete.size <= 4, sites(delete))
+  }
+
   test("delete bounds and hygiene: pending cap refuses loudly, null ids refuse, absent ids guard appends, rebuild clears") {
     spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
     val tbl = "sim_idx.ivf_bounds"

@@ -856,6 +856,40 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ed.getMessage.contains("width"), ed.getMessage)
   }
 
+  test("IVF and PQ appends refuse a narrow or null-element vector and write nothing") {
+    // the argmax assignment cannot score either vector; the append must
+    // refuse the batch, not drop the two rows and land the third
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val ivf = "sim_idx.ivf_unusable"
+    val pq = "sim_idx.pq_unusable"
+    val cents = base.filter(col("vec_id") % 50 === 0)
+    val corpus = Similarity.assignToCentroids(
+      base.filter(col("vec_id") >= 10 && col("vec_id") < 200), cents,
+      "vec_id")
+    val cb = Similarity.pqTrainSampled(cents, "vec_id", m = 8,
+      maxCodewords = 16)
+    Similarity.buildIvfIndex(corpus, ivf, buckets = 4)
+    Similarity.buildPqIndex(Similarity.pqEncode(corpus, "vec_id", cb),
+      "vec_id", pq, cb, cents, buckets = 4)
+    val batch = base.filter(col("vec_id") < 3).withColumn("v",
+      when(col("vec_id") === 1, slice(col("v"), 1, 4))
+        .when(col("vec_id") === 2, transform(col("v"),
+          (x, i) => when(i === 0, lit(null)).otherwise(x)))
+        .otherwise(col("v")))
+    for ((tbl, append) <- Seq[(String, () => Unit)](
+        ivf -> (() => Similarity.appendToIvfIndex(batch, ivf, cents,
+          "vec_id", buckets = 4)),
+        pq -> (() => Similarity.appendToPqIndex(batch, pq, cents,
+          "vec_id")))) {
+      val before = spark.table(tbl).count()
+      val e = intercept[IllegalArgumentException](append())
+      assert(e.getMessage.contains("width differs") &&
+        e.getMessage.contains("(64)"), e.getMessage)
+      assert(spark.table(tbl).count() === before,
+        s"$tbl: a refused batch must write nothing")
+    }
+  }
+
   test("PQ-index lifecycle: appends encode with the persisted codebooks, replays absorbed, compact keeps stamps") {
     // the fourth grain's streaming half: a codes table built on a
     // corpus prefix and extended by micro-batches — replay and
@@ -979,8 +1013,9 @@ class SimilaritySpec extends AnyFunSuite {
   test("PQ append's (cid, id) idempotence lookup bucket-prunes — the compileAndPinBucketedScan pin") {
     // r20 verdict item: appendToPqIndex's idempotence scan was the one
     // pruned scan without a plan assertion — it now routes through
-    // compileAndPinBucketedScan (SelectedBucketsCount asserted at
-    // compile time AND on the executed plan). This spec pins the shape
+    // pinBucketedScan, the pin compileAndPinBucketedScan wraps
+    // (SelectedBucketsCount asserted at compile time AND on the
+    // executed plan). This spec pins the shape
     // the in-path assert depends on: an In(cid) && In(id) filter over a
     // cid-bucketed codes table, compiled inside the conf window,
     // bucket-prunes on this Spark version. If an upgrade breaks that,

@@ -368,8 +368,9 @@ class QueryPlanSpec extends AnyFunSuite {
     // family's append runs): the batch's (cid, id) keys enter as
     // planning-time literals, the index scan bucket-prunes to the
     // batch's cids with the id filter pushed down, and the index side
-    // never shuffles (the lookup is checkpointed, the anti-join is
-    // batch-sized; the zero-shuffle argmax assignment upstream).
+    // never shuffles (the lookup is collected and re-enters the
+    // anti-join as a broadcast local frame, batch-sized; the
+    // zero-shuffle argmax assignment upstream).
     // A naive (cid, id) anti-join against the table re-shuffles the
     // whole index on the composite key instead (measured; the hash(cid)
     // buckets don't co-partition it) — this pin is what fails if that
@@ -407,7 +408,7 @@ class QueryPlanSpec extends AnyFunSuite {
       val (fresh, lookup) = BucketedStore.freshRows(spark, tbl, layout,
         grain, rows, keyRows.toSeq, "QueryPlanSpec")
       fresh.collect()
-      // the index side: the pinned lookup's executed plan
+      // the index side: the pinned existence read's executed plan
       val indexPlan = lookup.queryExecution.executedPlan
       val tableScan = flatten(indexPlan).collectFirst {
         case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f }
@@ -424,8 +425,8 @@ class QueryPlanSpec extends AnyFunSuite {
         s"index scan read every bucket: ${tableScan.get.metadata}")
       assert(!flatten(indexPlan).exists(_.isInstanceOf[ShuffleExchangeExec]),
         s"the index side must be shuffle-free point lookups:\n$indexPlan")
-      // the append's anti-join reads the checkpointed lookup rows —
-      // still no shuffle on the index side
+      // the append's anti-join reads the collected lookup rows as a
+      // local frame — still no shuffle on the index side
       val plan = fresh.queryExecution.executedPlan
       val anti = flatten(plan).collectFirst {
         case j: BaseJoinExec if j.joinType.toString == "LeftAnti" => j }
