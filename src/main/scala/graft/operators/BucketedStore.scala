@@ -15,6 +15,10 @@ import org.apache.spark.sql.types.StructType
   * is also the raw vault's writer ([[save]]): every vault table and
   * staging table is created, staged and appended through the same
   * task-aligned bucketed write, in the layout its catalog entry holds.
+  * A bucketed write, and a bucket-pruned read whose rows are collected,
+  * runs `min(buckets, cores)` tasks, each holding whole buckets
+  * ([[coalesceToCores]]): files per bucket and bucket contents are
+  * those of one task per bucket, without its per-task launch cost.
   *
   *  - '''open''' — every entry point of every family: heal an
   *    interrupted compaction swap, check the bucket spec, return the
@@ -68,6 +72,22 @@ private[graft] object BucketedStore {
     * file per bucket. */
   private def alignToBuckets(rows: DataFrame, layout: Layout): DataFrame =
     rows.repartition(layout.buckets, layout.bucketCols.map(col): _*)
+
+  /** `rows`, which hold at most one bucket per partition (an aligned
+    * batch, or a bucketed scan of the table), in `min(buckets, cores)`
+    * partitions: the tasks a bucketed write or a bucket-pruned collected
+    * read runs. Spark otherwise runs one task per bucket whatever the
+    * data size, so a 500-row append to a 32-bucket table on 4 cores paid
+    * 8 waves of task launch and task deserialization (SCALING.md "Tasks
+    * per bucketed write and probe"). A coalesce, not a shuffle: each
+    * task holds whole buckets, so a write still emits one file per
+    * bucket and a pruned scan still reads only the selected buckets.
+    * `rows` is returned as is when there are no more buckets than
+    * cores: such plans carry no coalesce at all. */
+  def coalesceToCores(rows: DataFrame, layout: Layout): DataFrame = {
+    val n = rows.sparkSession.sparkContext.defaultParallelism
+    if (n < layout.buckets) rows.coalesce(n) else rows
+  }
 
   /** `rows` aligned to the buckets of the table `existing` reads
     * ([[layoutOf]]; unchanged when it reads none): a dedup anti-join
@@ -192,10 +212,13 @@ private[graft] object BucketedStore {
   /** The one bucketed write: `rows` task-aligned to `layout` first, so
     * each write emits one file per bucket instead of one per task ×
     * bucket (measured in SCALING.md "Vault loads": 32 files instead of
-    * 1,024, and 4× faster). `aligned` says `rows` already are. */
+    * 1,024, and 4× faster), then run as at most one task per core
+    * ([[coalesceToCores]]), each writing the buckets it holds. `aligned`
+    * says `rows` already are aligned. */
   private def writer(rows: DataFrame, layout: Layout,
       aligned: Boolean = false) = {
-    val w = (if (aligned) rows else alignToBuckets(rows, layout)).write
+    val w = coalesceToCores(
+        if (aligned) rows else alignToBuckets(rows, layout), layout).write
       .bucketBy(layout.buckets, layout.bucketCols.head,
         layout.bucketCols.tail: _*)
     if (layout.sortCols.isEmpty) w
@@ -256,7 +279,8 @@ private[graft] object BucketedStore {
     * in `table`, decided on the driver from ONE read. The collected
     * `keyRows` (the rows' [[lookupCols]]) re-enter the plan as
     * literals, so the lookup opens only the batch's buckets with the
-    * filters pushed to parquet; beside it, the batch's ids probe the
+    * filters pushed to parquet, in at most one task per core
+    * ([[coalesceToCores]]); beside it, the batch's ids probe the
     * (configuration-sized) tombstone side table. The read is pinned
     * ([[pinBucketedScan]]) and collected — at most the batch's keys
     * plus its tombstoned ids — so a tombstoned id refuses before
@@ -274,9 +298,9 @@ private[graft] object BucketedStore {
     val cols = lookupCols(layout, grain)
     val values = cols.indices.map(i => keyRows.map(_.get(i)).distinct)
     val idCol = grain.last
-    val lookup = spark.table(table)
+    val lookup = coalesceToCores(spark.table(table)
       .filter(cols.zip(values)
-        .map { case (c, vs) => col(c).isin(vs: _*) }.reduce(_ && _))
+        .map { case (c, vs) => col(c).isin(vs: _*) }.reduce(_ && _)), layout)
       .select(grain.map(col) :+ lit(false).as("__tomb"): _*)
     val tomb = tombstoneTable(table)
     val read =

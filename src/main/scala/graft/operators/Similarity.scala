@@ -582,7 +582,8 @@ object Similarity {
       probes: Int = 1): DataFrame = {
     require(probes >= 1, s"probeIvfIndexExternal: probes must be >= 1, got $probes")
     DriverBounded.labeled(spark, s"probeIvfIndexExternal:$table") {
-    BucketedStore.open(spark, table, "probeIvfIndexExternal", Some("cid"))
+    val layout = BucketedStore.open(spark, table, "probeIvfIndexExternal",
+      Some("cid"))
     // the serving batch becomes a local probe relation of Q x probes
     // rows and its cid set pruning literals — both bounded by
     // contract, so an oversized batch fails with direction; the
@@ -612,8 +613,8 @@ object Similarity {
         s"differs from the index's ($idxDim) — its similarities would " +
         "all be null and the returned neighbors meaningless; encode " +
         "serving queries with the index's embedding dimension")
-    probeCidBuckets(spark, table, queries, idCol, cb, batch, probes, k,
-      "probeIvfIndexExternal")(knnProbe(_, _, idCol, k))
+    probeCidBuckets(spark, table, layout, queries, idCol, cb, batch, probes,
+      k, "probeIvfIndexExternal")(knnProbe(_, _, idCol, k))
     }
   }
 
@@ -627,10 +628,14 @@ object Similarity {
     * cid set as pruning literals, and `rank(candidates, probeSide)`
     * runs over the live rows of the probed buckets only — tombstones
     * excluded ABOVE the pruned scan, BEFORE ranking, so next-best
-    * candidates refill the top-k. The ranking is pinned to bucket-prune,
-    * its ≤ Q×k rows collected, and returned as a local frame. */
+    * candidates refill the top-k. The pruned scan runs as at most one
+    * task per core, each holding whole buckets
+    * ([[BucketedStore.coalesceToCores]]), not one task per bucket of the
+    * table. The ranking is pinned to bucket-prune, its ≤ Q×k rows
+    * collected, and returned as a local frame. */
   private def probeCidBuckets(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: DataFrame, idCol: String, cb: Codebook,
+      table: String, layout: BucketedStore.Layout, queries: DataFrame,
+      idCol: String, cb: Codebook,
       batch: Array[org.apache.spark.sql.Row], probes: Int, k: Int,
       context: String)(
       rank: (DataFrame, DataFrame) => DataFrame): DataFrame = {
@@ -654,7 +659,9 @@ object Similarity {
         .patch(1, Seq(cb.idField.copy(name = "qcid")), 0)))
     val cids = probeRows.map(_.get(1)).distinct
     val ranked = rank(BucketedStore.liveRows(spark, table,
-      spark.table(table).filter(col("cid").isin(cids: _*)), idCol), probeSide)
+      BucketedStore.coalesceToCores(
+        spark.table(table).filter(col("cid").isin(cids: _*)), layout),
+      idCol), probeSide)
     val verdicts =
       if (probeRows.isEmpty) Array.empty[Row]  // nothing to probe
       else BucketedStore.pinBucketedScan(spark, ranked, table, context)(
@@ -1333,7 +1340,8 @@ object Similarity {
     require(probes >= 1,
       s"probePqIndexExternal: probes must be >= 1, got $probes")
     DriverBounded.labeled(spark, s"probePqIndexExternal:$table") {
-    BucketedStore.open(spark, table, "probePqIndexExternal", Some("cid"))
+    val layout = BucketedStore.open(spark, table, "probePqIndexExternal",
+      Some("cid"))
     // the broadcast probe frame is Q x probes rows, EACH carrying an
     // M x K-double ADC table — the enforced bound must scale with
     // nprobe or a caller inside maxQueries could still blow the
@@ -1357,8 +1365,8 @@ object Similarity {
       s"probePqIndexExternal: an external query's vector width differs " +
         s"from the index's ($dim) — its ADC table would be meaningless; " +
         "encode serving queries with the index's embedding dimension")
-    probeCidBuckets(spark, table, queries, idCol, cb, batch, probes, k,
-      "probePqIndexExternal") { (cands, p) =>
+    probeCidBuckets(spark, table, layout, queries, idCol, cb, batch, probes,
+      k, "probePqIndexExternal") { (cands, p) =>
       pqRank(cands, p.select(col("qid"), col("qcid"),
           pqQueryTable(col("qv"), codebooks).as("qtab")),
         idCol, m, k, col("cid") === col("qcid"))

@@ -311,6 +311,69 @@ class IndexDeleteSpec extends AnyFunSuite {
     assert(delete.size <= 4, sites(delete))
   }
 
+  test("tasks per bucketed write and probe: at most one per core, each holding whole buckets") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
+    val tbl = "sim_idx.ivf_tasks"
+    val widest = math.min(32, spark.sparkContext.defaultParallelism)
+    Similarity.buildIvfIndex(Similarity.assignToCentroids(
+      base.filter(col("vec_id") >= 40), cents, "vec_id"), tbl, buckets = 32)
+    def filesPerBucket(): Map[Int, Int] = {
+      import org.apache.spark.sql.execution.datasources.BucketingUtils
+      val loc = new org.apache.hadoop.fs.Path(
+        BucketedStore.metadata(spark, tbl).location)
+      loc.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(loc)
+        .map(_.getPath.getName).filterNot(n => n.startsWith("_") ||
+          n.startsWith(".")).toSeq
+        .groupBy(n => BucketingUtils.getBucketId(n).get).map {
+          case (b, fs) => b -> fs.size }
+    }
+    // every cid's pruned read returns exactly that cid's rows: each
+    // task wrote its rows to the buckets they hash to
+    def placementHolds(): Unit = {
+      val all = spark.table(tbl).select("cid", "vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      for (c <- all.map(_._1)) {
+        val pruned = BucketedStore.pinBucketedScan(spark,
+          spark.table(tbl).filter(col("cid") === c).select("cid", "vec_id"),
+          tbl, "IndexDeleteSpec")(_.collect())
+        assert(pruned.map(r => (r.getLong(0), r.getLong(1))).toSet ===
+          all.filter(_._1 == c), s"cid $c")
+      }
+    }
+    val built = filesPerBucket()
+    val (_, append) = graft.JobLog.record(spark.sparkContext)(
+      Similarity.appendToIvfIndex(
+        base.filter(col("vec_id") >= 10 && col("vec_id") < 40), tbl, cents,
+        "vec_id"))
+    val appended = filesPerBucket()
+    assert(appended.forall { case (b, n) => n - built.getOrElse(b, 0) <= 1 },
+      s"built $built, appended $appended")
+    placementHolds()
+    val heldOut = base.filter(col("vec_id") < 10)
+    def probe() = rows(Similarity.probeIvfIndexExternal(spark, tbl,
+      heldOut, cents, "vec_id", 3))
+    val first = probe()
+    val (again, repeat) = graft.JobLog.record(spark.sparkContext)(probe())
+    assert(again === first)
+    val (_, compact) = graft.JobLog.record(spark.sparkContext)(
+      Similarity.compactIvfIndex(spark, tbl))
+    assert(filesPerBucket().values.forall(_ == 1))
+    assert(filesPerBucket().keySet === appended.keySet)
+    placementHolds()
+    assert(rows(Similarity.probeIvfIndexExternal(spark, tbl,
+      heldOut, cents, "vec_id", 3)) === first)
+    val calls = Seq("append" -> append, "repeat probe" -> repeat,
+      "compact" -> compact)
+    def widths(jobs: Seq[graft.JobLog.Job]) = jobs.map(j =>
+      s"${j.site}: ${j.stageTasks.values.mkString("/")}").mkString("; ")
+    calls.foreach { case (call, jobs) => info(s"$call: ${widths(jobs)}") }
+    for ((call, jobs) <- calls) {
+      assert(jobs.exists(_.stageTasks.nonEmpty), s"$call ran no task")
+      assert(jobs.forall(_.widestStage <= widest),
+        s"$call ran a stage wider than $widest tasks: ${widths(jobs)}")
+    }
+  }
+
   test("delete bounds and hygiene: pending cap refuses loudly, null ids refuse, absent ids guard appends, rebuild clears") {
     spark.sql("CREATE DATABASE IF NOT EXISTS sim_idx")
     val tbl = "sim_idx.ivf_bounds"
