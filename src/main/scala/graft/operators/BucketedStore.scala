@@ -19,6 +19,9 @@ import org.apache.spark.sql.types.StructType
   * runs `min(buckets, cores)` tasks, each holding whole buckets
   * ([[coalesceToCores]]): files per bucket and bucket contents are
   * those of one task per bucket, without its per-task launch cost.
+  * Every family's probe reads the same way: the pruned scan, pinned,
+  * materialized by one bounded collect and returned as a local frame
+  * ([[collectPinned]]).
   *
   *  - '''open''' — every entry point of every family: heal an
   *    interrupted compaction swap, check the bucket spec, return the
@@ -129,10 +132,11 @@ private[graft] object BucketedStore {
     * compiled plan bucket-prunes its scan of `table` (a mis-built
     * table refuses loudly instead of full-scanning at corpus size), then
     * `materialize` it OUTSIDE the window: `executedPlan` is a cached
-    * lazy val, so materializing `df` itself (a checkpoint, or a
-    * collect — never a derived frame, which would re-plan) only runs the
-    * compiled plan, and the lock covers compilation alone, never the
-    * job. The assert is repeated on the executed plan: under AQE,
+    * lazy val, so materializing `df` itself (a collect — never a
+    * derived frame, which would re-plan) only runs the compiled plan,
+    * and the lock covers compilation alone, never the job. Every
+    * pinned read is collected: the append's existence read
+    * ([[freshRows]]) and the probes' ([[collectPinned]]). The assert is repeated on the executed plan: under AQE,
     * re-optimization runs with the conf restored, and a Spark version
     * whose stage-preparation rules drop the bucketed scan would
     * otherwise pass the compile-time check on a plan it never ran.
@@ -158,12 +162,22 @@ private[graft] object BucketedStore {
     out
   }
 
-  /** [[pinBucketedScan]] materialized by an eager checkpoint (`reliable`:
-    * to the checkpoint directory, else executor-local). */
-  def compileAndPinBucketedScan(spark: SparkSession, df: DataFrame,
-      table: String, reliable: Boolean, context: String): DataFrame =
-    pinBucketedScan(spark, df, table, context)(d =>
-      if (reliable) d.checkpoint(true) else d.localCheckpoint(true))
+  /** The probes' one materialization: `df`, a read of `table` over
+    * literal probe keys, pinned to bucket-prune ([[pinBucketedScan]]),
+    * collected once under `cap` ([[DriverBounded.collectBounded]]:
+    * `overCap` says what to do past it) and returned as a local frame,
+    * so whatever derives from it re-plans from the collected rows,
+    * never from the table, and nothing stays on executors. A `cap` of 0
+    * means nothing was probed (an empty literal set folds the scan
+    * away, leaving no plan to pin): an empty frame, and no job. */
+  def collectPinned(spark: SparkSession, df: DataFrame, table: String,
+      context: String, cap: Long, overCap: => String): DataFrame = {
+    val rows =
+      if (cap == 0) Array.empty[Row]
+      else pinBucketedScan(spark, df, table, context)(
+        DriverBounded.collectBounded(_, cap, s"$context: $overCap"))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
 
   // ---- open
 

@@ -611,68 +611,54 @@ object Dedup {
     * are small by contract), so the index scan BUCKET-PRUNES to the
     * batch's band buckets with the band filter pushed to parquet; the
     * batch side broadcasts into the join. The index is never shuffled
-    * and never scanned beyond the probed buckets: the plan is pinned
-    * ([[BucketedStore.compileAndPinBucketedScan]] — asserted to prune,
-    * and the catalog bucketSpec is validated up front, so even an empty
-    * batch refuses a mis-built table) and MATERIALIZED by an eager
-    * checkpoint: the returned frame and anything derived from it
-    * re-plan from the checkpointed verdict rows — batch-proportional
-    * by construction — never from the index.
-    *
-    * Checkpoint durability: the default is `localCheckpoint` —
-    * verdict blocks live on executor storage only, so an executor
-    * loss (or dynamic-allocation decommission) makes the returned
-    * frame unrecoverable mid-pipeline; the lineage it replaced cannot
-    * recompute. Fine for the single-writer ingest loop this operator
-    * serves (a failed probe re-probes the batch), but long-lived
-    * production sessions can pass `reliableCheckpoint = true` to
-    * write the verdicts through the configured `sc.setCheckpointDir`
-    * instead (verdicts are batch-proportional, so the extra write is
-    * micro-batch-sized). */
+    * and never scanned beyond the probed buckets, in at most one task
+    * per core: the plan is pinned to prune (the catalog bucketSpec is
+    * validated up front, so even an empty batch refuses a mis-built
+    * table), its verdict rows are collected once under
+    * `maxBatchBands` — past it the probe refuses, directing the caller
+    * to split the batch — and come back as a local frame
+    * ([[BucketedStore.collectPinned]]): the returned frame and anything
+    * derived from it re-plan from those rows, never from the index. */
   def probeBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, textCol: String, idCol: String, k: Int = 6,
       bandWidth: Int = 2, shingleSize: Int = 3,
-      maxBatchBands: Int = 1 << 20,
-      reliableCheckpoint: Boolean = false): DataFrame =
+      maxBatchBands: Int = 1 << 20): DataFrame =
       DriverBounded.labeled(spark, s"probeBandIndex:$table") {
-    BucketedStore.open(spark, table, "probeBandIndex", Some("band"))
+    val layout = BucketedStore.open(spark, table, "probeBandIndex",
+      Some("band"))
     val (bandedDf, bandRows) = freshBatchBands(batch, textCol, idCol, k,
       bandWidth, shingleSize, maxBatchBands, "probeBandIndex")
-    try probeBanded(spark, table, bandedDf,
-      bandRows.map(_.get(1)).distinct.toSeq, idCol, reliableCheckpoint)
+    try probeBanded(spark, table, layout, bandedDf,
+      bandRows.map(_.get(1)).distinct.toSeq, idCol, maxBatchBands)
     finally { bandedDf.unpersist(blocking = false); () }
   }
 
   /** [[probeBandIndex]]'s core over an ALREADY-banded (persisted)
     * batch frame and its collected band literals — shared with
     * [[resolveAtIngest]], which bands its delivery once and reuses
-    * the rows for the winner append. Returns the checkpointed
-    * (idCol, index_id) verdicts. */
+    * the rows for the winner append. Returns the (idCol, index_id)
+    * verdicts as a local frame; an empty band set probes nothing. */
   private def probeBanded(spark: org.apache.spark.sql.SparkSession,
-      table: String, bandedDf: DataFrame, bands: Seq[Any], idCol: String,
-      reliableCheckpoint: Boolean): DataFrame =
-    if (bands.isEmpty)  // empty batch: nothing to probe (an empty
-      // isin() folds the scan away, so there is no plan to pin; the
-      // catalog check above still rejected a mis-built table)
-      bandedDf.select(col(idCol), col(idCol).as("index_id")).limit(0)
-        .localCheckpoint(true)
-    else {
-      // tombstoned docs (superseded by resolve-at-ingest, or taken
-      // down via deleteFromIndex) are dead to probes IMMEDIATELY —
-      // excluded above the pruned scan; compactBandIndex reclaims them
-      val pruned = BucketedStore.liveRows(spark, table,
-        spark.table(table).filter(col("band").isin(bands: _*))
-          .select(col(idCol).as("index_id"), col("band")),
-        "index_id")
-      val out = pruned
-        .join(broadcast(bandedDf.select(col(idCol), col("band"))),
-          Seq("band"))
-        .filter(col("index_id") =!= col(idCol))
-        .select(col(idCol), col("index_id"))
-        .distinct()
-      BucketedStore.compileAndPinBucketedScan(spark, out, table,
-        reliableCheckpoint, "probeBandIndex")
-    }
+      table: String, layout: BucketedStore.Layout, bandedDf: DataFrame,
+      bands: Seq[Any], idCol: String, maxBatchBands: Int): DataFrame = {
+    // tombstoned docs (superseded by resolve-at-ingest, or taken
+    // down via deleteFromIndex) are dead to probes IMMEDIATELY —
+    // excluded above the pruned scan; compactBandIndex reclaims them
+    val pruned = BucketedStore.liveRows(spark, table,
+      BucketedStore.coalesceToCores(
+        spark.table(table).filter(col("band").isin(bands: _*)), layout)
+        .select(col(idCol).as("index_id"), col("band")),
+      "index_id")
+    val out = pruned
+      .join(broadcast(bandedDf.select(col(idCol), col("band"))),
+        Seq("band"))
+      .filter(col("index_id") =!= col(idCol))
+      .select(col(idCol), col("index_id"))
+      .distinct()
+    BucketedStore.collectPinned(spark, out, table, "probeBandIndex",
+      if (bands.isEmpty) 0 else maxBatchBands,
+      s"more than $maxBatchBands verdict pairs; split the batch")
+  }
 
   /** Idempotently append a new batch's bands to a [[buildBandIndex]]
     * table at doc-id grain ([[BucketedStore.append]]): a replayed batch
@@ -854,9 +840,10 @@ object Dedup {
       "candidate never tombstoned)"
 
   /** The shared resolve-at-ingest core: `attachScores` turns the
-    * checkpointed verdicts + the (idCol, index_id, __bs) verdict×batch
-    * frame into pairs carrying `__is` (the candidate's score) — batch-
-    * proportional in, batch-proportional out; `coverageGuarded` says
+    * probe's verdicts (a local frame of driver-held rows) + the
+    * (idCol, index_id, __bs) verdict×batch frame into pairs carrying
+    * `__is` (the candidate's score) — batch-proportional in,
+    * batch-proportional out; `coverageGuarded` says
     * whether the caller's join carries the in-row coverage guard (the
     * indexed form) or the core must run its separate uncovered probe
     * (the frame form, whose corpus-sized score scan cannot take a
@@ -891,8 +878,8 @@ object Dedup {
       // tombstone exclusion lives INSIDE the probe (one read per
       // delivery, shared with ad-hoc probes) — verdicts arrive already
       // filtered to live index docs
-      val verdicts = probeBanded(spark, table, bandedDf, bands, idCol,
-        reliableCheckpoint = false)
+      val verdicts = probeBanded(spark, table, layout, bandedDf, bands,
+        idCol, maxBatchBands)
       // the per-pair frame checkpoints batch-proportional rows so
       // resolution, tombstoning, and the winner append all replan from
       // them (never from the score side, never from the mutating
@@ -1104,8 +1091,7 @@ object Dedup {
             s"(e.g. ${dup.headOption.map(_.get(0)).getOrElse("")}) — " +
             DuplicateKeyWhy)
         val existing = probeKeyedTableViaJoin(spark, table,
-          b.select(col(keyCol)).distinct(), keyCol, layout.buckets,
-          reliable = false)
+          b.select(col(keyCol)).distinct(), keyCol, layout.buckets)
         BucketedStore.appendRows(spark, table, layout,
           b.join(existing.select(col(keyCol)), Seq(keyCol), "left_anti"))
       } else {
@@ -1137,7 +1123,7 @@ object Dedup {
     * and the batch must be key-distinct and null-free BY CONSTRUCTION
     * (a [[lineHashes]]/distinct product). The append then skips its
     * own idempotence probe — the anti-join derives from `probed`'s
-    * checkpointed batch-proportional rows — and the guard collects,
+    * materialized batch-proportional rows — and the guard collects,
     * so a delivery pays ONE table write and nothing else (guide §1.2:
     * the probe+append pair was reading the same buckets twice per
     * micro-batch).
@@ -1161,17 +1147,19 @@ object Dedup {
 
   /** Bucket-pruned point lookups against a [[buildKeyedTable]] table:
     * returns the table rows whose `keyCol` appears in `keys` (any
-    * frame carrying that column; other columns ignored), eagerly
-    * checkpointed so downstream plans derive from batch-proportional
-    * rows, never from the table.
+    * frame carrying that column; other columns ignored), materialized
+    * so downstream plans derive from batch-proportional rows, never
+    * from the table.
     *
     * Two plan forms, chosen by the probe's distinct key count:
     *
     *  - '''Literal form''' (≤ `joinFormThreshold` keys — the
     *    micro-batch norm): the keys become planning-time literals,
-    *    the scan is pinned to bucket-prune
-    *    ([[BucketedStore.compileAndPinBucketedScan]]) — a mis-built
-    *    table refuses loudly instead of full-scanning at corpus size.
+    *    the scan is pinned to bucket-prune — a mis-built table refuses
+    *    loudly instead of full-scanning at corpus size — runs in at
+    *    most one task per core, and its rows (at most one per probed
+    *    key: the table is key-distinct) are collected once and
+    *    returned as a local frame ([[BucketedStore.collectPinned]]).
     *    The loud `maxKeys` cap applies to this form only (it bounds
     *    the driver materialization and the plan's literal count).
     *  - '''Join form''' (above the threshold): a million-literal
@@ -1183,7 +1171,8 @@ object Dedup {
     *    executed plan: no shuffle above the table's scan). No file
     *    pruning — the trade is one full bucketed read with no
     *    corpus-side shuffle versus an unboundedly large plan — and no
-    *    driver hop at all: the keys never leave the cluster.
+    *    driver hop at all: the keys never leave the cluster, and the
+    *    result is an executor-local checkpoint.
     *
     * Both forms return identical rows (spec-pinned at the threshold
     * boundary). An empty key set probes nothing and returns an empty
@@ -1191,18 +1180,17 @@ object Dedup {
   def probeKeyedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, keys: DataFrame, keyCol: String,
       maxKeys: Int = 1 << 20,
-      reliableCheckpoint: Boolean = false,
       joinFormThreshold: Int = 1 << 16): DataFrame =
       DriverBounded.labeled(spark, s"probeKeyedTable:$table") {
-    val buckets = BucketedStore.open(spark, table, "probeKeyedTable",
-      Some(keyCol)).buckets
+    val layout = BucketedStore.open(spark, table, "probeKeyedTable",
+      Some(keyCol))
     val distinctKeys = keys.select(col(keyCol)).distinct()
     // form decision, driver-bounded by construction: fetch at most
     // threshold+1 rows — never the whole key set
     val headRows = distinctKeys.limit(joinFormThreshold + 1).collect()
     if (headRows.length > joinFormThreshold)
       probeKeyedTableViaJoin(spark, table, distinctKeys, keyCol,
-        buckets, reliableCheckpoint)
+        layout.buckets)
     else {
       val lits = headRows.map(_.get(0)).toSeq
       require(lits.size <= maxKeys,
@@ -1215,12 +1203,11 @@ object Dedup {
           "isin(literals) never matches null, so a null probe would " +
           "silently come back absent; filter nulls (or treat them as " +
           "known-absent) at the caller, explicitly")
-      if (lits.isEmpty)
-        spark.table(table).limit(0).localCheckpoint(true)
-      else
-        BucketedStore.compileAndPinBucketedScan(spark,
-          spark.table(table).filter(col(keyCol).isin(lits: _*)),
-          table, reliableCheckpoint, "probeKeyedTable")
+      BucketedStore.collectPinned(spark,
+        BucketedStore.coalesceToCores(
+          spark.table(table).filter(col(keyCol).isin(lits: _*)), layout),
+        table, "probeKeyedTable", lits.size,
+        s"more rows than probed keys — $table is not key-distinct")
     }
   }
 
@@ -1233,8 +1220,7 @@ object Dedup {
     * table plus one batch-side shuffle, at any key count. */
   private def probeKeyedTableViaJoin(
       spark: org.apache.spark.sql.SparkSession, table: String,
-      distinctKeys: DataFrame, keyCol: String, buckets: Int,
-      reliable: Boolean): DataFrame = {
+      distinctKeys: DataFrame, keyCol: String, buckets: Int): DataFrame = {
     val nullProbe = distinctKeys.filter(col(keyCol).isNull)
       .limit(1).collect()
     require(nullProbe.isEmpty,
@@ -1251,9 +1237,7 @@ object Dedup {
     BucketedStore.withAutoBucketedScanOff(spark) {
       joined.queryExecution.executedPlan; ()
     }
-    val out =
-      if (reliable) joined.checkpoint(true)
-      else joined.localCheckpoint(true)
+    val out = joined.localCheckpoint(true)
     // assert on the FINAL (post-AQE) plan: no shuffle may sit above
     // the table's scan — if the forced bucketed scan was dropped at
     // stage preparation, the table side would re-shuffle at corpus

@@ -632,7 +632,8 @@ object Similarity {
     * task per core, each holding whole buckets
     * ([[BucketedStore.coalesceToCores]]), not one task per bucket of the
     * table. The ranking is pinned to bucket-prune, its ≤ Q×k rows
-    * collected, and returned as a local frame. */
+    * collected, and returned as a local frame
+    * ([[BucketedStore.collectPinned]]). */
   private def probeCidBuckets(spark: org.apache.spark.sql.SparkSession,
       table: String, layout: BucketedStore.Layout, queries: DataFrame,
       idCol: String, cb: Codebook,
@@ -662,12 +663,9 @@ object Similarity {
       BucketedStore.coalesceToCores(
         spark.table(table).filter(col("cid").isin(cids: _*)), layout),
       idCol), probeSide)
-    val verdicts =
-      if (probeRows.isEmpty) Array.empty[Row]  // nothing to probe
-      else BucketedStore.pinBucketedScan(spark, ranked, table, context)(
-        DriverBounded.collectBounded(_, batch.length.toLong * k,
-          s"$context: more verdict rows than queries x k"))
-    spark.createDataFrame(java.util.Arrays.asList(verdicts: _*), ranked.schema)
+    BucketedStore.collectPinned(spark, ranked, table, context,
+      if (probeRows.isEmpty) 0 else batch.length.toLong * k,
+      "more verdict rows than queries x k")
   }
 
   /** Incrementally extend a persisted [[buildIvfIndex]] table with

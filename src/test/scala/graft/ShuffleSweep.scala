@@ -42,9 +42,18 @@ object ShuffleSweep {
     try f finally spark.conf.set(key, old)
   }
 
+  /** One query's sweep at one scale point: exchanges and bytes (-1 when
+    * not executed or failed), the failure if any, and `buildMs`, the
+    * wall time of constructing the query's frame (up to the failure,
+    * for a failed query) — the eager fixture and index builds and
+    * stream replays its construction runs, which is where a static
+    * sweep spends its time. */
+  final case class Swept(name: String, exchanges: Int, bytes: Long,
+      error: Option[String], buildMs: Long)
+
   /** Sweep every SparkEntry query at `sf`: static exchange count, then
     * (when `execute`) one full run to read shuffleBytesWritten the way
-    * Bench does. Returns (name, exchanges, bytes, error).
+    * Bench does.
     *
     * Cache state is reset first: a cached branch left behind by an
     * earlier caller (another suite sharing the session) collapses its
@@ -54,13 +63,15 @@ object ShuffleSweep {
     * here, so both always plan from the same cold-cache state.
     * (Instance-scoped memos like Curated's user lookup need no
     * explicit release: each query call builds fresh instances.) */
-  def sweep(spark: SparkSession, sf: String, execute: Boolean)
-      : Seq[(String, Int, Long, Option[String])] =
+  def sweep(spark: SparkSession, sf: String, execute: Boolean): Seq[Swept] =
     withStaticPlans(spark) {
       spark.catalog.clearCache()
       SparkEntry.queries.keys.toSeq.sorted.map { name =>
+        val t0 = System.nanoTime()
+        def sinceMs = (System.nanoTime() - t0) / 1000000
         try {
           val df = SparkEntry.queries(name)(spark, sf)
+          val buildMs = sinceMs
           val ex = staticExchanges(df)
           val bytes = if (!execute) -1L else {
             df.queryExecution.executedPlan.execute()
@@ -72,9 +83,9 @@ object ShuffleSweep {
                 s.metrics.get("shuffleBytesWritten") }
               .flatten.distinctBy(_.id).map(_.value).sum
           }
-          (name, ex, bytes, None)
+          Swept(name, ex, bytes, None, buildMs)
         } catch { case e: Throwable =>
-          (name, -1, -1L, Some(e.toString.take(200)))
+          Swept(name, -1, -1L, Some(e.toString.take(200)), sinceMs)
         }
       }
     }
@@ -122,18 +133,18 @@ object ShuffleSweep {
       sf -> sweep(TestSpark.spark, sf, execute = explicit || ExecuteBytesSfs(sf)))
     bySf.foreach { case (sf, rows) =>
       rows.foreach {
-        case (name, ex, bytes, None) =>
-          println(f"SWEEP $sf $name%-28s exchanges=$ex%2d bytes=$bytes%10d")
-        case (name, _, _, Some(err)) =>
+        case Swept(name, ex, bytes, None, ms) =>
+          println(f"SWEEP $sf $name%-28s exchanges=$ex%2d bytes=$bytes%10d build_ms=$ms%6d")
+        case Swept(name, _, _, Some(err), _) =>
           println(s"SWEEP $sf $name ERROR $err")
       }
     }
     out.foreach { path =>
       val errs = bySf.flatMap { case (sf, rows) =>
-        rows.collect { case (n, _, _, Some(e)) => s"$sf $n: $e" } }
+        rows.collect { case Swept(n, _, _, Some(e), _) => s"$sf $n: $e" } }
       require(errs.isEmpty, s"refusing to write baseline with errors:\n${errs.mkString("\n")}")
       val sections = bySf.map { case (sf, rows) =>
-        val body = rows.map { case (n, ex, bytes, _) =>
+        val body = rows.map { case Swept(n, ex, bytes, _, _) =>
           s"""      "$n": {"exchanges": $ex, "bytes": $bytes}""" }
           .mkString(",\n")
         s"""    {\n      "sf": "$sf",\n      "queries": {\n$body\n      }\n    }"""

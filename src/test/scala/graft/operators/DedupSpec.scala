@@ -152,8 +152,21 @@ class DedupSpec extends AnyFunSuite {
     Dedup.buildBandIndex(idxDocs, "text", "doc_id", tbl, k = 6,
       bandWidth = 2, buckets = 4)
     // probe verdicts = one-shot cross band join of the two frames
-    val probe = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
-      k = 6, bandWidth = 2)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val (probe, probeJobs) = graft.JobLog.record(spark.sparkContext)(
+      Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
+        k = 6, bandWidth = 2))
+    info(s"probeBandIndex: ${probeJobs.size} jobs: " +
+      probeJobs.map(_.site).mkString("; "))
+    // the verdicts are driver-held rows: nothing stays persisted on
+    // executors, and the call runs no more jobs than the checkpointed
+    // form it replaced, which ran 6 here (three banding collects, then
+    // three jobs for the eager local checkpoint) and persisted one RDD
+    assert(probe.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "the probe left a persisted RDD behind")
+    assert(probeJobs.size <= 6, probeJobs.map(_.site))
     val got = probe.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def bandsOf(df: org.apache.spark.sql.DataFrame) =
       Dedup.lshBands(Dedup.minHashSignatures(df, "text", "doc_id", 6), "doc_id", 6, 2)
@@ -164,7 +177,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == want, s"$got vs $want")
     assert(got.exists(_._1 == 10L), "planted near-copy found no index candidate")
     // probe contract (r16): the verdicts were ASSERTED bucket-pruned at
-    // call time and checkpointed under that plan — neither the returned
+    // call time and collected under that plan — neither the returned
     // frame nor anything DERIVED from it can re-plan a scan of the
     // index (the r15 derived-frame full-scan fallback)
     val probePlan = probe.queryExecution.executedPlan.toString
@@ -227,33 +240,6 @@ class DedupSpec extends AnyFunSuite {
       "doc_id", k = 6, bandWidth = 2)
     assert(got.columns.toSeq == Seq("doc_id", "index_id"))
     assert(got.count() == 0)
-  }
-
-  test("probeBandIndex reliable-checkpoint hatch: same verdicts, reliable storage") {
-    val filler = (0 until 30).map(i => s"w$i").mkString(" ")
-    val idxDocs = Seq((1L, s"alpha beta gamma delta $filler"))
-      .toDF("doc_id", "text")
-    val batch = Seq((10L, s"alpha beta gamma delta $filler tail"))
-      .toDF("doc_id", "text")
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
-    val tbl = "graft_bandidx.spec_reliable"
-    Dedup.buildBandIndex(idxDocs, "text", "doc_id", tbl, k = 6,
-      bandWidth = 2, buckets = 4)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-spec-chk").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val got = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
-        k = 6, bandWidth = 2, reliableCheckpoint = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Dedup.probeBandIndex(spark, tbl, batch, "text", "doc_id",
-        k = 6, bandWidth = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want && got.nonEmpty, s"$got vs $want")
-    // the reliable variant actually wrote through the checkpoint dir
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir)).nonEmpty,
-      "reliableCheckpoint=true must write to the checkpoint dir")
   }
 
   test("compactBandIndex: verdict-neutral, file count back to one per bucket, idempotent") {

@@ -362,8 +362,45 @@ class IndexDeleteSpec extends AnyFunSuite {
     placementHolds()
     assert(rows(Similarity.probeIvfIndexExternal(spark, tbl,
       heldOut, cents, "vec_id", 3)) === first)
+    // the band and keyed probes read the same way: a 32-bucket band
+    // index and keyed table, each grown by an append (a second file
+    // set), probed, compacted and probed again
+    import spark.implicits._
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_bandidx")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_keyed")
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val bandTbl = "graft_bandidx.tasks_idx"
+    Dedup.buildBandIndex(docs.filter(col("doc_id") % 3 =!= 0), "text",
+      "doc_id", bandTbl, buckets = 32)
+    Dedup.appendToBandIndex(docs.filter(col("doc_id") % 3 === 0), bandTbl,
+      "text", "doc_id")
+    // near-copies of indexed docs under fresh ids
+    val nearCopies = docs.filter(col("doc_id") % 10 === 1)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" tail")).as("text"))
+    def bandProbe() = Dedup.probeBandIndex(spark, bandTbl, nearCopies,
+      "text", "doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (bandBefore, bandJobs) =
+      graft.JobLog.record(spark.sparkContext)(bandProbe())
+    assert(bandBefore.nonEmpty, "no near-copy found its indexed original")
+    Dedup.compactBandIndex(spark, bandTbl)
+    assert(bandProbe() === bandBefore)
+    val keyedTbl = "graft_keyed.tasks_keyed"
+    Dedup.buildKeyedTable((0L until 200L).map(i => (s"k$i", i))
+      .toDF("k", "v"), "k", keyedTbl, buckets = 32)
+    Dedup.appendToKeyedTable((200L until 260L).map(i => (s"k$i", i))
+      .toDF("k", "v"), keyedTbl, "k")
+    val probeKeys = (0L until 260L by 7L).map(i => s"k$i").toDF("k")
+    def keyedProbe() = Dedup.probeKeyedTable(spark, keyedTbl, probeKeys, "k")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val (keyedBefore, keyedJobs) =
+      graft.JobLog.record(spark.sparkContext)(keyedProbe())
+    assert(keyedBefore === (0L until 260L by 7L).map(i => (s"k$i", i)).toSet)
+    Dedup.compactKeyedTable(spark, keyedTbl, "k")
+    assert(keyedProbe() === keyedBefore)
     val calls = Seq("append" -> append, "repeat probe" -> repeat,
-      "compact" -> compact)
+      "compact" -> compact, "band probe" -> bandJobs,
+      "keyed probe" -> keyedJobs)
     def widths(jobs: Seq[graft.JobLog.Job]) = jobs.map(j =>
       s"${j.site}: ${j.stageTasks.values.mkString("/")}").mkString("; ")
     calls.foreach { case (call, jobs) => info(s"$call: ${widths(jobs)}") }

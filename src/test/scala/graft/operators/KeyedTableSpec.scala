@@ -22,8 +22,22 @@ class KeyedTableSpec extends AnyFunSuite {
     val tbl = "graft_keyed.spec_roundtrip"
     val rows = (0L until 100L).map(i => (s"k$i", i * 10)).toDF("k", "v")
     Dedup.buildKeyedTable(rows, "k", tbl, buckets = 8)
-    val got = Dedup.probeKeyedTable(spark, tbl,
-        Seq("k3", "k77", "missing").toDF("k"), "k")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val (probe, probeJobs) = graft.JobLog.record(spark.sparkContext)(
+      Dedup.probeKeyedTable(spark, tbl,
+        Seq("k3", "k77", "missing").toDF("k"), "k"))
+    info(s"probeKeyedTable: ${probeJobs.size} jobs: " +
+      probeJobs.map(_.site).mkString("; "))
+    // the rows are driver-held: nothing stays persisted on executors,
+    // and the call runs no more jobs than the checkpointed form it
+    // replaced, which ran 3 here (two for the key-set collect, one for
+    // the eager local checkpoint) and persisted one RDD
+    assert(probe.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "the probe left a persisted RDD behind")
+    assert(probeJobs.size <= 3, probeJobs.map(_.site))
+    val got = probe
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == Set(("k3", 30L), ("k77", 770L)))
     // empty key set: no probe, empty frame with the table's schema
@@ -172,25 +186,6 @@ class KeyedTableSpec extends AnyFunSuite {
       (r.getLong(0), r.getBoolean(1), r.getBoolean(2))).toSet
     assert(a == b && a.map(_._1) == Set(100L, 101L, 102L, 103L), s"$a vs $b")
     assert(a.filter(_._3).map(_._1) == Set(100L, 101L))
-  }
-
-  test("probeKeyedTable reliable-checkpoint hatch: same rows, reliable storage") {
-    freshDb()
-    val tbl = "graft_keyed.spec_reliable"
-    Dedup.buildKeyedTable((0L until 20L).map(i => (s"k$i", i)).toDF("k", "v"),
-      "k", tbl, buckets = 4)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-keyed-chk").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val keys = Seq("k1", "k7").toDF("k")
-    val got = Dedup.probeKeyedTable(spark, tbl, keys, "k",
-        reliableCheckpoint = true)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == Set(("k1", 1L), ("k7", 7L)))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir)).nonEmpty,
-      "reliableCheckpoint=true must write through the checkpoint dir")
   }
 
   test("within-batch near-dups: the documented d42 pre-resolve composes with the indexed resolve") {

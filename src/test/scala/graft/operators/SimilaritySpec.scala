@@ -1010,11 +1010,11 @@ class SimilaritySpec extends AnyFunSuite {
     assert(served(2).groupBy(_._1).forall(_._2.size == 3))
   }
 
-  test("PQ append's (cid, id) idempotence lookup bucket-prunes — the compileAndPinBucketedScan pin") {
+  test("PQ append's (cid, id) idempotence lookup bucket-prunes — the pinBucketedScan pin") {
     // r20 verdict item: appendToPqIndex's idempotence scan was the one
     // pruned scan without a plan assertion — it now routes through
-    // pinBucketedScan, the pin compileAndPinBucketedScan wraps
-    // (SelectedBucketsCount asserted at compile time AND on the
+    // pinBucketedScan, materialized by a collect as every pinned read
+    // is (SelectedBucketsCount asserted at compile time AND on the
     // executed plan). This spec pins the shape
     // the in-path assert depends on: an In(cid) && In(id) filter over a
     // cid-bucketed codes table, compiled inside the conf window,
@@ -1040,9 +1040,9 @@ class SimilaritySpec extends AnyFunSuite {
       .filter(col("cid").isin(someCids: _*) &&
         col("vec_id").isin(Seq(11L, 12L): _*))
       .select(col("vec_id"), col("cid"))
-    val pinned = BucketedStore.compileAndPinBucketedScan(spark, lookup, tbl,
-      reliable = false, "SimilaritySpec pin")
-    assert(pinned.columns.toSeq === Seq("vec_id", "cid"))
+    BucketedStore.pinBucketedScan(spark, lookup, tbl, "SimilaritySpec pin")(
+      _.collect())
+    assert(lookup.columns.toSeq === Seq("vec_id", "cid"))
     // and the real append path end to end: a replayed batch is
     // absorbed through that pruned lookup (the assert runs in-path)
     val batch = base.filter(col("vec_id") >= 300 && col("vec_id") < 320)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{ShuffleSweep, TestSpark}
+import graft.ShuffleSweep.Swept
 
 /** Standing plan-drift gate: every query's static (non-AQE) shuffle
   * exchange count must match the committed SHUFFLE_BASELINE.json at
@@ -59,13 +60,22 @@ class ShuffleBaselineSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"$baselinePath does not cover the default scale points: missing $missing — " +
       "regenerate with sbt 'Test/runMain graft.ShuffleSweep --write SHUFFLE_BASELINE.json'")
-    val problems = baselines.toSeq.sortBy(_._1).flatMap { case (sf, baseline) =>
-      val swept = ShuffleSweep.sweep(TestSpark.spark, sf, execute = false)
-      val errors = swept.collect { case (n, _, _, Some(e)) => s"[$sf] $n failed to plan: $e" }
+    val bySf = baselines.toSeq.sortBy(_._1).map { case (sf, baseline) =>
+      (sf, baseline, ShuffleSweep.sweep(TestSpark.spark, sf, execute = false))
+    }
+    // where the gate's time goes: constructing the queries (eager
+    // fixture and index builds, stream replays), not planning them
+    bySf.foreach { case (sf, _, swept) =>
+      info(s"${swept.map(_.buildMs).sum} ms to build ${swept.size} queries at $sf") }
+    bySf.flatMap { case (sf, _, swept) => swept.map(sf -> _) }
+      .sortBy(-_._2.buildMs).take(10).foreach { case (sf, q) =>
+        info(s"${q.buildMs} ms to build ${q.name} at $sf") }
+    val problems = bySf.flatMap { case (sf, baseline, swept) =>
+      val errors = swept.collect { case Swept(n, _, _, Some(e), _) => s"[$sf] $n failed to plan: $e" }
       // errored queries surface once, above — keep them out of the
       // count comparison so one failure doesn't double-report
-      val current = swept.collect { case (n, ex, _, None) => n -> ex }.toMap
-      val errored = swept.collect { case (n, _, _, Some(_)) => n }.toSet
+      val current = swept.collect { case Swept(n, ex, _, None, _) => n -> ex }.toMap
+      val errored = swept.collect { case Swept(n, _, _, Some(_), _) => n }.toSet
       val missing = baseline.keySet -- current.keySet -- errored
       val unbaselined = current.keySet -- baseline.keySet
       val drifted = baseline.toSeq.sorted.collect {
