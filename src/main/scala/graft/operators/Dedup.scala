@@ -1055,13 +1055,14 @@ object Dedup {
     * The idempotence check mirrors [[probeKeyedTable]]'s two forms:
     * at micro-batch sizes (≤ `joinFormThreshold` distinct keys) it is
     * the store's bucket-pruned point lookups ([[BucketedStore.append]]
-    * — the batch's keys as literals, bounded by `maxKeys`), and above
+    * — the batch's keys as literals, so `joinFormThreshold` bounds both
+    * the driver collect and the plan's literal count), and above
     * the threshold (a backfill-sized delivery) it switches to the
     * bucket-aligned join form with every validation pushed to the
     * cluster: no driver hop, no literal plan, zero table-side
     * exchange, and the same first-writer-wins effect. */
   def appendToKeyedTable(batch: DataFrame, table: String, keyCol: String,
-      maxKeys: Int = 1 << 20, joinFormThreshold: Int = 1 << 16): Unit = {
+      joinFormThreshold: Int = 1 << 16): Unit = {
     val spark = batch.sparkSession
     DriverBounded.labeled(spark, s"appendToKeyedTable:$table") {
     val layout = BucketedStore.open(spark, table, "appendToKeyedTable",
@@ -1095,12 +1096,6 @@ object Dedup {
         BucketedStore.appendRows(spark, table, layout,
           b.join(existing.select(col(keyCol)), Seq(keyCol), "left_anti"))
       } else {
-        require(headRows.length <= maxKeys,
-          s"appendToKeyedTable: batch exceeds maxKeys $maxKeys (the " +
-            "batch's keys become planning-time point-lookup " +
-            "literals); split the batch, raise the bound " +
-            "deliberately, or lower joinFormThreshold to take the " +
-            "join form")
         val keys = headRows.map(_.get(0))
         require(keys.distinct.length == keys.length,
           s"appendToKeyedTable: batch has duplicate $keyCol keys — " +
@@ -1160,8 +1155,8 @@ object Dedup {
     *    most one task per core, and its rows (at most one per probed
     *    key: the table is key-distinct) are collected once and
     *    returned as a local frame ([[BucketedStore.collectPinned]]).
-    *    The loud `maxKeys` cap applies to this form only (it bounds
-    *    the driver materialization and the plan's literal count).
+    *    `joinFormThreshold` is this form's bound: it caps the driver
+    *    materialization and the plan's literal count.
     *  - '''Join form''' (above the threshold): a million-literal
     *    `isin` would bloat planning time and driver memory, so the
     *    probe switches to a bucket-ALIGNED join — the key frame
@@ -1179,7 +1174,6 @@ object Dedup {
     * frame with the table's schema. */
   def probeKeyedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, keys: DataFrame, keyCol: String,
-      maxKeys: Int = 1 << 20,
       joinFormThreshold: Int = 1 << 16): DataFrame =
       DriverBounded.labeled(spark, s"probeKeyedTable:$table") {
     val layout = BucketedStore.open(spark, table, "probeKeyedTable",
@@ -1193,11 +1187,6 @@ object Dedup {
         layout.buckets)
     else {
       val lits = headRows.map(_.get(0)).toSeq
-      require(lits.size <= maxKeys,
-        s"probeKeyedTable: probe key set exceeds maxKeys $maxKeys (keys " +
-          "become planning-time point-lookup literals); split the batch, " +
-          "raise the bound deliberately, or lower joinFormThreshold to " +
-          "take the join form")
       require(!lits.contains(null),
         s"probeKeyedTable: null $keyCol in the probe key set — " +
           "isin(literals) never matches null, so a null probe would " +

@@ -96,26 +96,15 @@ object Pipeline {
   /** The pretraining pipeline end-to-end: quality gate -> LSH near-dup
     * drop (a doc paired with a smaller id is dominated; one anti-join,
     * no iteration) -> deterministic train split -> per-source quota ->
-    * sequence packing. This overload discards the unpersist handle —
-    * one-shot runs only; long sessions should call
-    * [[pretrainPipelineWithRelease]]. */
-  def pretrainPipeline(docs: DataFrame, textCol: String, idCol: String,
-      sourceCol: String,
-      thresholds: QualityThresholds = QualityThresholds(),
-      nearDup: NearDupConfig = NearDupConfig(),
-      trainPct: Int = 80, quota: Int = 15,
-      seqLen: Int = 512, bucketSize: Long = 1L << 20): DataFrame =
-    pretrainPipelineWithRelease(docs, textCol, idCol, sourceCol,
-      thresholds, nearDup, trainPct, quota, seqLen, bucketSize)._1
-
-  /** [[pretrainPipeline]] plus an unpersist handle. The stages up to the
-    * train split are ONE declarative plan (the quality filter pushes into
-    * the scan, the LSH drop is one anti-join); that plan is persisted at
-    * the split boundary because [[Sampling.quotaPerGroup]] deliberately
-    * reads its input twice (rank branch + offsets branch) — without the
-    * cache the expensive upstream (shingle explode, banding shuffles,
-    * anti-join) would compute twice per run. Invoke the handle after
-    * consuming the result to free the executor storage. */
+    * sequence packing, returned with an unpersist handle. The stages up
+    * to the train split are ONE declarative plan (the quality filter
+    * pushes into the scan, the LSH drop is one anti-join); that plan is
+    * persisted at the split boundary because [[Sampling.quotaPerGroup]]
+    * deliberately reads its input twice (rank branch + offsets branch)
+    * — without the cache the expensive upstream (shingle explode,
+    * banding shuffles, anti-join) would compute twice per run. Invoke
+    * the handle after consuming the result to free the executor
+    * storage. */
   def pretrainPipelineWithRelease(docs: DataFrame, textCol: String,
       idCol: String, sourceCol: String,
       thresholds: QualityThresholds = QualityThresholds(),
@@ -142,18 +131,10 @@ object Pipeline {
     * them; a user of the reference-style toolkit runs the whole recipe
     * in one call and gets packed `seqLen`-token contexts out.
     *
-    * This overload discards the unpersist handle — one-shot runs only.
-    */
-  def fineWebPipeline(docs: DataFrame, textCol: String, idCol: String,
-      langCol: String, mixTarget: Long, seqLen: Int = 512,
-      bucketSize: Long = 1L << 20): DataFrame =
-    fineWebPipelineWithRelease(docs, textCol, idCol, langCol, mixTarget,
-      seqLen = seqLen, bucketSize = bucketSize)._1
-
-  /** [[fineWebPipeline]] plus an unpersist handle. The stages through
-    * redaction are ONE declarative plan (the gate is a narrow
-    * zero-exchange filter, the LSH drop one anti-join, redaction a
-    * narrow projection); that plan is persisted before the mix because
+    * Returned with an unpersist handle. The stages through redaction
+    * are ONE declarative plan (the gate is a narrow zero-exchange
+    * filter, the LSH drop one anti-join, redaction a narrow
+    * projection); that plan is persisted before the mix because
     * [[Sampling.temperatureMix]] — like the quota sampler it extends —
     * deliberately reads its input twice (bucket-count branch + row-rank
     * branch), and without the cache the shingle/banding work upstream
@@ -186,24 +167,16 @@ object Pipeline {
     * gating, so junk a gate already rejects cannot mark spans in
     * surviving text) → drop documents stripped to nothing → pack the
     * clean text into `seqLen`-token training sequences in id order.
-    * Discards the release handle; long sessions should call
-    * [[exactSubstrPipelineWithRelease]]. */
-  def exactSubstrPipeline(docs: DataFrame, textCol: String, idCol: String,
-      spanTokens: Int = 8, seqLen: Int = 512,
-      bucketSize: Long = 1L << 20): DataFrame =
-    exactSubstrPipelineWithRelease(docs, textCol, idCol, spanTokens,
-      seqLen, bucketSize)._1
-
-  /** [[exactSubstrPipeline]] plus an unpersist handle. Two frames are
-    * persisted (the linkLoad release-handle pattern): the gate output,
-    * which has three consumers — the span-occurrence index, the strip
-    * step's text join, and the untouched-docs anti-join — and the
-    * strip output, which has two (the anti-join's id probe and the
-    * clean-text union branch; uncached, column pruning would
-    * de-canonicalize the two subtrees and re-run the span windows AND
-    * the text-carrying join, breaking stripDuplicatedSpans' carries-
-    * text-once contract). Packing then reads the union a single
-    * time. */
+    *
+    * Returned with an unpersist handle. Two frames are persisted (the
+    * linkLoad release-handle pattern): the gate output, which has three
+    * consumers — the span-occurrence index, the strip step's text join,
+    * and the untouched-docs anti-join — and the strip output, which has
+    * two (the anti-join's id probe and the clean-text union branch;
+    * uncached, column pruning would de-canonicalize the two subtrees
+    * and re-run the span windows AND the text-carrying join, breaking
+    * stripDuplicatedSpans' carries-text-once contract). Packing then
+    * reads the union a single time. */
   def exactSubstrPipelineWithRelease(docs: DataFrame, textCol: String,
       idCol: String, spanTokens: Int = 8, seqLen: Int = 512,
       bucketSize: Long = 1L << 20): (DataFrame, () => Unit) = {
@@ -332,15 +305,6 @@ object Pipeline {
       Seq(idCol), "left_semi")
     Packing.packSequences(sel, idCol, "clean_text", seqLen, bucketSize)
   }
-
-  /** [[webCurationPipelineWithRelease]] discarding the handle — one-shot
-    * runs only. */
-  def webCurationPipeline(docs: DataFrame, textCol: String, idCol: String,
-      targetFilter: Column, ctxBuckets: Int = 1024,
-      pairBuckets: Int = 16384, seqLen: Int = 512,
-      bucketSize: Long = 1L << 20): DataFrame =
-    webCurationPipelineWithRelease(docs, textCol, idCol, targetFilter,
-      ctxBuckets, pairBuckets, seqLen, bucketSize)._1
 
   /** Chunk-then-pack pretraining pipeline: quality gate -> exact dedup
     * -> token-window chunking ([[TextAnalysis.chunkTokenWindows]]

@@ -2,10 +2,12 @@ package graft.queries
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.BucketedStore
 
 /** The one replay feed behind every streamed gate (w02–w16). The
   * reference's "stream" is ordered CDC batches replayed through
@@ -22,6 +24,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    replayed slice never arrived as its own non-empty micro-batch
   *    tests nothing, even when its hash still matches, so it fails
   *    loudly instead.
+  *
+  * Two scripts recur across the gates and are written once here:
+  * [[residueSlices]] (three `id % 3` slices, then slice 0 redelivered)
+  * and [[compactingAfterSecond]] (compact the persisted artifact once,
+  * under live traffic, right after the second delivery).
   *
   * [[guardedQuarters]] slices the gates that cut on a timestamp
   * (w05/w06): quarter the [min, max] of a millisecond column with ONE
@@ -82,6 +89,38 @@ object StreamSlices {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     requireBatches(q, slices.size, tag)
+  }
+
+  /** `rows` as the feed of an id-sliced gate: the three `id % 3`
+    * residue slices in order, then slice 0 again — the at-least-once
+    * redelivery the gate must absorb. */
+  def residueSlices(rows: DataFrame, id: String): Seq[DataFrame] =
+    (Seq(0, 1, 2) :+ 0).map(i => rows.filter(col(id) % 3 === i))
+
+  /** `load`, followed once — right after the second delivery — by
+    * `compact` on that batch's session: compaction under live traffic,
+    * so the next slice appends against, and the replay's idempotence
+    * lookups read, the compacted files. Refuses unless the compaction
+    * left `table` with `0 < files <= buckets` (its catalog bucket
+    * count) and no more files than it found. */
+  def compactingAfterSecond(tag: String, table: String)(
+      compact: SparkSession => Unit)(
+      load: DataFrame => Unit): DataFrame => Unit = {
+    val delivered = new AtomicInteger(0)
+    batch => {
+      load(batch)
+      if (delivered.incrementAndGet() == 2) {
+        val bs = batch.sparkSession
+        val buckets =
+          BucketedStore.catalogLayout(bs, table).fold(0)(_.buckets)
+        val before = BucketedStore.fileCount(bs, table)
+        compact(bs)
+        val after = BucketedStore.fileCount(bs, table)
+        require(after > 0 && after <= buckets && after <= before,
+          s"$tag: mid-stream compaction must bound $table to one file " +
+            s"per bucket (buckets=$buckets, before=$before, after=$after)")
+      }
+    }
   }
 
   /** `df` in four ascending quarters of `ms`, each asserted non-empty

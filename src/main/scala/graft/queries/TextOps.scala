@@ -63,9 +63,9 @@ object TextOps {
     // see Pipeline.pretrainPipelineWithRelease (single-upstream-execution
     // is plan-pinned in QueryPlanSpec).
     "p02_pretrain_pipeline" -> ((s, d) =>
-      graft.operators.Pipeline.pretrainPipeline(
+      graft.operators.Pipeline.pretrainPipelineWithRelease(
         Tables.documents(s, d), "text", "doc_id", "source",
-        trainPct = 80, quota = 15, seqLen = 512)),
+        trainPct = 80, quota = 15, seqLen = 512)._1),
 
     // Chunk-then-pack pretraining pipeline: quality gate -> exact
     // dedup -> 64/48 token-window chunks -> 512-token sequence packing
@@ -275,9 +275,9 @@ object TextOps {
     // (fixture-sized mixTarget/bucketSize passed explicitly: the
     // pipeline's own bucketSize default is the 1<<20 scale value)
     "p04_fineweb_pipeline" -> ((s, d) =>
-      graft.operators.Pipeline.fineWebPipeline(
+      graft.operators.Pipeline.fineWebPipelineWithRelease(
         Tables.documents(s, d), "text", "doc_id", "lang", mixTarget = 150,
-        bucketSize = 64)),
+        bucketSize = 64)._1),
 
     // Gopher-style composite quality gate: all six signals inside
     // their thresholds, emitted for audit (one narrow pass).
@@ -292,9 +292,9 @@ object TextOps {
     // corpus -> drop fully-stripped husks -> 512-token packing
     // (bucketSize 64 exercises the multi-bucket path).
     "p05_exactsubstr_pipeline" -> ((s, d) =>
-      graft.operators.Pipeline.exactSubstrPipeline(
+      graft.operators.Pipeline.exactSubstrPipelineWithRelease(
         Tables.documents(s, d), "text", "doc_id", spanTokens = 8,
-        seqLen = 512, bucketSize = 64)),
+        seqLen = 512, bucketSize = 64)._1),
 
     // Streaming curation gate: the documents fixture replayed through
     // a REAL readStream file source into a foreachBatch append sink
@@ -479,8 +479,8 @@ object TextOps {
         when(col("doc_id") % 50 === 0,
           concat(lit("subscribe to our newsletter\ncookie policy\n"),
             col("text"))).otherwise(col("text")))
-      graft.operators.Pipeline.webCurationPipeline(planted, "text",
-        "doc_id", col("doc_id") % 97 === 0)
+      graft.operators.Pipeline.webCurationPipelineWithRelease(planted,
+        "text", "doc_id", col("doc_id") % 97 === 0)._1
     }),
 
     // Decontamination surgery: the d23 plant (ProbePassage appended to
@@ -535,12 +535,9 @@ object TextOps {
     // appends (the w05 discipline — the probe plan reads the table the
     // appends extend).
     "d44_incremental_neardup" -> ((s, d) => {
-      val planted = plantBoundaryCopies(Tables.documents(s, d))
-      val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
-      val batch = planted.filter(col("doc_id") % 4 === 0)
+      val (planted, idxSet, batch) = boundarySplit(Tables.documents(s, d))
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "d44", d)
-      Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(idxSet, tbl)
       val out = Scratch.dir("d44", d) + "/verdicts"
       Dedup.probeBandIndex(s, tbl, batch, "text", "doc_id",
           k = 6, bandWidth = 2)
@@ -568,12 +565,9 @@ object TextOps {
     // probe of the batch against the full index hash-matches the
     // mirror computed over the raw banded pairs.
     "d51_band_compaction" -> ((s, d) => {
-      val planted = plantBoundaryCopies(Tables.documents(s, d))
-      val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
-      val batch = planted.filter(col("doc_id") % 4 === 0)
+      val (_, idxSet, batch) = boundarySplit(Tables.documents(s, d))
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "d51", d)
-      Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(idxSet, tbl)
       Dedup.appendToBandIndex(batch.filter(col("doc_id") % 8 === 0), tbl,
         "text", "doc_id", k = 6, bandWidth = 2)
       Dedup.appendToBandIndex(batch.filter(col("doc_id") % 8 =!= 0), tbl,
@@ -604,16 +598,13 @@ object TextOps {
     // applies the tombstones physically — the row-count identity pins
     // exactly 3 bands removed per superseded doc.
     "d52_ingest_resolve" -> ((s, d) => {
-      val planted = plantBoundaryCopies(Tables.documents(s, d))
+      val (_, idxSet, batchDocs) = boundarySplit(Tables.documents(s, d))
       val score = (col("doc_id") * 37) % 100
-      val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
-      val batch = planted.filter(col("doc_id") % 4 === 0)
-        .withColumn("q", score)
+      val batch = batchDocs.withColumn("q", score)
       val scores = Tables.documents(s, d)
         .select(col("doc_id"), score.as("q"))
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "d52", d)
-      Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(idxSet, tbl)
       val idxDocs = idxSet.count()
       val r1 = Dedup.ingestResolveNearDups(s, tbl,
         batch.filter(col("doc_id") % 8 === 0), "text", "doc_id", "q",
@@ -670,8 +661,7 @@ object TextOps {
         Seq("doc_id"), "left_semi")
       // stage 3: band-index near-dup vs the corpus
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "p12", d)
-      Dedup.buildBandIndex(corpus, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(corpus, tbl)
       val nd = Dedup.probeBandIndex(s, tbl, s2, "text", "doc_id",
         k = 6, bandWidth = 2)
       val s3 = s2.join(nd.select("doc_id").distinct(), Seq("doc_id"),
@@ -699,8 +689,7 @@ object TextOps {
       val loc = Scratch.dir("w12", d)
       val (marked, corpus, batch0, releaseFixture) = capstoneFixture(s, d)
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "w12", d)
-      Dedup.buildBandIndex(corpus, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(corpus, tbl)
       // the corpus bitmap builds ONCE, localized — every slice probes
       // the same driver-local artifact (production would mergeBloomInto)
       val bloom = TextAnalysis.localizeStats(Dedup.buildBloom(
@@ -719,11 +708,9 @@ object TextOps {
       val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w12s", d)
       val curlTbl = Scratch.catalogTable(s, "graft_keyed", "w12c", d)
       Dedup.buildFingerprintTable(corpus, "text", fpTbl, buckets = 8)
-      Dedup.buildKeyedTable(batch0.limit(0)
-          .select(col("doc_id"), lit("").as("domain")),
-        "doc_id", sinkTbl, buckets = 8)
-      Dedup.buildKeyedTable(batch0.limit(0).select(lit("").as("curl")),
-        "curl", curlTbl, buckets = 8)
+      emptyKeyedSink(batch0.select(col("doc_id"), lit("").as("domain")),
+        "doc_id", sinkTbl)
+      emptyKeyedSink(batch0.select(lit("").as("curl")), "curl", curlTbl)
       // documents ids are dense 0..n-1, so n/2 splits the id range;
       // two ascending slices + slice 0 redelivered last
       val median = Tables.documents(s, d).count() / 2
@@ -967,24 +954,21 @@ object TextOps {
     // either table.
     "w08_band_stream_dedup" -> ((s, d) => {
       val loc = Scratch.dir("w08", d)
-      val planted = plantBoundaryCopies(Tables.documents(s, d))
-      val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
-      val batchAll = planted.filter(col("doc_id") % 4 === 0)
+      val (planted, idxSet, batchAll) =
+        boundarySplit(Tables.documents(s, d))
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "w08", d)
-      Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(idxSet, tbl)
       // the accumulating verdict sink is a doc_id-bucketed keyed
       // table (the d55 device): first-delivery accumulation is the
       // keyed append's bucket-pruned idempotence, not a full sink
       // re-read per slice
       val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w08", d)
-      Dedup.buildKeyedTable(batchAll.limit(0)
-          .select(col("doc_id"), lit(0L).as("n_prior_candidates")),
-        "doc_id", sinkTbl, buckets = 8)
+      emptyKeyedSink(
+        batchAll.select(col("doc_id"), lit(0L).as("n_prior_candidates")),
+        "doc_id", sinkTbl)
       // three slices in doc_id % 3 order + slice 0 redelivered last
-      val slices = (Seq(0L, 1L, 2L) :+ 0L)
-        .map(i => batchAll.filter(col("doc_id") % 3 === i))
-      StreamSlices.replay(s, loc, "w08", slices) { b =>
+      StreamSlices.replay(s, loc, "w08",
+          StreamSlices.residueSlices(batchAll, "doc_id")) { b =>
         // every read/refresh inside the batch goes through the BATCH's
         // session: foreachBatch runs under a cloned session, and a
         // refreshTable there does not invalidate the OUTER session's
@@ -1043,40 +1027,32 @@ object TextOps {
       // sink's anti-join re-READ the whole accumulated sink per slice
       // (delivery cost ∝ corpus once the sink has absorbed it)
       val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w10", d)
-      Dedup.buildKeyedTable(batchAll.limit(0)
-          .select(col("doc_id"), lit(false).as("maybe_member")),
-        "doc_id", sinkTbl, buckets = 8)
-      // three doc_id % 3 slices + slice 0 redelivered last
-      val slices = (Seq(0L, 1L, 2L) :+ 0L)
-        .map(i => batchAll.filter(col("doc_id") % 3 === i))
-      val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      StreamSlices.replay(s, loc, "w10", slices) { b =>
-        val bs = b.sparkSession
-        val keyed = b.select(col("doc_id"), md5(col("text")).as("__key"))
-        // probe BEFORE merging: the verdict reflects the artifact as
-        // the batch arrived, not including the batch itself
-        val probed = Dedup.probeBloom(keyed, "__key", "doc_id",
-            Dedup.loadBloom(bs, bloomPath), mBits = 1 << 16, k = 3)
-        // first-delivery verdicts: the keyed append's bucket-pruned
-        // anti-join (it persists + materializes the batch internally
-        // before writing — the w05 discipline is the device's own)
-        Dedup.appendToKeyedTable(probed, sinkTbl, "doc_id")
-        Dedup.mergeBloomInto(bloomPath, keyed, "__key",
-          mBits = 1 << 16, k = 3)
-        // compaction UNDER LIVE TRAFFIC, keyed grain (the d51 story at
-        // the point-lookup grain): after the second slice, rewrite the
-        // sink back to one file per bucket mid-stream — the remaining
-        // slice + replay then probe, append to, and finally read the
-        // COMPACTED table, and the gate's oracle must not move
-        if (sliceNo.incrementAndGet() == 2) {
-          val before = BucketedStore.fileCount(bs, sinkTbl)
-          Dedup.compactKeyedTable(bs, sinkTbl, "doc_id")
-          val after = BucketedStore.fileCount(bs, sinkTbl)
-          require(after > 0 && after <= 8 && after <= before,
-            s"w10: mid-stream keyed compaction must bound the sink to " +
-              s"one file per bucket (before=$before, after=$after)")
-        }
-      }
+      emptyKeyedSink(
+        batchAll.select(col("doc_id"), lit(false).as("maybe_member")),
+        "doc_id", sinkTbl)
+      // three doc_id % 3 slices + slice 0 redelivered last, with
+      // compaction UNDER LIVE TRAFFIC, keyed grain (the d51 story at
+      // the point-lookup grain): after the second slice, rewrite the
+      // sink back to one file per bucket mid-stream — the remaining
+      // slice + replay then probe, append to, and finally read the
+      // COMPACTED table, and the gate's oracle must not move
+      StreamSlices.replay(s, loc, "w10",
+          StreamSlices.residueSlices(batchAll, "doc_id"))(
+        StreamSlices.compactingAfterSecond("w10", sinkTbl)(
+            Dedup.compactKeyedTable(_, sinkTbl, "doc_id")) { b =>
+          val bs = b.sparkSession
+          val keyed = b.select(col("doc_id"), md5(col("text")).as("__key"))
+          // probe BEFORE merging: the verdict reflects the artifact as
+          // the batch arrived, not including the batch itself
+          val probed = Dedup.probeBloom(keyed, "__key", "doc_id",
+              Dedup.loadBloom(bs, bloomPath), mBits = 1 << 16, k = 3)
+          // first-delivery verdicts: the keyed append's bucket-pruned
+          // anti-join (it persists + materializes the batch internally
+          // before writing — the w05 discipline is the device's own)
+          Dedup.appendToKeyedTable(probed, sinkTbl, "doc_id")
+          Dedup.mergeBloomInto(bloomPath, keyed, "__key",
+            mBits = 1 << 16, k = 3)
+        })
       // replay absorbed by algebra: the streamed artifact must be
       // bit-identical to the one-shot bitmap over corpus + batch
       val oneShot = graft.operators.TextAnalysis.localizeStats(
@@ -1110,13 +1086,10 @@ object TextOps {
     // for row: the oracle IS the d52 mirror.
     "w11_resolve_stream" -> ((s, d) => {
       val loc = Scratch.dir("w11", d)
-      val planted = plantBoundaryCopies(Tables.documents(s, d))
+      val (_, idxSet, batchAll) = boundarySplit(Tables.documents(s, d))
       val score = (col("doc_id") * 37) % 100
-      val idxSet = planted.filter(col("doc_id") % 4 =!= 0)
-      val batchAll = planted.filter(col("doc_id") % 4 === 0)
       val tbl = Scratch.catalogTable(s, "graft_bandidx", "w11", d)
-      Dedup.buildBandIndex(idxSet, "text", "doc_id", tbl,
-        k = 6, bandWidth = 2, buckets = 8)
+      bandIndex(idxSet, tbl)
       val idxDocs = idxSet.count()
       // the score side PERSISTED (the d55 device): seeded with the
       // index docs' scores, maintained by the operator itself (each
@@ -1129,10 +1102,10 @@ object TextOps {
       val sinkTbl = Scratch.catalogTable(s, "graft_keyed", "w11", d)
       Dedup.buildKeyedTable(idxSet.select(col("doc_id"), score.as("q")),
         "doc_id", scoreTbl, buckets = 8)
-      Dedup.buildKeyedTable(batchAll.limit(0)
-          .select(col("doc_id"), lit(0L).as("n_candidates"),
-            lit(true).as("kept"), lit(0L).as("n_superseded")),
-        "doc_id", sinkTbl, buckets = 8)
+      emptyKeyedSink(batchAll.select(col("doc_id"),
+          lit(0L).as("n_candidates"), lit(true).as("kept"),
+          lit(0L).as("n_superseded")),
+        "doc_id", sinkTbl)
       // the two doc_id % 8 slices + slice 0 redelivered last
       val slice0 = batchAll.filter(col("doc_id") % 8 === 0)
       val slices = Seq(slice0, batchAll.filter(col("doc_id") % 8 =!= 0),
@@ -1182,8 +1155,7 @@ object TextOps {
       val loc = Scratch.dir("w13", d)
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val store = s"$loc/lmstore"
-      val slices = (Seq(0L, 1L, 2L) :+ 0L)
-        .map(i => docs.filter(col("doc_id") % 3 === i))
+      val slices = StreamSlices.residueSlices(docs, "doc_id")
       StreamSlices.replay(s, loc, "w13", slices) { b =>
         // content-keyed delivery identity: the slice's residue class
         val sl = graft.operators.DriverBounded.collectCapped(
@@ -1200,8 +1172,7 @@ object TextOps {
       // POST-compaction replay: the partition is gone — the manifest
       // must absorb it (this is exactly the double-count hazard)
       graft.operators.StatsStore.writeDelivery(store, "slice0",
-        graft.operators.TextAnalysis.lmStats(
-          docs.filter(col("doc_id") % 3 === 0L), "text",
+        graft.operators.TextAnalysis.lmStats(slices.head, "text",
           ctxBuckets = 1024, pairBuckets = 16384))
       graft.operators.StatsStore.readStats(s, store, Seq("kind", "bucket"))
     }),
@@ -1319,8 +1290,9 @@ object TextOps {
        t -> ('0x' || substr(md5(t), 1, 12))::BIGINT
             + $j * ('0x' || substr(md5(t), 13, 12))::BIGINT), 'min')"""
 
-  /** The d44/w08 planted fixture: every doc_id % 20 == 0 doc (always
-    * batch side of the % 4 split) becomes a near-copy of its
+  /** The planted fixture behind [[boundarySplit]] and
+    * [[capstoneFixture]]: every doc_id % 20 == 0 doc (always batch
+    * side of the % 4 split) becomes a near-copy of its
     * doc_id + 1 successor (always index side: (id+1) % 4 == 1) — the
     * successor's text plus a tail, so the copy is NEAR, not exact,
     * and spans the index/batch boundary by construction. The final
@@ -1335,6 +1307,31 @@ object TextOps {
           .otherwise(col("text")))
       .select(col("doc_id"), col("text"))
   }
+
+  /** The boundary-planted index/batch split (d44, d51, d52, w08, w11):
+    * `docs` with [[plantBoundaryCopies]] applied, its doc_id % 4 != 0
+    * index side and its doc_id % 4 == 0 batch side. */
+  private def boundarySplit(docs: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val planted = plantBoundaryCopies(docs)
+    (planted, planted.filter(col("doc_id") % 4 =!= 0),
+      planted.filter(col("doc_id") % 4 === 0))
+  }
+
+  /** The band index every band gate builds over `rows` (d44, d51, d52,
+    * w08, w11 over the index side; p12, w12 over the capstone corpus):
+    * k = 6 bands of width 2, 8 buckets — the engine side of
+    * [[bandIdxCtes]]. */
+  private def bandIndex(rows: DataFrame, tbl: String): Unit =
+    Dedup.buildBandIndex(rows, "text", "doc_id", tbl,
+      k = 6, bandWidth = 2, buckets = 8)
+
+  /** An empty key-bucketed sink with `cols`' schema, keyed on `key`,
+    * 8 buckets: the table a streamed gate accumulates into (w08, w10,
+    * w11, w12, and both keyed tables of the streamed web curation). */
+  private def emptyKeyedSink(cols: DataFrame, key: String,
+      tbl: String): Unit =
+    Dedup.buildKeyedTable(cols.limit(0), key, tbl, buckets = 8)
 
   /** The d45/p11 shared URL fixture: 20 domains, 5-way dup groups,
     * case/tracking noise — mirrored verbatim in the oracle SQL. */
@@ -1389,7 +1386,8 @@ object TextOps {
         .withColumn("__pos", col("doc_id") % 10 === 0),
       "text", "__pos", buckets = 512))
 
-  /** The d49/w10 shared fixture: corpus = 3/4 of docs; batch = the
+  /** The d49/d55/w10 shared fixture, and the capstone's corpus/batch
+    * split over its planted frame: corpus = 3/4 of docs; batch = the
     * rest, every doc_id % 8 == 0 doc carrying its corpus-side
     * successor's text (an exact cross-boundary copy, so membership is
     * non-vacuously true across the index/batch boundary). */
@@ -1789,12 +1787,10 @@ object TextOps {
     // corpus-sized frame is read per delivery
     val cleanTbl = Scratch.catalogTable(s, "graft_keyed", s"${tag}c", d)
     val lineTbl = Scratch.catalogTable(s, "graft_keyed", s"${tag}l", d)
-    Dedup.buildKeyedTable(planted.limit(0)
-        .select(col("doc_id"), col("text").as("clean_text")),
-      "doc_id", cleanTbl, buckets = 8)
-    Dedup.buildKeyedTable(planted.limit(0)
-        .select(md5(col("text")).as("line_hash")),
-      "line_hash", lineTbl, buckets = 8)
+    emptyKeyedSink(planted.select(col("doc_id"), col("text").as("clean_text")),
+      "doc_id", cleanTbl)
+    emptyKeyedSink(planted.select(md5(col("text")).as("line_hash")),
+      "line_hash", lineTbl)
     val lmDeliveries = new java.util.concurrent.atomic.AtomicInteger(0)
     // four ascending slices + slice 1 redelivered last
     StreamSlices.replay(s, loc, tag, slices :+ slices(1)) { b =>
@@ -1959,9 +1955,10 @@ object TextOps {
           "first_seq", "last_seq")
   }
 
-  /** The capstone's shared fixture: the marked STORE, the corpus
-    * three-quarters, and the batch quarter with the %20 boundary
-    * near-copies and %8 exact copies planted (markers first, so the
+  /** The capstone's shared fixture: the marked STORE, and
+    * [[bloomFixture]]'s corpus three-quarters and batch quarter over
+    * the marked docs with the %20 boundary near-copies planted — the
+    * batch carrying the %8 exact copies too (markers first, so the
     * copies carry their source's markers verbatim and exact
     * membership survives marking). The planted frame — a self-join —
     * is PERSISTED: corpus and batch0 fan out to every artifact build
@@ -1972,15 +1969,7 @@ object TextOps {
       : (DataFrame, DataFrame, DataFrame, () => Unit) = {
     val marked = markedDocs(Tables.documents(s, d))
     val planted = plantBoundaryCopies(marked).persist()
-    val corpus = planted.filter(col("doc_id") % 4 =!= 0)
-    val neighbor = planted.select((col("doc_id") - 1).as("doc_id"),
-      col("text").as("__nt"))
-    val batch0 = planted.filter(col("doc_id") % 4 === 0)
-      .join(neighbor, Seq("doc_id"), "left")
-      .withColumn("text",
-        when(col("doc_id") % 8 === 0 && col("__nt").isNotNull,
-          col("__nt")).otherwise(col("text")))
-      .select("doc_id", "text")
+    val (corpus, batch0) = bloomFixture(planted)
     (marked, corpus, batch0,
       () => { planted.unpersist(blocking = false); () })
   }

@@ -28,6 +28,51 @@ object VectorOps {
   private def centroids(base: DataFrame): DataFrame =
     base.filter(col("vec_id") % 50 === 0).orderBy("vec_id").limit(IvfC)
 
+  /** The sampled PQ codebook every PQ query trains: `PqM` subspaces
+    * over the vec_id % 50 == 0 sample, at most `PqK` codewords each —
+    * the engine side of the oracles' `c` CTE. */
+  private def pqCodebook(base: DataFrame): Seq[Seq[Array[Float]]] =
+    Similarity.pqTrainSampled(base.filter(col("vec_id") % 50 === 0),
+      "vec_id", m = PqM, maxCodewords = PqK)
+
+  /** The persisted IVF serving index (e13, e16, e18): every
+    * vec_id >= NQ vector assigned against `cents`, in 4 buckets. The
+    * first NQ stay out — they arrive as external queries. */
+  private def ivfIndex(base: DataFrame, cents: DataFrame,
+      tbl: String): Unit =
+    Similarity.buildIvfIndex(Similarity.assignToCentroids(
+      base.filter(col("vec_id") >= NQ), cents, "vec_id"), tbl, buckets = 4)
+
+  /** The persisted IVF-PQ index of `rows` (e15, e17, e20 index
+    * vec_id >= NQ; w16 seeds it with the even half): assigned against
+    * `cents`, encoded with `cb`, in 4 buckets. */
+  private def pqIndex(rows: DataFrame, cents: DataFrame,
+      cb: Seq[Seq[Array[Float]]], tbl: String): Unit =
+    Similarity.buildPqIndex(Similarity.pqEncode(
+        Similarity.assignToCentroids(rows, cents, "vec_id"), "vec_id", cb),
+      "vec_id", tbl, cb, cents, buckets = 4)
+
+  /** The persisted Matryoshka store of `rows` (e14, e19, w15): 8
+    * buckets, 16 persisted prefix dims. */
+  private def vectorStore(rows: DataFrame, tbl: String): Unit =
+    Similarity.buildVectorStore(rows, "vec_id", tbl, buckets = 8,
+      prefixDims = 16)
+
+  /** The takedown every delete gate runs on its index (e18, e19, e20):
+    * delete the vec_id % 14 == 3 half of the vec_id % 7 == 3 slice,
+    * apply it with the family's `compact` (rows rewritten away,
+    * tombstones truncated), then delete the % 14 == 10 half and leave
+    * it pending. The oracles see one thing: the slice is gone. */
+  private def takedown(s: SparkSession, base: DataFrame, tbl: String)(
+      compact: (SparkSession, String) => Unit): Unit = {
+    def delete(residue: Int): Unit = Similarity.deleteFromIndex(s, tbl,
+      base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === residue),
+      "vec_id")
+    delete(3)
+    compact(s, tbl)
+    delete(10)
+  }
+
   private val centroidsSql =
     s"(SELECT vec_id, v, nrm FROM e WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT $IvfC)"
   private val Shortlist = 25 // e07 stage-1 ADC candidate count
@@ -88,10 +133,7 @@ object VectorOps {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e13", d)
-      Similarity.buildIvfIndex(
-        Similarity.assignToCentroids(
-          base.filter(col("vec_id") >= NQ), cents, "vec_id"),
-        tbl, buckets = 4)
+      ivfIndex(base, cents, tbl)
       Similarity.probeIvfIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -109,17 +151,8 @@ object VectorOps {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e18", d)
-      Similarity.buildIvfIndex(
-        Similarity.assignToCentroids(
-          base.filter(col("vec_id") >= NQ), cents, "vec_id"),
-        tbl, buckets = 4)
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 3),
-        "vec_id")
-      Similarity.compactIvfIndex(s, tbl) // applies the first half
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 10),
-        "vec_id") // second half stays pending
+      ivfIndex(base, cents, tbl)
+      takedown(s, base, tbl)(Similarity.compactIvfIndex)
       Similarity.probeIvfIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -134,8 +167,7 @@ object VectorOps {
     "e14_knn_store_external" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e14", d)
-      Similarity.buildVectorStore(base.filter(col("vec_id") >= NQ),
-        "vec_id", tbl, buckets = 8, prefixDims = 16)
+      vectorStore(base.filter(col("vec_id") >= NQ), tbl)
       Similarity.probeVectorStoreExternal(s, tbl,
         base.filter(col("vec_id") < NQ), "vec_id", K, shortlist = 50)
     }),
@@ -148,15 +180,8 @@ object VectorOps {
     "e19_knn_store_delete" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e19", d)
-      Similarity.buildVectorStore(base.filter(col("vec_id") >= NQ),
-        "vec_id", tbl, buckets = 8, prefixDims = 16)
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 3),
-        "vec_id")
-      Similarity.compactVectorStore(s, tbl, "vec_id")
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 10),
-        "vec_id")
+      vectorStore(base.filter(col("vec_id") >= NQ), tbl)
+      takedown(s, base, tbl)(Similarity.compactVectorStore(_, _, "vec_id"))
       Similarity.probeVectorStoreExternal(s, tbl,
         base.filter(col("vec_id") < NQ), "vec_id", K, shortlist = 50)
     }),
@@ -180,38 +205,29 @@ object VectorOps {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val corpus = base.filter(col("vec_id") >= NQ)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "w15", d)
-      Similarity.buildVectorStore(corpus.filter(col("vec_id") % 2 === 0),
-        "vec_id", tbl, buckets = 8, prefixDims = 16)
+      vectorStore(corpus.filter(col("vec_id") % 2 === 0), tbl)
       // the odd half as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d)
         .filter(col("vec_id") >= NQ && col("vec_id") % 2 === 1)
-      val slices = (Seq(0, 1, 2) :+ 0)
-        .map(i => rest.filter(col("vec_id") % 3 === i))
-      val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      StreamSlices.replay(s, loc, "w15", slices) { batch =>
-        Similarity.appendToVectorStore(
-          Similarity.withNorm(batch, "vec_id", "embedding"),
-          tbl, "vec_id")
-        // compaction UNDER LIVE TRAFFIC at the store grain: after the
-        // second slice, rewrite back to one sorted file per bucket
-        // mid-stream — slice 2 then appends AGAINST the compacted
-        // table, and the replayed slice's In(id) idempotence lookups
-        // must find slice 0's rows INSIDE the compacted files
-        if (sliceNo.incrementAndGet() == 2) {
-          val bs = batch.sparkSession
-          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
+      // compaction UNDER LIVE TRAFFIC at the store grain: after the
+      // second slice, rewrite back to one sorted file per bucket
+      // mid-stream — slice 2 then appends AGAINST the compacted
+      // table, and the replayed slice's In(id) idempotence lookups
+      // must find slice 0's rows INSIDE the compacted files
+      StreamSlices.replay(s, loc, "w15",
+          StreamSlices.residueSlices(rest, "vec_id"))(
+        StreamSlices.compactingAfterSecond("w15", tbl) { bs =>
           Similarity.compactVectorStore(bs, tbl, "vec_id")
-          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
-          require(after > 0 && after <= 8 && after <= before,
-            s"w15: mid-stream store compaction must bound the store to " +
-              s"one file per bucket (before=$before, after=$after)")
           // and the serving stamps must survive the staging swap
           require(graft.operators.BucketedStore.tableProp(bs, tbl,
               Similarity.PrefixDimsProp).contains("16"),
             "w15: the compaction swap dropped the store's prefix-width " +
               "serving stamp")
-        }
-      }
+        } { batch =>
+          Similarity.appendToVectorStore(
+            Similarity.withNorm(batch, "vec_id", "embedding"),
+            tbl, "vec_id")
+        })
       Similarity.probeVectorStoreExternal(s, tbl,
         base.filter(col("vec_id") < NQ), "vec_id", K, shortlist = 50)
     }),
@@ -231,9 +247,7 @@ object VectorOps {
     // side carries only the M-int codes; the Q×M×K table broadcasts.
     "e05_knn_pq" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
+      val cb = pqCodebook(base)
       Similarity.knnPq(Similarity.pqEncode(base, "vec_id", cb),
         base.filter(col("vec_id") < NQ), "vec_id", cb, K)
     }),
@@ -243,9 +257,7 @@ object VectorOps {
     "e06_knn_ivfpq" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val assigned = Similarity.assignToCentroids(base, centroids(base), "vec_id")
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
+      val cb = pqCodebook(base)
       val encoded = Similarity.pqEncode(assigned, "vec_id", cb)
       Similarity.knnIvfPq(encoded, encoded.filter(col("vec_id") < NQ),
         "vec_id", cb, K)
@@ -261,14 +273,9 @@ object VectorOps {
     "e15_knn_pq_external" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
-      val assigned = Similarity.assignToCentroids(
-        base.filter(col("vec_id") >= NQ), cents, "vec_id")
+      val cb = pqCodebook(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e15", d)
-      Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
-        "vec_id", tbl, cb, cents, buckets = 4)
+      pqIndex(base.filter(col("vec_id") >= NQ), cents, cb, tbl)
       Similarity.probePqIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -280,21 +287,10 @@ object VectorOps {
     "e20_knn_pq_delete" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
-      val assigned = Similarity.assignToCentroids(
-        base.filter(col("vec_id") >= NQ), cents, "vec_id")
+      val cb = pqCodebook(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e20", d)
-      Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
-        "vec_id", tbl, cb, cents, buckets = 4)
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 3),
-        "vec_id")
-      Similarity.compactPqIndex(s, tbl)
-      Similarity.deleteFromIndex(s, tbl,
-        base.filter(col("vec_id") >= NQ && col("vec_id") % 14 === 10),
-        "vec_id")
+      pqIndex(base.filter(col("vec_id") >= NQ), cents, cb, tbl)
+      takedown(s, base, tbl)(Similarity.compactPqIndex)
       Similarity.probePqIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -308,10 +304,7 @@ object VectorOps {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e16", d)
-      Similarity.buildIvfIndex(
-        Similarity.assignToCentroids(
-          base.filter(col("vec_id") >= NQ), cents, "vec_id"),
-        tbl, buckets = 4)
+      ivfIndex(base, cents, tbl)
       Similarity.probeIvfIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K,
         probes = IvfProbes)
@@ -328,14 +321,9 @@ object VectorOps {
     "e17_knn_pq_ext_multiprobe" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
-      val assigned = Similarity.assignToCentroids(
-        base.filter(col("vec_id") >= NQ), cents, "vec_id")
+      val cb = pqCodebook(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "e17", d)
-      Similarity.buildPqIndex(Similarity.pqEncode(assigned, "vec_id", cb),
-        "vec_id", tbl, cb, cents, buckets = 4)
+      pqIndex(base.filter(col("vec_id") >= NQ), cents, cb, tbl)
       Similarity.probePqIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K,
         probes = IvfProbes)
@@ -354,43 +342,29 @@ object VectorOps {
       val loc = Scratch.dir("w16", d)
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
       val cents = centroids(base)
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
+      val cb = pqCodebook(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "w16", d)
-      val seed = base.filter(col("vec_id") >= NQ && col("vec_id") % 2 === 0)
-      Similarity.buildPqIndex(
-        Similarity.pqEncode(
-          Similarity.assignToCentroids(seed, cents, "vec_id"),
-          "vec_id", cb),
-        "vec_id", tbl, cb, cents, buckets = 4)
+      pqIndex(base.filter(col("vec_id") >= NQ && col("vec_id") % 2 === 0),
+        cents, cb, tbl)
       // the odd half as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d)
         .filter(col("vec_id") >= NQ && col("vec_id") % 2 === 1)
-      val slices = (Seq(0, 1, 2) :+ 0)
-        .map(i => rest.filter(col("vec_id") % 3 === i))
-      val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      StreamSlices.replay(s, loc, "w16", slices) { batch =>
-        Similarity.appendToPqIndex(
-          Similarity.withNorm(batch, "vec_id", "embedding"),
-          tbl, cents, "vec_id")
-        // compaction UNDER LIVE TRAFFIC at the PQ grain: slice 2
-        // appends against the compacted codes, and the replayed
-        // slice's (cid, id) idempotence lookups must find slice 0's
-        // rows inside the compacted files
-        if (sliceNo.incrementAndGet() == 2) {
-          val bs = batch.sparkSession
-          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
+      // compaction UNDER LIVE TRAFFIC at the PQ grain: slice 2
+      // appends against the compacted codes, and the replayed
+      // slice's (cid, id) idempotence lookups must find slice 0's
+      // rows inside the compacted files
+      StreamSlices.replay(s, loc, "w16",
+          StreamSlices.residueSlices(rest, "vec_id"))(
+        StreamSlices.compactingAfterSecond("w16", tbl) { bs =>
           Similarity.compactPqIndex(bs, tbl)
-          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
-          require(after > 0 && after <= 4 && after <= before,
-            s"w16: mid-stream PQ compaction must bound the codes to " +
-              s"one file per bucket (before=$before, after=$after)")
           require(graft.operators.BucketedStore.tableProp(bs, tbl,
               Similarity.CodebookProp).isDefined,
             "w16: the compaction swap dropped the codebook stamp")
-        }
-      }
+        } { batch =>
+          Similarity.appendToPqIndex(
+            Similarity.withNorm(batch, "vec_id", "embedding"),
+            tbl, cents, "vec_id")
+        })
       Similarity.probePqIndexExternal(s, tbl,
         base.filter(col("vec_id") < NQ), cents, "vec_id", K)
     }),
@@ -401,9 +375,7 @@ object VectorOps {
     // concurrent runs at other scale factors cannot clobber it).
     "e07_knn_refine" -> ((s, d) => {
       val base = Similarity.withNorm(Tables.embeddings(s, d), "vec_id", "embedding")
-      val cb = Similarity.pqTrainSampled(
-        base.filter(col("vec_id") % 50 === 0), "vec_id", m = PqM,
-        maxCodewords = PqK)
+      val cb = pqCodebook(base)
       val tbl = Scratch.catalogTable(s, "graft_vecstore", "v", d)
       Similarity.buildVectorStore(base, "vec_id", tbl, buckets = 8)
       Similarity.knnPqRefineIndexed(tbl,
@@ -434,29 +406,20 @@ object VectorOps {
           cents, "vec_id"), tbl, buckets = 4)
       // the rest as three id-sliced files + slice 0 redelivered
       val rest = Tables.embeddings(s, d).filter(col("vec_id") >= cut)
-      val slices = (Seq(0, 1, 2) :+ 0)
-        .map(i => rest.filter(col("vec_id") % 3 === i))
-      val sliceNo = new java.util.concurrent.atomic.AtomicInteger(0)
-      StreamSlices.replay(s, loc, "w07", slices) { batch =>
-        Similarity.appendToIvfIndex(
-          Similarity.withNorm(batch, "vec_id", "embedding"),
-          tbl, cents, "vec_id", buckets = 4)
-        // compaction UNDER LIVE TRAFFIC at the IVF grain (the d51/w10
-        // story for the third artifact): after the second slice,
-        // rewrite the index back to one file per bucket mid-stream —
-        // slice 2 then appends AGAINST the compacted table, and the
-        // replayed slice's (cid, id) idempotence lookups must find
-        // slice 0's rows INSIDE the compacted files (append nothing)
-        if (sliceNo.incrementAndGet() == 2) {
-          val bs = batch.sparkSession
-          val before = graft.operators.BucketedStore.fileCount(bs, tbl)
-          Similarity.compactIvfIndex(bs, tbl)
-          val after = graft.operators.BucketedStore.fileCount(bs, tbl)
-          require(after > 0 && after <= 4 && after <= before,
-            s"w07: mid-stream IVF compaction must bound the index to " +
-              s"one file per bucket (before=$before, after=$after)")
-        }
-      }
+      // compaction UNDER LIVE TRAFFIC at the IVF grain (the d51/w10
+      // story for the third artifact): after the second slice,
+      // rewrite the index back to one file per bucket mid-stream —
+      // slice 2 then appends AGAINST the compacted table, and the
+      // replayed slice's (cid, id) idempotence lookups must find
+      // slice 0's rows INSIDE the compacted files (append nothing)
+      StreamSlices.replay(s, loc, "w07",
+          StreamSlices.residueSlices(rest, "vec_id"))(
+        StreamSlices.compactingAfterSecond("w07", tbl)(
+            Similarity.compactIvfIndex(_, tbl)) { batch =>
+          Similarity.appendToIvfIndex(
+            Similarity.withNorm(batch, "vec_id", "embedding"),
+            tbl, cents, "vec_id", buckets = 4)
+        })
       Similarity.probeIvfIndex(s, tbl, col("vec_id") < NQ, "vec_id", K)
     }),
 

@@ -38,12 +38,18 @@ object JobLog {
   }
 
   /** "collect at Dedup.scala:1361" from a call site's long form: the
-    * last Spark frame, then the caller's frames. */
+    * last Spark frame, then the caller's frames. A
+    * `DriverBounded.collectCapped`/`collectBounded` frame is passed
+    * over, so a bounded collect is named after the operator line that
+    * asked for it, not the helper's own. */
   private def shortSite(longForm: String): Option[String] = {
     val Frame = """.*\.([^.(]+)\(([^:()]+):(\d+)\)""".r
     longForm.linesIterator.toList match {
-      case Frame(method, _, _) :: Frame(_, file, line) :: _ =>
-        Some(s"$method at $file:$line")
+      case Frame(method, _, _) :: callers =>
+        callers.collectFirst {
+          case Frame(_, file, line) if file != "DriverBounded.scala" =>
+            s"$method at $file:$line"
+        }
       case _ => None
     }
   }

@@ -408,7 +408,18 @@ class IndexDeleteSpec extends AnyFunSuite {
       assert(jobs.exists(_.stageTasks.nonEmpty), s"$call ran no task")
       assert(jobs.forall(_.widestStage <= widest),
         s"$call ran a stage wider than $widest tasks: ${widths(jobs)}")
+      // a bounded collect is named after the operator line that asked
+      // for it, not after DriverBounded's own
+      assert(!jobs.exists(_.site.contains("DriverBounded.scala")),
+        s"$call: ${widths(jobs)}")
     }
+    // so the band probe's banding collects and the IVF probe's collects
+    // can be told apart
+    def collectSites(jobs: Seq[graft.JobLog.Job]) =
+      jobs.map(_.site).filter(_.startsWith("collect at")).toSet
+    assert((collectSites(bandJobs) -- collectSites(repeat)).nonEmpty &&
+      (collectSites(repeat) -- collectSites(bandJobs)).nonEmpty,
+      s"band probe: ${widths(bandJobs)}; repeat probe: ${widths(repeat)}")
   }
 
   test("delete bounds and hygiene: pending cap refuses loudly, null ids refuse, absent ids guard appends, rebuild clears") {
